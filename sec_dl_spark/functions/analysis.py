@@ -31,25 +31,16 @@ LANG_MARKERS = {
 # apply these to the attribute). Higher-order functions run interpreted (not
 # whole-stage codegen), and a Column expression tree is duplicated at every
 # reference — so passing ``tokenize(text)`` directly would re-tokenize the
-# document once per lambda evaluation. The text-column wrappers are kept for
-# single-use convenience only.
+# document once per lambda evaluation. ``fingerprint`` is the one text-column
+# wrapper, kept for its single-use callers.
 
 
 def token_count_of(toks: Column) -> Column:
     return F.size(toks).cast("long")
 
 
-def token_count(col: Column) -> Column:
-    """Whitespace-ish token count (BPE-ish regex tokenizer count)."""
-    return token_count_of(tokenize(col))
-
-
 def unique_token_count_of(toks: Column) -> Column:
     return F.size(F.array_distinct(toks)).cast("long")
-
-
-def unique_token_count(col: Column) -> Column:
-    return unique_token_count_of(tokenize(col))
 
 
 def avg_token_len_of(toks: Column) -> Column:
@@ -58,17 +49,9 @@ def avg_token_len_of(toks: Column) -> Column:
     return F.when(F.size(toks) > 0, total.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
 
 
-def avg_token_len(col: Column) -> Column:
-    return avg_token_len_of(tokenize(col))
-
-
 def stopword_ratio_of(toks: Column) -> Column:
     n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
     return F.when(F.size(toks) > 0, n_stop.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col: Column) -> Column:
-    return stopword_ratio_of(tokenize(col))
 
 
 def punct_ratio(col: Column) -> Column:
@@ -90,10 +73,6 @@ def quality_score_of(toks: Column, text: Column) -> Column:
     )
 
 
-def quality_score(col: Column) -> Column:
-    return quality_score_of(tokenize(col), col)
-
-
 def lang_guess_of(toks: Column) -> Column:
     """Marker-lexicon language guess: the language with the most marker-token
     hits, ties broken by fixed language order; 'und' when no markers hit."""
@@ -110,10 +89,6 @@ def lang_guess_of(toks: Column) -> Column:
         best = F.when(cond, F.lit(lang)).otherwise(best)
         best_score = F.when(cond, scores[lang]).otherwise(best_score)
     return best
-
-
-def lang_guess(col: Column) -> Column:
-    return lang_guess_of(tokenize(col))
 
 
 def fingerprint_of(toks: Column) -> Column:

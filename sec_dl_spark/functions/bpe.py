@@ -18,7 +18,7 @@ from __future__ import annotations
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sec_dl_spark.functions.text import tokenize
@@ -123,7 +123,3 @@ def bpe_encode_udf(merges: list[tuple[str, str]]):
 
     return encode
 
-
-def bpe_token_count(text_col: Column, merges: list[tuple[str, str]]) -> Column:
-    """Convenience: BPE token count per row (the budget unit)."""
-    return F.size(bpe_encode_udf(merges)(text_col))

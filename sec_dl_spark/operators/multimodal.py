@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column plumbing (SURVEY.md §2.11).
 
 Blobs are opaque BinaryType columns with typed metadata structs
-(schemas.MEDIA); files enter via Spark's binaryFile source. Decode /
+(schemas.MEDIA); Spark's binaryFile source supplies the raw bytes. Decode /
 feature-extract / resize / frame-sample run as Arrow-batched pandas
 iterators over mapInPandas — the Spark-side plumbing (schema, partitioning,
 UDF signature, batch shape) is real and tested; the actual codec work is
@@ -17,7 +17,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -31,23 +31,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Ingest raw files as (path, modificationTime, length, content BINARY)
-    via the binaryFile source, normalized to the MEDIA shape."""
-    raw = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        F.element_at(F.split(F.col("path"), r"\."), -1).alias("kind"),
-        F.col("content"),
-        F.struct(
-            F.lit(None).cast("string").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("bigint").alias("duration_ms"),
-        ).alias("meta"),
-    )
 
 
 def _fake_features(content: bytes) -> list[float]:

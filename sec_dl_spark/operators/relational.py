@@ -6,6 +6,7 @@ ops — no UDFs, no driver-side loops.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -664,16 +665,17 @@ def bloom_might_contain(bloom: BloomFilter, key) -> "F.Column":
     folds to the identical array literal.
     """
     min_long = -(1 << 63)
-    words = F.expr(
-        "array("
-        + ",".join(
-            # -2^63 cannot be written as a bare negative literal (the
-            # parser reads it as unary minus over an overflowing positive)
-            f"{w}L" if w != min_long else "(-9223372036854775807L - 1L)"
-            for w in bloom.words
-        )
-        + ")"
-    )
+    lits = []
+    for w in bloom.words:
+        # only a signed 64-bit integer may reach the SQL text: index()
+        # rejects str/float words, the range check rejects overflow
+        w = operator.index(w)
+        if not min_long <= w < -min_long:
+            raise ValueError(f"bloom word {w} is outside the signed 64-bit range")
+        # -2^63 cannot be written as a bare negative literal (the parser
+        # reads it as unary minus over an overflowing positive)
+        lits.append(f"{w}L" if w != min_long else "(-9223372036854775807L - 1L)")
+    words = F.expr("array(" + ",".join(lits) + ")")
     conds = []
     for pos in _bloom_positions(key, bloom.m_bits, bloom.k_hashes):
         word = F.element_at(words, F.floor(pos / 64).cast("int") + 1)

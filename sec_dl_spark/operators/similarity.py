@@ -121,11 +121,14 @@ def nested_level_topk(
     (partition, chunk)) because membership and totals both read it."""
     from sec_dl_spark.session import pin
 
-    if list(levels) != sorted(levels):
+    if any(a >= b for a, b in zip(levels, levels[1:])):
         # the with_totals chunk-representative filter keys on levels[-1]
         # being the all-containing level; a descending/shuffled grid would
-        # silently return wrong totals (ADVICE r16)
-        raise ValueError(f"nested_level_topk: levels must be ascending, got {levels!r}")
+        # silently return wrong totals, and a repeated level would
+        # duplicate its running-count column
+        raise ValueError(
+            f"nested_level_topk: levels must be strictly ascending, got {levels!r}"
+        )
     member = {m: F.col(rank_col) <= m for m in levels}
     src_cols = scored.columns
     w1 = (

@@ -15,7 +15,7 @@ their unsalted forms:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,24 +42,6 @@ def salted_join(
     salted = facts.withColumn("_salt", F.pmod(F.xxhash64(*fact_cols), F.lit(n_salts)).cast("int"))
     out = salted.join(dim_rep, [key, "_salt"], how)
     return out.drop("_salt")
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    salt_col: Column,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Two-phase skew-safe grouping scaffold: returns the Phase-1 grouping
-    frame grouped by (keys + _salt); callers run their partial aggregates on
-    it, then re-group by keys for the final combine.
-
-    Only worth it for aggregates with heavy per-key state (collect_list,
-    exact distinct) — plain algebraic aggs already combine map-side. See
-    skew_salted_distinct() for the canonical two-phase distinct count."""
-    return df.withColumn("_salt", F.pmod(F.xxhash64(salt_col), F.lit(n_salts)).cast("int")).groupBy(
-        *keys, "_salt"
-    )
 
 
 def salted_distinct_count(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from sec_dl_spark.streaming.commit import (
     commit_batch_partition,
+    foreach_batch_sink,
     run_token,
 )
 
@@ -60,12 +61,7 @@ def incremental_ann_index_sink(
         ).select(F.col(id_col).alias(meta["id_col"]), "cell", "pq_codes")
         commit_batch_partition(enc, f"{index_path}/increments", run, batch_id, "cell")
 
-    return (
-        vectors_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(vectors_stream, on_batch, checkpoint_dir)
 
 
 def ann_query_sink(
@@ -114,9 +110,4 @@ def ann_query_sink(
         )
         commit_batch_partition(out, output_path, run, batch_id)
 
-    return (
-        queries_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(queries_stream, on_batch, checkpoint_dir)

@@ -4,10 +4,9 @@ The streaming twin of the batch ``events_bot_detection`` query
 (plans/streaming_batch.py): the same integer-µs inter-event-gap moments
 and the same CV = σ/μ regularity score — but computed INCREMENTALLY.
 Each micro-batch publishes one row per user of within-batch moments
-(n, first_us, last_us, n_gaps, gap_sum, gap_sq) as its own
-``run=<run>/batch=<id>`` partition (idempotent overwrite-on-retry — the
-append-only discipline of streaming/rollup.py), and the read side merges
-them.
+(n, first_us, last_us, n_gaps, gap_sum, gap_sq) as its own partial
+(``commit.partial_sink``: idempotent overwrite-on-retry), and the read
+side merges them.
 
 Unlike the PSI/SPRT gates, gap moments are NOT a plain sum monoid: the
 gap that straddles two batches belongs to neither partial. The merge is
@@ -25,11 +24,11 @@ batch query).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from sec_dl_spark.streaming.commit import partial_sink, read_partials
 
 
 def gap_moments(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -62,30 +61,11 @@ def incremental_gap_moments_sink(
     moments_path: str,
     checkpoint_dir: str,
     ts_col: str = "ts",
-    run: str | None = None,
 ):
-    """availableNow foreachBatch sink: each micro-batch publishes its
-    own per-user moment partition; a retried batch overwrites the SAME
-    directory (idempotent, no read-modify-write). Returns the started
-    StreamingQuery.
-
-    The default run id derives from the CHECKPOINT path, not a fresh
-    uuid: a restarted sink that resumes the same checkpoint must land
-    its replayed batches in the same ``run=`` partitions, or the stale
-    copies from the crashed attempt would double-count in the merge
-    (pass ``run`` explicitly to shard independent logical runs)."""
-    run = run or hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        gap_moments(batch_df, ts_col).write.mode("overwrite").parquet(
-            f"{moments_path}/run={run}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Each micro-batch publishes its own per-user moment partial.
+    Returns the started StreamingQuery."""
+    return partial_sink(
+        stream, moments_path, checkpoint_dir, lambda df: gap_moments(df, ts_col)
     )
 
 
@@ -97,7 +77,7 @@ def merged_gap_moments(spark: SparkSession, moments_path: str) -> DataFrame:
     sized, never event-sized); each batch boundary contributes one gap
     first_us − lag(last_us) into both moments; within-batch moments
     sum exactly."""
-    parts = spark.read.parquet(moments_path).drop("run", "batch")
+    parts = read_partials(spark, moments_path)
     # last_us tie-break: two partials can share first_us (a batch split
     # inside one timestamp); ordering the shorter-reaching partial first
     # keeps every boundary gap non-negative and the merge deterministic

@@ -24,19 +24,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from sec_dl_spark.operators.cdc import apply_changes, snapshot_diff
-from sec_dl_spark.streaming.commit import run_token
+from sec_dl_spark.streaming.commit import claim_run, foreach_batch_sink, run_token
+from sec_dl_spark.util import try_read_parquet
 
 _B = "_cdc_batch"
-
-
-def _read_state(spark: SparkSession, state_path: str) -> DataFrame | None:
-    try:
-        return spark.read.option("basePath", state_path).parquet(state_path)
-    except AnalysisException:
-        return None
 
 
 def current_state(
@@ -55,7 +48,7 @@ def current_state(
     attempt published (registry-reads-exclude-own-batch rule), and a
     replayed batch diffs against the same history it saw the first time
     even though later batches' partitions now exist (idempotent feed)."""
-    raw = _read_state(spark, state_path)
+    raw = try_read_parquet(spark, state_path)
     if raw is None:
         return None
     if before_batch is not None:
@@ -74,40 +67,32 @@ def change_feed_sink(
     compare_cols: list[str],
     op_col: str = "op",
     delete_op: str = "D",
-    run: str | None = None,
 ):
-    """availableNow foreachBatch sink: per micro-batch, diff the batch's
-    keys against the pre-batch state, publish the change set to
-    ``feed_path/run/batch`` and the raw batch rows (tombstones included)
-    to ``state_path/run/batch``. Returns the started StreamingQuery.
+    """Per micro-batch, diff the batch's keys against the pre-batch
+    state, publish the change set to ``feed_path/run/batch`` and the raw
+    batch rows (tombstones included) to ``state_path/run/batch``. Returns
+    the started StreamingQuery.
 
     The diff touches ONLY the batch's keys: the prior state is semi-joined
     down to them before ``snapshot_diff``, so feed cost scales with batch
     size, not table size (the full-state scan underneath is the honest
     cost of file-based state; a table format's key index removes it).
 
-    State ordering is per-run: ``run`` defaults to
-    ``run_token(checkpoint_dir)``, so restarts of the same checkpoint
-    resume the same logical sequence (batch ids continue). Pointing a
-    FRESH checkpoint at an existing state dir would restart batch ids at
-    0 and scramble latest-wins ordering — batch 0 guards against it by
-    refusing a state dir holding a different run token."""
-    run = run or run_token(checkpoint_dir)
+    State ordering is per-run: the run token comes from the checkpoint,
+    so restarts of the same checkpoint resume the same logical sequence
+    (batch ids continue). Pointing a FRESH checkpoint at an existing
+    state dir would restart batch ids at 0 and scramble latest-wins
+    ordering — batch 0 refuses state and feed dirs holding another run's
+    token (``commit.claim_run``)."""
+    run = run_token(checkpoint_dir)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        if batch_id == 0:
+            claim_run(spark, state_path, run)
+            claim_run(spark, feed_path, run)
         batch_df = batch_df.persist()
         try:
-            if batch_id == 0:
-                raw = _read_state(spark, state_path)
-                if raw is not None:
-                    foreign = raw.where(F.col("run") != run).limit(1).count()
-                    if foreign:
-                        raise ValueError(
-                            f"state dir {state_path} holds another run's "
-                            "sequence; reuse its checkpoint (same run token) "
-                            "or point at a fresh state dir"
-                        )
             keys = batch_df.select(*key_cols)
             prior = current_state(
                 spark, state_path, key_cols, op_col, delete_op,
@@ -131,12 +116,7 @@ def change_feed_sink(
         finally:
             batch_df.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(stream, on_batch, checkpoint_dir)
 
 
 def read_change_feed(spark: SparkSession, feed_path: str) -> DataFrame:

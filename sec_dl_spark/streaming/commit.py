@@ -1,32 +1,46 @@
-"""Idempotent per-batch commit machinery shared by every foreachBatch sink
-(dedup gates, incremental FTS index).
+"""The one commit scheme shared by every foreachBatch sink.
 
-Both sinks of a gate are written with DYNAMIC partition overwrite scoped
-to (`ingest_run`, `ingest_batch`): a retried batch replaces its own
-earlier partial output instead of appending beside it. The run token is
-derived from the checkpoint location — stable across restarts from the
-same checkpoint, distinct per logical ingest run — because foreachBatch
-batch_ids restart at 0 for every new checkpoint and would collide across
-runs sharing one output.
+Every sink names its output by a run token derived from its checkpoint
+path (``run_token``) plus the micro-batch id, and starts through the one
+starter (``foreach_batch_sink``: foreachBatch + checkpoint +
+availableNow). A batch that Spark re-runs after a crash — its output
+written, its checkpoint commit lost — carries the same token and the same
+batch id, so it overwrites its own output instead of publishing a second
+copy beside it.
 
-Contract: wiping a checkpoint and re-running against the SAME unchanged
-source is a safe replay (batch boundaries reproduce, partitions overwrite
-in place). Starting a genuinely NEW ingest — different source files or
-batching — requires a NEW checkpoint path: reusing the old path reuses
-the old run token, and batches that no longer exist in the new run would
-leave their old partitions in place beside the new ones. That contract is
-ENFORCED, not just documented: every batch persists a per-(run, batch)
-content fingerprint marker next to the sink, and a replayed batch under
-the same run token fails fast if its fingerprint differs — the
-wiped-checkpoint-over-a-changed-source hazard surfaces as an error
-instead of silently leaving stale partitions beside new output, even
-when the divergence starts after batch 0 (``check_source_marker``).
+Partial-per-batch sinks (rollup, HLL, CMS, drift, SPRT, SRM, IVM, bots)
+reduce each batch to a small mergeable partial: ``partial_sink`` writes it
+to ``path/run=<token>/batch=<id>`` and ``read_partials`` hands every
+partial to the sink's own merge step. A fresh checkpoint starts at batch
+0, and batch 0 guards the path (``claim_run``): it refuses a path that
+holds another run's partials, since summing two runs of one source
+double-counts and interleaving their batch ids scrambles ordered merges,
+and it clears its own run's older partials, since a wiped checkpoint can
+replay with different batch boundaries and leave stale higher-numbered
+partials behind. The change-feed sink (``cdc``) applies the same guard to
+its state and feed paths.
+
+The dedup registries and the FTS index do NOT take the batch-0 guard:
+they are cross-run state by design — several logical ingest runs share
+one corpus, and each run's output must survive the next run. They commit
+by dynamic partition overwrite of ``ingest_run=<token>/ingest_batch=<id>``
+(``commit_batch_partition``) and enforce the replay contract per batch
+instead: every batch persists a content fingerprint beside the sink, and a
+replayed batch under the same token fails fast if its source changed
+(``check_source_marker``). Starting a genuinely new ingest into them
+requires a new checkpoint path, hence a new token: reusing the old token
+would leave the old run's batches that the new source no longer produces
+beside the new output.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import hashlib
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sec_dl_spark.util import read_string_partitioned, try_read_parquet
 
 
 def run_token(checkpoint_dir: str) -> str:
@@ -36,9 +50,61 @@ def run_token(checkpoint_dir: str) -> str:
     prefix keeps the value non-numeric so readers that infer partition
     column types never parse an all-digit token as a number (which would
     collapse distinct tokens differing only in leading zeros)."""
-    import hashlib
-
     return "r" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
+
+
+def foreach_batch_sink(stream: DataFrame, batch_fn, checkpoint_dir: str):
+    """Start ``batch_fn`` over ``stream`` as a checkpointed availableNow
+    foreachBatch query (also the JDBC-upsert carrier, sinks/jdbc.py).
+    Returns the started StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def claim_run(spark: SparkSession, path: str, run: str) -> None:
+    """Batch-0 guard of a ``run=<token>`` partitioned path: raise if it
+    holds another run's partitions, else delete this run's older ones."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        if not name.startswith("run="):
+            continue
+        if name != f"run={run}":
+            raise ValueError(
+                f"{path} holds another run's output ({name}); resume that "
+                "run's checkpoint or point this one at a fresh path"
+            )
+        fs.delete(status.getPath(), True)
+
+
+def partial_sink(stream: DataFrame, path: str, checkpoint_dir: str, partial_fn):
+    """Publish ``partial_fn(batch)`` per micro-batch as
+    ``path/run=<token>/batch=<id>``, with the batch-0 guard. Returns the
+    started StreamingQuery."""
+    run = run_token(checkpoint_dir)
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id == 0:
+            claim_run(batch_df.sparkSession, path, run)
+        partial_fn(batch_df).write.mode("overwrite").parquet(
+            f"{path}/run={run}/batch={batch_id}"
+        )
+
+    return foreach_batch_sink(stream, on_batch, checkpoint_dir)
+
+
+def read_partials(spark: SparkSession, path: str) -> DataFrame:
+    """Every published partial under ``path``, ``run``/``batch`` dropped.
+    Partition types are not inferred: the token is a string."""
+    return read_string_partitioned(spark, path).drop("run", "batch")
 
 
 def commit_batch_partition(
@@ -100,32 +166,8 @@ def check_source_marker(
             F.sum(F.shiftrightunsigned(F.xxhash64(F.col(id_col)), 33)), F.lit(0)
         ).alias("fp"),
     ).first()
-    from sec_dl_spark.util import try_read_parquet
-
     existing = try_read_parquet(spark, marker_path)
     if existing is not None:
-        if "ingest_batch" not in existing.columns:
-            # Marker written by the earlier batch-0-only format (one row
-            # per run, partitioned by ingest_run alone): its single row IS
-            # the batch-0 fingerprint. Migrate the directory to the
-            # per-batch layout in place — appending the new layout beside
-            # the old one would mix partition depths, which Spark's
-            # partition discovery rejects on the next read.
-            rows = existing.select("n", "fp", "ingest_run").collect()
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(marker_path)
-            jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
-            (
-                spark.createDataFrame(
-                    [(r["n"], r["fp"], r["ingest_run"]) for r in rows],
-                    "n long, fp long, ingest_run string",
-                )
-                .withColumn("ingest_batch", F.lit(0))
-                .write.mode("overwrite")
-                .partitionBy("ingest_run", "ingest_batch")
-                .parquet(marker_path)
-            )
-            existing = try_read_parquet(spark, marker_path)
         # cast the partition column rather than trusting inference: the
         # marker must read identically whether the session infers
         # partition types or keeps them as strings

@@ -46,6 +46,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sec_dl_spark.functions.analysis import fingerprint
+from sec_dl_spark.streaming.commit import (
+    check_source_marker,
+    commit_batch_partition,
+    foreach_batch_sink,
+    not_own_batch,
+    run_token,
+)
+from sec_dl_spark.util import try_read_parquet
 
 REGISTRY_PREFIX_BUCKETS = 64
 
@@ -54,17 +62,6 @@ def _fingerprints(batch_df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return batch_df.withColumn("_fp", fingerprint(F.col(text_col))).withColumn(
         "_fp_bucket", F.abs(F.hash("_fp")) % REGISTRY_PREFIX_BUCKETS
     )
-
-
-# Shared commit/probe machinery (see streaming/commit.py for the run-token
-# and replay contract); module-local aliases keep call sites terse.
-from sec_dl_spark.streaming.commit import (  # noqa: E402
-    check_source_marker as _check_source_marker,
-    commit_batch_partition as _commit_batch_partition,
-    not_own_batch as _not_own_batch,
-    run_token as _run_token,
-)
-from sec_dl_spark.util import try_read_parquet as _try_read_parquet  # noqa: E402
 
 
 def _commit_gated_batch(
@@ -102,7 +99,7 @@ def _commit_gated_batch(
         # atomic mode too, not silently no-op past every committed batch and
         # drop the new source's data (the replay contract commit.py
         # documents as enforced). The check is idempotent per (run, batch).
-        _check_source_marker(batch_df, registry_path, run, batch_id, id_col)
+        check_source_marker(batch_df, registry_path, run, batch_id, id_col)
         if is_committed(spark, registry_path, run, batch_id):
             return  # replayed batch already published — nothing to redo
         # optimistic concurrency: validate against the log snapshot,
@@ -130,10 +127,10 @@ def _commit_gated_batch(
             f"batch {batch_id} of run {run!r} lost 10 admission races at "
             f"{registry_path!r} — pathological writer contention"
         )
-    _check_source_marker(batch_df, registry_path, run, batch_id, id_col)
-    accepted_df, registry_df = survivors_against(_try_read_parquet(spark, registry_path))
-    _commit_batch_partition(accepted_df, accepted_path, run, batch_id)
-    _commit_batch_partition(
+    check_source_marker(batch_df, registry_path, run, batch_id, id_col)
+    accepted_df, registry_df = survivors_against(try_read_parquet(spark, registry_path))
+    commit_batch_partition(accepted_df, accepted_path, run, batch_id)
+    commit_batch_partition(
         registry_df, registry_path, run, batch_id, *registry_partition_cols
     )
 
@@ -173,7 +170,7 @@ def incremental_dedup_sink(
     if commit_mode not in ("overwrite", "atomic"):
         raise ValueError(f"unknown commit_mode {commit_mode!r}")
 
-    run = _run_token(checkpoint_dir)
+    run = run_token(checkpoint_dir)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         fp = _fingerprints(batch_df, id_col, text_col)
@@ -186,7 +183,7 @@ def incremental_dedup_sink(
             if seen is not None:
                 # exclude this batch's own rows: a retry's earlier attempt
                 # may have landed registry rows for these very documents
-                seen = seen.where(_not_own_batch(run, batch_id))
+                seen = seen.where(not_own_batch(run, batch_id))
                 fresh = fresh.join(seen.select("_fp"), "_fp", "left_anti")
             s = fresh.drop("_rn").localCheckpoint(eager=True)
             return (
@@ -199,12 +196,7 @@ def incremental_dedup_sink(
             commit_mode, id_col, survivors_against, ["_fp_bucket"],
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(docs_stream, on_batch, checkpoint_dir)
 
 
 def incremental_minhash_dedup_sink(
@@ -236,7 +228,7 @@ def incremental_minhash_dedup_sink(
         raise ValueError(f"unknown commit_mode {commit_mode!r}")
     from sec_dl_spark.operators.dedup import minhash_band_keys, minhash_signatures
 
-    run = _run_token(checkpoint_dir)
+    run = run_token(checkpoint_dir)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         bands = minhash_band_keys(
@@ -257,7 +249,7 @@ def incremental_minhash_dedup_sink(
         def survivors_against(seen):
             dup_ids = in_batch_dups
             if seen is not None:
-                seen2 = seen.where(_not_own_batch(run, batch_id))
+                seen2 = seen.where(not_own_batch(run, batch_id))
                 hist_dups = (
                     bands.join(seen2, ["band", "band_hash"], "left_semi")
                     .select("doc_id")
@@ -277,12 +269,7 @@ def incremental_minhash_dedup_sink(
             commit_mode, id_col, survivors_against, ["band"],
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(docs_stream, on_batch, checkpoint_dir)
 
 
 def incremental_winnow_dedup_sink(
@@ -313,7 +300,7 @@ def incremental_winnow_dedup_sink(
         raise ValueError(f"unknown commit_mode {commit_mode!r}")
     from sec_dl_spark.operators.dedup import winnow_fingerprints
 
-    run = _run_token(checkpoint_dir)
+    run = run_token(checkpoint_dir)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         fps = (
@@ -348,7 +335,7 @@ def incremental_winnow_dedup_sink(
                 # with the registry's bucket partitioning; registry rows are
                 # unique per (doc, fingerprint) by construction, so the pair
                 # count needs no distinct on either side.
-                seen2 = seen.where(_not_own_batch(run, batch_id)).select(
+                seen2 = seen.where(not_own_batch(run, batch_id)).select(
                     "fp_bucket", "fp_hash", F.col("doc_id").alias("other_id")
                 )
                 hist_dups = (
@@ -373,12 +360,7 @@ def incremental_winnow_dedup_sink(
             commit_mode, id_col, survivors_against, ["fp_bucket"],
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(docs_stream, on_batch, checkpoint_dir)
 
 
 def incremental_semantic_dedup_sink(
@@ -413,7 +395,7 @@ def incremental_semantic_dedup_sink(
         raise ValueError(f"unknown commit_mode {commit_mode!r}")
     from sec_dl_spark.operators.similarity import assign_cells, cosine
 
-    run = _run_token(checkpoint_dir)
+    run = run_token(checkpoint_dir)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         assigned = assign_cells(batch_df, centroids, id_col, vec_col).localCheckpoint(
@@ -437,7 +419,7 @@ def incremental_semantic_dedup_sink(
         def survivors_against(seen):
             dup_ids = in_batch
             if seen is not None:
-                seen2 = seen.where(_not_own_batch(run, batch_id)).select(
+                seen2 = seen.where(not_own_batch(run, batch_id)).select(
                     "cell", F.col(vec_col).alias("_vb")
                 )
                 hist = (
@@ -460,9 +442,4 @@ def incremental_semantic_dedup_sink(
             commit_mode, id_col, survivors_against, ["cell"],
         )
 
-    return (
-        vectors_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(vectors_stream, on_batch, checkpoint_dir)

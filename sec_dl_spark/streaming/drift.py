@@ -4,11 +4,10 @@ The streaming twin of the batch ``events_psi_drift`` query
 (plans/streaming_batch.py): the same exact integer-cents binning, the
 same Laplace-smoothed PSI — but instead of splitting one static table at
 its time midpoint, the stream publishes each micro-batch's per-(key, bin)
-INTEGER counts as that batch's own ``run=<run>/batch=<id>`` partition
-(idempotent overwrite-on-retry — the append-only discipline of
-streaming/rollup.py), and the read side merges the partials and scores
-them against a pinned REFERENCE distribution (e.g. the calibration
-window's own published counts).
+INTEGER counts as that batch's own partial (``commit.partial_sink``:
+idempotent overwrite-on-retry), and the read side merges the partials
+and scores them against a pinned REFERENCE distribution (e.g. the
+calibration window's own published counts).
 
 Integer bin counts are the ideal streaming monitor state: exactly
 mergeable (sum monoid — merge == recompute, pinned by pytest), tiny
@@ -19,10 +18,10 @@ identical no matter how the stream was batched.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sec_dl_spark.streaming.commit import partial_sink, read_partials
 
 N_BINS_DEFAULT = 10
 CENTS_PER_BIN_DEFAULT = 4000
@@ -64,25 +63,14 @@ def incremental_bin_counts_sink(
     value_col: str = "value",
     n_bins: int = N_BINS_DEFAULT,
     cents_per_bin: int = CENTS_PER_BIN_DEFAULT,
-    run: str | None = None,
 ):
-    """availableNow foreachBatch sink: each micro-batch publishes its own
-    (key, bin, n) partial partition. A retry of a batch overwrites the
-    SAME directory, so commits are idempotent without read-modify-write.
-    Returns the started StreamingQuery."""
-    run = run or uuid.uuid4().hex[:12]
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = bin_counts(batch_df, key_col, value_col, n_bins, cents_per_bin)
-        part.write.mode("overwrite").parquet(
-            f"{counts_path}/run={run}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Each micro-batch publishes its own (key, bin, n) partial. Returns
+    the started StreamingQuery."""
+    return partial_sink(
+        stream,
+        counts_path,
+        checkpoint_dir,
+        lambda df: bin_counts(df, key_col, value_col, n_bins, cents_per_bin),
     )
 
 
@@ -90,8 +78,11 @@ def read_bin_counts(spark: SparkSession, counts_path: str) -> DataFrame:
     """Merged (key, bin, n) view over every published partial partition —
     one groupBy over |keys|·n_bins·|batches| rows (monitor-state-sized,
     never event-sized)."""
-    parts = spark.read.parquet(counts_path).drop("run", "batch")
-    return parts.groupBy("key", "bin").agg(F.sum("n").alias("n"))
+    return (
+        read_partials(spark, counts_path)
+        .groupBy("key", "bin")
+        .agg(F.sum("n").alias("n"))
+    )
 
 
 def psi(

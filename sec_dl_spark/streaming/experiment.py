@@ -4,7 +4,7 @@ Streaming twins of the batch ``events_sprt_monitor`` and
 ``events_srm_check`` queries (plans/streaming_batch.py). Both follow the
 mergeable-partials discipline of streaming/drift.py and
 streaming/rollup.py — each micro-batch publishes a tiny idempotent
-``run=<run>/batch=<id>`` partition, and the read side merges partials
+partial (``commit.partial_sink``), and the read side merges partials
 into the SAME numbers the batch query computes over the full table:
 
 - **SPRT**: the monitor state is per-day (trials, conversions) INTEGER
@@ -28,11 +28,13 @@ into the SAME numbers the batch query computes over the full table:
 from __future__ import annotations
 
 import math
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from sec_dl_spark.streaming.commit import partial_sink, read_partials
+from sec_dl_spark.streaming.rollup import incremental_hll_sink, read_hll_rollup
 
 P0_DEFAULT = 0.18
 P1_DEFAULT = 0.22
@@ -67,33 +69,21 @@ def incremental_sprt_sink(
     checkpoint_dir: str,
     conversion_type: str = "purchase",
     treatment_pred: str = "user_id % 2 = 1",
-    run: str | None = None,
 ):
-    """availableNow foreachBatch sink: each micro-batch publishes its own
-    (day, n, conv) partial partition; a retry overwrites the SAME
-    directory (idempotent, no read-modify-write). Returns the started
-    StreamingQuery."""
-    run = run or uuid.uuid4().hex[:12]
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = arm_day_counts(batch_df, conversion_type, treatment_pred)
-        part.write.mode("overwrite").parquet(
-            f"{counts_path}/run={run}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Each micro-batch publishes its own (day, n, conv) partial. Returns
+    the started StreamingQuery."""
+    return partial_sink(
+        stream,
+        counts_path,
+        checkpoint_dir,
+        lambda df: arm_day_counts(df, conversion_type, treatment_pred),
     )
 
 
 def read_arm_day_counts(spark: SparkSession, counts_path: str) -> DataFrame:
     """Merged (day, n, conv) view over every published partial — one
     groupBy over |days|·|batches| rows (monitor-state-sized)."""
-    parts = spark.read.parquet(counts_path).drop("run", "batch")
-    return parts.groupBy("day").agg(
+    return read_partials(spark, counts_path).groupBy("day").agg(
         F.sum("n").alias("n"), F.sum("conv").alias("conv")
     )
 
@@ -140,22 +130,14 @@ def sprt_trajectory(
     ).orderBy("day")
 
 
-def incremental_srm_sink(
-    stream: DataFrame,
-    sketch_path: str,
-    checkpoint_dir: str,
-    run: str | None = None,
-):
+def incremental_srm_sink(stream: DataFrame, sketch_path: str, checkpoint_dir: str):
     """Per-batch HLL user sketches keyed by experiment arm — distinct
     users are NOT a sum monoid (one user spans many batches), so the
     partial is the mergeable sketch, not a count. Delegates to
     streaming/rollup.py's sink with arm = user_id % 2 derived first."""
-    from sec_dl_spark.streaming.rollup import incremental_hll_sink
-
     armed = stream.withColumn("arm", (F.col("user_id") % 2).cast("long"))
     return incremental_hll_sink(
-        armed, sketch_path, checkpoint_dir, keys=["arm"],
-        value_col="user_id", run=run,
+        armed, sketch_path, checkpoint_dir, keys=["arm"], value_col="user_id"
     )
 
 
@@ -166,8 +148,6 @@ def srm_from_sketches(spark: SparkSession, sketch_path: str) -> DataFrame:
     HLL is exact in sparse mode at small cardinalities and within ~2%
     beyond; an SRM worth stopping an experiment for (the classic
     bucketing bug) shifts arms by far more than the sketch error."""
-    from sec_dl_spark.streaming.rollup import read_hll_rollup
-
     est = read_hll_rollup(spark, sketch_path, keys=["arm"], estimate_col="n")
     arms = est.agg(
         F.sum(F.when(F.col("arm") == 0, F.col("n"))).cast("long").alias("n_users_a"),

@@ -31,6 +31,7 @@ from sec_dl_spark.operators.fts import CorpusStats, build_inverted_index
 from sec_dl_spark.streaming.commit import (
     check_source_marker,
     commit_batch_partition,
+    foreach_batch_sink,
     run_token,
 )
 
@@ -78,12 +79,7 @@ def incremental_index_sink(
                 batch_id,
             )
 
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(docs_stream, on_batch, checkpoint_dir)
 
 
 def read_incremental_index(

@@ -5,9 +5,9 @@ Gupta/Mumick counting rule): a change stream of (key, op ∈ {'I','D'},
 values) rows maintains a key-grain aggregate view without ever
 re-scanning fact history.
 
-Storage discipline matches streaming/rollup.py / streaming/dedup.py:
-each micro-batch publishes only its OWN folded signed partial under
-``run=<run>/batch=<id>`` (a retried batch overwrites the same directory
+Storage discipline matches streaming/rollup.py: each micro-batch
+publishes only its OWN folded signed partial through
+``commit.partial_sink`` (a retried batch overwrites the same directory
 — idempotent, no read-modify-write race on shared state), and the view
 is merge-on-read: one aggregation over key-grain partials, keys whose
 maintained count reaches 0 dropped (the recompute would not hold them).
@@ -16,11 +16,6 @@ monoid, so the merge needs no ordering and the maintained view is
 batching-invariant by algebra (pinned by the pytest: 1-batch == 3-batch
 == from-scratch recompute, deletes crossing batch boundaries included).
 
-The run id derives from the checkpoint path (streaming/bots.py
-discipline): a restarted sink resuming the same checkpoint lands its
-replayed batches in the SAME run partitions instead of double-counting
-beside the crashed attempt's.
-
 At real scale the partial partitions accumulate one tiny file set per
 batch; ``streaming/rollup.py:compact_rollup``'s two-phase fold applies
 verbatim (partials here are sum-monoid rows too).
@@ -28,12 +23,11 @@ verbatim (partials here are sum-monoid rows too).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sec_dl_spark.operators.cdc import fold_changes
+from sec_dl_spark.streaming.commit import partial_sink, read_partials
 
 
 def incremental_agg_sink(
@@ -43,40 +37,15 @@ def incremental_agg_sink(
     keys: list,
     measures: dict,
     op_col: str = "op",
-    run: str | None = None,
 ):
-    """availableNow foreachBatch sink: fold each micro-batch of change
-    rows to its signed key-grain partial and publish it as its own
-    ``run=<run>/batch=<id>`` partition. Returns the started
+    """Fold each micro-batch of change rows to its signed key-grain
+    partial and publish it as its own partition. Returns the started
     StreamingQuery."""
-    run = run or hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id == 0:
-            # batch 0 only ever fires on a FRESH checkpoint, i.e. the
-            # source is replaying from the beginning — clear this run's
-            # prior partials first. A wiped-and-recreated checkpoint can
-            # replay with DIFFERENT batch boundaries (e.g. the read
-            # limit changed), and overwrite-by-batch-id alone would
-            # leave the old attempt's higher-numbered partials behind
-            # to double-count in the merge.
-            spark = batch_df.sparkSession
-            jvm = spark._jvm
-            path = jvm.org.apache.hadoop.fs.Path(f"{view_path}/run={run}")
-            fs = path.getFileSystem(
-                spark._jsc.hadoopConfiguration()
-            )
-            if fs.exists(path):
-                fs.delete(path, True)
-        fold_changes(batch_df, keys, measures, op_col=op_col).write.mode(
-            "overwrite"
-        ).parquet(f"{view_path}/run={run}/batch={batch_id}")
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return partial_sink(
+        stream,
+        view_path,
+        checkpoint_dir,
+        lambda df: fold_changes(df, keys, measures, op_col=op_col),
     )
 
 
@@ -92,7 +61,7 @@ def read_view(
     partials (plus an optional pre-materialized ``base`` aggregate at
     the same grain), with the n=0 key-drop guard. Cost is
     O(|view| + |touched keys| · |batches|) — never a fact rescan."""
-    parts = spark.read.parquet(view_path).drop("run", "batch")
+    parts = read_partials(spark, view_path)
     if base is not None:
         parts = base.select(*keys, n_col, *measures).unionByName(parts)
     return (

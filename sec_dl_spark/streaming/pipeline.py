@@ -8,7 +8,8 @@ monitor. Here the same capabilities are declarative streams:
 - file-source micro-batches replace the work-queue sampling;
 - watermark + dropDuplicates replaces amended-filing double-processing;
 - windowed / session aggregations replace the monitor's polling arithmetic;
-- foreachBatch carries the JDBC upsert (sinks/jdbc.py) — checkpointed
+- foreachBatch carries the JDBC upsert (sinks/jdbc.py), started by
+  streaming/commit.py:foreach_batch_sink like every sink — checkpointed
   offsets replace the reference's delete-trigger work queue (K10).
 
 Every transform here is also exercised in batch form by the oracle-checked
@@ -134,18 +135,6 @@ def run_agg_stream_to_memory(df: DataFrame, name: str, timeout_s: int = 120) -> 
     )
     q.awaitTermination(timeout_s)
     return df.sparkSession.table(name)
-
-
-def foreach_batch_sink(df: DataFrame, batch_fn, checkpoint_dir: str):
-    """Generic foreachBatch writer (the JDBC-upsert carrier, SURVEY K4):
-    checkpointed micro-batches give effectively-once delivery to the PG
-    serving mirror."""
-    return (
-        df.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 RUNNING_TOTALS_SCHEMA = T.StructType(

@@ -1,7 +1,7 @@
 """Streaming maintenance of a partial-aggregate rollup (merge-on-read).
 
 Composes operators/rollup.py with the micro-batch loop: each batch writes
-its OWN partial-rollup partition (``run=<run>/batch=<id>`` — a retry
+its OWN partial-rollup partition through ``commit.partial_sink`` (a retry
 overwrites the same directory, so commits are idempotent without any
 read-modify-write race), and the READ path merges all partials with one
 rollup-sized aggregation. This is the same append-only + merge-on-read
@@ -14,11 +14,11 @@ merge noticeable — the fold reads rollup-sized data only.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from sec_dl_spark.operators.rollup import Measure, build_rollup, merge_rollups
+from sec_dl_spark.streaming.commit import partial_sink, read_partials
 
 
 def incremental_rollup_sink(
@@ -27,24 +27,11 @@ def incremental_rollup_sink(
     checkpoint_dir: str,
     keys: list[str],
     measures: list[Measure],
-    run: str | None = None,
 ):
-    """availableNow foreachBatch sink: per micro-batch, aggregate the
-    batch to its partial rollup and publish it as its own partition.
-    Returns the started StreamingQuery."""
-    run = run or uuid.uuid4().hex[:12]
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = build_rollup(batch_df, keys, measures)
-        part.write.mode("overwrite").parquet(
-            f"{rollup_path}/run={run}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Per micro-batch, aggregate the batch to its partial rollup and
+    publish it as its own partition. Returns the started StreamingQuery."""
+    return partial_sink(
+        stream, rollup_path, checkpoint_dir, lambda df: build_rollup(df, keys, measures)
     )
 
 
@@ -57,7 +44,7 @@ def read_rollup(
     """Merged view over every published partial partition: one groupBy
     over rollup-sized data. Pass the result to operators/rollup.finalize
     for derived stats."""
-    parts = spark.read.parquet(rollup_path).drop("run", "batch")
+    parts = read_partials(spark, rollup_path)
     # merge_rollups is union+agg; with the union already materialized as
     # one frame, a single re-aggregation is the same algebra
     return merge_rollups(parts.limit(0), parts, keys, measures)
@@ -76,7 +63,9 @@ def compact_rollup(
     with its own inputs would double-count, so the fold is written under
     a run name the reader treats like any other and the inputs are
     removed before the function returns; a crash mid-delete requires
-    finishing the delete, never recomputing)."""
+    finishing the delete, never recomputing). The fold is no run's own
+    output, so a sink started on a fresh checkpoint refuses the path at
+    batch 0 — re-ingesting folded data would double-count it."""
     from py4j.java_gateway import java_import
 
     jvm = spark.sparkContext._jvm
@@ -103,34 +92,20 @@ def incremental_hll_sink(
     checkpoint_dir: str,
     keys: list[str],
     value_col: str,
-    run: str | None = None,
 ):
     """Streaming maintenance of DISTINCT counts via mergeable HLL
     sketches — the COUNT(DISTINCT) twin of ``incremental_rollup_sink``
     (sums/mins merge trivially; distincts need a sketch to merge without
     re-reading raw data). Per micro-batch: one ``hll_sketch_agg`` per key
-    group, published as that batch's own ``run=<run>/batch=<id>``
-    partition (idempotent overwrite-on-retry, same append-only
-    discipline). Batch partials are key-cardinality-sized binaries —
-    never user-cardinality-sized — so a day of batches stays tiny and
-    the read-side union is exact-merge cheap."""
-    from pyspark.sql import functions as F
-
-    run = run or uuid.uuid4().hex[:12]
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy(*keys).agg(
-            F.hll_sketch_agg(value_col).alias("sk")
-        )
-        part.write.mode("overwrite").parquet(
-            f"{sketch_path}/run={run}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    group, published as that batch's own partial. Batch partials are
+    key-cardinality-sized binaries — never user-cardinality-sized — so a
+    day of batches stays tiny and the read-side union is exact-merge
+    cheap."""
+    return partial_sink(
+        stream,
+        sketch_path,
+        checkpoint_dir,
+        lambda df: df.groupBy(*keys).agg(F.hll_sketch_agg(value_col).alias("sk")),
     )
 
 
@@ -144,10 +119,7 @@ def read_hll_rollup(
     ``hll_union_agg`` per key, then the estimate. Identical to sketching
     the raw union directly (DataSketches HLL is deterministic per value
     set), which the cross-batch pytest pins."""
-    from pyspark.sql import functions as F
-
-    parts = spark.read.parquet(sketch_path).drop("run", "batch")
-    return parts.groupBy(*keys).agg(
+    return read_partials(spark, sketch_path).groupBy(*keys).agg(
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias(estimate_col)
     )
 
@@ -170,11 +142,12 @@ def read_hll_window_rollup(
     per spine day. Repeat users across days/batches collapse inside
     the union — the property the cross-batch pytest pins against the
     exact distinct."""
-    from pyspark.sql import functions as F
-
-    parts = spark.read.parquet(sketch_path).drop("run", "batch")
     # one sketch per day first (several batches may share a day)
-    daily = parts.groupBy(day_col).agg(F.hll_union_agg("sk").alias("sk"))
+    daily = (
+        read_partials(spark, sketch_path)
+        .groupBy(day_col)
+        .agg(F.hll_union_agg("sk").alias("sk"))
+    )
     fan = daily.select(
         F.col("sk"),
         F.explode(
@@ -197,89 +170,35 @@ def incremental_cms_sink(
     col: str,
     width: int = 256,
     depth: int = 4,
-    run: str | None = None,
 ):
     """Streaming maintenance of point-frequency estimates via the
     engine-portable count-min sketch (operators/sketch.py:cms_build) —
     the "how OFTEN is this key arriving" twin of ``incremental_hll_sink``
     (which answers "how many DISTINCT"). Per micro-batch: one cms_build
     over the batch (≤ depth·width counter rows, whatever the batch
-    size), published as that batch's own ``run=<run>/batch=<id>``
-    partition. The run id derives from the checkpoint path (the ivm.py
-    convention), so a restarted job re-publishing a replayed batch
-    OVERWRITES its own partition instead of double-counting; the read
-    side sums partials by (row, slot) — the CM sketch is a counter
-    monoid, so batching is invariant by algebra and estimates from the
-    merged sketch equal a from-scratch build over everything ingested
-    (pinned by pytest).
-
-    CAUTION — unlike the sibling ``incremental_hll_sink`` (HLL union is
-    idempotent, so duplicated runs merge harmlessly), a counter monoid
-    double-counts across runs: reprocessing the same source with a FRESH
-    checkpoint dir (or a new explicit ``run``) publishes a new
-    ``run=<id>`` partition while the old run's partials remain.
-    ``read_cms_sketch`` therefore refuses a multi-run sketch_path by
-    default — clear ``sketch_path`` whenever the checkpoint is reset, or
-    read a single run via its ``run=`` argument."""
-    import hashlib
-
-    from pyspark.sql import functions as F  # noqa: F401 — parity w/ siblings
-
+    size), published as that batch's own partial; the read side sums
+    partials by (row, slot) — the CM sketch is a counter monoid, so
+    batching is invariant by algebra and estimates from the merged
+    sketch equal a from-scratch build over everything ingested (pinned
+    by pytest). Unlike HLL union, counters double-count a reprocessed
+    source, which is what the batch-0 guard of ``partial_sink`` stops:
+    a second checkpoint over the same ``sketch_path`` is refused."""
     from sec_dl_spark.operators.sketch import cms_build
 
-    run = run or hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = cms_build(batch_df, col, width=width, depth=depth)
-        part.write.mode("overwrite").parquet(
-            f"{sketch_path}/run={run}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return partial_sink(
+        stream,
+        sketch_path,
+        checkpoint_dir,
+        lambda df: cms_build(df, col, width=width, depth=depth),
     )
 
 
-def read_cms_sketch(
-    spark: SparkSession,
-    sketch_path: str,
-    run: str | None = None,
-    allow_multiple_runs: bool = False,
-) -> DataFrame:
+def read_cms_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
     """Merged (row, slot, cnt) view over the published CMS partials —
     one groupBy over ≤ batches·depth·width counter rows. Feed to
-    operators/sketch.py:cms_estimate for point queries.
-
-    Counts are NOT idempotent across runs (unlike the HLL sibling):
-    a reprocessed source under a fresh checkpoint publishes a second
-    ``run=<id>`` partition and a naive sum would double-count every
-    key. So: ``run=`` reads exactly that run's partials; with no run
-    given, a sketch_path holding more than one run raises instead of
-    silently over-counting. Pass ``allow_multiple_runs=True`` only when
-    the runs are KNOWN disjoint sources (deliberate multi-stream merge,
-    where summing across runs is the intended total)."""
-    from pyspark.sql import functions as F
-
-    if run is not None:
-        parts = spark.read.parquet(f"{sketch_path}/run={run}").drop("batch")
-    else:
-        parts = spark.read.parquet(sketch_path)
-        if not allow_multiple_runs:
-            runs = [r["run"] for r in parts.select("run").distinct().collect()]
-            if len(runs) > 1:
-                raise ValueError(
-                    f"CMS sketch at {sketch_path!r} holds {len(runs)} runs "
-                    f"({sorted(map(str, runs))}); summing across runs double-"
-                    "counts every key reprocessed under a reset checkpoint. "
-                    "Clear the sketch_path when resetting the checkpoint, "
-                    "read one run via run=..., or pass "
-                    "allow_multiple_runs=True for a deliberate merge of "
-                    "disjoint sources."
-                )
-        parts = parts.drop("run", "batch")
-    return parts.groupBy("row", "slot").agg(
-        F.sum("cnt").cast("long").alias("cnt")
+    operators/sketch.py:cms_estimate for point queries."""
+    return (
+        read_partials(spark, sketch_path)
+        .groupBy("row", "slot")
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
     )

@@ -2226,6 +2226,20 @@ def test_bloom_build_rejects_bad_width(spark):
         bloom_build(df, "k", m_bits=100)
 
 
+def test_bloom_might_contain_rejects_non_integer_words(spark):
+    """Bloom words are spliced into SQL text, so anything but a signed
+    64-bit integer must be refused before it reaches the parser."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from sec_dl_spark.operators.relational import BloomFilter, bloom_might_contain
+
+    with _pytest.raises(TypeError):
+        bloom_might_contain(BloomFilter(("1) OR (1",), 64, 1), F.col("k"))
+    with _pytest.raises(ValueError):
+        bloom_might_contain(BloomFilter((1 << 63,), 64, 1), F.col("k"))
+
+
 def test_global_cumsum_matches_window_sum(spark):
     """Distributed prefix sum == single-partition window running sum for a
     total order, with a range exchange in the plan instead of a global
@@ -2814,3 +2828,18 @@ def test_nested_level_topk_matches_exploded_topk_any_chunking(spark):
             assert got_rows == expected_rows, parts
         got_tot = {(r["query_id"], r["lvl"]): r["n_total"] for r in tot.collect()}
         assert got_tot == expected_tot, parts
+
+
+def test_nested_level_topk_rejects_non_ascending_levels(spark):
+    """A repeated or descending level grid is not a nested grid: refused."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from sec_dl_spark.operators.similarity import nested_level_topk
+
+    df = spark.createDataFrame(
+        [(0, 0, 1, 1.0)], "query_id long, neighbor_id long, rnk int, score double"
+    )
+    for levels in ((4, 4, 8), (8, 4)):
+        with _pytest.raises(ValueError, match="strictly ascending"):
+            nested_level_topk(df, levels, "rnk", [F.col("score").desc()], 3, ("query_id",), "lvl")

@@ -59,7 +59,7 @@ def test_session_counts_stream_runs(spark, events_dir):
 
 
 def test_foreach_batch_sink(spark, events_dir, tmp_path):
-    from sec_dl_spark.streaming.pipeline import foreach_batch_sink
+    from sec_dl_spark.streaming.commit import foreach_batch_sink
 
     seen = []
 
@@ -1109,48 +1109,6 @@ def test_publish_manifest_claim_is_exclusive_and_preserves_winner(spark, tmp_pat
     assert os.listdir(tmp_path / "_commits") == ["v1.json"]
 
 
-def test_source_marker_migrates_legacy_batch0_layout(spark, tmp_path_factory):
-    """Markers written by the earlier batch-0-only format (partitioned by
-    ingest_run alone) must keep enforcing the replay contract: the loader
-    migrates them to the per-batch layout in place — an unchanged source
-    replays clean, a changed one still fails fast."""
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.streaming.commit import check_source_marker, run_token
-
-    sink = str(tmp_path_factory.mktemp("legacy_marker") / "registry")
-    run = run_token("some/ckpt")
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    batch = spark.createDataFrame([(1, "alpha"), (2, "beta")], schema)
-
-    # write the marker the way the OLD code did: one row per run, no batch col
-    row = batch.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.shiftrightunsigned(F.xxhash64(F.col("doc_id")), 33)).alias("fp"),
-    ).first()
-    (
-        spark.createDataFrame([(row["n"], row["fp"], run)], "n long, fp long, ingest_run string")
-        .write.mode("overwrite")
-        .partitionBy("ingest_run")
-        .parquet(f"{sink}_runs")
-    )
-
-    # unchanged batch 0 passes and the directory migrates to per-batch rows
-    check_source_marker(batch, sink, run, 0, "doc_id")
-    migrated = spark.read.parquet(f"{sink}_runs")
-    assert "ingest_batch" in migrated.columns
-    # later batches now write beside it without partition-depth conflicts
-    check_source_marker(batch, sink, run, 1, "doc_id")
-    assert spark.read.parquet(f"{sink}_runs").count() == 2
-
-    # a CHANGED batch 0 under the same run still fails fast post-migration
-    changed = spark.createDataFrame([(9, "other")], schema)
-    with pytest.raises(ValueError, match="CHANGED"):
-        check_source_marker(changed, sink, run, 0, "doc_id")
-
-
 def test_vacuum_staging_removes_only_old_orphans(spark, tmp_path_factory):
     """Staging vacuum: an old unreferenced attempt dir (crashed commit) is
     removed; the committed batch's staged data and a FRESH orphan (a
@@ -1434,9 +1392,10 @@ def test_streaming_rollup_matches_batch_and_compacts(spark, tmp_path_factory):
     """Micro-batched rollup maintenance == batch recompute: events stream
     in as file-batches, each publishing its partial partition; the merged
     read equals the one-pass groupBy (count/min/max exactly, sum to float
-    tolerance), survives compaction unchanged, and a replayed run with a
-    fresh checkpoint overwrites its partitions instead of double-counting."""
+    tolerance), survives compaction unchanged, and a replay after wiping
+    the checkpoint overwrites its partitions instead of double-counting."""
     import math
+    import shutil
 
     from pyspark.sql import types as T
 
@@ -1464,17 +1423,17 @@ def test_streaming_rollup_matches_batch_and_compacts(spark, tmp_path_factory):
 
     keys, ms = ["k"], [Measure("v")]
 
-    def run_stream(ckpt: str, run: str):
+    ckpt = str(tmp_path_factory.mktemp("rollup_ckpt") / "ckpt")
+
+    def run_stream():
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/b=*")
         )
-        incremental_rollup_sink(
-            stream, rollup, ckpt, keys, ms, run=run
-        ).awaitTermination(120)
+        incremental_rollup_sink(stream, rollup, ckpt, keys, ms).awaitTermination(120)
 
-    run_stream(str(tmp_path_factory.mktemp("rollup_ckpt1")), run="r1")
+    run_stream()
 
     def snap(df):
         return {
@@ -1490,9 +1449,10 @@ def test_streaming_rollup_matches_batch_and_compacts(spark, tmp_path_factory):
         assert math.isclose(got[k][3], want[k][3], rel_tol=1e-12)
         assert math.isclose(got[k][4], want[k][4], rel_tol=1e-12)
 
-    # replay same run with a fresh checkpoint: partitions overwrite, no
-    # double counting
-    run_stream(str(tmp_path_factory.mktemp("rollup_ckpt2")), run="r1")
+    # replay after wiping the checkpoint: same run token, partitions
+    # overwrite, no double counting
+    shutil.rmtree(ckpt)
+    run_stream()
     assert snap(read_rollup(spark, rollup, keys, ms)) == got
 
     # compaction folds partitions; the merged view is unchanged
@@ -1509,8 +1469,10 @@ def test_streaming_change_feed_cross_batch(spark, tmp_path_factory):
     classification against the pre-batch state (tombstones remove; an
     unchanged re-upsert emits nothing; deleting an absent key emits
     nothing), merge-on-read current state equals the hand-applied result,
-    a replay of the same run is idempotent, and a foreign run token is
-    refused on an existing state dir."""
+    a replay after wiping the checkpoint is idempotent, and a second
+    checkpoint (another run token) is refused on an existing state dir."""
+    import shutil
+
     import pytest
 
     from pyspark.sql import types as T
@@ -1541,17 +1503,19 @@ def test_streaming_change_feed_cross_batch(spark, tmp_path_factory):
             "overwrite"
         ).parquet(f"{src}/b={b}")
 
-    def run_stream(ckpt: str, run: str):
+    ckpt = str(tmp_path_factory.mktemp("cdc_ckpt") / "ckpt")
+
+    def run_stream(ckpt: str):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/b=*")
         )
         change_feed_sink(
-            stream, state, feed, ckpt, ["k"], ["v"], run=run
+            stream, state, feed, ckpt, ["k"], ["v"]
         ).awaitTermination(120)
 
-    run_stream(str(tmp_path_factory.mktemp("cdc_ckpt1")), run="cdcrun")
+    run_stream(ckpt)
 
     feed_rows = {
         (r["batch"], r["k"]): r["change_type"]
@@ -1574,8 +1538,9 @@ def test_streaming_change_feed_cross_batch(spark, tmp_path_factory):
     }
     assert snap == {"k1": ("U", 9.0), "k2": ("U", 5.0), "k3": ("U", 3.0)}
 
-    # replay same run, fresh checkpoint: partitions overwrite, identical feed
-    run_stream(str(tmp_path_factory.mktemp("cdc_ckpt2")), run="cdcrun")
+    # replay after wiping the checkpoint: partitions overwrite, identical feed
+    shutil.rmtree(ckpt)
+    run_stream(ckpt)
     assert {
         (r["batch"], r["k"]): r["change_type"]
         for r in read_change_feed(spark, feed).collect()
@@ -1585,9 +1550,10 @@ def test_streaming_change_feed_cross_batch(spark, tmp_path_factory):
         for r in current_state(spark, state, ["k"]).collect()
     } == snap
 
-    # a different run token over the same state dir must be refused
+    # a second checkpoint (different run token) over the same state dir
+    # must be refused
     with pytest.raises(Exception, match="another run"):
-        run_stream(str(tmp_path_factory.mktemp("cdc_ckpt3")), run="other")
+        run_stream(str(tmp_path_factory.mktemp("cdc_ckpt2")))
 
 
 def test_running_totals_transform_with_state(spark, events_dir):
@@ -1699,8 +1665,10 @@ def test_streaming_hll_rollup_matches_direct_estimate(spark, tmp_path_factory):
     the union: user ids stream in as file-batches, each publishing its
     per-key sketch partial; the merged hll_union_agg estimate equals
     hll_sketch_agg over the full data EXACTLY (DataSketches HLL is
-    deterministic per value set), and a replayed run with a fresh
+    deterministic per value set), and a replay after wiping the
     checkpoint overwrites its partitions instead of double-merging."""
+    import shutil
+
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -1723,17 +1691,17 @@ def test_streaming_hll_rollup_matches_direct_estimate(spark, tmp_path_factory):
     streamed_rows = [r for b in range(3) for r in data[b * 100 : 200 + b * 100]]
     full = spark.createDataFrame(streamed_rows, schema)
 
-    def run_stream(ckpt: str, run: str):
+    ckpt = str(tmp_path_factory.mktemp("hll_ckpt") / "ckpt")
+
+    def run_stream():
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/b=*")
         )
-        incremental_hll_sink(
-            stream, out, ckpt, ["k"], "uid", run=run
-        ).awaitTermination(120)
+        incremental_hll_sink(stream, out, ckpt, ["k"], "uid").awaitTermination(120)
 
-    run_stream(str(tmp_path_factory.mktemp("hll_ckpt1")), run="r1")
+    run_stream()
 
     got = {
         r["k"]: r["n_distinct"]
@@ -1754,8 +1722,9 @@ def test_streaming_hll_rollup_matches_direct_estimate(spark, tmp_path_factory):
     for k in exact:
         assert abs(got[k] - exact[k]) <= max(2, 0.05 * exact[k])
 
-    # replay with a fresh checkpoint: overwrite, no double-merge drift
-    run_stream(str(tmp_path_factory.mktemp("hll_ckpt2")), run="r1")
+    # replay after wiping the checkpoint: overwrite, no double-merge drift
+    shutil.rmtree(ckpt)
+    run_stream()
     got2 = {
         r["k"]: r["n_distinct"]
         for r in read_hll_rollup(spark, out, ["k"]).collect()
@@ -1796,7 +1765,6 @@ def test_streaming_freshness_monitor_via_rollup_sink(spark, tmp_path_factory):
         str(tmp_path_factory.mktemp("fresh_ckpt")),
         ["event_type"],
         [Measure("ts_s")],
-        run="fresh1",
     ).awaitTermination(120)
 
     per = read_rollup(spark, rollup, ["event_type"], [Measure("ts_s")]).select(
@@ -1865,7 +1833,7 @@ def test_streaming_psi_drift_monitor(spark, tmp_path_factory):
         .parquet(f"{src}/b=*")
     )
     done = incremental_bin_counts_sink(
-        stream, out, str(tmp_path_factory.mktemp("drift_ckpt")), run="r1"
+        stream, out, str(tmp_path_factory.mktemp("drift_ckpt"))
     ).awaitTermination(120)
     assert done
 
@@ -1945,7 +1913,7 @@ def test_streaming_sprt_monitor_is_batching_invariant(spark, tmp_path_factory):
         .parquet(f"{src}/b=*")
     )
     done = incremental_sprt_sink(
-        stream, out, str(tmp_path_factory.mktemp("sprt_ckpt")), run="r1"
+        stream, out, str(tmp_path_factory.mktemp("sprt_ckpt"))
     ).awaitTermination(120)
     assert done
 
@@ -2014,7 +1982,7 @@ def test_streaming_srm_gate_deduplicates_users_across_batches(
         .parquet(f"{src}/b=*")
     )
     done = incremental_srm_sink(
-        stream, out, str(tmp_path_factory.mktemp("srm_ckpt")), run="r1"
+        stream, out, str(tmp_path_factory.mktemp("srm_ckpt"))
     ).awaitTermination(120)
     assert done
 
@@ -2077,7 +2045,7 @@ def test_hll_window_rollup_matches_exact_trailing_distinct(
     armed = stream.select(F.col("ts").cast("date").alias("day"), "user_id")
     done = incremental_hll_sink(
         armed, out, str(tmp_path_factory.mktemp("wau_ckpt")),
-        keys=["day"], value_col="user_id", run="r1",
+        keys=["day"], value_col="user_id",
     ).awaitTermination(120)
     assert done
 
@@ -2147,7 +2115,7 @@ def test_streaming_bot_gate_is_batching_invariant(spark, tmp_path_factory):
         .parquet(f"{src}/b=*")
     )
     done = incremental_gap_moments_sink(
-        stream, out, str(tmp_path_factory.mktemp("bots_ckpt")), run="r1"
+        stream, out, str(tmp_path_factory.mktemp("bots_ckpt"))
     ).awaitTermination(120)
     assert done
 
@@ -2254,9 +2222,11 @@ def test_streaming_cms_sink_matches_from_scratch_build(spark, tmp_path_factory):
     the union, EXACTLY: the CM sketch is a (row, slot) counter monoid,
     so however the stream batches, summed partials equal one build — and
     estimates from the merged sketch therefore carry the same one-sided
-    guarantee. A replayed run under the SAME run id (pinned here; in
-    production it derives from the checkpoint path) overwrites its own
-    partitions — no double-counting."""
+    guarantee. A replay after wiping the checkpoint (same run token,
+    derived from the checkpoint path) overwrites its own partitions — no
+    double-counting."""
+    import shutil
+
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -2273,17 +2243,19 @@ def test_streaming_cms_sink_matches_from_scratch_build(spark, tmp_path_factory):
         ).write.mode("overwrite").parquet(f"{src}/b={b}")
     full = spark.createDataFrame(data, schema)
 
-    def run_stream(ckpt: str):
+    ckpt = str(tmp_path_factory.mktemp("cms_ckpt") / "ckpt")
+
+    def run_stream():
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/b=*")
         )
         incremental_cms_sink(
-            stream, out, ckpt, "uid", width=8, depth=4, run="r1"
+            stream, out, ckpt, "uid", width=8, depth=4
         ).awaitTermination(120)
 
-    run_stream(str(tmp_path_factory.mktemp("cms_ckpt1")))
+    run_stream()
     merged = {
         (r["row"], r["slot"]): r["cnt"]
         for r in read_cms_sketch(spark, out).collect()
@@ -2305,8 +2277,9 @@ def test_streaming_cms_sink_matches_from_scratch_build(spark, tmp_path_factory):
     true = {r["uid"]: r["n"] for r in full.groupBy("uid").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert all(est[k] >= true[k] for k in true)
 
-    # replay under the same run id: partitions overwrite, totals stable
-    run_stream(str(tmp_path_factory.mktemp("cms_ckpt2")))
+    # replay after wiping the checkpoint: partitions overwrite, totals stable
+    shutil.rmtree(ckpt)
+    run_stream()
     again = {
         (r["row"], r["slot"]): r["cnt"]
         for r in read_cms_sketch(spark, out).collect()
@@ -2316,11 +2289,11 @@ def test_streaming_cms_sink_matches_from_scratch_build(spark, tmp_path_factory):
 
 def test_cms_sink_multi_run_guard(spark, tmp_path_factory):
     """A counter monoid is NOT idempotent across runs (unlike HLL):
-    reprocessing the same source under a fresh checkpoint (→ new run id)
-    leaves the old run's partials beside the new ones, and a naive
-    cross-run sum doubles every key. read_cms_sketch must therefore
-    refuse a multi-run path by default, serve one run via run=..., and
-    only sum across runs under the explicit disjoint-sources opt-in."""
+    reprocessing the same source under a second checkpoint (another run
+    token) would leave its partials beside the first run's, and the
+    merged sum would double every key. The sink therefore refuses such a
+    path at batch 0, before writing anything, and the first run's sketch
+    still reads undoubled."""
     import pytest as _pytest
     from pyspark.sql import types as T
 
@@ -2336,31 +2309,301 @@ def test_cms_sink_multi_run_guard(spark, tmp_path_factory):
     ).parquet(f"{src}/b=0")
     full = spark.createDataFrame(data, schema)
 
-    def run_stream(ckpt: str, run: str):
+    def run_stream(ckpt: str):
         stream = spark.readStream.schema(schema).parquet(f"{src}/b=*")
         incremental_cms_sink(
-            stream, out, ckpt, "uid", width=8, depth=4, run=run
+            stream, out, ckpt, "uid", width=8, depth=4
         ).awaitTermination(120)
 
-    run_stream(str(tmp_path_factory.mktemp("cmsg_ck1")), "rA")
-    # same source reprocessed under a reset checkpoint → second run id
-    run_stream(str(tmp_path_factory.mktemp("cmsg_ck2")), "rB")
-
-    with _pytest.raises(ValueError, match="double"):
-        read_cms_sketch(spark, out).collect()
+    run_stream(str(tmp_path_factory.mktemp("cmsg_ck1")))
+    # same source reprocessed under a second checkpoint → another run token
+    with _pytest.raises(Exception, match="another run"):
+        run_stream(str(tmp_path_factory.mktemp("cmsg_ck2")))
 
     scratch = {
         (r["row"], r["slot"]): r["cnt"]
         for r in cms_build(full, "uid", width=8, depth=4).collect()
     }
-    one_run = {
+    merged = {
         (r["row"], r["slot"]): r["cnt"]
-        for r in read_cms_sketch(spark, out, run="rA").collect()
+        for r in read_cms_sketch(spark, out).collect()
     }
-    assert one_run == scratch  # a single run's view is undoubled
+    assert merged == scratch  # the refused run published nothing
 
-    both = {
-        (r["row"], r["slot"]): r["cnt"]
-        for r in read_cms_sketch(spark, out, allow_multiple_runs=True).collect()
-    }
-    assert both == {k: 2 * v for k, v in scratch.items()}  # the documented hazard
+
+_EVENTS = "event_id long, ts timestamp, user_id long, event_type string, value double"
+
+
+def _event_batches():
+    """Two time-partitioned event batches (the bots sink's ordered-merge
+    contract) on either side of midnight, with users and event types
+    recurring across both. Gaps stay short enough that squared
+    microseconds are exact in a double."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 5, 1, 23, 59)
+    return [
+        [
+            (
+                b * 100 + i,
+                base + dt.timedelta(seconds=3 * (20 * b + i)),
+                i % 5,
+                ("purchase", "view")[i % 2],
+                float(i % 13),
+            )
+            for i in range(20)
+        ]
+        for b in range(2)
+    ]
+
+
+def _restart_case(spark, name, out, sf_dir):
+    """One foreachBatch sink under the restart test: its source schema and
+    two batches, how to start it, its merged read, the single-pass
+    recompute of that read, and the directory holding its run tokens."""
+    from types import SimpleNamespace
+
+    from pyspark.sql.window import Window
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    case = SimpleNamespace(
+        schema=_EVENTS, batches=_event_batches(), run_dir=out, setup=lambda: None
+    )
+    if name == "rollup":
+        from sec_dl_spark.operators.rollup import Measure, build_rollup
+        from sec_dl_spark.streaming.rollup import incremental_rollup_sink, read_rollup
+
+        keys, ms = ["event_type"], [Measure("value")]
+        case.start = lambda s, c: incremental_rollup_sink(s, out, c, keys, ms)
+        case.merged = lambda: rows(read_rollup(spark, out, keys, ms))
+        case.recompute = lambda full: rows(build_rollup(full, keys, ms))
+    elif name == "hll":
+        from sec_dl_spark.streaming.rollup import incremental_hll_sink, read_hll_rollup
+
+        case.start = lambda s, c: incremental_hll_sink(s, out, c, ["event_type"], "user_id")
+        case.merged = lambda: rows(read_hll_rollup(spark, out, ["event_type"]))
+        case.recompute = lambda full: rows(
+            full.groupBy("event_type").agg(
+                F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("n_distinct")
+            )
+        )
+    elif name == "cms":
+        from sec_dl_spark.operators.sketch import cms_build
+        from sec_dl_spark.streaming.rollup import incremental_cms_sink, read_cms_sketch
+
+        case.start = lambda s, c: incremental_cms_sink(s, out, c, "user_id", width=8, depth=4)
+        case.merged = lambda: rows(read_cms_sketch(spark, out))
+        case.recompute = lambda full: rows(cms_build(full, "user_id", width=8, depth=4))
+    elif name == "drift":
+        from sec_dl_spark.streaming.drift import (
+            bin_counts,
+            incremental_bin_counts_sink,
+            read_bin_counts,
+        )
+
+        case.start = lambda s, c: incremental_bin_counts_sink(s, out, c)
+        case.merged = lambda: rows(read_bin_counts(spark, out))
+        case.recompute = lambda full: rows(bin_counts(full))
+    elif name == "sprt":
+        from sec_dl_spark.streaming.experiment import (
+            arm_day_counts,
+            incremental_sprt_sink,
+            read_arm_day_counts,
+        )
+
+        case.start = lambda s, c: incremental_sprt_sink(s, out, c)
+        case.merged = lambda: rows(read_arm_day_counts(spark, out))
+        case.recompute = lambda full: rows(arm_day_counts(full))
+    elif name == "srm":
+        from sec_dl_spark.streaming.experiment import incremental_srm_sink, srm_from_sketches
+
+        def arm(a):
+            return F.count_distinct(F.when(F.col("user_id") % 2 == a, F.col("user_id")))
+
+        case.start = lambda s, c: incremental_srm_sink(s, out, c)
+        case.merged = lambda: rows(
+            srm_from_sketches(spark, out).select("n_users_a", "n_users_b")
+        )
+        case.recompute = lambda full: rows(
+            full.agg(arm(0).alias("n_users_a"), arm(1).alias("n_users_b"))
+        )
+    elif name == "bots":
+        from sec_dl_spark.streaming.bots import (
+            gap_moments,
+            incremental_gap_moments_sink,
+            merged_gap_moments,
+        )
+
+        cols = ["user_id", "n_gaps", "gap_sum", "gap_sq"]
+        case.start = lambda s, c: incremental_gap_moments_sink(s, out, c)
+        case.merged = lambda: rows(
+            merged_gap_moments(spark, out).select(*cols, F.col("n_events").alias("n"))
+        )
+        case.recompute = lambda full: rows(gap_moments(full).select(*cols, "n"))
+    elif name == "ivm":
+        from sec_dl_spark.operators.cdc import fold_changes
+        from sec_dl_spark.streaming.ivm import incremental_agg_sink, read_view
+
+        case.schema = "k string, op string, v long"
+        case.batches = [
+            [("a", "I", 10), ("a", "I", 20), ("b", "I", 5)],
+            [("a", "D", 10), ("c", "I", 7)],
+        ]
+        ms = {"sv": "v"}
+        case.start = lambda s, c: incremental_agg_sink(s, out, c, ["k"], ms)
+        case.merged = lambda: rows(read_view(spark, out, ["k"], ms))
+        case.recompute = lambda full: rows(
+            fold_changes(full, ["k"], ms).where(F.col("n") > 0)
+        )
+    elif name == "cdc":
+        from sec_dl_spark.operators.cdc import apply_changes
+        from sec_dl_spark.streaming.cdc import change_feed_sink, current_state
+
+        case.schema = "k string, op string, v double, seq int"
+        case.batches = [
+            [("k1", "U", 1.0, 0), ("k2", "U", 2.0, 0)],
+            [("k1", "U", 9.0, 1), ("k2", "D", None, 1), ("k3", "U", 3.0, 1)],
+        ]
+        state = f"{out}/state"
+        case.run_dir = state
+        case.start = lambda s, c: change_feed_sink(
+            s, state, f"{out}/feed", c, ["k"], ["v"]
+        )
+        case.merged = lambda: rows(current_state(spark, state, ["k"]).select("k", "op", "v"))
+        case.recompute = lambda full: rows(
+            apply_changes(full, ["k"], ["seq"], op_col="op", delete_op="D").select(
+                "k", "op", "v"
+            )
+        )
+    elif name == "index":
+        from sec_dl_spark.operators.fts import build_inverted_index
+        from sec_dl_spark.streaming.index import (
+            incremental_index_sink,
+            read_incremental_index,
+        )
+
+        case.schema = "doc_id long, text string"
+        case.batches = [
+            [(1, "alpha beta gamma"), (2, "delta epsilon beta")],
+            [(3, "alpha zeta"), (4, "eta theta beta")],
+        ]
+
+        def merged():
+            postings, stats = read_incremental_index(spark, out)
+            return rows(postings.select("token", "doc_id", "positions")) + rows(
+                stats.df.select("token", "df")
+            )
+
+        def recompute(full):
+            postings = build_inverted_index(full)
+            return rows(postings.select("token", "doc_id", "positions")) + rows(
+                postings.groupBy("token").agg(F.count_distinct("doc_id").alias("df"))
+            )
+
+        case.start = lambda s, c: incremental_index_sink(s, out, c, buckets=4)
+        case.merged, case.recompute = merged, recompute
+    elif name == "dedup":
+        from sec_dl_spark.functions.analysis import fingerprint
+        from sec_dl_spark.streaming.dedup import incremental_dedup_sink
+
+        case.schema = "doc_id long, text string"
+        case.batches = [
+            [(1, "alpha beta"), (2, "gamma delta"), (3, "Alpha, beta!")],
+            [(10, "gamma delta"), (11, "new text"), (12, "new text")],
+        ]
+        case.run_dir = f"{out}/accepted"
+        first = Window.partitionBy(fingerprint(F.col("text"))).orderBy("doc_id")
+        case.start = lambda s, c: incremental_dedup_sink(
+            s, f"{out}/accepted", f"{out}/registry", c
+        )
+        case.merged = lambda: rows(
+            spark.read.parquet(f"{out}/accepted").select("doc_id", "text")
+        )
+        case.recompute = lambda full: rows(
+            full.withColumn("_rn", F.row_number().over(first))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+    elif name == "ann_index":
+        from sec_dl_spark.operators.similarity import (
+            assign_cells,
+            build_ivfpq_index,
+            pq_encode,
+            read_ivfpq_index,
+            write_ivfpq_index,
+        )
+        from sec_dl_spark.streaming.ann import incremental_ann_index_sink
+
+        vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            "vec_id", "embedding"
+        )
+        tail = sorted(tuple(r) for r in vecs.where(F.col("vec_id") >= 80).collect())
+        case.schema = "vec_id long, embedding array<float>"
+        case.batches = [tail[: len(tail) // 2], tail[len(tail) // 2 :]]
+        case.run_dir = f"{out}/increments"
+        case.setup = lambda: write_ivfpq_index(
+            build_ivfpq_index(vecs.where(F.col("vec_id") < 80), n_cells=8), out
+        )
+        case.start = lambda s, c: incremental_ann_index_sink(s, out, c)
+        case.merged = lambda: rows(
+            read_ivfpq_index(spark, out).encoded.where(F.col("vec_id") >= 80)
+        )
+
+        def recompute(full):
+            idx = read_ivfpq_index(spark, out)
+            cells = assign_cells(full, idx.centroids, "vec_id", "embedding")
+            return rows(
+                pq_encode(cells, idx.codebooks).select("vec_id", "cell", "pq_codes")
+            )
+
+        case.recompute = recompute
+    return case
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "rollup", "hll", "cms", "drift", "sprt", "srm", "ivm", "bots",
+        "cdc", "index", "dedup", "ann_index",
+    ],
+)
+def test_sink_restart_replays_last_batch_without_double_count(
+    spark, sf_dir, tmp_path_factory, name
+):
+    """Every foreachBatch sink survives a crash between a batch's write
+    and its checkpoint commit: with ``commits/1`` gone, the restarted
+    query re-runs batch 1, and that replay must overwrite its own output
+    instead of publishing a second copy beside it. The merged read equals
+    a single-pass recompute, and the output holds one run token."""
+    import os
+
+    src = tmp_path_factory.mktemp(f"restart_src_{name}")
+    out = str(tmp_path_factory.mktemp(f"restart_out_{name}") / "out")
+    ckpt = str(tmp_path_factory.mktemp(f"restart_ckpt_{name}") / "ckpt")
+    case = _restart_case(spark, name, out, sf_dir)
+    case.setup()
+    for b, chunk in enumerate(case.batches):
+        spark.createDataFrame(chunk, case.schema).coalesce(1).write.parquet(f"{src}/b={b}")
+
+    def run():
+        stream = (
+            spark.readStream.schema(case.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/b=*")
+        )
+        q = case.start(stream, ckpt)
+        assert q.awaitTermination(180)
+        assert q.exception() is None
+
+    run()
+    os.remove(f"{ckpt}/commits/1")
+    os.remove(f"{ckpt}/commits/.1.crc")
+    run()
+
+    full = spark.createDataFrame(sum(case.batches, []), case.schema)
+    assert case.merged() == case.recompute(full)
+    tokens = [d for d in os.listdir(case.run_dir) if "run=" in d]
+    assert len(tokens) == 1, tokens
