@@ -1,12 +1,16 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the HEADLINE query suite plus a table of A/B arms,
+over the fixtures in $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS], $SPARK_GRAFT_BENCH_REPS reps (default 3).
 
-Prints ONE JSON line (kept under ~1.5 KB so the driver's bounded stdout
-tail cannot clip its head — the full result object lives in
-BENCH_LAST.json next to this file):
+Prints ONE JSON line, kept under 1.5 KB so a bounded stdout tail cannot
+clip its head:
   {"metric": "...", "value": <total sec>, "unit": "sec", "sf": <sf>,
    "n_queries": N, "queries": {3 slowest: sec}, ...scalar ratios...,
    "full_artifact": "BENCH_LAST.json"}
+The full result object goes to BENCH_LAST.json next to this file, with a
+`lineage` object (cpus, nproc, sf_dir, reps, git_sha) saying where it came
+from. Nothing else is written; to keep a run, copy BENCH_LAST.json under a
+name of your choosing.
 
 Headline set: one representative per operator family whose cost scales with
 the data (scan+agg, multi-way join, range join, window, rollup, event
@@ -16,81 +20,24 @@ jaccard, vector top-k, text stats), plus the LLM-pipeline heavy path
 ranking) — the operators the 100 TB training-data story rests on. Each
 timing covers logical plan → execution → collect of the (small) result.
 
-The `ab_adc_vs_decode` object times the IVF-PQ candidate-scoring kernels
-head-to-head on the SERVING path (build_ivfpq_index runs once, untimed;
-each arm times ivfpq_topk over the same index/queries, medians across
-reps): "adc" = per-query lookup-table kernel (m probes/candidate),
-"decode" = reconstruct-then-cosine (dim-element work/candidate). The two
-arms differ only in the scoring kernel.
+Arms: ARMS is the table of A/B pairs. Each `Arm` names its object in the
+artifact, its two sides in call order, its ratio (key, numerator,
+denominator), its reducer over reps, and whether it is timed inside the
+suite loop or in a block of its own; the comment above each record says
+what its ratio means. `ab_hamming_vs_cosine` is not an arm: it is the ratio
+of two suite medians. Timed order: the corpus_e2e block (2 reps), the
+append_delta one-shot, the suite loop (every query, then the in-suite
+sides), the ann_serving block (max(reps, 5) reps), then the redo levels.
 
-The `gate_atomic_overhead` object prices the atomic (manifest-log OCC)
-commit mode against the plain partition-overwrite mode on the exact
-cross-batch dedup gate: the sf documents table streams through
-incremental_dedup_sink as 4 file-batches into a fresh sink per arm, and
-each arm times the full availableNow run (medians across reps). The two
-arms differ only in commit_mode — same data, same batching, same gate —
-so the ratio is the cost of serializable admission.
-
-The `hll_rollup` object prices the streaming distinct-count rollup's
-merge-on-read payoff: after incremental_hll_sink publishes per-batch HLL
-sketch partitions over the events (day, user_id) projection, the
-"sketch_merge" arm answers distinct-users-per-day by hll_union_agg over
-the partials (key-cardinality-sized reads) while "recompute" rescans the
-raw rows with an exact count(distinct). `merge_over_recompute` is what a
-refresh costs with sketches vs without — the streaming twin of
-append_delta.
-
-The `fts_serving` object prices the persisted FTS index's serve path
-(write_index once, untimed): "page1" = BM25 top-10, "deep_page" = ranks
-201-210 via top-210 — `deep_over_page1` should sit near 1 because deep
-pagination is a bigger TakeOrderedAndProject k, never a corpus sort. The
-`ann_serving` object prices the persisted bucket-partitioned ANN index:
-"serve" = ann_index_topk against the written index (dynamic partition
-pruning reads only the queries' buckets), "rebuild" = cosine_topk_lsh
-re-deriving signatures from the raw vectors inside the query —
-`serve_over_rebuild` is what persisting the index saves per search.
-The index build auto-sizes its signature width to the corpus
-(auto_bits_per_table: ~800 rows per bucket directory, so sf0.1's 3.2k
-vectors get 12 tables × 2² = 48 directories instead of the fixed 6-bit
-layout's 768 near-empty ones that made r11's serve measure 3x rebuild
-on pure per-directory listing/footer/task overhead), and the rebuild
-arm runs at the index's stored parameters (meta sidecar) so both arms
-generate the SAME candidate volume — the ratio isolates persisted-read
-vs re-derivation. It still flips with scale: rebuild scans and shuffles
-ALL N vectors per query batch while serve reads only the probed
-buckets (the pruned-scan asymptotics the plan test pins).
-
-The `corpus_e2e` object times the COMPOSED pipeline (etl/corpus.py:
-clean → quality gate → exact dedup → MinHash near-dedup → content-hashed
-split → sequence packing) over the sf documents table with docs/sec
-throughput — the end-to-end number a corpus team would capacity-plan
-against. Two arms: "build" (the pipeline alone, comparable across rounds)
-and "build_registry" (adds the fingerprint-registry sidecar write that
-enables O(delta) append_corpus), so the sidecar is priced as a feature
-rather than read as an e2e regression.
-
-The full result object is also written to BENCH_LAST.json next to this
-file; the stdout line is a compact subset (no per-query spreads) so the
-driver's bounded tail capture cannot truncate it.
-
-Noise-proofing: the host shows ±40% run-to-run swings from hypervisor CPU
-steal, so a single pass is not evidence. The suite runs
-$SPARK_GRAFT_BENCH_REPS times (default 3), SUITE-INTERLEAVED: rep k of
-EVERY query runs before rep k+1 of any (outer loop = reps, inner loop =
-queries), so one query's reps are separated by a full suite pass
-(~1-2 min) and never share a single host-weather window — the
-round-robin decorrelation VERDICT r15 #3 asks for. (This ordering has
-been in place since commit 88c8f22/r13; the docstring's old "rep-major"
-phrasing read ambiguously as per-query-major, so stating it precisely
-here. It also keeps cross-query cache state comparable to the
-historical single-pass runs.) The high-variance REDO block is likewise
-interleaved round-robin across all flagged names as of r16 — it
-previously ran each flagged query's 7-11 redo reps back-to-back, which
-re-correlated exactly the sample the redo was trying to de-noise.
-Per-query numbers are MEDIANS across reps and the `noise` object
-records the per-query spread plus the CPU steal fraction over the whole
-run (from /proc/stat) so a regression can be told apart from host
-weather.
+Timing: `interleave` is the one runner. Rep k of every call runs before rep
+k+1 of any, each call timed alone with perf_counter; a call's fixture (temp
+directories, a stream to start) is built and removed outside the timed
+region. The host shows ±40% run-to-run swings from hypervisor CPU steal, so
+one query's reps are separated by a full suite pass and never share one
+host-weather window. Per-query numbers are medians; the `noise` object keeps
+the spreads, the raw reps and the CPU steal over the timed run. A query whose
+spread exceeds 50% of its median is re-timed by `redo`, interleaved over the
+flagged names only.
 """
 
 from __future__ import annotations
@@ -98,9 +45,19 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import statistics
+import sys
+import tempfile
 import time
+from contextlib import contextmanager, nullcontext
+from dataclasses import dataclass
+from functools import partial
+from typing import Callable
 
+# Order matters: every rep runs the queries in this order, so a query's
+# cache state depends on the ones before it. New names go at the end, which
+# leaves every existing query's timing comparable across runs.
 HEADLINE = [
     "q1_pricing_summary",
     "join_q3_topk",
@@ -122,171 +79,80 @@ HEADLINE = [
     "dedup_exact",
     "dedup_jaccard_pairs",
     "emb_cosine_topk",
-    # LLM-pipeline heavy path (VERDICT r4 #1)
     "dedup_winnow_pairs",
     "emb_pq_topk",
     "text_pii_redact",
     "corpus_filter_pipeline",
     "fts_ranked_bm25",
-    # round-7 additions — keep the 25 names above unchanged so per-query
-    # medians stay comparable across rounds; the TOTAL now covers 31
     "text_duplicate_ngram_fraction",
     "corpus_dsir_resample",
     "text_quality_quantile_by_lang",
-    # r7 second-session additions: the binary ANN scan tier, the trigram
-    # dictionary matcher, and the heaviest new relational report
     "emb_hamming_topk",
     "entity_match_trigram",
     "join_q7_nation_volume",
-    # warehouse-maintenance family: quality audit (one-pass rule agg +
-    # anti join), incremental rollup fold, CDC snapshot window
     "dq_violation_report",
     "rollup_incremental_merge",
     "cdc_latest_snapshot",
-    # distributed-global-rank family (range partition + offsets — never a
-    # single-partition window) and the snapshot-diff full-outer join
     "corpus_shard_assign",
     "events_equidepth_bins",
     "snapshot_diff_orders",
-    # map-side-reduced Gram matrix (shuffle stays d²-sized however big N)
     "emb_gram_matrix",
-    # r7 fourth-session additions: bloom semi-join reduction (fact rows
-    # drop before the join exchange), cross-document boilerplate strip
-    # (hash-keyed df count + per-doc reassembly), concat-and-chunk packing
-    # (distributed prefix sum), and 5-iteration fixed-point PageRank
     "join_bloom_prefilter",
     "text_boilerplate_removal",
     "corpus_concat_chunks",
     "graph_pagerank_neardup",
-    # deterministic resampling (explode x20 + two aggs) and the
-    # reconciliation digest scan
     "agg_bootstrap_ci",
     "dq_range_checksums",
-    # round-10 additions — the new LLM-pipeline reports: scan-bound
-    # lexical diversity, the PSI drift monitor, the per-user transition
-    # matrix (lag window + type²-bounded agg), hard-negative mining
-    # (corpus × 50-query scan + band filter + two-phase top-k), and the
-    # one-fold gate-ablation report
     "text_lexical_diversity",
     "events_psi_drift",
     "events_markov_transitions",
     "emb_hard_negatives",
     "corpus_gate_ablation",
-    # second r10 batch: the drift-family monitors (exact-moment OLS,
-    # day-granular CUSUM) and the session path table (array_sort inside
-    # the group + path-count shuffle + TakeOrdered top-20)
     "events_trend_slope",
     "events_cusum_changepoint",
     "events_top_session_paths",
-    # third r10 batch: the rank-based A/B test (distinct-value window),
-    # the densified chi-squared screen, the join-key skew audit (exploded
-    # fact scan + global_rank Gini), the source JSD distance matrix
-    # (postings × pair broadcast), and the leakage-safe group k-fold
-    # (near-dup components + hash fold map)
     "events_mannwhitney_u",
     "events_chi2_independence",
     "dq_join_key_skew",
     "corpus_js_divergence",
     "corpus_group_kfold",
-    # fourth r10 batch: the censoring-aware Kaplan-Meier curve (user
-    # shuffle -> hour-granular duration frame), the calibration/ECE
-    # reliability table (10-bin agg off a 1-row broadcast), and the
-    # dedup yield curve (prefix-canopy groupBy + TakeOrdered top-20)
     "events_kaplan_meier",
     "events_score_calibration",
     "corpus_dedup_yield",
-    # fifth r10 batch: the basket-affinity self-join (pair space bounded
-    # by basket width), the value-space MAD outlier audit (events
-    # scanned once), and the anchor-broadcast coverage objective
     "join_basket_lift",
     "events_mad_outliers",
     "emb_coverage_score",
-    # sixth r10 batch: the Wald SPRT early-stop monitor (day-granular
-    # cumulative LLR — window over the observation span only) and the
-    # triangle census of the shared-passage graph (ordered-edge
-    # enumeration, df-capped fanout)
     "events_sprt_monitor",
     "graph_triangle_count",
-    # seventh r10 batch: linear multi-touch attribution (user-co-located
-    # interval join + purchase-keyed window), funnel time-to-convert
-    # (value-space nearest-rank percentiles), day-of-week seasonal index
-    # (two branches off the pinned day frame), and the LSH-bucket
-    # cohesion audit (exact mean pairwise cosine from the ||sum v||^2
-    # identity — O(n*d), no pair enumeration)
     "events_attribution_linear",
     "events_time_to_convert",
     "events_dow_seasonality",
     "emb_bucket_cohesion",
-    # eighth r10 batch: the SRM experiment-health gate (one distinct-user
-    # aggregate), the one-scan schema-drift profile (2-row grouped
-    # aggregate + bounded unpivot), and the near-dup component-size
-    # histogram (cluster-table-sized folds off the pinned components)
     "events_srm_check",
     "dq_schema_drift",
     "graph_component_histogram",
-    # ninth r10 batch: weekly-cohort LTV (integer-cents revenue, cohort-
-    # partitioned cumulative window), per-source Flesch profile (per-doc
-    # 1e-4 integer units before aggregation), and the quality-vs-neardup
-    # point-biserial correlation (exact BIGINT moments)
     "events_cohort_ltv",
     "text_readability",
     "corpus_quality_dup_corr",
-    # tenth r10 batch: the lead-time DQ audit (value-space percentiles
-    # off one fact-parent join), the MDE sizing readout (one distinct-
-    # user aggregate), the code-vs-prose router (one regex projection),
-    # and the isotropy audit (moment identity, d-row exchange)
     "dq_lead_time_audit",
     "events_power_mde",
     "text_code_detection",
     "emb_isotropy_audit",
-    # eleventh r10 batch: YoY/MoM trend (month-frame lags), RFM census
-    # (three value-space median frames + one 8-row fold), and the
-    # same-weekday anomaly screen (typesx7-bounded moment join)
     "agg_yoy_growth",
     "join_customer_rfm",
     "events_anomaly_seasonal",
-    # twelfth r10 batch: the engagement dashboard (user-day frame +
-    # forward-explode trailing windows) and the vocab coverage curve
-    # (global_rank over word counts + one conditional fold)
     "events_dau_wau_mau",
     "text_vocab_coverage",
-    # thirteenth r10 batch: the supplier delivery scorecard (fact-
-    # parent join + 20-row TakeOrdered before the dim join) and the
-    # per-step funnel latency (step-partitioned value-space frames)
     "join_supplier_scorecard",
     "events_funnel_step_timing",
-    # fourteenth r10 batch: the dedup-threshold tuning curve (pairs
-    # scored once, conditional counts per threshold) and first-touch
-    # attribution (purchase-keyed earliest-touch pick)
     "text_dedup_threshold_sweep",
     "events_attribution_first_touch",
-    # fifteenth r10 batch: the license census and the SLO burn report
-    # (both one-scan regex/count shapes)
     "text_license_detection",
     "events_error_budget_burn",
-    # sixteenth r10 batch: the revenue-concentration report (ranked
-    # cumulative frame via global_rank+global_cumsum)
     "agg_revenue_concentration",
-    # seventeenth r10 batch: cart abandonment (user-day frame + 24h
-    # interval join) and the replay-duplication audit (natural-key
-    # multiplicity fold)
     "events_cart_abandonment",
     "dq_event_duplication",
-    # eighteenth r10 batch: growth accounting off the user-day frame
     "events_new_vs_returning",
-    # round-11 additions: the FP&A price/volume/mix waterfall (one
-    # conditional-sum fold, broadcast part dim), the money
-    # reconciliation census (order-keyed join + key-only anti join),
-    # the bot-regularity audit (user-partitioned lag + double quadratic
-    # moments), the lead-indicator cross-correlation (day-spine x 8
-    # lags), reproducible hash-drawn negatives (global_rank part index
-    # + anti join), hour-spine linear interpolation (IGNORE-NULLS carry
-    # windows), the shuffle-interleave audit (global_rank positions +
-    # gaps-and-islands runs), retrieval ILD (constant 10-pair stage per
-    # query), PMI collocations (token-keyed joins to the unigram
-    # frame), sign-bucket purity/NMI (contingency-table folds), the
-    # passage-graph degree histogram, and the enum entropy profile
-    # (exploded one-scan fold)
     "agg_price_volume_mix",
     "dq_order_total_reconciliation",
     "events_bot_detection",
@@ -299,58 +165,23 @@ HEADLINE = [
     "emb_cluster_purity",
     "graph_degree_histogram",
     "dq_categorical_entropy",
-    # r11 batch G: transition dwell (value-space medians over the
-    # (pair, gap_s, cnt) frame) and personalized churn risk (per-user
-    # nearest-rank p90 + TakeOrdered)
     "events_transition_dwell",
     "events_churn_risk",
-    # r11 batch H: the growth-accounting quartet (user-day frame,
-    # lag/lead windows) and the attribution-window sweep (gaps computed
-    # once, 4 windows as conditional counts)
     "events_growth_accounting",
     "events_attribution_window_sweep",
-    # r11 batch I: the 60s RANGE-frame velocity screen and the Rocchio
-    # centroid-classifier baseline (d*L centroid frame joined back by
-    # dim; n*L-bounded scoring)
     "events_velocity_burst",
     "emb_nearest_centroid",
-    # r11 batch J: the label-margin audit (everything on the (label,dim)
-    # frame after one normalize-fold) and the waterfilling allocator
-    # (source-sized prefix search)
     "emb_class_margin",
     "corpus_budget_waterfill",
-    # r11 batch K: CUPED (user-grain integer moments + algebraic
-    # variance identity) and the watermark-sizing lateness audit
-    # (user-partitioned running max in ingest order)
     "events_ab_cuped",
     "dq_out_of_order_events",
-    # r11 batch L: the sort-based skyline (two brand-partitioned
-    # windows, no dominance self-join) and the censoring-aware dX
-    # retention gauges (user-frame x 3-row horizon broadcast)
     "agg_pareto_skyline",
     "events_dx_retention",
-    # r11 batch M: the snaive/MASE forecast backtest (day-frame lags)
-    # and the cross-sectional discount-elasticity regression (one
-    # fact scan, five moments in one fold)
     "events_snaive_mase",
     "agg_discount_elasticity",
-    # r11 batch N: the audience-overlap matrix (type^2-bounded
-    # user-co-located pairs) and the STL-lite variance-share triage
-    # (day-frame MA + integer-unit component folds)
     "events_audience_overlap",
     "events_stl_decomposition",
-    # r11 batch O: the volume-anomaly monitor (constant 7-element
-    # rolling-median frame over the day spine)
     "dq_ingest_volume_anomaly",
-    # round-12 additions: the rank-equi-join keyspace audit (global_rank
-    # + rank+1 self-join — the distributed lag), retraction-aware
-    # aggregate IVM (signed fold + view-grain merge), Adamic-Adar open-
-    # wedge link prediction (adjacency self-join, integer-unit score
-    # fold), the first-occurrence Heaps'-law audit (token min-doc fold +
-    # ≤10-row prefix sum + integer-unit OLS), the 29-period Goertzel
-    # periodogram (day-frame × period cross join), the 14-moment
-    # single-scan correlation matrix, and fixed-round 2-core peeling
-    # (per-round degree fold + two semi-joins on pinned edges)
     "dq_sequence_gap_audit",
     "cdc_agg_incremental",
     "graph_link_prediction",
@@ -358,87 +189,168 @@ HEADLINE = [
     "events_periodogram",
     "dq_numeric_correlation_matrix",
     "graph_kcore_peeling",
-    # round-13 additions: fixed-round BFS reach (3 pinned supersteps of
-    # adjacency join + anti-join), the Theil decomposition (custkey fold
-    # + broadcast group stats, integer-unit ln terms), the sorted-index
-    # Gini (global_rank + DECIMAL product-sum), the Dunning-G² keyness
-    # screen (one token fold + integer-unit TakeOrdered), the per-label
-    # centroid silhouette (posexplode centroid fold + broadcast zip_with
-    # distance pass), and the portable CMS audit (depth-way explode
-    # collapsing to ≤1024 shuffle groups)
     "graph_khop_reach",
     "agg_theil_index",
     "events_user_gini",
     "text_source_keyness",
     "emb_silhouette",
     "events_cms_frequency",
-    # batch 3: the ACF lag self-join (day-frame-sized), the Fano
-    # dispersion classifier (type x day spine fold), and the per-user
-    # burstiness census (user-keyed lag window + two folds)
     "events_acf_daily",
     "events_poisson_dispersion",
     "events_interarrival_cv",
-    # r13: BH-FDR composes the welch fold + tests-frame windows; the
-    # spearman matrix is 4 global_cumsum prefix passes + a 14-moment
-    # fold; hurst R/S is hour-grain + (size,block)-bounded windows
     "events_bh_fdr",
     "dq_spearman_correlation",
     "events_hurst_exponent",
     "events_sessionize_gap_sweep",
     "events_holt_forecast_backtest",
-    # r14: KW is one value-grain prefix pass + one-hot ordered fold;
-    # the zone-map audit is 3 global_rank range exchanges + 64x9
-    # bounding-box counting
     "events_kruskal_wallis",
     "layout_zonemap_pruning_audit",
-    # r15: tau-b folds entirely from the bounded joint value grain (one
-    # map-side-combined scan; cell-pair self-join is value-space-sized);
-    # the price pairs ride one narrow range-sort + an Arrow dominance
-    # kernel (numpy group-matrix cumsums, no wide grain, no window)
     "dq_kendall_tau",
     "dq_kendall_tau_price",
-    # r16: partial-probe recall curve through the real IVF candidate
-    # join (closed-form corner quantizer makes it driver-oracle-able)
     "emb_ivf_recall_audit",
-    # r16: quality half of the hamming-vs-cosine A/B — recall@5 of the
-    # hamming-shortlist/exact-rerank path at m in {5,10,25,50}
     "emb_hamming_recall_audit",
 ]
 
 
-def build_skip_digest(timings: dict, skip_names: list, sf, total) -> str:
-    """Stdout digest for a SKIP-TAINTED ordering experiment (ADVICE r15:
-    a non-empty SPARK_GRAFT_BENCH_SKIP refuses to write BENCH_LAST.json /
-    the archive — the experiment's labelled output lives on stdout only).
-    Same driver stdout window as the main digest (~2.2 KB tail capture —
-    an oversized line gets its HEAD clipped, the BENCH_r07-r09 "parsed":
-    null failure): a long skip list is summarized as count + hash + head,
-    never allowed to push the line over the window. Pure function so the
-    guard is pytest-pinned, not just read."""
-    digest = {
-        "metric": "SKIP-TAINTED ordering experiment "
-        "(not a full-suite artifact; nothing written)",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "n_queries": len(timings),
-        "queries": dict(sorted(timings.items(), key=lambda kv: -kv[1])[:3]),
-        "skip_names": skip_names,
-    }
-    line = json.dumps(digest)
-    if len(line) >= 1500:
-        import hashlib
+@dataclass(frozen=True)
+class Arm:
+    key: str  # the arm's object in BENCH_LAST.json
+    sides: tuple[str, str]  # call names, in call order
+    ratio: tuple[str, str, str]  # (key, numerator side, denominator side)
+    reduce: Callable[[list[float]], float] = statistics.median
+    in_suite: bool = True  # timed inside the suite loop, else in its own block
 
-        digest["skip_names"] = {
-            "n": len(skip_names),
-            "sha256_12": hashlib.sha256(
-                ",".join(skip_names).encode()
-            ).hexdigest()[:12],
-            "head": skip_names[:5],
-        }
-        line = json.dumps(digest)
-    assert len(line) < 1500, f"skip digest {len(line)}B still too long"
-    return line
+
+ARMS = (
+    # IVF-PQ candidate scoring on the serving path (build_ivfpq_index runs
+    # once, untimed; both sides run ivfpq_topk over the same index and
+    # queries): "adc" is the per-query lookup-table kernel (m probes per
+    # candidate), "decode" reconstructs then takes the cosine (dim-element
+    # work per candidate). The sides differ only in the scoring kernel.
+    Arm("ab_adc_vs_decode", ("adc", "decode"), ("adc_over_decode", "adc", "decode")),
+    # The atomic (manifest-log OCC) commit mode against plain partition
+    # overwrite on the exact cross-batch dedup gate: the documents table
+    # streams through incremental_dedup_sink as 4 file batches into a fresh
+    # sink per call, timed over the full availableNow run. Same data,
+    # batching and gate, only commit_mode differs, so the ratio is the cost
+    # of serializable admission.
+    Arm("gate_atomic_overhead", ("overwrite", "atomic"),
+        ("atomic_over_overwrite", "atomic", "overwrite")),
+    # The merge-on-read payoff of the streaming distinct-count rollup: after
+    # incremental_hll_sink publishes per-batch HLL sketches of the events
+    # (day, user_id) projection (untimed), "sketch_merge" answers distinct
+    # users per day by hll_union_agg over the partials (key-cardinality-sized
+    # reads) while "recompute" rescans the raw rows with an exact
+    # count(distinct). The ratio is what a refresh costs with sketches vs
+    # without — the streaming twin of corpus_e2e's append_delta.
+    Arm("hll_rollup", ("sketch_merge", "recompute"),
+        ("merge_over_recompute", "sketch_merge", "recompute")),
+    # The persisted FTS index's serve path (write_index once, untimed):
+    # "page1" is BM25 top-10, "deep_page" ranks 201-210 via top-210 over the
+    # same pruned index read. The ratio should sit near 1: deep pagination
+    # is a bigger TakeOrderedAndProject k, never a corpus sort.
+    Arm("fts_serving", ("page1", "deep_page"), ("deep_over_page1", "deep_page", "page1")),
+    # The persisted bucket-partitioned ANN index: "serve" is ann_index_topk
+    # against the written index (dynamic partition pruning reads only the
+    # queries' buckets; cache_index pins it in executor storage, the hot-index
+    # deployment build-once/serve-many exists for), "rebuild" is
+    # cosine_topk_lsh re-deriving signatures from the raw vectors inside the
+    # query. The index auto-sizes its signature width to the corpus
+    # (auto_bits_per_table: ~800 rows per bucket directory) and the rebuild
+    # runs at the index's stored parameters (meta sidecar), so both sides
+    # generate the same candidate volume and the ratio is what persisting the
+    # index saves per search. It flips with scale: rebuild scans and shuffles
+    # all N vectors per query batch, serve reads only the probed buckets.
+    # Its own back-to-back block: inside the suite loop ~150 s of other work
+    # separated the sides' reps, evicting the index files from the page cache
+    # before every serve while the suite's emb_* queries kept the rebuild
+    # side's input warm, so the ratio measured cache weather.
+    Arm("ann_serving", ("serve", "rebuild"), ("serve_over_rebuild", "serve", "rebuild"),
+        in_suite=False),
+    # The composed corpus pipeline (etl/corpus.py: clean → quality gate →
+    # exact dedup → MinHash near-dedup → content-hashed split → sequence
+    # packing) over the documents table, with docs/sec throughput. "build" is
+    # the pipeline alone, "build_registry" adds the fingerprint-registry
+    # sidecar that enables O(delta) append_corpus, so the ratio prices the
+    # sidecar as a feature. Its own block after one untimed warm-up build,
+    # sides alternating, per-side MIN: successive builds keep getting faster
+    # (JIT and page-cache drift outlive one warm-up), and alternation puts
+    # both sides on the same drift curve.
+    Arm("corpus_e2e", ("build", "build_registry"),
+        ("registry_overhead", "build_registry", "build"), reduce=min, in_suite=False),
+)
+
+
+# stdout digest key -> (artifact object, ratio key)
+DIGEST_RATIOS = {
+    "adc_over_decode": ("ab_adc_vs_decode", "adc_over_decode"),
+    "hamming_over_cosine": ("ab_hamming_vs_cosine", "hamming_over_cosine"),
+    "gate_atomic_over_overwrite": ("gate_atomic_overhead", "atomic_over_overwrite"),
+    "hll_merge_over_recompute": ("hll_rollup", "merge_over_recompute"),
+    "fts_deep_over_page1": ("fts_serving", "deep_over_page1"),
+    "ann_serve_over_rebuild": ("ann_serving", "serve_over_rebuild"),
+}
+
+
+def interleave(calls: dict[str, Callable], reps: int, fixtures=None) -> dict[str, list[float]]:
+    """Run rep k of every call before rep k+1 of any and return each call's
+    perf_counter timings. ``fixtures`` maps a call name to a context-manager
+    factory: it builds the call's untimed state, yields it as the call's
+    arguments and removes it after the timed region."""
+    samples: dict[str, list[float]] = {name: [] for name in calls}
+    for _ in range(reps):
+        for name, call in calls.items():
+            with (fixtures or {}).get(name, lambda: nullcontext(()))() as args:
+                t0 = time.perf_counter()
+                call(*args)
+                samples[name].append(time.perf_counter() - t0)
+    return samples
+
+
+def calls_for(arms, fns: dict[str, Callable]) -> dict[str, Callable]:
+    """The arms' sides as runner calls, in table then call order."""
+    return {side: fns[side] for arm in arms for side in arm.sides}
+
+
+def rel_spread(s: list[float]) -> float:
+    return (max(s) - min(s)) / statistics.median(s) if len(s) > 1 else 0.0
+
+
+def redo(samples, calls, levels=(7, 9, 11), limit=0.5) -> list[str]:
+    """Re-time every name whose spread exceeds ``limit`` — one unlucky rep
+    (GC pause, first-call codegen, a neighbour's page-cache eviction) away
+    from a wrong median — at escalating rep counts, interleaved over the
+    still-flagged names. Each level drops its worst n//5 reps before scoring
+    the spread: a longer window catches hiccups in proportion to its length,
+    so untrimmed it would be scored more harshly than the sample it replaces.
+    The trimmed score only decides which sample wins and when to stop; the
+    sample stored in ``samples`` is always untrimmed, so every published
+    median comes from an uncensored distribution. Returns the flagged names."""
+    flagged = [n for n, s in samples.items() if rel_spread(s) > limit]
+    best = {n: rel_spread(samples[n]) for n in flagged}
+    active = flagged
+    for n_redo in levels:
+        if not active:
+            break
+        trim = max(1, n_redo // 5)
+        fresh = interleave({n: calls[n] for n in active}, n_redo)
+        for n in active:
+            score = rel_spread(sorted(fresh[n])[:-trim])
+            if score < best[n]:
+                best[n], samples[n] = score, fresh[n]
+        active = [n for n in active if best[n] > limit]
+    return flagged
+
+
+def ratio(num, den):
+    return round(num / den, 3) if den else None
+
+
+def summarize(arm: Arm, samples: dict[str, list[float]]) -> dict:
+    out: dict = {s: round(arm.reduce(samples[s]), 3) for s in arm.sides}
+    key, num, den = arm.ratio
+    out[key] = ratio(out[num], out[den])
+    return out
 
 
 def warmup_suite(spark, specs, sf_dir: str) -> None:
@@ -458,18 +370,6 @@ def warmup_suite(spark, specs, sf_dir: str) -> None:
     tok_docs(spark, sf_dir).count()
 
 
-def _cpu_ticks() -> tuple[int, int] | None:
-    """(steal_ticks, total_ticks) from /proc/stat, or None off-Linux."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
-    except (OSError, ValueError, IndexError):
-        return None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
@@ -482,497 +382,184 @@ def main() -> None:
     spark = get_spark("sec_dl_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all()
+    # these modules define pandas UDFs at import, which needs a live SparkSession
+    from pyspark.sql import functions as F
 
-    # JVM/codegen warmup + session-memoized shared fixtures, outside the
-    # timed region (warmup_suite — shared with tools/isolate_profile.py so
-    # the profiler's splits stay comparable to bench numbers): generic
-    # codegen JIT; the text/FTS path on the tiny sf (its first execution
-    # pays several seconds of JIT that would otherwise land on whichever
-    # headline query runs it first); the cached FTS index + tokenized
-    # frame (whichever query ran first otherwise paid the one-time build
-    # inside its OWN first rep — fts_top_df_tokens carried a 2x rep
-    # spread that was entirely index construction, not query cost).
-    warmup_suite(spark, specs, sf_dir)
-
-    from sec_dl_spark.operators.similarity import build_ivfpq_index, ivfpq_topk
+    from perfbench.run import _git_sha
+    from perfbench.trace import cpu_times, steal_pct
+    from sec_dl_spark.etl.corpus import append_corpus, build_corpus
+    from sec_dl_spark.operators import fts as fts_ops
+    from sec_dl_spark.operators.similarity import (ann_index_topk, build_ivfpq_index,
+        cosine_topk_lsh, ivfpq_topk, read_ann_index_meta, write_ann_index)
     from sec_dl_spark.sources.fixtures import load_table
+    from sec_dl_spark.streaming.dedup import incremental_dedup_sink
+    from sec_dl_spark.streaming.rollup import incremental_hll_sink, read_hll_rollup
+
+    warmup_suite(spark, specs, sf_dir)  # JIT and shared fixtures, untimed
+    arm = {a.key: a for a in ARMS}
+    root = tempfile.mkdtemp(prefix="bench_")
+
+    @contextmanager
+    def fresh_dir(kept: list | None = None):
+        out = tempfile.mkdtemp(dir=root)
+        yield (out,)
+        if kept is None:
+            shutil.rmtree(out, ignore_errors=True)
+        else:
+            kept.append(out)
+
+    def file_batches(src: str, df):
+        """Write ``df`` as 4 parquet files; return a starter streaming them one per batch."""
+        df.repartition(4).write.parquet(src)
+        schema = spark.read.parquet(src).schema
+        return lambda: spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
 
     emb = load_table(spark, sf_dir, "embeddings")
     ab_queries = emb.where("vec_id < 25")
     ab_index = build_ivfpq_index(emb)  # train/encode once — serving is timed
     ab_index.encoded.persist().count()  # materialize codes like a stored index
+    docs = load_table(spark, sf_dir, "documents")
+    gate_stream = file_batches(f"{root}/gate_src", docs.select("doc_id", "text"))
 
-    import shutil
-    import tempfile
+    @contextmanager
+    def gate_fixture():
+        with fresh_dir() as (work,):
+            yield work, gate_stream()
 
-    from sec_dl_spark.streaming.dedup import incremental_dedup_sink
+    def gate(mode: str, work: str, stream) -> None:
+        query = incremental_dedup_sink(stream, f"{work}/accepted", f"{work}/registry",
+                                       f"{work}/ckpt", commit_mode=mode)
+        # False means the stream is still running: the timing would lie
+        assert query.awaitTermination(600), f"gate stream ({mode}) did not finish in 600s"
 
-    gate_src = tempfile.mkdtemp(prefix="bench_gate_src_")
-    load_table(spark, sf_dir, "documents").select("doc_id", "text").repartition(
-        4
-    ).write.mode("overwrite").parquet(gate_src)
-    gate_schema = spark.read.parquet(gate_src).schema
-
-    def _run_gate(mode: str) -> float:
-        work = tempfile.mkdtemp(prefix=f"bench_gate_{mode}_")
-        stream = (
-            spark.readStream.schema(gate_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(gate_src)
-        )
-        t0 = time.perf_counter()
-        done = incremental_dedup_sink(
-            stream,
-            f"{work}/accepted",
-            f"{work}/registry",
-            f"{work}/ckpt",
-            commit_mode=mode,
-        ).awaitTermination(600)
-        # a False return means the stream is STILL RUNNING after the
-        # timeout — the arm's timing would be a lie; fail loudly instead
-        assert done, f"gate stream ({mode}) did not finish within 600s"
-        dt = time.perf_counter() - t0
-        shutil.rmtree(work, ignore_errors=True)
-        return dt
-
-    # end-to-end corpus build throughput: the composed pipeline (clean →
-    # quality → exact dedup → near-dedup → split → pack, etl/corpus.py)
-    # over the sf documents table, run once per arm (a multi-stage job
-    # whose median-of-reps would double bench wall-time for one number;
-    # the per-stage operators are already median-timed above). Two arms
-    # so the fingerprint-registry sidecar (the append_corpus delta-append
-    # enabler added in r7) is priced as its own feature: "build" is the
-    # r6-comparable pipeline, "build_registry" adds the sidecar write —
-    # the delta between them is the registry's cost, not a regression.
-    from sec_dl_spark.etl.corpus import build_corpus
-
-    # untimed warm-up build, then ALTERNATE the two arms and take the
-    # per-arm MIN: successive builds keep getting faster (JIT/page-cache
-    # drift outlives a single warm-up — the r8 dry run priced the
-    # registry arm FASTER than build-only purely from ordering), and
-    # alternation puts both arms on the same drift curve.
-    _warm = tempfile.mkdtemp(prefix="bench_corpus_warm_")
-    _funnel = build_corpus(spark, sf_dir, _warm, write_registry=False)
-    shutil.rmtree(_warm, ignore_errors=True)
-    arm_samples: dict[str, list[float]] = {"build": [], "build_registry": []}
-    reg_out = None
-    for _ in range(2):
-        for arm, with_reg in (("build", False), ("build_registry", True)):
-            corpus_out = tempfile.mkdtemp(prefix=f"bench_corpus_{arm}_")
-            t0 = time.perf_counter()
-            build_corpus(spark, sf_dir, corpus_out, write_registry=with_reg)
-            arm_samples[arm].append(time.perf_counter() - t0)
-            if with_reg:
-                # keep the last registry-bearing corpus for the append arm
-                if reg_out:
-                    shutil.rmtree(reg_out, ignore_errors=True)
-                reg_out = corpus_out
-            else:
-                shutil.rmtree(corpus_out, ignore_errors=True)
-    corpus: dict[str, object] = {}
-    for arm, s in arm_samples.items():
-        best = min(s)
-        corpus[arm] = {
-            "seconds": round(best, 3),
-            "docs_in": _funnel["n_raw"],
-            "docs_out": _funnel["n_near_unique"],
-            "docs_per_sec": round(_funnel["n_raw"] / best, 1) if best else None,
+    funnel = build_corpus(spark, sf_dir, f"{root}/corpus_warm", write_registry=False)
+    registries: list[str] = []
+    corpus = summarize(arm["corpus_e2e"], interleave(calls_for([arm["corpus_e2e"]], {
+        "build": lambda out: build_corpus(spark, sf_dir, out, write_registry=False),
+        "build_registry": lambda out: build_corpus(spark, sf_dir, out, write_registry=True),
+    }), 2, {"build": fresh_dir, "build_registry": lambda: fresh_dir(registries)}))
+    for side in arm["corpus_e2e"].sides:
+        best = corpus[side]
+        corpus[side] = {
+            "seconds": best,
+            "docs_in": funnel["n_raw"],
+            "docs_out": funnel["n_near_unique"],
+            "docs_per_sec": round(funnel["n_raw"] / best, 1) if best else None,
         }
-    corpus["registry_overhead"] = (
-        round(
-            corpus["build_registry"]["seconds"] / corpus["build"]["seconds"], 3
-        )
-        if corpus["build"]["seconds"]
-        else None
-    )
-    # the registry's PAYOFF arm: re-append the full source as a delta —
-    # every doc is already in the corpus, so this times the O(delta +
-    # registry-join) admission path (clean → quality → in-batch dedup →
-    # fingerprint anti-join) with ZERO rescans of the corpus text. The
-    # ratio against a full rebuild is the price cut delta ingestion buys.
-    from sec_dl_spark.etl.corpus import append_corpus
-
+    # the registry's payoff: re-append the full source as a delta into the
+    # last registry-bearing corpus. Every doc is already in it, so this times
+    # the O(delta + registry-join) admission path with zero rescans of the
+    # corpus text; the ratio is the price cut delta ingestion buys.
     t0 = time.perf_counter()
-    app = append_corpus(spark, sf_dir, reg_out, batch="bench_delta")
+    app = append_corpus(spark, sf_dir, registries[-1], batch="bench_delta")
     append_s = time.perf_counter() - t0
     corpus["append_delta"] = {
         "seconds": round(append_s, 3),
         "delta_docs_in": app.get("n_raw"),
         "admitted": app.get("n_novel"),
-        "append_over_build": (
-            round(append_s / corpus["build_registry"]["seconds"], 3)
-            if corpus["build_registry"]["seconds"]
-            else None
-        ),
+        "append_over_build": ratio(append_s, corpus["build_registry"]["seconds"]),
     }
-    shutil.rmtree(reg_out, ignore_errors=True)
 
-    # HLL sketch-merge vs recompute (r8 verdict ask): the payoff number
-    # for the streaming distinct-count rollup. Setup (untimed): stream the
-    # (day, user_id) projection of events through incremental_hll_sink as
-    # 4 file-batches, producing per-batch key-cardinality-sized sketch
-    # partitions. Timed arms answer the SAME question ("distinct users per
-    # day") two ways: "sketch_merge" = hll_union_agg over the partials
-    # (reads sketches only, never raw rows); "recompute" = exact
-    # count(distinct) rescanning the same narrow parquet. The ratio is
-    # what merge-on-read buys per refresh — the streaming twin of
-    # append_delta's 0.335x.
-    from pyspark.sql import functions as F
+    hll_src, sketches = f"{root}/hll_src", f"{root}/hll/sk"
+    events = load_table(spark, sf_dir, "events").select(F.to_date("ts").alias("day"), "user_id")
+    hll_stream = file_batches(hll_src, events)
+    hll = incremental_hll_sink(hll_stream(), sketches, f"{root}/hll/ckpt", ["day"], "user_id")
+    # a stream still running would be timed while it writes sketches
+    assert hll.awaitTermination(600), "incremental_hll_sink did not finish within 600s"
+    fts_ops.write_index(fts_ops.build_inverted_index(docs), f"{root}/fts")
+    postings, stats = fts_ops.read_index(spark, f"{root}/fts")
+    terms = ["spark", "sort", "vector"]
+    write_ann_index(emb, f"{root}/ann")
+    meta = read_ann_index_meta(spark, f"{root}/ann")
 
-    from sec_dl_spark.streaming.rollup import incremental_hll_sink, read_hll_rollup
-
-    hll_src = tempfile.mkdtemp(prefix="bench_hll_src_")
-    hll_work = tempfile.mkdtemp(prefix="bench_hll_work_")
-    load_table(spark, sf_dir, "events").select(
-        F.to_date("ts").alias("day"), "user_id"
-    ).repartition(4).write.mode("overwrite").parquet(hll_src)
-    hll_schema = spark.read.parquet(hll_src).schema
-    hll_done = incremental_hll_sink(
-        spark.readStream.schema(hll_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(hll_src),
-        f"{hll_work}/sk",
-        f"{hll_work}/ckpt",
-        ["day"],
-        "user_id",
-    ).awaitTermination(600)
-    # awaitTermination(timeout) returns False if the stream is STILL
-    # RUNNING — silently proceeding would time the hll_rollup arms while
-    # sketch partitions are still being written, then rmtree hll_work
-    # under a live query (ADVICE r9). Fail loudly instead.
-    assert hll_done, "incremental_hll_sink did not finish within 600s"
-
-    # FTS + ANN SERVING arms (VERDICT r9 ask #7): price the persisted-
-    # index serve path, previously plan-asserted but never timed. Setup
-    # (untimed): write both indexes once. The FTS ratio compares a
-    # deep page (ranks 201-210 via top-210, TakeOrderedAndProject) to
-    # page 1 (top-10) over the SAME pruned index read — deep pagination
-    # should cost a top-(p·size), not a corpus sort. The ANN ratio
-    # compares serving the bucket-partitioned persisted index (dynamic
-    # partition pruning) to the live LSH path that re-derives signatures
-    # from the raw vectors inside the query — the per-search price of
-    # not persisting the index.
-    from sec_dl_spark.operators import fts as fts_ops
-    from sec_dl_spark.operators.similarity import ann_index_topk, cosine_topk_lsh
-
-    serve_root = tempfile.mkdtemp(prefix="bench_serving_")
-    docs = load_table(spark, sf_dir, "documents")
-    fts_ops.write_index(fts_ops.build_inverted_index(docs), f"{serve_root}/fts")
-    fts_postings, fts_stats = fts_ops.read_index(spark, f"{serve_root}/fts")
-    FTS_TERMS = ["spark", "sort", "vector"]
-    from sec_dl_spark.operators.similarity import read_ann_index_meta, write_ann_index
-
-    write_ann_index(emb, f"{serve_root}/ann")
-    # the rebuild arm must run at the SAME LSH parameters the index was
-    # auto-sized to (the parity-test contract): with the build on auto
-    # bits and the rebuild on fixed defaults the two arms generate
-    # different candidate volumes and the ratio measures the bucket
-    # POLICY, not the serve-vs-rederive cost it is meant to track
-    ann_meta = read_ann_index_meta(spark, f"{serve_root}/ann")
-
-    # (Shared-fixture materialization — the FTS index + tokenized frame —
-    # moved into warmup_suite above; build-once infrastructure belongs to
-    # setup, the same accounting as the serving indexes above.)
-
-    # SPARK_GRAFT_BENCH_SKIP: comma-separated names removed from the suite
-    # for ORDERING EXPERIMENTS only (e.g. replaying last round's suite to
-    # test a suite-growth-interleave hypothesis against a flagged bench
-    # row). A skip-tainted run must be impossible to mistake for a
-    # full-suite artifact (ADVICE r15): sorted(skip) is recorded in the
-    # noise block AND the stdout digest unconditionally (empty list when
-    # unset), and when non-empty the run REFUSES to write BENCH_LAST.json
-    # or the bench_archive copy — experiment output exists only on
-    # stdout, clearly labelled.
-    skip = {
-        s for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(",") if s
+    fns = {
+        "adc": lambda: ivfpq_topk(emb, ab_index, ab_queries, k=5, kernel="adc").collect(),
+        "decode": lambda: ivfpq_topk(emb, ab_index, ab_queries, k=5, kernel="decode").collect(),
+        "overwrite": partial(gate, "overwrite"),
+        "atomic": partial(gate, "atomic"),
+        "sketch_merge": lambda: read_hll_rollup(spark, sketches, ["day"]).collect(),
+        "recompute": lambda: spark.read.parquet(hll_src).groupBy("day")
+        .agg(F.count_distinct("user_id").alias("n_distinct")).collect(),
+        "page1": lambda: fts_ops.search_bm25(postings, terms, k=10, stats=stats).collect(),
+        "deep_page": lambda: fts_ops.search_bm25(postings, terms, k=210, stats=stats)
+        .where(F.col("rank") > 200).collect(),
+        "serve": lambda: ann_index_topk(
+            spark, f"{root}/ann", ab_queries, k=5, cache_index=True).collect(),
+        "rebuild": lambda: cosine_topk_lsh(
+            emb, ab_queries, k=5, num_tables=int(meta["num_tables"]),
+            bits_per_table=int(meta["bits_per_table"]), seed=int(meta["seed"])).collect(),
     }
-    skip_names = sorted(skip)
-    headline = [n for n in HEADLINE if n not in skip]
+    queries = {n: (lambda fn=specs[n].spark_fn: fn(spark, sf_dir).collect()) for n in HEADLINE}
 
-    ticks0 = _cpu_ticks()
-    samples: dict[str, list[float]] = {name: [] for name in headline}
-    ab_samples: dict[str, list[float]] = {"adc": [], "decode": []}
-    gate_samples: dict[str, list[float]] = {"overwrite": [], "atomic": []}
-    hll_samples: dict[str, list[float]] = {"sketch_merge": [], "recompute": []}
-    fts_srv_samples: dict[str, list[float]] = {"page1": [], "deep_page": []}
-    ann_srv_samples: dict[str, list[float]] = {"serve": [], "rebuild": []}
-    for _ in range(reps):
-        for name in headline:
-            t0 = time.perf_counter()
-            specs[name].spark_fn(spark, sf_dir).collect()
-            samples[name].append(time.perf_counter() - t0)
-        for kernel in ab_samples:
-            t0 = time.perf_counter()
-            ivfpq_topk(emb, ab_index, ab_queries, k=5, kernel=kernel).collect()
-            ab_samples[kernel].append(time.perf_counter() - t0)
-        for mode in gate_samples:
-            gate_samples[mode].append(_run_gate(mode))
-        t0 = time.perf_counter()
-        read_hll_rollup(spark, f"{hll_work}/sk", ["day"]).collect()
-        hll_samples["sketch_merge"].append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        spark.read.parquet(hll_src).groupBy("day").agg(
-            F.count_distinct("user_id").alias("n_distinct")
-        ).collect()
-        hll_samples["recompute"].append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        fts_ops.search_bm25(fts_postings, FTS_TERMS, k=10, stats=fts_stats).collect()
-        fts_srv_samples["page1"].append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        fts_ops.search_bm25(
-            fts_postings, FTS_TERMS, k=210, stats=fts_stats
-        ).where(F.col("rank") > 200).collect()
-        fts_srv_samples["deep_page"].append(time.perf_counter() - t0)
-    # ANN serve-vs-rebuild is measured in its OWN back-to-back block,
-    # not interleaved with the 140-query suite: interleaving put ~150 s
-    # of other work between the arms' reps, which evicted the index
-    # FILES from the page cache before every serve while the rebuild
-    # arm's input (embeddings.parquet) stayed warm — the suite's own
-    # emb_* queries keep touching it. The recorded ratio then measured
-    # cache weather, not the serve-vs-rederive cost this arm tracks
-    # (r12: driver 1.616 vs 1.02 back-to-back). Alternating reps in one
-    # block give both arms identical cache conditions; cache_index pins
-    # the index in executor storage — the hot-index serving deployment
-    # build-once/serve-many exists for.
-    for _ in range(max(reps, 5)):
-        t0 = time.perf_counter()
-        ann_index_topk(
-            spark, f"{serve_root}/ann", ab_queries, k=5, cache_index=True
-        ).collect()
-        ann_srv_samples["serve"].append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        cosine_topk_lsh(
-            emb, ab_queries, k=5,
-            num_tables=int(ann_meta["num_tables"]),
-            bits_per_table=int(ann_meta["bits_per_table"]),
-            seed=int(ann_meta["seed"]),
-        ).collect()
-        ann_srv_samples["rebuild"].append(time.perf_counter() - t0)
-    ticks1 = _cpu_ticks()
+    ticks0 = cpu_times()
+    samples = interleave(queries | calls_for([a for a in ARMS if a.in_suite], fns), reps,
+                         {"overwrite": gate_fixture, "atomic": gate_fixture})
+    samples |= interleave(calls_for([arm["ann_serving"]], fns), max(reps, 5))
+    ticks1 = cpu_times()
 
-    # High-variance re-measurement (VERDICT r11 ask #5): a query whose
-    # rep-to-rep spread exceeds 50% of its median got unlucky (GC pause,
-    # first-call codegen, a neighbor's page-cache eviction) — its
-    # median-of-3 is one outlier away from the truth. Re-time just those
-    # at 7 reps and keep whichever sample is TIGHTER (the redo can get
-    # unlucky too); everything else keeps its 3-rep median so the fix
-    # costs seconds, not a 2.3x longer bench. This block runs BEFORE the
-    # serve/gate/hll temp dirs are torn down so a future serve-path
-    # headline re-times against live fixtures instead of crashing.
-    def _rel_spread(s: list[float]) -> float:
-        return (max(s) - min(s)) / statistics.median(s) if len(s) > 1 else 0.0
+    # before the fixtures go, so a serve-path headline re-times against them
+    query_samples = {n: samples[n] for n in HEADLINE}
+    remeasured = redo(query_samples, queries)
+    shutil.rmtree(root, ignore_errors=True)
 
-    # A redo window on a busy shared host is expected to catch
-    # hiccups (GC pause, scheduler stall, page-cache miss) in
-    # proportion to its length, so each redo DROPS its worst
-    # ~n/5 reps before SCORING the spread — (max-min)/median
-    # over 7 raw draws is otherwise a harsher metric than the
-    # 3-rep base it replaces (more tail draws), and r13 closed
-    # with 6 sub-second queries stuck >50% after a redo that
-    # kept all 7. The trimmed view decides WHICH sample wins
-    # and WHEN to stop escalating (7, 9, 11 reps); the sample
-    # STORED for timing is always the UNTRIMMED redo reps, so
-    # published medians come from an uncensored distribution
-    # (ADVICE r14 #3 — trimming the stored sample gave
-    # remeasured queries an asymmetric optimistic bias).
-    #
-    # Redo reps are INTERLEAVED round-robin across all still-flagged
-    # names (rep k of every flagged query before rep k+1 of any), the
-    # same decorrelation the main loop uses (VERDICT r15 #3): the old
-    # per-query back-to-back redo put all 7-11 draws inside ONE weather
-    # window, re-correlating exactly the sample it was trying to
-    # de-noise. Escalation is per-level for the whole flagged set; a
-    # name whose trimmed spread clears 0.5 drops out of later levels.
-    remeasured = [n for n, s in samples.items() if _rel_spread(s) > 0.5]
-    best_score = {n: _rel_spread(samples[n]) for n in remeasured}
-    active = list(remeasured)
-    for n_redo in (7, 9, 11):
-        if not active:
-            break
-        trim = max(1, n_redo // 5)
-        redo: dict[str, list[float]] = {n: [] for n in active}
-        for _ in range(n_redo):
-            for name in active:
-                t0 = time.perf_counter()
-                specs[name].spark_fn(spark, sf_dir).collect()
-                redo[name].append(time.perf_counter() - t0)
-        still: list[str] = []
-        for name in active:
-            trimmed = sorted(redo[name])[:-trim]
-            if _rel_spread(trimmed) < best_score[name]:
-                best_score[name] = _rel_spread(trimmed)
-                samples[name] = redo[name]
-            if best_score[name] > 0.5:
-                still.append(name)
-        active = still
-
-    shutil.rmtree(gate_src, ignore_errors=True)
-    shutil.rmtree(hll_src, ignore_errors=True)
-    shutil.rmtree(hll_work, ignore_errors=True)
-    shutil.rmtree(serve_root, ignore_errors=True)
-
-    timings = {n: round(statistics.median(s), 3) for n, s in samples.items()}
-    spread = {
-        n: round((max(s) - min(s)) / statistics.median(s), 3) if len(s) > 1 else 0.0
-        for n, s in samples.items()
-    }
-    noise: dict[str, object] = {
+    timings = {n: round(statistics.median(s), 3) for n, s in query_samples.items()}
+    spread = {n: round(rel_spread(s), 3) for n, s in query_samples.items()}
+    noise = {
         "reps": reps,
         "per_query_spread": spread,
-        # raw rep timings (full artifact only — the stdout digest stays
-        # compact). The r15 regression forensics needed to know whether
-        # rep 1 (which runs before any later-suite query has executed)
-        # was already slow, and medians+spreads can't answer that.
-        "raw_samples": {n: [round(x, 3) for x in s] for n, s in samples.items()},
+        "raw_samples": {n: [round(x, 3) for x in s] for n, s in query_samples.items()},
         "max_spread_pct": round(100 * max(spread.values()), 1),
-        # Names re-timed by the escalating redo. Their stored samples are
-        # UNTRIMMED reps (trimming only steers the redo's accept/stop
-        # decision), so every median in `timings` — remeasured or not —
-        # comes from an uncensored sample.
         "remeasured_untrimmed": remeasured,
-        # ALWAYS present (empty when unset): a run with skipped names is
-        # not a full-suite artifact and must say so in its own record
-        "skip_names": skip_names,
+        "cpu_steal_pct": round(steal_pct(ticks0, ticks1), 2),
     }
-    if ticks0 and ticks1 and ticks1[1] > ticks0[1]:
-        noise["cpu_steal_pct"] = round(
-            100 * (ticks1[0] - ticks0[0]) / (ticks1[1] - ticks0[1]), 2
-        )
-
-    ab = {k: round(statistics.median(s), 3) for k, s in ab_samples.items()}
-    ab["adc_over_decode"] = round(ab["adc"] / ab["decode"], 3) if ab["decode"] else None
-
-    gate = {k: round(statistics.median(s), 3) for k, s in gate_samples.items()}
-    gate["atomic_over_overwrite"] = (
-        round(gate["atomic"] / gate["overwrite"], 3) if gate["overwrite"] else None
-    )
-
-    hll = {k: round(statistics.median(s), 3) for k, s in hll_samples.items()}
-    hll["merge_over_recompute"] = (
-        round(hll["sketch_merge"] / hll["recompute"], 3) if hll["recompute"] else None
-    )
-
-    fts_srv = {k: round(statistics.median(s), 3) for k, s in fts_srv_samples.items()}
-    fts_srv["deep_over_page1"] = (
-        round(fts_srv["deep_page"] / fts_srv["page1"], 3) if fts_srv["page1"] else None
-    )
-
-    ann_srv = {k: round(statistics.median(s), 3) for k, s in ann_srv_samples.items()}
-    ann_srv["serve_over_rebuild"] = (
-        round(ann_srv["serve"] / ann_srv["rebuild"], 3) if ann_srv["rebuild"] else None
-    )
-
-    # binary-tier price check from the already-collected medians: the
-    # Hamming scan (1 bit/dim, XOR+popcount) vs the exact float cosine
-    # scan over the same corpus and query set — the ratio the two-stage
-    # (hamming shortlist -> cosine rerank) design banks on.
-    hamming_ab = {
-        "hamming": timings.get("emb_hamming_topk"),
-        "cosine": timings.get("emb_cosine_topk"),
-        "hamming_over_cosine": (
-            round(timings["emb_hamming_topk"] / timings["emb_cosine_topk"], 3)
-            # guard BOTH legs: a skip-experiment that drops either query
-            # leaves its timings key absent, and a KeyError here would
-            # land after the full suite ran but before the labelled
-            # digest prints — exactly the lost-output failure the
-            # skip-taint path exists to prevent
-            if timings.get("emb_cosine_topk") and timings.get("emb_hamming_topk")
-            else None
-        ),
+    results = {a.key: corpus if a is arm["corpus_e2e"] else summarize(a, samples) for a in ARMS}
+    # the binary tier's price: the Hamming scan (1 bit/dim, XOR+popcount) vs
+    # the exact float cosine scan over the same corpus and queries — the
+    # ratio the two-stage (hamming shortlist -> cosine rerank) design banks on
+    hamming, cosine = timings["emb_hamming_topk"], timings["emb_cosine_topk"]
+    results["ab_hamming_vs_cosine"] = {
+        "hamming": hamming,
+        "cosine": cosine,
+        "hamming_over_cosine": ratio(hamming, cosine),
     }
-
-    total = round(sum(timings.values()), 3)
     full = {
         "metric": "headline query suite wall-clock (median of reps)",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
         "noise": noise,
-        "ab_adc_vs_decode": ab,
-        "ab_hamming_vs_cosine": hamming_ab,
-        "gate_atomic_overhead": gate,
-        "hll_rollup": hll,
-        "fts_serving": fts_srv,
-        "ann_serving": ann_srv,
-        "corpus_e2e": corpus,
+        **results,
+        "lineage": {
+            "cpus": spark.sparkContext.defaultParallelism,
+            "nproc": len(os.sched_getaffinity(0)),
+            "sf_dir": sf_dir,
+            "reps": reps,
+            "git_sha": _git_sha(),
+        },
     }
-    # the driver records only the last ~2.2 KB of stdout; BENCH_r07-r09
-    # all recorded "parsed": null because the printed line was bigger
-    # than that window, so its HEAD (the {"metric": opener) was clipped
-    # no matter what printed after it. Defenses: the full artifact goes
-    # to BENCH_LAST.json; the stdout line is a <1.5 KB digest — the
-    # full per-query dict is REPLACED by its 3 slowest entries
-    # (n_queries records the real count) and only scalar ratios are
-    # kept from the sub-benchmarks; and the line is the ABSOLUTE LAST
-    # output — Spark is stopped FIRST (its shutdown noise lands before
-    # the line), the line is printed + flushed, and the process exits
-    # via os._exit so no atexit/py4j teardown can print after it.
-    repo_dir = os.path.dirname(__file__) or "."
-    if skip_names:
-        # refuse to publish a skip-tainted run as the full artifact: an
-        # ordering experiment's output lives on stdout only, labelled
-        # by skip_names in the digest (ADVICE r15)
-        try:
-            spark.stop()
-        except Exception:
-            pass
-        import sys
-
-        sys.stderr.flush()
-        print(build_skip_digest(timings, skip_names, sf, total), flush=True)
-        os._exit(0)
-    with open(os.path.join(repo_dir, "BENCH_LAST.json"), "w") as f:
+    with open(os.path.join(os.path.dirname(__file__) or ".", "BENCH_LAST.json"), "w") as f:
         json.dump(full, f, indent=1)
-    # Per-round full-artifact archive (VERDICT r11 ask #6): the driver
-    # keeps only the compact stdout digest per round (slowest-3), so
-    # round-over-round per-query comparison needed this. The round
-    # number is inferred as 1 + the highest BENCH_r{N}.json the driver
-    # has committed so far — the archive written DURING round N+1's
-    # bench runs lands at BENCH_FULL_r{N+1}; re-runs within a round
-    # overwrite the same slot (last run wins, matching BENCH_LAST).
-    import glob as _glob
-    import re as _re
-
-    rounds = [
-        int(m.group(1))
-        for p in _glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-        if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    arch_dir = os.path.join(repo_dir, "bench_archive")
-    os.makedirs(arch_dir, exist_ok=True)
-    arch = os.path.join(arch_dir, f"BENCH_FULL_r{(max(rounds) if rounds else 0) + 1:02d}.json")
-    with open(arch, "w") as f:
-        json.dump(full, f, indent=1)
-    slowest3 = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:3])
-    compact = {
-        "metric": full["metric"],
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
+    # A bounded stdout tail clips an oversized line at its head, so the line
+    # is a digest: the 3 slowest queries and the scalar ratios only. It is
+    # the last output: Spark stops first (its shutdown noise lands before
+    # the line) and os._exit keeps atexit/py4j teardown from printing after.
+    line = json.dumps({
+        **{k: full[k] for k in ("metric", "value", "unit", "sf")},
         "n_queries": len(timings),
-        "queries": slowest3,
-        "noise_max_spread_pct": noise.get("max_spread_pct"),
-        "cpu_steal_pct": noise.get("cpu_steal_pct"),
-        "adc_over_decode": ab.get("adc_over_decode"),
-        "hamming_over_cosine": hamming_ab.get("hamming_over_cosine"),
-        "gate_atomic_over_overwrite": gate.get("atomic_over_overwrite"),
-        "hll_merge_over_recompute": hll.get("merge_over_recompute"),
-        "fts_deep_over_page1": fts_srv.get("deep_over_page1"),
-        "ann_serve_over_rebuild": ann_srv.get("serve_over_rebuild"),
-        "corpus_docs_per_sec": corpus["build"].get("docs_per_sec"),
-        "append_over_build": corpus["append_delta"].get("append_over_build"),
-        "skip_names": skip_names,
+        "queries": dict(sorted(timings.items(), key=lambda kv: -kv[1])[:3]),
+        "noise_max_spread_pct": noise["max_spread_pct"],
+        "cpu_steal_pct": noise["cpu_steal_pct"],
+        **{k: results[obj][key] for k, (obj, key) in DIGEST_RATIOS.items()},
+        "corpus_docs_per_sec": corpus["build"]["docs_per_sec"],
+        "append_over_build": corpus["append_delta"]["append_over_build"],
         "full_artifact": "BENCH_LAST.json",
-    }
-    line = json.dumps(compact)
-    assert len(line) < 1500, f"stdout line {len(line)}B exceeds driver tail budget"
+    })
+    assert len(line) < 1500, f"stdout line {len(line)}B exceeds the tail budget"
     try:
         spark.stop()
     except Exception:
         pass
-    import sys
-
     sys.stderr.flush()
     print(line, flush=True)
     os._exit(0)

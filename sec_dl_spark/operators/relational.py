@@ -769,64 +769,6 @@ def global_cumsum(
     )
 
 
-def global_cumsum_cols(
-    df: DataFrame,
-    order: list,
-    value_cols: list,
-    prefix: str = "_cum_",
-) -> DataFrame:
-    """Global inclusive running sums of MANY value columns in one ranged
-    pass — :func:`global_cumsum` vectorized over columns. One range
-    exchange, ONE per-partition window carrying every column's local
-    running sum, one O(num_partitions × num_cols) totals/offsets
-    aggregate broadcast back. Output adds ``{prefix}{col}`` (long) per
-    input column.
-
-    Exists because k separate global_cumsum calls cost k EAGER pinned
-    materializations plus k exchanges of the same frame (the r15
-    spearman profiling lesson: count the pins, not just the shuffles).
-    History: built as a candidate for the tau-b price-pair fold (~70
-    simultaneous prefix sums), which ultimately shipped the Arrow
-    dominance kernel instead — the wide-frame window cut is recorded as
-    a losing design in NOTES r15, so this operator currently has no
-    production caller and is kept as the general many-column prefix-sum
-    primitive (pytest-pinned). Same pinned-branch-consistency and
-    eagerness semantics as global_cumsum."""
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    ranged = pin(
-        df.repartitionByRange(n_parts, *order).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-    )
-    w = Window.partitionBy("_pid").orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    totals = ranged.groupBy("_pid").agg(
-        *[F.sum(c).alias(f"_t_{c}") for c in value_cols]
-    )
-    ow = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid",
-        *[
-            F.coalesce(F.sum(f"_t_{c}").over(ow), F.lit(0)).alias(f"_off_{c}")
-            for c in value_cols
-        ],
-    )
-    out = ranged.select(
-        "*", *[F.sum(c).over(w).alias(f"_loc_{c}") for c in value_cols]
-    ).join(F.broadcast(offsets), "_pid")
-    for c in value_cols:
-        out = out.withColumn(
-            f"{prefix}{c}",
-            (F.col(f"_off_{c}") + F.col(f"_loc_{c}")).cast("long"),
-        )
-    return out.drop(
-        "_pid",
-        *[f"_loc_{c}" for c in value_cols],
-        *[f"_off_{c}" for c in value_cols],
-    )
-
-
 def concat_chunk_sequences(
     docs: DataFrame,
     order: list,

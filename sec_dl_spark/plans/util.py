@@ -34,11 +34,6 @@ def rz6(col):
     return rz(col, 6)
 
 
-def rz6_sql(expr: str) -> str:
-    """DuckDB twin of :func:`rz6`."""
-    return rz_sql(expr, 6)
-
-
 def cents(col):
     """Exact BIGINT hundredths of a 2-decimal column (money cents,
     discount/tax percents). ``round`` first kills the double

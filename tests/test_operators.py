@@ -2704,30 +2704,6 @@ def test_semantic_dedup_hier_path_matches_flat_verdicts(spark):
         semantic_dedup(emb, assignment="nearest")
 
 
-def test_global_cumsum_cols_matches_per_column_prefix_sums(spark):
-    """The vectorized multi-column prefix sum equals the per-column global
-    running sum for a total order, regardless of input partitioning —
-    one ranged pass must behave exactly like k global_cumsum calls."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from sec_dl_spark.operators.relational import global_cumsum_cols
-
-    rng = random.Random(3)
-    rows = [
-        (i, rng.randrange(50), rng.randrange(7), rng.randrange(1000))
-        for i in range(3000)
-    ]
-    df = spark.createDataFrame(rows, "k long, a long, b long, c long").repartition(11)
-    out = global_cumsum_cols(df, [F.asc("k")], ["a", "b", "c"]).collect()
-    got = {r["k"]: (r["_cum_a"], r["_cum_b"], r["_cum_c"]) for r in out}
-    ca = cb = cc = 0
-    for k, a, b, c in sorted(rows):
-        ca, cb, cc = ca + a, cb + b, cc + c
-        assert got[k] == (ca, cb, cc), k
-
-
 def test_per_query_topk_composite_key_matches_global_window(spark):
     """The two-phase top-k must be chunking-invariant and equal to the
     single global window for ANY partitioning, for both the default

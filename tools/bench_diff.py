@@ -1,78 +1,53 @@
-"""Per-query regression accounting between two archived bench runs.
+"""Per-query regression accounting between two bench artifacts.
 
-VERDICT r12 ask #6: each round's close should diff
-``bench_archive/BENCH_FULL_r{N}.json`` against ``_r{N-1}.json`` per query
-and list every >30% regression (with the recorded noise spread beside it,
-so a "regression" inside the rep spread reads as weather, not a defect).
+Diffs the per-query medians of two runs and lists every regression above
+the threshold, with the newer run's recorded rep spread beside it, so a
+"regression" inside the rep spread reads as weather, not a defect.
 
-    python tools/bench_diff.py                 # newest two archives
-    python tools/bench_diff.py 12 13           # explicit rounds
-    python tools/bench_diff.py --threshold 0.5
+    python tools/bench_diff.py OLD.json NEW.json
+    python tools/bench_diff.py bench_archive/BENCH_FULL_r17.json BENCH_LAST.json
+    python tools/bench_diff.py OLD.json NEW.json --threshold 0.5
 
-Prints a markdown table (for NOTES.md) plus one JSON summary line.
-Queries present in only one run are listed separately (added/removed),
-never as regressions.
+Either side may be a full artifact (BENCH_LAST.json or a copy of one, such
+as bench_archive/*.json) or a per-round record (BENCH_rNN.json), whose bench
+line sits under "parsed" and carries only the slowest queries. Two runs at
+different scale factors are refused. Prints a markdown table (for NOTES.md)
+plus one JSON summary line. Queries present in only one run are listed
+separately (added/removed), never as regressions.
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
 import json
-import os
-import re
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ARCHIVE = os.path.join(REPO, "bench_archive")
 
 
-def _load(rnd: int) -> dict:
-    """Prefer the full archive; fall back to the driver's root artifact
-    (BENCH_r{N}.json) for rounds before archiving started (r12)."""
-    # on-disk artifacts are unpadded (BENCH_FULL_r9.json, BENCH_r13.json);
-    # accept a zero-padded spelling too in case a future round writes one
-    for path in (
-        os.path.join(ARCHIVE, f"BENCH_FULL_r{rnd}.json"),
-        os.path.join(ARCHIVE, f"BENCH_FULL_r{rnd:02d}.json"),
-        os.path.join(REPO, f"BENCH_r{rnd}.json"),
-        os.path.join(REPO, f"BENCH_r{rnd:02d}.json"),
-    ):
-        if os.path.exists(path):
-            with open(path) as f:
-                d = json.load(f)
-            # the driver's root artifact nests the bench line under "parsed"
-            d = d.get("parsed") or d
-            if not isinstance(d, dict) or "queries" not in d:
-                raise SystemExit(
-                    f"{path} has no per-query map (driver artifact with a "
-                    "truncated/unparsed bench line) — cannot diff round "
-                    f"{rnd}"
-                )
-            return d
-    raise SystemExit(f"no bench artifact for round {rnd}")
+def _load(path: str) -> dict:
+    with open(path) as f:
+        d = json.load(f)
+    d = d.get("parsed") or d
+    if not isinstance(d, dict) or "queries" not in d:
+        raise SystemExit(
+            f"{path} has no per-query map (per-round record with a truncated or "
+            "unparsed bench line) — cannot diff it"
+        )
+    return d
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("rounds", nargs="*", type=int, help="two round numbers")
+    ap.add_argument("old", help="the baseline artifact")
+    ap.add_argument("new", help="the artifact compared against it")
     ap.add_argument("--threshold", type=float, default=0.3,
                     help="relative slowdown that counts as a regression")
     args = ap.parse_args()
 
-    if args.rounds:
-        if len(args.rounds) != 2:
-            raise SystemExit("pass exactly two round numbers (old new)")
-        old_r, new_r = args.rounds
-    else:
-        rounds = sorted(
-            int(re.search(r"_r(\d+)", f).group(1))
-            for f in glob.glob(os.path.join(ARCHIVE, "BENCH_FULL_r*.json"))
+    old, new = _load(args.old), _load(args.new)
+    if old.get("sf") != new.get("sf"):
+        raise SystemExit(
+            f"refusing to diff sf {old.get('sf')} ({args.old}) against "
+            f"sf {new.get('sf')} ({args.new})"
         )
-        if len(rounds) < 2:
-            raise SystemExit("need two archived rounds to diff")
-        old_r, new_r = rounds[-2], rounds[-1]
-
-    old, new = _load(old_r), _load(new_r)
     oq, nq = old["queries"], new["queries"]
     spread = (new.get("noise") or {}).get("per_query_spread", {})
 
@@ -88,10 +63,11 @@ def main() -> None:
         elif rel < -args.threshold:
             improvements.append(row)
 
-    print(f"## bench diff r{old_r} -> r{new_r} "
-          f"({len(shared)} shared queries, threshold {args.threshold:.0%})\n")
+    print(f"## bench diff {args.old} -> {args.new} "
+          f"(sf {new.get('sf')}, {len(shared)} shared queries, "
+          f"threshold {args.threshold:.0%})\n")
     if regressions:
-        print("| query | r%d (s) | r%d (s) | delta | rep spread |" % (old_r, new_r))
+        print("| query | old (s) | new (s) | delta | rep spread |")
         print("|---|---|---|---|---|")
         for name, a, b, rel, sp in sorted(regressions, key=lambda r: -r[3]):
             print(f"| {name} | {a} | {b} | +{rel:.0%} | {sp:.0%} |")
@@ -111,7 +87,8 @@ def main() -> None:
         print(f"removed: {', '.join(removed)}")
     print()
     print(json.dumps({
-        "old_round": old_r, "new_round": new_r, "shared": len(shared),
+        "old": args.old, "new": args.new, "sf": new.get("sf"),
+        "shared": len(shared),
         "regressions": [r[0] for r in regressions],
         "improvements": [r[0] for r in improvements],
         "added": added, "removed": removed,
