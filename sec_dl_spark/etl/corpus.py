@@ -159,7 +159,7 @@ def build_corpus(
                 F.col("doc_id").alias("canonical_id"),
                 F.lit("initial").alias("batch"),
             )
-            .withColumn("fp_bucket", (F.abs(F.hash("fp")) % _REG_BUCKETS).cast("int"))
+            .withColumn("fp_bucket", A.hash_bucket(F.col("fp"), _REG_BUCKETS))
             .write.mode("overwrite")
             .partitionBy("fp_bucket")
             .parquet(reg_out)
@@ -308,7 +308,7 @@ def append_corpus(
     # anti-join keyed by (bucket, fp): only hashes shuffle, and the bucket
     # key keeps the layout ready for bucket-pruned registry serving
     novel = in_batch.withColumn(
-        "fp_bucket", (F.abs(F.hash("fp")) % _REG_BUCKETS).cast("int")
+        "fp_bucket", A.hash_bucket(F.col("fp"), _REG_BUCKETS)
     ).join(
         registry.select("fp", "fp_bucket"), ["fp_bucket", "fp"], "left_anti"
     )

@@ -103,6 +103,16 @@ def fingerprint(col: Column) -> Column:
     return fingerprint_of(tokenize(col))
 
 
+def hash_bucket(col: Column, buckets: int) -> Column:
+    """Hash bucket of ``col`` in [0, buckets): ``abs(hash(col) % buckets)``.
+
+    Not ``abs(hash(col)) % buckets``: under ANSI mode ``abs`` of a hash
+    equal to Int.MinValue raises ARITHMETIC_OVERFLOW (the token
+    'actgv1ns' hashes there). For every other hash both forms give the
+    same bucket, so layouts written with the old form stay valid."""
+    return F.abs(F.hash(col) % buckets)
+
+
 def shingles_of(toks: Column, n: int = 3) -> Column:
     """Distinct n-gram word shingles from a token-array column — the
     dedup/similarity unit for Jaccard, MinHash and SimHash.

@@ -6,11 +6,17 @@ Replaces the reference's PostgreSQL GIN index and tsvector trigger
 indexes, so the index is itself a table: one posting row per (token, doc),
 with in-document positions for phrase queries.
 
-Scale design (100 TB): the posting table is written bucketed/partitioned by
-token hash so a query term touches one bucket; building it is one explode +
-one groupBy (single shuffle keyed by (token, doc_id)); query evaluation is a
-semi-join of a tiny broadcast term list against the postings, then a grouped
-count for AND semantics — no scan of the raw text at query time.
+Scale design (100 TB): building the index is one explode + one groupBy
+(single shuffle keyed by (token, doc_id)); the persisted index is
+partitioned by token hash-bucket (or token prefix). Like a GIN lookup, a
+search reads only its own terms' rows: the term list is an IN filter
+pushed into the scan, and on a persisted index opened with ``read_index``
+the terms' bucket values are folded into a static partition filter, so
+only their directories are listed and read. No scan of the raw text and
+no join against a term table at query time. An index written with
+``with_stats=False``, an index written before the bucket count was
+recorded, or a frame read with plain ``spark.read.parquet`` is served
+unpruned (the IN filter still applies).
 """
 
 from __future__ import annotations
@@ -18,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sec_dl_spark.functions.analysis import hash_bucket
 from sec_dl_spark.functions.text import tokenize
 from sec_dl_spark.session import spread
 
@@ -112,6 +119,11 @@ class CorpusStats:
 # handful of them.
 PREFIX_BUCKET_LEN = 2
 
+# Metadata key on read_index's ``token_bucket`` column: the bucket count
+# the index was written with. Pruning needs it to compute a term's bucket;
+# a column without it (plain spark.read.parquet) is never pruned.
+BUCKETS_META = "fts_buckets"
+
 
 def write_index(
     postings: DataFrame,
@@ -124,20 +136,25 @@ def write_index(
     saveAsTable is the managed-catalog variant; plain parquet keeps the
     fixture flow hermetic.)
 
-    ``layout="hash"`` (default) partitions by token hash-bucket — uniform
-    directory sizes, exact-term searches prune to one directory, but a
-    `word:*` prefix query must scan every bucket (hash destroys token
-    order). ``layout="prefix"`` partitions by ``prefix_bucket =
-    substr(token, 1, PREFIX_BUCKET_LEN)`` — prefix AND exact-term queries
-    both prune statically (the search functions inject the bucket
-    predicate), at the cost of linguistically-skewed directory sizes.
-    Choose per workload; both serve the same search functions.
+    ``layout="hash"`` (default) partitions by ``token_bucket =
+    hash_bucket(token, buckets)`` — uniform directory sizes; an exact-term
+    search on the index opened with ``read_index`` prunes to its terms'
+    bucket directories, but a `word:*` prefix query must scan every bucket
+    (hash destroys token order). ``layout="prefix"`` partitions by
+    ``prefix_bucket = substr(token, 1, PREFIX_BUCKET_LEN)`` — prefix AND
+    exact-term queries both prune statically, at the cost of
+    linguistically-skewed directory sizes. Choose per workload; both serve
+    the same search functions.
 
     ``with_stats`` additionally writes the corpus-stats sidecar (N, avgdl,
-    doc_len, token df) so ranked queries at serve time launch no
-    stats-aggregation jobs — stats belong to index build, not query eval."""
+    doc_len, token df, and for the hash layout the bucket count that
+    pruning needs) so ranked queries at serve time launch no
+    stats-aggregation jobs — stats belong to index build, not query eval.
+    The sidecar is computed from the postings just written, so ``postings``
+    (tokenization included) is evaluated once. Without the sidecar the
+    index is served unpruned."""
     if layout == "hash":
-        bucketed = postings.withColumn("token_bucket", F.abs(F.hash("token")) % buckets)
+        bucketed = postings.withColumn("token_bucket", hash_bucket(F.col("token"), buckets))
         part_col = "token_bucket"
     elif layout == "prefix":
         bucketed = postings.withColumn(
@@ -146,13 +163,14 @@ def write_index(
         part_col = "prefix_bucket"
     else:
         raise ValueError(f"unknown index layout {layout!r} (hash|prefix)")
+    spark = postings.sparkSession
     # Remove any existing sidecar BEFORE touching the postings: a crash
     # between the postings overwrite and the sidecar rewrite would
     # otherwise leave the previous corpus's stats next to the new
     # postings — silently wrong TF-IDF/BM25 with no signal. Deleting
     # first turns that crash window into a detectable missing-sidecar
     # state (read_index returns stats=None).
-    _hadoop_delete(postings.sparkSession, f"{path}_stats")
+    _hadoop_delete(spark, f"{path}_stats")
     (
         bucketed.repartition(part_col)
         .write.mode("overwrite")
@@ -160,12 +178,15 @@ def write_index(
         .parquet(path)
     )
     if with_stats:
-        stats = CorpusStats(postings, cache=False)
+        from sec_dl_spark.util import read_string_partitioned
+
+        stats = CorpusStats(read_string_partitioned(spark, path), cache=False)
         stats.doc_len.write.mode("overwrite").parquet(f"{path}_stats/doc_len")
         stats.df.write.mode("overwrite").parquet(f"{path}_stats/token_df")
-        spark = postings.sparkSession
-        spark.createDataFrame(
-            [(stats.n_docs, stats.avgdl)], "n_docs long, avgdl double"
+        spark.read.parquet(f"{path}_stats/doc_len").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.avg("dl").alias("avgdl"),
+            F.lit(buckets if layout == "hash" else None).cast("int").alias("buckets"),
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}_stats/corpus")
 
 
@@ -175,21 +196,31 @@ from sec_dl_spark.util import hadoop_delete as _hadoop_delete  # noqa: E402
 def read_index(spark, path: str) -> tuple[DataFrame, CorpusStats | None]:
     """Load a persisted index + its stats sidecar (None if written with
     ``with_stats=False``). The scalar read is one tiny single-file scan at
-    open time; queries then run with zero stats jobs."""
+    open time; queries then run with zero stats jobs.
+
+    On the hash layout the returned postings keep ``token_bucket``, tagged
+    with the recorded bucket count (``BUCKETS_META``), so the search
+    functions prune to their terms' directories. With no recorded count
+    (no sidecar, or an index written before the count was recorded) the
+    column is dropped and searches scan every bucket."""
     from sec_dl_spark.util import read_string_partitioned, try_read_parquet
 
     # type inference OFF: the prefix layout's partition values are token
     # prefixes — an all-digit prefix set would otherwise infer numeric and
     # collapse distinct prefixes like '0'/'00' (see util helper docstring)
-    postings = read_string_partitioned(spark, path).drop("token_bucket")
+    postings = read_string_partitioned(spark, path)
     # probe by reading, not os.path — works on any filesystem scheme; an
     # empty-but-present sidecar (crash between delete and rewrite) also
     # reads as "no stats" rather than raising
     corpus = try_read_parquet(spark, f"{path}_stats/corpus")
     rows = corpus.collect() if corpus is not None else []
+    row = rows[0].asDict() if rows else {}
+    if row.get("buckets"):
+        postings = postings.withMetadata("token_bucket", {BUCKETS_META: row["buckets"]})
+    else:
+        postings = postings.drop("token_bucket")
     if not rows:
         return postings, None
-    row = rows[0]
     stats = CorpusStats(
         doc_len=spark.read.parquet(f"{path}_stats/doc_len"),
         df=spark.read.parquet(f"{path}_stats/token_df"),
@@ -199,16 +230,33 @@ def read_index(spark, path: str) -> tuple[DataFrame, CorpusStats | None]:
     return postings, stats
 
 
+def _lowered(terms) -> list[str]:
+    """A term list as the index stores it: lowercased, distinct, sorted."""
+    return sorted({t.lower() for t in terms})
+
+
 def _prune_to_terms(postings: DataFrame, terms) -> DataFrame:
-    """Static partition pruning for the prefix index layout: restrict the
-    scan to the terms' prefix_bucket directories before any join (the
-    bucket value is a pure function of the term, so the predicate is
-    decided at plan time). No-op for frames without the partition column
-    (in-memory postings, hash layout)."""
-    if "prefix_bucket" not in postings.columns:
-        return postings
-    buckets = sorted({t.lower()[:PREFIX_BUCKET_LEN] for t in terms})
-    return postings.where(F.col("prefix_bucket").isin(buckets))
+    """The terms' posting rows: ``token IN (terms)``, pushed into the scan.
+
+    On a persisted index the partition column is restricted first, to the
+    terms' ``prefix_bucket`` values (prefix layout) or to their
+    ``token_bucket`` values when read_index recorded the bucket count (hash
+    layout). The bucket value is a constant expression of the term, so
+    constant folding turns the predicate into a static partition filter:
+    only those directories are read, and no job runs to find them. The
+    hash column is dropped after pruning. A ``token_bucket`` column
+    without a recorded count is left alone — its bucket count is unknown."""
+    toks = _lowered(terms)
+    cols = postings.columns
+    if "prefix_bucket" in cols:
+        prefixes = sorted({t[:PREFIX_BUCKET_LEN] for t in toks})
+        postings = postings.where(F.col("prefix_bucket").isin(prefixes))
+    elif "token_bucket" in cols:
+        n = postings.schema["token_bucket"].metadata.get(BUCKETS_META)
+        if n:
+            values = [hash_bucket(F.lit(t), n).cast("string") for t in toks]
+            postings = postings.where(F.col("token_bucket").isin(values)).drop("token_bucket")
+    return postings.where(F.col("token").isin(toks))
 
 
 def _prune_to_prefix(postings: DataFrame, prefix: str) -> DataFrame:
@@ -225,17 +273,15 @@ def _prune_to_prefix(postings: DataFrame, prefix: str) -> DataFrame:
 
 def search_all(postings: DataFrame, terms: list[str]) -> DataFrame:
     """AND semantics (to_tsquery 'a & b'): doc_ids containing every term.
-    Grouped distinct-term count == n_terms — one broadcast semi-join plus
-    one aggregation on doc_id."""
-    postings = _prune_to_terms(postings, terms)
-    terms_df = F.broadcast(
-        postings.sparkSession.createDataFrame([(t.lower(),) for t in set(terms)], ["token"])
-    )
-    n = len(set(terms))
+    The terms' rows (IN filter, bucket-pruned) grouped by doc_id, kept
+    where the doc's set of hit terms is as large as the set of distinct
+    lowercased terms. The set is at most that large, so collect_set
+    costs one shuffle where count_distinct's rewrite costs two."""
+    n = len(_lowered(terms))
     return (
-        postings.join(terms_df, "token", "inner")
+        _prune_to_terms(postings, terms)
         .groupBy("doc_id")
-        .agg(F.count_distinct("token").alias("n_hit"))
+        .agg(F.size(F.collect_set("token")).alias("n_hit"))
         .where(F.col("n_hit") == n)
         .select("doc_id")
     )
@@ -243,11 +289,7 @@ def search_all(postings: DataFrame, terms: list[str]) -> DataFrame:
 
 def search_any(postings: DataFrame, terms: list[str]) -> DataFrame:
     """OR semantics (to_tsquery 'a | b'): doc_ids containing any term."""
-    postings = _prune_to_terms(postings, terms)
-    terms_df = F.broadcast(
-        postings.sparkSession.createDataFrame([(t.lower(),) for t in set(terms)], ["token"])
-    )
-    return postings.join(terms_df, "token", "inner").select("doc_id").distinct()
+    return _prune_to_terms(postings, terms).select("doc_id").distinct()
 
 
 def search_phrase(postings: DataFrame, phrase: list[str]) -> DataFrame:
@@ -257,7 +299,7 @@ def search_phrase(postings: DataFrame, phrase: list[str]) -> DataFrame:
     if not phrase:
         raise ValueError("empty phrase")
     def term_starts(i: int, term: str) -> DataFrame:
-        return _prune_to_terms(postings, [term]).where(F.col("token") == term.lower()).select(
+        return _prune_to_terms(postings, [term]).select(
             "doc_id",
             F.transform("positions", lambda p: p - F.lit(i)).alias(f"starts_{i}"),
         )
@@ -299,21 +341,20 @@ def search_ranked(
 
     The FTS analog of PostgreSQL ts_rank on the reference's GIN index —
     everything computes off the posting table: tf = |positions|, df = one
-    grouped count, N = distinct docs. Terms broadcast; the only shuffles
-    are the df aggregation and the final per-doc score combine.
+    grouped count, N = distinct docs. The terms' posting and df rows are
+    read through the same IN filter; the df rows broadcast, and the only
+    shuffle is the final per-doc score combine.
 
     Pass ``stats`` (from the index build / sidecar) to skip the eager
     corpus-size job and the per-call df aggregation entirely."""
-    terms_df = F.broadcast(
-        postings.sparkSession.createDataFrame([(t.lower(),) for t in set(terms)], ["token"])
-    )
-    hits = _prune_to_terms(postings, terms).join(terms_df, "token").select(
+    toks = _lowered(terms)
+    hits = _prune_to_terms(postings, toks).select(
         "token", "doc_id", F.size("positions").alias("tf")
     )
     if stats is None:
         stats = CorpusStats(postings, cache=False)
     n_docs = stats.n_docs
-    df_counts = stats.df.join(terms_df, "token")
+    df_counts = stats.df.where(F.col("token").isin(toks))
     scored = (
         hits.join(F.broadcast(df_counts), "token")
         .withColumn("w", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")))
@@ -325,16 +366,10 @@ def search_ranked(
 
 def search_and_not(postings: DataFrame, include: list[str], exclude: list[str]) -> DataFrame:
     """AND-NOT semantics (to_tsquery 'a & !b'): docs containing every
-    include term and none of the exclude terms — the AND semi-join minus a
-    broadcast anti-join on the exclude postings."""
-    matched = search_all(postings, include)
-    excl_df = F.broadcast(
-        postings.sparkSession.createDataFrame([(t.lower(),) for t in set(exclude)], ["token"])
-    )
-    excluded = (
-        _prune_to_terms(postings, exclude).join(excl_df, "token").select("doc_id").distinct()
-    )
-    return matched.join(excluded, "doc_id", "left_anti")
+    include term and none of the exclude terms — the AND search, anti-joined
+    with the exclude terms' postings."""
+    excluded = _prune_to_terms(postings, exclude).select("doc_id")
+    return search_all(postings, include).join(excluded, "doc_id", "left_anti")
 
 
 def search_bm25(
@@ -349,22 +384,22 @@ def search_bm25(
 
     All statistics (document length dl, average length avgdl, document
     frequency df, corpus size N) come from the posting table itself — two
-    small aggregations plus the broadcast term semi-join; no text rescan.
-    idf uses the standard ln((N - df + 0.5)/(df + 0.5) + 1) form.
+    small aggregations, read through the same term IN filter as the hits;
+    no text rescan. idf uses the standard ln((N - df + 0.5)/(df + 0.5) + 1)
+    form. Each distinct lowercased term counts once.
 
     Pass ``stats`` to reuse build-time corpus statistics instead of
     re-aggregating them per call."""
-    sp = postings.sparkSession
-    terms_df = F.broadcast(sp.createDataFrame([(t.lower(),) for t in set(terms)], ["token"]))
+    toks = _lowered(terms)
     if stats is None:
         stats = CorpusStats(postings, cache=False)
     doc_len = stats.doc_len
     n_docs, avgdl = stats.n_docs, stats.avgdl
 
-    hits = _prune_to_terms(postings, terms).join(terms_df, "token").select(
+    hits = _prune_to_terms(postings, toks).select(
         "token", "doc_id", F.size("positions").alias("tf")
     )
-    df_counts = stats.df.join(terms_df, "token")
+    df_counts = stats.df.where(F.col("token").isin(toks))
     idf = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     tf_term = (F.col("tf") * (k1 + 1)) / (
         F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
@@ -400,27 +435,22 @@ def search_proximity_ranked(
     [least(last_t...), pos], and the document's min width is the minimum
     over end positions. One window pass computes every term's carry.
     Cost scales with occurrences OF THE QUERY TERMS in MATCHING docs only
-    (the posting semi-join prunes first), never with corpus size."""
+    (the term IN filter and the AND semi-join prune first), never with
+    corpus size."""
     from functools import reduce
     from operator import and_
 
     from pyspark.sql.window import Window
 
-    uniq = list(dict.fromkeys(t.lower() for t in terms))
-    sp = postings.sparkSession
-    terms_df = F.broadcast(sp.createDataFrame([(t,) for t in uniq], ["token"]))
+    uniq = _lowered(terms)
     matched = search_all(postings, uniq)
-    hits = (
-        _prune_to_terms(postings, uniq)
-        .join(terms_df, "token")
-        .join(matched, "doc_id", "left_semi")
-    )
+    hits = _prune_to_terms(postings, uniq).join(matched, "doc_id", "left_semi")
 
     if stats is None:
         stats = CorpusStats(postings, cache=False)
     n_docs, avgdl = stats.n_docs, stats.avgdl
     tf_rows = hits.select("token", "doc_id", F.size("positions").alias("tf"))
-    df_counts = stats.df.join(terms_df, "token")
+    df_counts = stats.df.where(F.col("token").isin(uniq))
     idf = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     tf_term = (F.col("tf") * (k1 + 1)) / (
         F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
@@ -544,22 +574,21 @@ def parse_tsquery(q: str):
 def search_query(postings: DataFrame, q: str) -> DataFrame:
     """Evaluate a tsquery-style string against the inverted index.
 
-    Terms become distinct-doc_id frames off the posting table; AND = inner
-    join, OR = union+distinct, NOT = anti join against the corpus doc set.
-    Every intermediate is a narrow (doc_id) frame, so composition cost is
-    set operations on ids — never a text rescan."""
+    Terms become doc_id frames off the posting table (each read through
+    its IN filter and bucket pruning); AND = semi join, OR = union. A NOT
+    under an AND is an anti join against its positive siblings' result, so
+    'a & !b' reads only a's and b's rows; only a NOT with no positive
+    sibling ('!b', 'a | !b') anti-joins against the corpus doc set, which
+    scans every posting. Every intermediate is a narrow (doc_id) frame that
+    may repeat ids — a semi or anti join's right side never needs to be
+    distinct — and one distinct at the end makes the result a set. So
+    composition cost is set operations on ids, never a text rescan."""
     ast = parse_tsquery(q)
-    universe = postings.select("doc_id").distinct()
 
     def ev(node) -> DataFrame:
         kind = node[0]
         if kind == "term":
-            return (
-                _prune_to_terms(postings, [node[1]])
-                .where(F.col("token") == node[1])
-                .select("doc_id")
-                .distinct()
-            )
+            return _prune_to_terms(postings, [node[1]]).select("doc_id")
         if kind == "prefix":
             # PG 'word:*'. On the hash layout this scans all buckets (hash
             # destroys token order); on the prefix layout the bucket
@@ -568,25 +597,31 @@ def search_query(postings: DataFrame, q: str) -> DataFrame:
                 _prune_to_prefix(postings, node[1])
                 .where(F.col("token").startswith(node[1]))
                 .select("doc_id")
-                .distinct()
             )
         if kind == "phrase":
             return search_phrase(postings, node[1])
         if kind == "not":
+            universe = postings.select("doc_id")
             return universe.join(ev(node[1]), "doc_id", "left_anti")
         if kind == "and":
-            acc = ev(node[1][0])
-            for part in node[1][1:]:
+            pos = [p for p in node[1] if p[0] != "not"]
+            neg = [p[1] for p in node[1] if p[0] == "not"]
+            if not pos:
+                pos, neg = [("not", neg[0])], neg[1:]
+            acc = ev(pos[0])
+            for part in pos[1:]:
                 acc = acc.join(ev(part), "doc_id", "left_semi")
+            for part in neg:
+                acc = acc.join(ev(part), "doc_id", "left_anti")
             return acc
         if kind == "or":
             acc = ev(node[1][0])
             for part in node[1][1:]:
                 acc = acc.unionByName(ev(part))
-            return acc.distinct()
+            return acc
         raise ValueError(f"unknown node {kind}")
 
-    return ev(ast)
+    return ev(ast).distinct()
 
 
 def tfidf_cosine_pairs(

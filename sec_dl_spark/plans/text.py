@@ -506,9 +506,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fts_search_and(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """to_tsquery 'spark & join & window' via the inverted index — semi-join
-    of a broadcast term list against postings + grouped distinct-term count
-    (replaces the reference's GIN index, init_tables.py:56-57)."""
+    """to_tsquery 'spark & join & window' via the inverted index — the
+    terms' postings (IN filter) + grouped distinct-term count (replaces the
+    reference's GIN index, init_tables.py:56-57)."""
     postings, _ = fts_index(spark, sf_dir)
     return fts.search_all(postings, ["spark", "join", "window"]).orderBy("doc_id")
 

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sec_dl_spark.functions.analysis import fingerprint
+from sec_dl_spark.functions.analysis import fingerprint, hash_bucket
 from sec_dl_spark.streaming.commit import (
     check_source_marker,
     commit_batch_partition,
@@ -60,7 +60,7 @@ REGISTRY_PREFIX_BUCKETS = 64
 
 def _fingerprints(batch_df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return batch_df.withColumn("_fp", fingerprint(F.col(text_col))).withColumn(
-        "_fp_bucket", F.abs(F.hash("_fp")) % REGISTRY_PREFIX_BUCKETS
+        "_fp_bucket", hash_bucket(F.col("_fp"), REGISTRY_PREFIX_BUCKETS)
     )
 
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sec_dl_spark.functions.analysis import hash_bucket
 from sec_dl_spark.operators.fts import CorpusStats, build_inverted_index
 from sec_dl_spark.streaming.commit import (
     check_source_marker,
@@ -61,7 +62,7 @@ def incremental_index_sink(
             batch_df, id_col=id_col, text_col=text_col
         ).localCheckpoint(eager=True)
         commit_batch_partition(
-            postings.withColumn("token_bucket", F.abs(F.hash("token")) % buckets),
+            postings.withColumn("token_bucket", hash_bucket(F.col("token"), buckets)),
             index_path,
             run,
             batch_id,

@@ -736,6 +736,27 @@ def test_tsquery_phrase_operator(spark):
     assert run("x & !(x <-> y)") == [2, 3]
 
 
+def test_tsquery_not_under_and_anti_joins_its_siblings(spark):
+    """A NOT under an AND subtracts from its positive siblings; an AND of
+    NOTs only subtracts from the corpus doc set."""
+    from sec_dl_spark.operators.fts import build_inverted_index, search_query
+
+    docs = spark.createDataFrame(
+        [(1, "x y"), (2, "x z"), (3, "y z"), (4, "w"), (5, "x")], "doc_id long, text string"
+    )
+    postings = build_inverted_index(docs)
+
+    def run(q):
+        return sorted(r["doc_id"] for r in search_query(postings, q).collect())
+
+    assert run("!y & x") == [2, 5]
+    assert run("x & !y & !z") == [5]
+    assert run("!x & !y") == [4]
+    assert run("!x & !y & !z") == [4]
+    assert run("(x & !y) | (w & !x)") == [2, 4, 5]
+    assert run("!!x & !z") == [1, 5]
+
+
 def test_pack_sequences_invariants(spark):
     from sec_dl_spark.operators.grouped import pack_sequences
 

@@ -21,6 +21,35 @@ def specs():
     return load_all()
 
 
+@pytest.fixture(scope="module")
+def fts_index_dir(spark, tmp_path_factory):
+    """The documents fixture's index, persisted with 16 hash buckets and the
+    stats sidecar."""
+    from sec_dl_spark.operators.fts import build_inverted_index, write_index
+    from sec_dl_spark.sources.fixtures import load_table
+
+    path = str(tmp_path_factory.mktemp("fts") / "index")
+    write_index(build_inverted_index(load_table(spark, SF, "documents")), path, buckets=16)
+    return path
+
+
+def fts_search_shapes():
+    """Every search function of operators.fts, as (postings, stats) → frame."""
+    from sec_dl_spark.operators import fts
+
+    ranked = ["spark", "sort", "vector"]
+    return {
+        "all": lambda p, s: fts.search_all(p, ["spark", "join"]),
+        "any": lambda p, s: fts.search_any(p, ["vector", "stream"]),
+        "phrase": lambda p, s: fts.search_phrase(p, ["fast", "sort"]),
+        "query": lambda p, s: fts.search_query(p, "spark & (join | vector) & !window"),
+        "ranked": lambda p, s: fts.search_ranked(p, ranked, k=10, stats=s),
+        "bm25": lambda p, s: fts.search_bm25(p, ranked, k=10, stats=s),
+        "and_not": lambda p, s: fts.search_and_not(p, ["spark", "join"], ["window"]),
+        "proximity": lambda p, s: fts.search_proximity_ranked(p, ["spark", "join"], k=10, stats=s),
+    }
+
+
 def test_q1_filter_and_pruning_reach_scan(spark, specs):
     plan = physical_plan(specs["q1_pricing_summary"].spark_fn(spark, SF))
     # the shipdate predicate must be pushed into the parquet scan...
@@ -43,10 +72,21 @@ def test_jaccard_is_not_a_cross_product(spark, specs):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_fts_search_uses_broadcast_semi_join(spark, specs):
+def test_fts_search_filters_terms_in_the_scan(spark, specs, fts_index_dir):
+    """The term list is an IN filter on the postings scan: no join between
+    postings and a term table (so no shuffle of the postings and no
+    broadcast job for the list)."""
+    from sec_dl_spark.operators.fts import read_index, search_all
+
     plan = physical_plan(specs["fts_search_and"].spark_fn(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan  # term list must never shuffle postings
+    assert "Join" not in plan  # no term-table join, so no SortMergeJoin either
+    scan = next(line for line in plan.splitlines() if "InMemoryTableScan" in line)
+    assert "token#" in scan and "IN (join,spark,window)" in scan
+
+    served, _ = read_index(spark, fts_index_dir)
+    plan = physical_plan(search_all(served, ["spark", "join", "window"]))
+    assert "Join" not in plan
+    assert "PushedFilters: [In(token, [join,spark,window])" in plan
 
 
 def test_text_stats_scan_prunes_to_needed_columns(spark, specs):
@@ -142,28 +182,98 @@ def test_filings_layout_partition_pruning(spark, tmp_path):
     assert "(year#" not in plan.split("PushedFilters")[-1].split("ReadSchema")[0]
 
 
-def test_fts_persisted_index_serving(spark, tmp_path):
+def test_fts_persisted_index_serving(spark, fts_index_dir):
     """The build-once/query-many FTS serving path: write_index persists
     postings partitioned by token hash-bucket; a term search against the
-    persisted index prunes to the term's bucket directories (GIN-index
-    analog, SURVEY §2 K7/F11)."""
-    from sec_dl_spark.operators.fts import build_inverted_index, search_all, write_index
+    index opened with read_index prunes to the terms' bucket directories
+    (GIN-index analog, SURVEY §2 K7/F11). A frame read with plain
+    spark.read.parquet carries no bucket count, so it is served unpruned
+    and still returns the full answer."""
+    from sec_dl_spark.functions.analysis import hash_bucket
+    from sec_dl_spark.operators.fts import build_inverted_index, read_index, search_all
     from sec_dl_spark.sources.fixtures import load_table
 
     docs = load_table(spark, SF, "documents")
-    idx_path = str(tmp_path / "fts_index")
-    write_index(build_inverted_index(docs), idx_path, buckets=16)
+    terms = ["spark", "join"]
+    live = {r["doc_id"] for r in search_all(build_inverted_index(docs), terms).collect()}
+    assert len(live) > 0
 
-    persisted = spark.read.parquet(idx_path)
-    # in-memory and persisted search agree
-    live = {r["doc_id"] for r in search_all(build_inverted_index(docs), ["spark", "join"]).collect()}
-    served = {r["doc_id"] for r in search_all(persisted, ["spark", "join"]).collect()}
-    assert served == live and len(served) > 0
+    served, _ = read_index(spark, fts_index_dir)
+    pruned = search_all(served, terms)
+    assert {r["doc_id"] for r in pruned.collect()} == live
+    buckets = sorted(
+        str(v) for v in spark.range(1).select(*[hash_bucket(F.lit(t), 16) for t in terms]).first()
+    )
+    part = physical_plan(pruned).split("PartitionFilters: [")[1].split("]")[0]
+    assert "token_bucket" in part and all(b in part for b in buckets)
 
-    # bucket pruning: filtering by a term's bucket shows PartitionFilters
-    bucketed = persisted.where(F.col("token_bucket") == F.abs(F.hash(F.lit("spark"))) % 16)
-    plan = physical_plan(bucketed)
-    assert "PartitionFilters" in plan and "token_bucket" in plan
+    persisted = spark.read.parquet(fts_index_dir)
+    unpruned = search_all(persisted, terms)
+    assert {r["doc_id"] for r in unpruned.collect()} == live
+    assert "PartitionFilters: []" in physical_plan(unpruned)
+
+
+def test_fts_pruned_and_unpruned_searches_agree(spark, fts_index_dir):
+    """Bucket pruning changes what is read, never the answer: every search
+    shape returns the same rows (ranked scores byte-equal) on the pruned
+    read_index frame and on the unpruned spark.read.parquet frame, and
+    every postings scan of the pruned plan carries a token_bucket
+    partition filter — 'a & !b' included, which anti-joins instead of
+    scanning the corpus doc set."""
+    from sec_dl_spark.operators.fts import read_index
+
+    served, stats = read_index(spark, fts_index_dir)
+    persisted = spark.read.parquet(fts_index_dir)
+    for name, shape in fts_search_shapes().items():
+        pruned = shape(served, stats)
+        got = sorted(tuple(map(repr, r)) for r in pruned.collect())
+        want = sorted(tuple(map(repr, r)) for r in shape(persisted, stats).collect())
+        assert got == want and len(got) > 0, name
+        parts = [
+            line.split("PartitionFilters: [")[1].split("]")[0]
+            for line in physical_plan(pruned).splitlines()
+            if "FileScan parquet" in line and fts_index_dir + "]" in line
+        ]
+        assert parts and all("token_bucket" in part for part in parts), name
+
+
+def test_fts_search_plans_hold_no_local_python_rows(spark, fts_index_dir):
+    """A Python-list createDataFrame leaves ExistingRDD in a plan and runs
+    Python-worker tasks plus a broadcast job per search; no search shape
+    may build one."""
+    from sec_dl_spark.operators.fts import read_index
+
+    served, stats = read_index(spark, fts_index_dir)
+    for name, shape in fts_search_shapes().items():
+        assert "ExistingRDD" not in physical_plan(shape(served, stats)), name
+
+
+def test_fts_mixed_case_duplicate_terms_count_once(spark):
+    """Terms are matched lowercased, so 'Spark' and 'spark' are one term:
+    the AND count and the BM25 hit and df rows must not double."""
+    from sec_dl_spark.operators.fts import build_inverted_index, search_all, search_bm25
+
+    docs = spark.createDataFrame(
+        [(1, "spark join"), (2, "spark only"), (3, "join only")], "doc_id long, text string"
+    )
+    p = build_inverted_index(docs)
+    assert [r["doc_id"] for r in search_all(p, ["Spark", "spark", "join"]).collect()] == [1]
+    dup = [tuple(r) for r in search_bm25(p, ["Spark", "spark"]).collect()]
+    one = [tuple(r) for r in search_bm25(p, ["spark"]).collect()]
+    assert dup == one and len(one) == 2
+
+
+def test_write_index_serves_a_token_hashing_to_int_min(spark, tmp_path):
+    """hash('actgv1ns') is Int.MinValue, where ANSI abs() overflows: the
+    bucket helper must place it, and a pruned search must find it."""
+    from sec_dl_spark.operators.fts import build_inverted_index, read_index, search_all, write_index
+
+    assert spark.range(1).select(F.hash(F.lit("actgv1ns"))).first()[0] == -(2**31)
+    docs = spark.createDataFrame([(1, "actgv1ns filing")], "doc_id long, text string")
+    path = str(tmp_path / "fts_min")
+    write_index(build_inverted_index(docs), path, buckets=16)
+    served, _ = read_index(spark, path)
+    assert [r["doc_id"] for r in search_all(served, ["actgv1ns"]).collect()] == [1]
 
 
 def test_fts_stats_sidecar_roundtrip(spark, tmp_path):

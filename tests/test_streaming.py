@@ -2607,3 +2607,21 @@ def test_sink_restart_replays_last_batch_without_double_count(
     assert case.merged() == case.recompute(full)
     tokens = [d for d in os.listdir(case.run_dir) if "run=" in d]
     assert len(tokens) == 1, tokens
+
+
+def test_incremental_index_commits_a_token_hashing_to_int_min(spark, tmp_path_factory):
+    """hash('actgv1ns') is Int.MinValue, where ANSI abs() overflows: a
+    micro-batch holding that token must commit and be searchable."""
+    from sec_dl_spark.operators.fts import search_all
+    from sec_dl_spark.streaming.index import incremental_index_sink, read_incremental_index
+
+    src = str(tmp_path_factory.mktemp("min_src"))
+    idx = str(tmp_path_factory.mktemp("min_index") / "postings")
+    ckpt = str(tmp_path_factory.mktemp("min_ckpt"))
+    schema = "doc_id long, text string"
+    spark.createDataFrame([(7, "actgv1ns filing")], schema).write.mode("overwrite").parquet(src)
+    q = incremental_index_sink(spark.readStream.schema(schema).parquet(src), idx, ckpt, buckets=8)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    postings, _ = read_incremental_index(spark, idx)
+    assert [r["doc_id"] for r in search_all(postings, ["actgv1ns"]).collect()] == [7]
