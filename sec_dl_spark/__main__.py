@@ -142,11 +142,10 @@ def main() -> None:
 
     meta = spark.read.parquet(f"{args.base}/filings_meta")
     text = spark.read.parquet(f"{args.base}/filings_text")
-    pending = pending_filings(meta, text).join(
-        meta.select("filing_id", "year", "qtr"), "filing_id"
-    )
+    # scrape_pending pins its output: the merge below and the --debug dump
+    # read the same rows from one fetch per filing
     fetched = scrape_pending(
-        pending, fetcher=http_fetcher if args.http else fake_fetcher,
+        pending_filings(meta, text), fetcher=http_fetcher if args.http else fake_fetcher,
         partitions=args.scrape_partitions,
     ).join(meta.select("filing_id", "year", "qtr"), "filing_id")
     merged = apply_text_updates(text, fetched)

@@ -31,11 +31,14 @@ def build_filings(
     """idx records ⋉ company universe ⋉ kept filing types → filings rows.
 
     Both dims broadcast (4,116 companies / 278 types — trivially small even
-    at the full EDGAR universe); the fact side never shuffles. filing_id =
-    xxhash64(path): EDGAR paths are unique per filing, so the key is stable
-    and reproducible (the reference's autoincrement PK is neither)."""
-    ciks = F.broadcast(companies.where(F.col("cik").isNotNull()).select("cik").distinct())
-    kept = F.broadcast(filing_types.where(F.col("keep") == 1).select("type").distinct())
+    at the full EDGAR universe); the fact side never shuffles. The dims
+    need no ``distinct``: a left-semi join keeps each left row at most once
+    however many right rows match, so a de-duplicated dim would only cost a
+    shuffle job per scan. filing_id = xxhash64(path): EDGAR paths are
+    unique per filing, so the key is stable and reproducible (the
+    reference's autoincrement PK is neither)."""
+    ciks = F.broadcast(companies.where(F.col("cik").isNotNull()).select("cik"))
+    kept = F.broadcast(filing_types.where(F.col("keep") == 1).select("type"))
     return (
         idx_records.join(ciks, "cik", "left_semi")
         .join(kept, "type", "left_semi")
@@ -57,19 +60,30 @@ def write_filings(filings: DataFrame, base_path: str, mode: str = "append") -> N
     """Two-table layout: filings_meta (narrow, partitioned by year/qtr) and
     filings_text (filing_id, text, tokens; partitioned the same). Metadata
     scans never touch text; text fetches prune by partition then join on
-    filing_id."""
-    meta = filings.select(
-        "filing_id", "cik", "business_name", "type", "path", "date", "year", "qtr"
-    )
-    text = filings.select(
-        "filing_id",
-        "text",
-        F.when(F.col("text").isNotNull(), tokenize(F.col("text"))).alias("tokens"),
-        "year",
-        "qtr",
-    )
-    meta.write.mode(mode).partitionBy("year", "qtr").parquet(f"{base_path}/filings_meta")
-    text.write.mode(mode).partitionBy("year", "qtr").parquet(f"{base_path}/filings_text")
+    filing_id.
+
+    ``filings`` is evaluated once for both writes: it is persisted for the
+    duration of the call and unpersisted on the way out. Persist, not
+    ``pin``: the first write fills the cache as it goes, so the pair costs
+    no extra materialization job, and the upstream (an idx parse and two
+    semi-joins) is deterministic, so a block lost to an executor is safely
+    recomputed rather than failing the load."""
+    filings = filings.persist()
+    try:
+        meta = filings.select(
+            "filing_id", "cik", "business_name", "type", "path", "date", "year", "qtr"
+        )
+        text = filings.select(
+            "filing_id",
+            "text",
+            F.when(F.col("text").isNotNull(), tokenize(F.col("text"))).alias("tokens"),
+            "year",
+            "qtr",
+        )
+        meta.write.mode(mode).partitionBy("year", "qtr").parquet(f"{base_path}/filings_meta")
+        text.write.mode(mode).partitionBy("year", "qtr").parquet(f"{base_path}/filings_text")
+    finally:
+        filings.unpersist()
 
 
 def pending_filings(meta: DataFrame, text: DataFrame) -> DataFrame:
@@ -83,7 +97,12 @@ def apply_text_updates(text: DataFrame, updates: DataFrame) -> DataFrame:
     """Batch replacement for the reference's keyed UPDATE (K4,
     scrape_all_filings.py:169-171): merge fetched text into the text table,
     recomputing the derived token column — the trigger (K9) as a pure
-    function of text. Updates win over existing rows."""
+    function of text. Updates win over existing rows.
+
+    ``updates`` is read twice, by the anti-join and by the union, so it
+    must be materialized (``scrape_pending`` returns pinned rows): a lazy
+    fetch would run once per read, and a transient failure could drop a
+    filing from one read and not the other, leaving two rows for it."""
     upd = updates.select(
         "filing_id",
         "text",

@@ -28,6 +28,7 @@ from sec_dl_spark.functions.text import (
     normalize_nfkd,
     strip_embedded_files,
 )
+from sec_dl_spark.session import pin
 
 SEC_ARCHIVES_BASE = "https://www.sec.gov/Archives/"
 
@@ -111,8 +112,20 @@ def scrape_pending(
     pending: DataFrame, fetcher=fake_fetcher, partitions: int | None = None
 ) -> DataFrame:
     """Full scrape wave: partition → fetch → parse. Returns
-    (filing_id, text) for successfully fetched filings."""
+    (filing_id, text) for successfully fetched filings.
+
+    The parsed output is pinned (``sec_dl_spark.session.pin``): fetching is
+    I/O with side effects, so every consumer — the anti-join and the union
+    of ``apply_text_updates``, a join to the metadata table, a debug dump —
+    must read the same rows from ONE fetch per filing. A lazy result would
+    re-fetch per consumer, doubling the HTTP traffic, and a transient
+    failure could drop a filing from one read and keep it in another.
+
+    EAGER: the fetch and parse run at call time, and the pinned blocks are
+    executor-local by default — not recomputable under executor loss /
+    preemption. Preemptible fleets: set
+    ``spark.sec_dl_spark.reliableCheckpoint=true`` + ``setCheckpointDir``."""
     if partitions:
         pending = pending.repartition(partitions)
     fetched = fetch_pending(pending, fetcher=fetcher).where(F.col("raw").isNotNull())
-    return parse_fetched(fetched)
+    return pin(parse_fetched(fetched))

@@ -1166,6 +1166,15 @@ def auto_bits_per_table(
     return min(max_bits, int(math.floor(math.log2(n_rows / target_rows_per_bucket))))
 
 
+def _write_meta_json(spark, meta: str, path: str) -> None:
+    """Write an index's JSON sidecar as one ``{"meta": ...}`` line. The row
+    is a literal over a one-partition range, so the write is a JVM-only
+    job; createDataFrame from a Python list would start Python workers."""
+    spark.range(1, numPartitions=1).select(F.lit(meta).alias("meta")).write.mode(
+        "overwrite"
+    ).json(path)
+
+
 def write_ann_index(
     corpus: DataFrame,
     path: str,
@@ -1239,9 +1248,7 @@ def write_ann_index(
     meta = _json.dumps(
         {"num_tables": num_tables, "bits_per_table": bits_per_table, "seed": seed}
     )
-    corpus.sparkSession.createDataFrame([(meta,)], "meta string").coalesce(
-        1
-    ).write.mode("overwrite").json(f"{path}/meta")
+    _write_meta_json(corpus.sparkSession, meta, f"{path}/meta")
 
 
 _ANN_META_CACHE: dict = {}
@@ -1922,10 +1929,7 @@ def write_ivfpq_index(index: IvfPqIndex, path: str) -> None:
     meta = _json.dumps(
         {"centroids": index.centroids, "codebooks": index.codebooks, "id_col": index.id_col}
     )
-    spark = index.encoded.sparkSession
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/meta")
+    _write_meta_json(index.encoded.sparkSession, meta, f"{path}/meta")
 
 
 def read_ivfpq_index(spark, path: str) -> IvfPqIndex:

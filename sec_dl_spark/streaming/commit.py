@@ -191,7 +191,13 @@ def check_source_marker(
                 "output."
             )
     (
-        spark.createDataFrame([(row["n"], row["fp"])], "n long, fp long")
+        # literals over a JVM range: createDataFrame from a Python list
+        # would run a Python-worker job on every batch of every sink
+        spark.range(1, numPartitions=1)
+        .select(
+            F.lit(row["n"]).cast("long").alias("n"),
+            F.lit(row["fp"]).cast("long").alias("fp"),
+        )
         .withColumn("ingest_run", F.lit(run))
         .withColumn("ingest_batch", F.lit(batch_id))
         .write.mode("overwrite")

@@ -68,6 +68,11 @@ def test_build_filings_universe_and_type_filters(idx_records, companies, filing_
     assert {r["qtr"] for r in rows} == {1}
     assert len({r["filing_id"] for r in rows}) == 2  # stable distinct hashes
     assert all(r["text"] is None for r in rows)
+    # duplicate dim rows never duplicate a filing: the joins are semi-joins
+    doubled = build_filings(
+        idx_records, companies.unionByName(companies), filing_types.unionByName(filing_types)
+    )
+    assert doubled.count() == 2
 
 
 def test_filings_roundtrip_scrape_and_update(spark, idx_records, companies, filing_types, tmp_path):
@@ -98,6 +103,105 @@ def test_filings_roundtrip_scrape_and_update(spark, idx_records, companies, fili
 
     prog = scrape_progress(meta, new_text).first()
     assert prog["n_total"] == 2 and prog["n_done"] == 2 and prog["pct_done"] == 100.0
+
+
+def _pending_wave(spark, base, n=20):
+    """A written filings layout with ``n`` unscraped filings: (meta, text)."""
+    import datetime as dt
+
+    rows = [
+        (i, 100, "ALPHA CORP", "10-K", f"edgar/data/100/w-{i:03d}.txt", dt.date(2023, 2, 1), None, 2023, 1)
+        for i in range(n)
+    ]
+    filings = spark.createDataFrame(
+        rows,
+        "filing_id long, cik int, business_name string, type string, path string,"
+        "date date, text string, year int, qtr int",
+    )
+    write_filings(filings, base, mode="overwrite")
+    return spark.read.parquet(f"{base}/filings_meta"), spark.read.parquet(f"{base}/filings_text")
+
+
+def _calls(log):
+    return log.read_text().splitlines() if log.exists() else []
+
+
+def test_scrape_fetches_each_pending_filing_once(spark, tmp_path):
+    """One fetch per pending filing per wave, however many consumers read
+    the scrape: the anti-join and the union of apply_text_updates both
+    read the fetched rows, and a lazy fetch would run once per read. The
+    fetcher runs in Python workers, so calls are logged to a file."""
+    meta, text = _pending_wave(spark, str(tmp_path / "warehouse"))
+    log = tmp_path / "fetch.log"
+
+    def counting_fetcher(path):
+        with open(log, "a") as f:
+            f.write(path + "\n")
+        return fake_fetcher(path)
+
+    updates = scrape_pending(pending_filings(meta, text), fetcher=counting_fetcher, partitions=4).join(
+        meta.select("filing_id", "year", "qtr"), "filing_id"
+    )
+    rows = apply_text_updates(text, updates).collect()
+    assert len(rows) == 20 and all(r["text"] is not None for r in rows)
+    calls = _calls(log)
+    assert len(calls) == 20 and len(set(calls)) == 20
+
+
+def test_transient_fetch_failure_leaves_one_row_per_filing(spark, tmp_path):
+    """A fetcher that fails each path's first call and succeeds after: the
+    failed filings stay pending with exactly one (NULL-text) row each. A
+    re-fetch per consumer would see the failure in one read and the
+    success in the other, and emit both the old row and the new one."""
+    meta, text = _pending_wave(spark, str(tmp_path / "warehouse"))
+    seen = tmp_path / "seen"
+    seen.mkdir()
+
+    def flaky_fetcher(path):
+        marker = seen / path.replace("/", "_")
+        if not marker.exists():
+            marker.touch()
+            raise ConnectionError(f"transient failure fetching {path}")
+        return fake_fetcher(path)
+
+    updates = scrape_pending(pending_filings(meta, text), fetcher=flaky_fetcher, partitions=4).join(
+        meta.select("filing_id", "year", "qtr"), "filing_id"
+    )
+    new_text = apply_text_updates(text, updates)
+    rows = new_text.collect()
+    assert len(rows) == 20
+    assert len({r["filing_id"] for r in rows}) == 20
+    assert pending_filings(meta, new_text).count() == 20
+
+
+def test_write_filings_evaluates_its_input_once(spark, tmp_path):
+    """Both tables come from one evaluation of ``filings``: the metadata
+    and the text write must not each re-run the upstream (the idx parse
+    and the dim semi-joins). A pass-through mapInPandas logs each
+    partition it is run over."""
+    import datetime as dt
+
+    log = tmp_path / "eval.log"
+    rows = [
+        (i, 100, "ALPHA CORP", "10-K", f"p{i}", dt.date(2023, 2, 1), None, 2023, 1)
+        for i in range(6)
+    ]
+    filings = spark.createDataFrame(
+        rows,
+        "filing_id long, cik int, business_name string, type string, path string,"
+        "date date, text string, year int, qtr int",
+    ).coalesce(1)
+
+    def logged(batches):
+        with open(log, "a") as f:
+            f.write("run\n")
+        yield from batches
+
+    base = str(tmp_path / "warehouse")
+    write_filings(filings.mapInPandas(logged, schema=filings.schema), base, mode="overwrite")
+    assert len(_calls(log)) == 1
+    assert spark.read.parquet(f"{base}/filings_meta").count() == 6
+    assert spark.read.parquet(f"{base}/filings_text").count() == 6
 
 
 def test_idx_url_grid(spark):

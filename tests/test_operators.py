@@ -507,12 +507,12 @@ def test_ann_rebuild_deletes_meta_first(spark, tmp_path):
     assert sim.read_ann_index_meta(spark, path)  # healthy build
 
     # simulate a crash AFTER the index overwrite, BEFORE the sidecar
-    # rewrite: the sidecar is the build's only createDataFrame call
+    # rewrite: the sidecar write is the build's last step
     class Boom(RuntimeError):
         pass
 
     with mock.patch.object(
-        emb.sparkSession, "createDataFrame", side_effect=Boom("crash before sidecar")
+        sim, "_write_meta_json", side_effect=Boom("crash before sidecar")
     ):
         with _pytest.raises(Boom):
             sim.write_ann_index(emb, path)
