@@ -10,9 +10,12 @@ surveyed in SURVEY.md), re-expressed Spark-first:
 - the EDGAR ingestion dataflow (idx parse, semi-join universe filter, text
   cleaning) as declarative transforms (reference sec_dl/utils/load_filings_idx.py,
   sec_dl/utils/scrape_all_filings.py);
-- LLM-data-pipeline extensions: dedup (exact / MinHash-LSH / SimHash /
-  n-gram Jaccard), vector similarity search, text analysis, multimodal
-  binary-column plumbing — designed for 100 TB scale.
+- LLM-data-pipeline extensions: dedup (MinHash-LSH / SimHash / n-gram
+  Jaccard / winnowing in operators/dedup.py; the cross-batch exact
+  fingerprint gate in streaming/dedup.py), vector similarity search, text
+  analysis, multimodal binary-column plumbing — designed for 100 TB scale;
+- streaming sinks (incremental FTS index, exact dedup gate, HLL partials)
+  over checkpointed foreachBatch micro-batches with idempotent commits.
 """
 
 __version__ = "0.1.0"

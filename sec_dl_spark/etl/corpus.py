@@ -264,8 +264,8 @@ def append_corpus(
     the registry is a NO-OP (returns skipped=True) — the single-writer
     batch twin of the streaming sink's (run, batch) replay guard. For
     concurrent writers or crash-exactly-between-appends guarantees, use
-    incremental_corpus_sink's atomic/OCC mode instead; plain appends
-    cannot be transactional across three directories.
+    streaming/dedup.py:incremental_dedup_sink's atomic/OCC mode instead;
+    plain appends cannot be transactional across three directories.
 
     Near-dedup note: the delta gate is EXACT dedup (the registry holds
     fingerprints). Cross-batch near-dedup composes the same way the

@@ -128,12 +128,6 @@ def shingles_of(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(F.regexp_extract_all(F.array_join(toks, " "), F.lit(pat), 1))
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Text-column convenience wrapper over ``shingles_of`` — only for
-    single-document/test use; operators tokenize into a column first."""
-    return shingles_of(tokenize(col), n)
-
-
 def contamination_ngrams(
     eval_docs, train_docs, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ):

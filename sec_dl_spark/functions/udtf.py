@@ -7,12 +7,11 @@ zero-or-more rows per input row, invoked via ``LATERAL`` in SQL. The UDTF
 path is the escape hatch for ragged, stateful-per-row expansion a
 ``transform``/``posexplode`` expression can't write.
 
-The shipped example is deliberately oracle-checkable: sentence splitting by
-a fixed RE2-compatible rule (DuckDB's regex engine has no lookbehind, so
-the rule marks boundaries with a replacement — ``([.!?]) +`` → punctuation
-plus a control-char delimiter — instead of a zero-width split). The Python
-UDTF and the SQL oracle implement the same rule, so the Arrow/serialization
-plumbing of the UDTF path itself is what the oracle verifies.
+The shipped example, ``token_spans_udtf``, is deliberately
+oracle-checkable: the catalog query ``doc_token_spans_udtf`` runs it
+through ``LATERAL`` and an SQL oracle recomputes the same token offsets,
+so the Arrow/serialization plumbing of the UDTF path itself is what the
+oracle verifies.
 
 Row-at-a-time caution still applies at 100 TB: a UDTF invokes Python per
 input row (Arrow-optimized batching moves data efficiently but ``eval``
@@ -22,35 +21,6 @@ expressible; use UDTFs when it genuinely is not.
 
 from __future__ import annotations
 
-# Delimiter injected at sentence boundaries before splitting. BEL never
-# occurs in the text fixtures (and is a safe in-band marker for prose).
-SENT_DELIM = "\x07"
-SENT_BOUNDARY = r"([.!?]) +"
-
-
-def sentence_udtf():
-    """Return the ``@udtf`` class splitting text into numbered sentences.
-
-    Built lazily so importing this module never needs an active Spark
-    session (the decorator parses the DDL return type eagerly)."""
-    import re
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="sent_idx: bigint, sentence: string")
-    class SplitSentences:
-        def eval(self, text: str):
-            if text is None:
-                return
-            marked = re.sub(SENT_BOUNDARY, "\\1" + SENT_DELIM, text)
-            idx = 0
-            for piece in marked.split(SENT_DELIM):
-                if piece != "":
-                    yield idx, piece
-                    idx += 1
-
-    return SplitSentences
-
 
 def token_spans_udtf():
     """Return the ``@udtf`` class emitting (tok_idx, token, start_char,
@@ -59,7 +29,10 @@ def token_spans_udtf():
     positional state (the running character cursor), i.e. exactly the shape
     the UDTF API exists for. Token rule matches functions/text.py:tokenize
     ([a-z0-9]+ runs over the lowercased text); offsets index the lowercased
-    text, end exclusive. Built lazily like :func:`sentence_udtf`."""
+    text, end exclusive.
+
+    Built lazily so importing this module never needs an active Spark
+    session (the decorator parses the DDL return type eagerly)."""
     import re
 
     from pyspark.sql.functions import udtf

@@ -200,8 +200,8 @@ def fold_changes(
     n_col: str = "n",
 ) -> DataFrame:
     """The signed key-grain fold under :func:`agg_delta`, exposed for
-    incremental sinks (streaming/ivm.py publishes one folded partial
-    per micro-batch): inserts contribute (+1, +value), deletes
+    incremental maintenance (one folded partial per micro-batch, merged
+    on read): inserts contribute (+1, +value), deletes
     (-1, -value), summed to key grain. Partials are a plain sum monoid
     — any grouping of the change stream folds to the same view, which
     is what makes the merge-on-read maintenance batching-invariant."""

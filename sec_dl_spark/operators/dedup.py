@@ -1,5 +1,6 @@
 """Deduplication operators for the training-data pipeline (SURVEY.md §2.11):
-exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
+MinHash+LSH, SimHash, n-gram Jaccard, winnowing (exact fingerprint dedup
+lives in streaming/dedup.py).
 
 Scale notes (100 TB):
 - exact dedup is one hash-groupBy on a short fingerprint — never shuffle the
@@ -16,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sec_dl_spark.functions.analysis import fingerprint, shingles_of
+from sec_dl_spark.functions.analysis import shingles_of
 from sec_dl_spark.functions.text import tokenize
 from sec_dl_spark.session import pin, spread
 
@@ -39,14 +40,6 @@ def _shingled(
         .select(F.col(id_col).alias("_id"), blk.alias("_blk"), tokenize(F.col(text_col)).alias("_tk"))
         .select("_id", "_blk", shingles_of(F.col("_tk"), n).alias("_sh"))
     )
-
-
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the lowest-id representative per canonical-content fingerprint.
-    Equivalent SQL: min(id) GROUP BY fingerprint, semi-joined back."""
-    fp = docs.withColumn("_fp", fingerprint(F.col(text_col)))
-    w = Window.partitionBy("_fp").orderBy(id_col)
-    return fp.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_fp", "_rn")
 
 
 def jaccard_pairs(

@@ -304,18 +304,3 @@ def hilbert_sql_2d(xexpr: str, yexpr: str, bits: int = 8) -> str:
             f"CAST({d2} AS BIGINT) AS hd FROM ({inner})"
         )
     return inner
-
-
-def hilbert_layout(
-    df: DataFrame, xcol: str, ycol: str, num_files: int, bits: int = 8
-) -> DataFrame:
-    """Re-cluster ``df`` along the 2-D Hilbert curve: compute the key,
-    range repartition on it, sort within partitions — the
-    :func:`zorder_layout` contract (one shuffle total, AQE-sampled range
-    boundaries) with the tighter-bounding-rectangle curve."""
-    keyed = with_hilbert_key(df, xcol, ycol, out="__hkey", bits=bits)
-    return (
-        keyed.repartitionByRange(num_files, "__hkey")
-        .sortWithinPartitions("__hkey")
-        .drop("__hkey")
-    )

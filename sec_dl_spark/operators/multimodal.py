@@ -2,14 +2,15 @@
 
 Blobs are opaque BinaryType columns with typed metadata structs
 (schemas.MEDIA); Spark's binaryFile source supplies the raw bytes. Decode /
-feature-extract / resize / frame-sample run as Arrow-batched pandas
+feature-extract / keyframe / chunk / hash steps run as Arrow-batched pandas
 iterators over mapInPandas — the Spark-side plumbing (schema, partitioning,
 UDF signature, batch shape) is real and tested; the actual codec work is
 stubbed behind import gates because image/audio libraries are not in this
 container: with_real_decoders=False uses a deterministic fake (stable
 feature vectors from the bytes), True raises NotImplementedError at the
-decode step only. Exception: PCM WAV needs no external codec — decode_audio
-is a REAL stdlib-``wave`` decode path, tested round-trip.
+decode step only. Exceptions: binary PPM/BMP stills and YUV4MPEG2 video
+need no external codec, so ``perceptual_hash`` and ``select_keyframes``
+parse them for real with the stdlib.
 """
 
 from __future__ import annotations
@@ -117,10 +118,6 @@ def _parse_ppm(b: bytes):
     return w, h, pix
 
 
-def _encode_ppm(w: int, h: int, rgb: bytes) -> bytes:
-    return b"P6\n%d %d\n255\n" % (w, h) + rgb
-
-
 def _parse_bmp(b: bytes):
     """Parse uncompressed 24-bpp BMP: returns (width, height, RGB bytes
     row-major top-down). Handles BGR order, 4-byte row padding, and the
@@ -150,132 +147,6 @@ def _parse_bmp(b: bytes):
             )
         )
     return w, h, b"".join(rows)
-
-
-IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_rgb", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def decode_image(media: DataFrame) -> DataFrame:
-    """REAL image decode for stdlib-parseable raster formats — P6 PPM and
-    uncompressed 24-bpp BMP need no codec library, so like decode_audio
-    this is not a gate: (media_id, kind, content) → (media_id, kind,
-    width, height, mean_rgb). Compressed formats (png/jpeg) still need
-    PIL and raise NotImplementedError at decode. Same Arrow-batched
-    mapInPandas shape as every media stage."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {k.name: [] for k in IMAGE_SCHEMA.fields}
-            for mid, kind, content in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
-                if content is None:
-                    continue
-                if kind == "ppm":
-                    w, h, rgb = _parse_ppm(bytes(content))
-                elif kind == "bmp":
-                    w, h, rgb = _parse_bmp(bytes(content))
-                else:
-                    raise NotImplementedError(
-                        f"decode_image handles PPM/BMP via stdlib; kind "
-                        f"{kind!r} needs real image codecs (PIL), not in "
-                        "this environment"
-                    )
-                px = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3)
-                out["media_id"].append(mid)
-                out["kind"].append(kind)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_rgb"].append(px.mean(axis=0).astype("float32"))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=IMAGE_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame, width: int = 224, height: int = 224, with_real_decoders: bool = False
-) -> DataFrame:
-    """Image resize stage: (media_id, kind, content) → same + target dims.
-
-    Production shape: decode → resample → re-encode inside the Arrow
-    batch loop. ``with_real_decoders=True`` runs a REAL nearest-neighbor
-    resample for P6 PPM payloads (stdlib parse → numpy index-gather →
-    re-encode, no codec library needed) and raises for compressed
-    formats that need PIL. The default fake path truncates/pads the
-    payload to a deterministic size so batch shape, schema and
-    partitioning behavior stay testable with arbitrary bytes.
-    """
-    target_len = width * height // 64  # deterministic fake payload size
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if with_real_decoders:
-                contents = []
-                for kind, content in zip(pdf["kind"], pdf["content"]):
-                    if content is None:
-                        contents.append(None)
-                        continue
-                    if kind != "ppm":
-                        raise NotImplementedError(
-                            f"real resize handles P6 PPM via stdlib; kind "
-                            f"{kind!r} needs real image codecs (PIL), not "
-                            "in this environment"
-                        )
-                    w0, h0, rgb = _parse_ppm(bytes(content))
-                    px = np.frombuffer(rgb, dtype=np.uint8).reshape(h0, w0, 3)
-                    ys = (np.arange(height) * h0) // height
-                    xs = (np.arange(width) * w0) // width
-                    resized = px[ys][:, xs]  # nearest-neighbor gather
-                    contents.append(_encode_ppm(width, height, resized.tobytes()))
-                content = pd.Series(contents)
-            else:
-                content = pdf["content"].map(
-                    lambda b: None
-                    if b is None
-                    else (b * (target_len // max(len(b), 1) + 1))[:target_len]
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "content": content,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("frame_ms", T.LongType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
 
 
 def _parse_y4m(b: bytes):
@@ -311,55 +182,6 @@ def _parse_y4m(b: bytes):
         frames.append(b[start : start + y_len])
         i = start + frame_len
     return w, h, num / den, frames
-
-
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, with_real_decoders: bool = False
-) -> DataFrame:
-    """Video frame sampling: one row per sampled frame (UDTF-style row
-    expansion inside mapInPandas — output batches need not align 1:1 with
-    input rows, which is exactly why this is mapInPandas and not a scalar
-    UDF).
-
-    ``with_real_decoders=True`` REALLY demuxes YUV4MPEG2 (kind 'y4m' —
-    text header + raw 4:2:0 planes, stdlib-parseable): the emitted frame
-    is the nearest-in-time Y plane for each ``every_ms`` tick, one frame
-    per tick within the clip. Compressed containers (mp4/mkv) still need
-    av/ffmpeg and raise. The default fake path uses duration = n_bytes
-    in ms and 8-byte slices so the plumbing stays testable with
-    arbitrary bytes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"media_id": [], "frame_idx": [], "frame_ms": [], "frame": []}
-            for mid, kind, content in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
-                if content is None:
-                    continue
-                if with_real_decoders:
-                    if kind != "y4m":
-                        raise NotImplementedError(
-                            f"real frame sampling handles YUV4MPEG2 via "
-                            f"stdlib; kind {kind!r} needs real video "
-                            "demuxers (av/ffmpeg), not in this environment"
-                        )
-                    w, h, fps, frames = _parse_y4m(bytes(content))
-                    duration_ms = int(len(frames) * 1000 / fps)
-                    for idx, ms in enumerate(range(0, duration_ms, every_ms)):
-                        src = min(int(ms * fps / 1000 + 0.5), len(frames) - 1)
-                        out["media_id"].append(mid)
-                        out["frame_idx"].append(idx)
-                        out["frame_ms"].append(ms)
-                        out["frame"].append(bytes(frames[src]))
-                    continue
-                duration_ms = len(content)
-                for idx, ms in enumerate(range(0, duration_ms, every_ms)):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(idx)
-                    out["frame_ms"].append(ms)
-                    out["frame"].append(bytes(content[ms : ms + 8]))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
 CHUNKS_SCHEMA = T.StructType(
@@ -403,80 +225,6 @@ def chunk_audio(
     return media.mapInPandas(run, schema=CHUNKS_SCHEMA)
 
 
-AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("samples", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def decode_audio(media: DataFrame, downmix: bool = True) -> DataFrame:
-    """REAL audio decode for PCM WAV payloads — stdlib ``wave`` needs no
-    external codec, so unlike the other media stages this path is not a
-    gate: (media_id, kind, content) → (media_id, sample_rate, n_channels,
-    n_samples, duration_ms, samples FLOAT in [-1, 1)). 8/16/32-bit PCM;
-    multi-channel input downmixes to mono by mean (``downmix=False``
-    interleaves channels as stored). Rows whose kind is not 'wav' raise
-    NotImplementedError at decode — compressed formats (mp3/flac/ogg)
-    still need librosa/soundfile, which this container lacks; route them
-    through the gated stages.
-
-    Same Arrow-batched mapInPandas shape as the gated stages, so swapping
-    a library decoder in later changes one inner function, not the plan.
-    """
-
-    def _decode_wav(content: bytes):
-        import io
-        import wave
-
-        import numpy as np
-
-        with wave.open(io.BytesIO(content), "rb") as w:
-            sr = w.getframerate()
-            nch = w.getnchannels()
-            sw = w.getsampwidth()
-            raw = w.readframes(w.getnframes())
-        try:
-            dtype = {1: np.uint8, 2: np.dtype("<i2"), 4: np.dtype("<i4")}[sw]
-        except KeyError:
-            raise NotImplementedError(f"unsupported PCM sample width {sw}")
-        x = np.frombuffer(raw, dtype=dtype).astype(np.float64)
-        # 8-bit WAV is unsigned (offset-binary); wider widths are signed
-        x = (x - 128.0) / 128.0 if sw == 1 else x / float(2 ** (8 * sw - 1))
-        if nch > 1 and downmix:
-            x = x.reshape(-1, nch).mean(axis=1)
-        return sr, nch, x
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k.name: [] for k in AUDIO_SCHEMA.fields}
-            for mid, kind, content in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
-                if content is None:
-                    continue
-                if kind != "wav":
-                    raise NotImplementedError(
-                        f"decode_audio handles PCM WAV via stdlib wave; kind "
-                        f"{kind!r} needs librosa/soundfile (not in this "
-                        "environment) — use the gated stages for fakes"
-                    )
-                sr, nch, x = _decode_wav(content)
-                frames = len(x) if (nch == 1 or downmix) else len(x) // nch
-                out["media_id"].append(mid)
-                out["sample_rate"].append(sr)
-                out["n_channels"].append(nch)
-                out["n_samples"].append(frames)
-                out["duration_ms"].append(int(frames * 1000 / sr) if sr else 0)
-                out["samples"].append(x.astype("float32"))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=AUDIO_SCHEMA)
-
-
 KEYFRAMES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -494,12 +242,12 @@ def select_keyframes(
     with_real_decoders: bool = False,
 ) -> DataFrame:
     """Scene-change keyframe selection: emit the frames where the content
-    changes, not every Nth frame (sample_frames' uniform grid) — the step
+    changes, not every Nth frame of a uniform grid — the step
     a video training pipeline runs before captioning/encoding so compute
     goes to distinct scenes.
 
     Frame signal = mean luma. ``with_real_decoders=True`` REALLY demuxes
-    YUV4MPEG2 (same stdlib parse as sample_frames) and uses each frame's
+    YUV4MPEG2 (stdlib parse, ``_parse_y4m``) and uses each frame's
     actual Y-plane mean; compressed containers raise. The fake path uses
     the mean byte value of a ``frame_ms``-sized window so the plumbing
     stays testable with arbitrary bytes. Frame 0 always emits; frame i

@@ -8,7 +8,7 @@ gate can act on (fail the batch, quarantine, alert) — the shape of
 dbt tests / Great Expectations, re-expressed as Spark aggregates.
 
 Scale design:
-- Row-level rules (not_null, in_range, in_set, matches, custom predicate)
+- Row-level rules (not_null, in_range, in_set, custom predicate)
   compile to conditional-count expressions evaluated in a SINGLE
   aggregate over one scan — adding a rule adds a column to the agg, not a
   job.
@@ -56,13 +56,6 @@ def in_set(col: str, values) -> Rule:
     c = F.col(col)
     return Rule(
         f"in_set({col})", "row", c.isNotNull() & ~c.isin(*list(values))
-    )
-
-
-def matches(col: str, pattern: str) -> Rule:
-    c = F.col(col)
-    return Rule(
-        f"matches({col})", "row", c.isNotNull() & ~c.rlike(pattern)
     )
 
 
@@ -215,28 +208,6 @@ def with_observed_metrics(df: DataFrame, name: str, metrics: dict):
     return df.observe(obs, *cols), obs
 
 
-def partition_skew_report(df: DataFrame) -> DataFrame:
-    """Physical-partition balance report: rows per Spark partition
-    (spark_partition_id groupBy — one cheap agg) plus each partition's
-    share of the max. The first thing to look at when a stage straggles:
-    a top-heavy report means the upstream partitioner (or a skewed key)
-    concentrated the work. Returns (pid, n_rows, frac_of_max) sorted by
-    n_rows descending."""
-    from pyspark.sql.window import Window
-
-    counts = df.groupBy(F.spark_partition_id().alias("pid")).agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-    mx = Window.partitionBy()
-    return (
-        counts.withColumn(
-            "frac_of_max",
-            F.col("n_rows").cast("double") / F.max("n_rows").over(mx),
-        )
-        .orderBy(F.desc("n_rows"), "pid")
-    )
-
-
 def range_checksums(
     df: DataFrame,
     key_col: str,
@@ -268,29 +239,5 @@ def range_checksums(
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("_hv").alias("checksum"),
-        )
-    )
-
-
-def checksum_diff(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Compare two range_checksums outputs: full-outer join on bucket,
-    keep buckets that disagree in row count or checksum (or exist on one
-    side only). Returns (bucket, n_rows_a, n_rows_b, checksum_a,
-    checksum_b) — the work list for a targeted repair scan."""
-    aa = a.select(
-        "bucket",
-        F.col("n_rows").alias("n_rows_a"),
-        F.col("checksum").alias("checksum_a"),
-    )
-    bb = b.select(
-        "bucket",
-        F.col("n_rows").alias("n_rows_b"),
-        F.col("checksum").alias("checksum_b"),
-    )
-    j = aa.join(bb, "bucket", "full_outer")
-    return j.where(
-        ~(
-            F.col("n_rows_a").eqNullSafe(F.col("n_rows_b"))
-            & F.col("checksum_a").eqNullSafe(F.col("checksum_b"))
         )
     )

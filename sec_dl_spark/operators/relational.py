@@ -298,32 +298,6 @@ def _percentiles_from_sorted_dv(
     return c.groupBy(group_col).agg(*aggs)
 
 
-def deterministic_mixture_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    group_col: str = "lang",
-    key_col: str = "doc_id",
-    default_rate: float = 0.0,
-    salt: int = 0,
-) -> DataFrame:
-    """Reproducible per-group downsampling to target mixture rates — the
-    training-data step that rebalances a corpus (e.g. cap web text, keep
-    all code). A row survives iff hash(key) lands under its group's rate
-    threshold, so the SAME rows are kept on every run, on any cluster, at
-    any parallelism — unlike df.sample/sampleBy, whose output depends on
-    partitioning. Keeps ≈ rate·|group| rows without any shuffle: the
-    filter is a pure row-local codegen predicate.
-
-    The hash is Knuth's multiplicative scheme over the integer key —
-    deliberately portable integer arithmetic (the DuckDB oracle evaluates
-    the identical expression); swap in xxhash64 when oracle parity is not
-    needed. ``salt`` decorrelates successive sampling passes.
-    """
-    return df.where(
-        mixture_keep_expr(rates, group_col, key_col, default_rate, salt)
-    )
-
-
 def mixture_keep_expr(
     rates: dict[str, float],
     group_col: str = "lang",
@@ -331,9 +305,13 @@ def mixture_keep_expr(
     default_rate: float = 0.0,
     salt: int = 0,
 ):
-    """The row-local keep predicate behind deterministic_mixture_sample,
-    exposed so audits can aggregate it (count kept per group in ONE pass)
-    instead of filtering and re-joining."""
+    """Row-local keep predicate for reproducible per-group downsampling to
+    target mixture rates: a row survives iff hash(key) lands under its
+    group's rate threshold, so ``df.where(mixture_keep_expr(...))`` keeps
+    the SAME rows on every run and at any parallelism (unlike
+    df.sample/sampleBy), with no shuffle. Audits aggregate it (count kept
+    per group in ONE pass) instead of filtering and re-joining. ``salt``
+    decorrelates successive sampling passes."""
     mod = 1 << 20
     # Two multiply-xorshift rounds (murmur-style finalizer) in portable
     # 63-bit-safe integer arithmetic:

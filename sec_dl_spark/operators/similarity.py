@@ -802,10 +802,10 @@ def assign_cells(
 ) -> DataFrame:
     """Nearest-centroid cell assignment (cosine order via normalized
     euclidean) in one vectorized Arrow pass — the serve/maintain-time
-    half of the coarse quantizer, usable against STORED centroids (e.g.
-    appending new vectors to a persisted IVF-PQ index without
-    retraining). Adds a ``cell`` column; every input column passes
-    through untouched (gates must not silently drop payload/metadata)."""
+    half of the coarse quantizer, usable against STORED centroids (new
+    vectors join a built index's cells without retraining). Adds a
+    ``cell`` column; every input column passes through untouched (gates
+    must not silently drop payload/metadata)."""
     import numpy as np
     from pyspark.sql.types import IntegerType
 
@@ -1195,9 +1195,9 @@ def write_ann_index(
     ``bits_per_table=None`` (default) derives the signature width from
     |corpus| via auto_bits_per_table, so the bucket-directory count
     tracks the data instead of fragmenting small corpora. The chosen
-    parameters land in a one-row JSON sidecar at ``{path}/meta`` (the
-    write_ivfpq_index convention) — serve reads them back, so build and
-    serve can never disagree on the plane geometry."""
+    parameters land in a one-row JSON sidecar at ``{path}/meta`` — serve
+    reads them back, so build and serve can never disagree on the plane
+    geometry."""
     import json as _json
 
     from sec_dl_spark.util import hadoop_delete
@@ -1912,55 +1912,6 @@ def build_ivfpq_index(
     return IvfPqIndex(centroids, books, encoded, id_col)
 
 
-def write_ivfpq_index(index: IvfPqIndex, path: str) -> None:
-    """Persist an IVF-PQ index: encoded codes PARTITIONED BY cell (a
-    query's candidate read prunes to its probed cells' directories, the
-    IVF analog of write_ann_index's bucket layout) + a one-row JSON
-    sidecar with centroids/codebooks (a few KB — they broadcast to every
-    serve-time session). Rebuild == re-run."""
-    import json as _json
-
-    (
-        index.encoded.repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/encoded")
-    )
-    meta = _json.dumps(
-        {"centroids": index.centroids, "codebooks": index.codebooks, "id_col": index.id_col}
-    )
-    _write_meta_json(index.encoded.sparkSession, meta, f"{path}/meta")
-
-
-def read_ivfpq_index(spark, path: str) -> IvfPqIndex:
-    """Load a persisted IVF-PQ index. The encoded scan keeps ``cell`` as
-    a partition column, so serve-time joins on it prune directories.
-    Streamed appends (streaming/ann.py:incremental_ann_index_sink) live
-    under ``increments`` with the same (cell, codes) content keyed by
-    (run, batch) — they union in here, so a loaded index always serves
-    the base build plus everything committed since."""
-    import json as _json
-
-    from sec_dl_spark.util import try_read_parquet
-
-    meta = _json.loads(spark.read.json(f"{path}/meta").collect()[0]["meta"])
-    books = [(int(j), c) for j, c in meta["codebooks"]]
-    id_col = meta["id_col"]
-    encoded = (
-        spark.read.parquet(f"{path}/encoded")
-        .withColumn("cell", F.col("cell").cast("int"))
-        .select(id_col, "cell", "pq_codes")
-    )
-    inc = try_read_parquet(spark, f"{path}/increments")
-    if inc is not None:
-        encoded = encoded.unionByName(
-            inc.withColumn("cell", F.col("cell").cast("int")).select(
-                id_col, "cell", "pq_codes"
-            )
-        )
-    return IvfPqIndex(meta["centroids"], books, encoded, id_col)
-
-
 def ivfpq_topk(
     corpus: DataFrame,
     index: IvfPqIndex,
@@ -2244,54 +2195,6 @@ def hamming_topk(
     return rescored.withColumn("rank", F.row_number().over(w2).cast("long")).where(
         F.col("rank") <= k
     )
-
-
-def normalize_vecs_arrow(
-    df, vec_col: str = "embedding", out_col: str = "unit"
-):
-    """Arrow-NATIVE L2 normalization via ``mapInArrow`` — the third Python
-    batch surface beside pandas_udf and mapInPandas (§2.10): batches
-    arrive as raw ``pyarrow.RecordBatch``es, the list column's values
-    buffer is viewed as one contiguous numpy array (zero pandas
-    materialization, no per-row Python), normalized with two vectorized
-    ops, and rebuilt as an Arrow list array sharing the offsets.
-
-    Exists as the measured A/B twin of the pure-expression
-    :func:`normalize_vec` (which stays the default — JVM-side, no
-    transfer); the Arrow kernel wins only when the per-batch math is
-    heavy enough to beat the transfer cost, which a plain normalize is
-    not. Parity is pytest-pinned. Ragged (mixed-length) vectors are
-    fine: offsets drive the per-row norms."""
-    import numpy as np
-    import pyarrow as pa
-
-    schema_out = df.select("*", F.col(vec_col).alias(out_col)).schema
-
-    def norm_batches(batches):
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            col = tbl.column(vec_col).combine_chunks()
-            arr = col.chunk(0) if isinstance(col, pa.ChunkedArray) else col
-            offsets = arr.offsets.to_numpy(zero_copy_only=False)
-            flat = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
-            # per-row norms via segmented reduction over the offsets
-            sq = np.add.reduceat(flat * flat, offsets[:-1]) if len(flat) else np.array([])
-            norms = np.sqrt(sq)
-            norms[norms == 0.0] = 1.0
-            reps = np.diff(offsets)
-            flat_out = flat / np.repeat(norms, reps)
-            unit = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(flat_out, pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + [unit],
-                names=list(batch.schema.names) + [out_col],
-            )
-
-    from pyspark.sql import types as T
-
-    fields = list(df.schema.fields) + [
-        T.StructField(out_col, T.ArrayType(T.DoubleType()))
-    ]
-    return df.mapInArrow(norm_batches, T.StructType(fields))
 
 
 def gram_matrix(df, vec_col: str = "embedding"):

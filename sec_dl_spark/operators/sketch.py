@@ -6,65 +6,20 @@ pipeline, each with a different query it answers:
 - HyperLogLog — "how many DISTINCT?" → `approx_count_distinct`
   (agg_approx_distinct_hll, error-bound pytest).
 - Bloom filter — "is this key PRESENT?" → Spark's runtime bloom-filter
-  join reduction (plan-pinned in tests/test_plans.py) and the driver-side
-  membership helper here.
-- Count-min — "how OFTEN does this key occur?" → `cms_counts` here: one
-  pass builds a fixed-size sketch (width ~ e/eps, depth ~ ln(1/δ)); any
-  key's count is then answerable from KBs of state with a one-sided
-  error bound (never under, over by ≤ eps·N with probability ≥
-  confidence). The JVM aggregates partial sketches tree-wise; only the
-  merged table crosses to the driver.
+  join reduction (plan-pinned in tests/test_plans.py).
+- Count-min — "how OFTEN does this key occur?" → `cms_build` /
+  `cms_estimate` here: one pass builds a fixed-size sketch (width ~
+  e/eps, depth ~ ln(1/δ)) as a (row, slot, cnt) DataFrame; any key's
+  count is then answerable from KBs of state with a one-sided error
+  bound (never under, over by ≤ eps·N with probability ≥ confidence).
 
-All three are Spark-built-ins under the hood (`df.stat` / SQL aggs) —
-the operator layer adds the contract: bounds stated, determinism pinned,
+The operator layer adds the contract: bounds stated, determinism pinned,
 and tests that actually check the guarantees.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def cms_counts(
-    df: DataFrame,
-    col: str,
-    keys: list,
-    eps: float = 0.001,
-    confidence: float = 0.99,
-    seed: int = 42,
-) -> dict:
-    """Approximate occurrence counts for ``keys`` in ``df[col]`` from one
-    count-min pass. Returns {key: estimate} with the CM guarantee:
-    estimate ≥ true count always, and ≤ true + eps·N with probability ≥
-    ``confidence`` (N = total rows). Deterministic for a fixed seed.
-
-    At 100 TB this answers per-key frequency probes (hot-key detection
-    for salting decisions, contamination tallies, stopword discovery)
-    from a sketch of w·d counters — size set by the BOUNDS, not the
-    data."""
-    # Scala-only surface: PySpark's DataFrameStatFunctions does not wrap
-    # countMinSketch, so call through the JVM DataFrame handle — the
-    # sketch aggregation itself runs fully distributed either way.
-    sketch = df._jdf.stat().countMinSketch(col, float(eps), float(confidence), int(seed))
-    return {k: sketch.estimateCount(k) for k in keys}
-
-
-def bloom_membership(
-    df: DataFrame,
-    col: str,
-    probes: list,
-    expected_items: int,
-    fpp: float = 0.01,
-) -> dict:
-    """Driver-side membership probes against a Bloom filter of
-    ``df[col]``: {probe: might_contain}. False means DEFINITELY absent;
-    True is wrong with probability ≤ ``fpp``. The filter is built
-    distributed (partial filters OR-merge) and costs O(expected_items ·
-    ln(1/fpp)) BITS regardless of data size — the pre-flight existence
-    check that avoids collecting a key set."""
-    bf = df._jdf.stat().bloomFilter(col, int(expected_items), float(fpp))
-    return {p: bf.mightContain(p) for p in probes}
-
 
 # --- portable count-min sketch (DataFrame-native, engine-reproducible) ---
 
@@ -94,9 +49,9 @@ def _cms_hash_params(depth: int) -> list[tuple[int, int]]:
 def cms_build(
     df: DataFrame, col: str, width: int = 256, depth: int = 4
 ) -> DataFrame:
-    """Count-min sketch as a (row, slot, cnt) DataFrame — the MERGEABLE,
-    engine-portable complement to cms_counts (whose Spark-built-in
-    sketch is an opaque JVM blob probed on the driver). Each input key
+    """Count-min sketch as a (row, slot, cnt) DataFrame — MERGEABLE and
+    engine-portable, unlike Spark's built-in countMinSketch (an opaque
+    JVM blob probed on the driver). Each input key
     increments one counter per hash row; the table is ≤ depth·width rows
     no matter the input size, unions of per-batch sketches sum by
     (row, slot) — the same merge-on-read algebra the HLL rollup sink

@@ -60,51 +60,3 @@ def salted_distinct_count(
         .agg(F.count(F.lit(1)).alias("_partial"))
     )
     return phase1.groupBy(*keys).agg(F.sum("_partial").cast("long").alias(f"n_distinct_{value}"))
-
-
-def hot_keys(
-    df: DataFrame,
-    col: str,
-    min_fraction: float = 0.01,
-    sample_fraction: float = 0.01,
-    seed: int = 42,
-    eps: float = 1e-4,
-    confidence: float = 0.99,
-) -> list:
-    """Detect keys holding ≥ ``min_fraction`` of ``df`` — the decision
-    input for targeted salting — WITHOUT a full groupBy: candidates come
-    from a seeded Bernoulli sample (a key covering fraction f appears in
-    a sample of n·s rows with probability 1-(1-f)^(n·s) ≈ 1 for any real
-    hot key), then each candidate's true weight is checked against a
-    count-min sketch built in one pass (estimate ≥ truth, so no hot key
-    is MISSED by the verify step; the sample step's miss probability is
-    the only sampling risk and is astronomically small at scale).
-
-    Cost: one sample scan + one sketch pass, both O(data) with tiny
-    state — no shuffle keyed by the (skewed!) column itself, which is
-    exactly the shuffle a plain groupBy-count diagnostic would suffer."""
-    from sec_dl_spark.operators.sketch import cms_counts
-
-    n = df.count()
-    if n == 0:
-        return []
-    cand = [
-        r[0]
-        for r in df.select(col)
-        .sample(fraction=min(1.0, sample_fraction), seed=seed)
-        .groupBy(col)
-        .count()
-        .where(F.col("count") >= 2)  # singleton sample hits are noise
-        .collect()
-    ]
-    if not cand:
-        return []
-    est = cms_counts(df, col, cand, eps=eps, confidence=confidence, seed=seed)
-    cut = min_fraction * n
-    # CMS is one-sided (estimate ≥ truth), so comparing est >= cut keeps
-    # the no-miss guarantee the docstring promises: every truly hot key
-    # passes. The cost is keys up to eps·n UNDER the threshold may be
-    # promoted by sketch error — benign here, because the consumer salts
-    # the key, and salting a borderline-hot key is harmless while FAILING
-    # to salt a genuinely hot one is the error that matters.
-    return sorted(k for k, e in est.items() if e >= cut)

@@ -32,9 +32,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # timestamp; read the raw int64 and truncate to micros in the scan
     # (sources/fixtures.py) — exactly what DuckDB's reader does implicitly.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Python DataSource filter pushdown (sources/pyds.py implements
-    # pushFilters; Spark refuses such readers unless this is on).
-    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 
@@ -86,7 +83,7 @@ RELIABLE_CHECKPOINT_CONF = "spark.sec_dl_spark.reliableCheckpoint"
 def pin(df, reliable: bool | None = None):
     """Materialize ``df`` ONCE and truncate its lineage, so multiple plan
     branches are guaranteed to read the same rows (global_rank's ranged
-    frame + counts sidecar; read_jsonl_corpus's good/quarantine split) and
+    frame + counts sidecar; scrape_pending's fetched rows) and
     iterative algorithms (PageRank, pointer-jumping components) don't grow
     exponential plans.
 

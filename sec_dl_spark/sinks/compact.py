@@ -62,117 +62,3 @@ def compact_parquet(
     os.rename(tmp, path)
     shutil.rmtree(old)
     return {"files_before": before, "files_after": count_files(path)}
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    updates,
-    key_cols: list[str],
-    partition_cols: list[str],
-) -> None:
-    """MERGE (upsert) into a partitioned parquet table, rewriting ONLY the
-    partitions the updates touch — dynamic partition overwrite, the
-    K4-at-scale pattern: a quarterly batch of amended filings rewrites a
-    handful of (year, qtr) directories, never the table.
-
-    Requires every update row to carry its partition columns. Updates win
-    over existing rows on key_cols within the touched partitions.
-    """
-    from pyspark.sql import functions as F
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        touched = updates.select(*partition_cols).distinct()
-        existing = spark.read.parquet(target_path).join(
-            F.broadcast(touched), partition_cols, "left_semi"
-        )
-        kept = existing.join(updates.select(*key_cols), key_cols, "left_anti")
-        merged = kept.unionByName(updates.select(*existing.columns))
-        # overwrite rewrites only the partitions present in `merged` —
-        # exactly the touched set (kept ∪ updates live in those partitions)
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def delete_rows_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    keys,
-    key_cols: list[str],
-    partition_cols: list[str],
-) -> int:
-    """Targeted row deletion from a partitioned parquet table (takedown /
-    right-to-be-forgotten — a first-class training-data-lake operation):
-    locates the partitions containing the doomed keys, rewrites ONLY those
-    via dynamic partition overwrite, leaves everything else byte-identical.
-    Returns the number of rows deleted.
-
-    ``keys``: DataFrame of key_cols values to remove (broadcast — takedown
-    batches are small).
-
-    Dynamic partition overwrite only rewrites partitions PRESENT in the
-    written frame, so a partition whose every row is doomed would survive
-    untouched on disk. Touched partitions with zero survivors are therefore
-    deleted explicitly (their directories removed) after the overwrite.
-    """
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    data = spark.read.parquet(target_path)
-    doomed = data.join(F.broadcast(keys), key_cols, "left_semi")
-    n_doomed = doomed.count()
-    if n_doomed == 0:
-        return 0
-    touched = doomed.select(*partition_cols).distinct()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        survivors = (
-            data.join(F.broadcast(touched), partition_cols, "left_semi")
-            .join(F.broadcast(keys), key_cols, "left_anti")
-        )
-        # Partitions the takedown fully empties never appear in `survivors`,
-        # so the dynamic overwrite skips them — compute them up front (takedown
-        # scope is small by contract; both collects are broadcast-sized).
-        surviving_parts = {
-            tuple(r) for r in survivors.select(*partition_cols).distinct().collect()
-        }
-        emptied = [
-            tuple(r) for r in touched.collect() if tuple(r) not in surviving_parts
-        ]
-        survivors.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_path)
-        for part_vals in emptied:
-            part_dir = os.path.join(
-                target_path,
-                *(
-                    f"{c}={_escape_partition_value(v)}"
-                    for c, v in zip(partition_cols, part_vals)
-                ),
-            )
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n_doomed
-
-
-def _escape_partition_value(v) -> str:
-    """Render a partition value the way Spark names partition directories
-    (Hive-style): NULL → __HIVE_DEFAULT_PARTITION__, special characters
-    percent-escaped (ExternalCatalogUtils.escapePathName's charset)."""
-    if v is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    s = str(v)
-    unsafe = set('"#%\'*/:=?\\\x7f{[]^')
-    out = []
-    for ch in s:
-        if ch in unsafe or ord(ch) < 0x20:
-            out.append("%{:02X}".format(ord(ch)))
-        else:
-            out.append(ch)
-    return "".join(out)

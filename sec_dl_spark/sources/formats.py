@@ -12,11 +12,10 @@ Format notes the API encodes rather than documents away:
 - JSON/CSV are TEXT: doubles survive only via repr-style output
   (Spark writes shortest-round-trip decimals), timestamps need an
   explicit pattern, and CSV additionally loses null-vs-empty-string
-  distinctions unless ``nullValue`` is pinned. Reads REQUIRE the explicit
-  schema — inference is both slow (extra pass) and lossy (ints widen,
-  timestamps stay strings). JSONL corpus specifics (corrupt-line
-  quarantine, shard sizing) live in sources/jsonl.py; this module is the
-  generic table surface.
+  distinctions unless ``nullValue`` is pinned. Read them back with
+  ``spark.read.format(fmt).schema(...)`` and the same options — inference
+  is both slow (extra pass) and lossy (ints widen, timestamps stay
+  strings).
 
 At 100 TB: write parquet/ORC partitioned and sorted (see operators/layout);
 JSON/CSV only at the edges (ingest from third parties, exports to tools) —
@@ -25,8 +24,7 @@ never as the internal representation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
@@ -49,23 +47,3 @@ def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "ove
         for k, v in _TEXT_OPTS.items():
             w = w.option(k, v)
     w.save(path)
-
-
-def read_table(
-    spark: SparkSession, path: str, fmt: str = "parquet", schema: T.StructType | None = None
-) -> DataFrame:
-    """Read ``path`` as ``fmt``. Text formats REQUIRE ``schema`` (no
-    inference pass, no silently-widened types); columnar formats carry
-    their own."""
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {FORMATS}")
-    r = spark.read.format(fmt)
-    if fmt in ("json", "csv"):
-        if schema is None:
-            raise ValueError(f"{fmt} read requires an explicit schema")
-        r = r.schema(schema)
-        for k, v in _TEXT_OPTS.items():
-            r = r.option(k, v)
-    elif schema is not None:
-        r = r.schema(schema)
-    return r.load(path)

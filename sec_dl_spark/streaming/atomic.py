@@ -24,11 +24,10 @@ needs an explicit commit protocol on a file sink. Protocol:
    racing to admit the same content into one corpus safe: the loser
    recomputes its anti-join against the winner's rows.
 3. Readers list the log and read ONLY published directories, so a
-   half-written staging dir is invisible by construction.
-4. ``compact_committed`` folds the log prefix into a checkpoint manifest
-   (``covers_through`` = highest folded version); readers take the
-   newest checkpoint plus every later manifest, so the log stays O(new
-   batches) regardless of sink age.
+   half-written staging dir is invisible by construction. Every scan
+   re-reads the manifests (a few hundred bytes each, one per committed
+   batch), so a log deleted and recreated at the same path is never
+   served from a stale copy.
 
 A lost duplicate commit — same (run, batch) already published by a
 zombie or twin writer — returns False and withdraws cleanly; the data is
@@ -68,7 +67,7 @@ def _publish_manifest(spark: SparkSession, fs, Path, dst: str, payload: str) -> 
     the payload is fully written to a tmp file first and the claim is
     java.nio.file.Files.createLink(dst, tmp) — link(2) fails atomically
     if dst exists — so CLAIM AND PAYLOAD ARE ONE STEP: a published name
-    is complete by construction, and no reader or compactor can ever
+    is complete by construction, and no reader or rival writer can ever
     observe a claimed-but-empty manifest (the race a bare
     createNewFile-then-write claim leaves open: a scanner in that window
     would skip the burning claim and let a rival re-publish the same
@@ -109,12 +108,6 @@ def _publish_manifest(spark: SparkSession, fs, Path, dst: str, payload: str) -> 
     return False
 
 
-# Manifests are immutable once published, so parsed content is cached by
-# (log path, filename) across listings — a listing only pays one payload
-# read per NEW manifest, not per scan.
-_MANIFEST_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def _scan_log(spark: SparkSession, log_path: str):
     """(parsed entries [(version, manifest)] sorted, highest version
     NUMBER present by filename). The two can differ: a writer that
@@ -133,14 +126,10 @@ def _scan_log(spark: SparkSession, log_path: str):
             continue
         v = int(name[1:-5])
         top = max(top, v)
-        key = (log_path, name)
-        m = _MANIFEST_CACHE.get(key)
-        if m is None:
-            try:
-                m = json.loads(_read_small_file(spark, fs, st.getPath()).decode("utf-8"))
-            except ValueError:
-                continue  # in-flight or crashed claim — skip, version stays burned
-            _MANIFEST_CACHE[key] = m
+        try:
+            m = json.loads(_read_small_file(spark, fs, st.getPath()).decode("utf-8"))
+        except ValueError:
+            continue  # in-flight or crashed claim — skip, version stays burned
         out.append((v, m))
     out.sort(key=lambda vm: vm[0])
     return out, top
@@ -157,63 +146,14 @@ def current_version(spark: SparkSession, log_path: str) -> int:
     return _scan_log(spark, log_path)[1]
 
 
-def log_history(spark: SparkSession, log_path: str) -> list[dict]:
-    """The commit log as audit rows (the DESCRIBE HISTORY analog), oldest
-    first: one dict per retained manifest with version, kind
-    (commit/checkpoint), the (run, batch) it published — or the folded
-    batch list for a checkpoint — and the output names it carries.
-    Versions burned by crashed claims appear in no row (their payload
-    never published); versions folded by compaction are represented only
-    by the covering checkpoint, which is exactly what remains readable."""
-    out = []
-    for v, m in _list_manifests(spark, log_path):
-        if m.get("checkpoint"):
-            out.append(
-                {
-                    "version": v,
-                    "kind": "checkpoint",
-                    "covers_through": m["covers_through"],
-                    "batches": [tuple(b) for b in m.get("batches", [])],
-                    "outputs": sorted(m.get("dirs", {})),
-                }
-            )
-        else:
-            out.append(
-                {
-                    "version": v,
-                    "kind": "commit",
-                    "run": m["ingest_run"],
-                    "batch": m["ingest_batch"],
-                    "outputs": sorted(m.get("dirs", {})),
-                }
-            )
-    return out
-
-
 def _committed_batches(entries) -> set[tuple[str, int]]:
-    done: set[tuple[str, int]] = set()
-    for _, m in entries:
-        if m.get("checkpoint"):
-            done.update((r, b) for r, b in m.get("batches", []))
-        else:
-            done.add((m["ingest_run"], m["ingest_batch"]))
-    return done
+    return {(m["ingest_run"], m["ingest_batch"]) for _, m in entries}
 
 
 def is_committed(spark: SparkSession, path: str, run: str, batch_id: int) -> bool:
     """True if some writer already published (run, batch) — lets a
     restarted producer skip the data write entirely."""
     return (run, batch_id) in _committed_batches(_list_manifests(spark, path))
-
-
-def atomic_commit_batch(
-    df: DataFrame, path: str, run: str, batch_id: int
-) -> bool:
-    """Publish ``df`` as the committed output of (run, batch). Returns
-    True if this attempt won, False if another writer already published
-    this (run, batch) — in which case this attempt's staging output is
-    deleted and the sink is untouched."""
-    return atomic_commit_outputs({"data": (df, path)}, path, run, batch_id)
 
 
 def atomic_commit_outputs(
@@ -290,165 +230,26 @@ def atomic_commit_outputs(
     )
 
 
-def read_committed(
-    spark: SparkSession, path: str, name: str = "data", as_of_version: int | None = None
-) -> DataFrame | None:
+def read_committed(spark: SparkSession, path: str, name: str = "data") -> DataFrame | None:
     """Union of all PUBLISHED batches of the ``name`` output
     (manifest-listed directories only — staging output is invisible),
-    with ingest_run/ingest_batch columns restored. The newest checkpoint
-    replaces every version ≤ its ``covers_through``; later manifests
-    apply on top. None if nothing has committed yet.
-
-    ``as_of_version`` time-travels the read: only commits with version ≤
-    that snapshot token participate, so a reader can pin the exact table
-    state any earlier decision was made against (the Delta
-    ``versionAsOf`` analog; tokens come from ``current_version`` or
-    ``log_history``). Because the log is LINEAR, a version number is a
-    complete snapshot spec — no timestamp resolution. Raises ValueError
-    when the requested version predates the oldest retained manifest
-    (compaction vacuums folded history, exactly like a table format's
-    checkpoint+vacuum): the state is genuinely unreconstructable, and
-    silently returning the post-checkpoint view would be a wrong answer."""
+    with ingest_run/ingest_batch columns restored. None if nothing has
+    committed yet."""
     from pyspark.sql import functions as F
 
-    entries = _list_manifests(spark, path)
-    if as_of_version is not None and entries:
-        # A checkpoint manifest at version K+1 IS the state at its
-        # covers_through=K, so it serves any snapshot ≥ K even though its
-        # own version exceeds it; plain manifests participate by version.
-        kept = [
-            (v, m)
-            for v, m in entries
-            if (m["covers_through"] if m.get("checkpoint") else v) <= as_of_version
-        ]
-        # Oldest reconstructable snapshot among RETAINED manifests:
-        # compaction vacuums folded history, so anything older is gone.
-        floor = min(
-            (m["covers_through"] if m.get("checkpoint") else v) for v, m in entries
-        )
-        if 0 < as_of_version < floor:
-            raise ValueError(
-                f"version {as_of_version} of {path!r} was folded away by "
-                f"compaction (oldest reconstructable version: {floor})"
-            )
-        entries = kept
-    checkpoints = [(v, m) for v, m in entries if m.get("checkpoint")]
-    covers_through = -1
-    parts = []
-    if checkpoints:
-        _, latest = max(checkpoints, key=lambda vm: vm[1]["covers_through"])
-        covers_through = latest["covers_through"]
-        if name in latest.get("dirs", {}):
-            # checkpoint data already carries the ingest_run/ingest_batch cols
-            parts.append(spark.read.parquet(latest["dirs"][name]))
-    for v, m in entries:
-        if m.get("checkpoint") or v <= covers_through or name not in m.get("dirs", {}):
-            continue
-        parts.append(
-            spark.read.parquet(m["dirs"][name])
-            .withColumn("ingest_run", F.lit(m["ingest_run"]))
-            .withColumn("ingest_batch", F.lit(m["ingest_batch"]))
-        )
+    parts = [
+        spark.read.parquet(m["dirs"][name])
+        .withColumn("ingest_run", F.lit(m["ingest_run"]))
+        .withColumn("ingest_batch", F.lit(m["ingest_batch"]))
+        for _, m in _list_manifests(spark, path)
+        if name in m.get("dirs", {})
+    ]
     if not parts:
         return None
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def compact_committed(spark: SparkSession, log_path: str) -> bool:
-    """Checkpoint the manifest log (the Delta-checkpoint analog): rewrite
-    every batch committed up to the current version into one consolidated
-    directory per output and publish a checkpoint manifest with
-    ``covers_through`` = that version, then vacuum the folded manifests
-    and their staged data. Readers see the checkpoint plus anything that
-    committed after the fold point — a writer landing a new batch DURING
-    compaction stays visible because its version exceeds covers_through.
-    Returns False if this attempt lost its commit race (state unchanged).
-
-    Vacuum caveat (same as any table format): folded data dirs are
-    deleted immediately after the checkpoint publishes, so a reader that
-    listed the log BEFORE compaction and reads data AFTER it can miss
-    files — long-lived readers should re-list."""
-    entries, top = _scan_log(spark, log_path)
-    if not entries:
-        return False
-    fs, Path = _fs(spark, log_path)
-    # Fold only through the highest PARSED manifest, never the highest
-    # claimed filename: with the link/rename claim a published name always
-    # carries its payload, but a legacy or foreign half-claim above the
-    # parsed prefix must not be declared covered — that would permanently
-    # hide a commit that reported success to its writer.
-    covers_through = max(v for v, _ in entries)
-    names = sorted({n for _, m in entries for n in m.get("dirs", {})})
-    batches = sorted(_committed_batches(entries))
-    attempt = uuid.uuid4().hex[:12]
-    staged: dict[str, str] = {}
-    for name in names:
-        df = read_committed(spark, log_path, name)
-        out_dir = f"{log_path}/_checkpoints/{covers_through}-{attempt}/{name}"
-        df.write.mode("error").parquet(out_dir)
-        staged[name] = out_dir
-
-    v = covers_through + 1
-    manifest = json.dumps(
-        {
-            "version": v,
-            "checkpoint": True,
-            "covers_through": covers_through,
-            "dirs": staged,
-            "batches": [[r, b] for r, b in batches],
-        }
-    )
-    if not _publish_manifest(spark, fs, Path, f"{log_path}/_commits/v{v}.json", manifest):
-        # a writer (or rival compactor) took this version — withdraw; the
-        # caller can simply compact again
-        fs.delete(Path(f"{log_path}/_checkpoints/{covers_through}-{attempt}"), True)
-        return False
-    # vacuum the folded manifests and their staged data
-    for fv, m in entries:
-        for d in m.get("dirs", {}).values():
-            fs.delete(Path(d), True)
-        fs.delete(Path(f"{log_path}/_commits/v{fv}.json"), False)
-    return True
-
-
-def vacuum_staging(
-    spark: SparkSession,
-    data_root: str,
-    log_path: str,
-    older_than_hours: float = 1.0,
-) -> int:
-    """Delete staging directories under ``data_root``/_staging that are
-    (a) referenced by NO committed manifest and (b) older than
-    ``older_than_hours`` — the leftovers of crashed or lost commit
-    attempts. The age gate is what makes this safe to run beside live
-    writers (Delta's vacuum retention, same reasoning): a freshly staged
-    dir whose commit is still in flight is never touched. Returns the
-    number of directories removed."""
-    import time
-
-    fs, Path = _fs(spark, data_root)
-    staging_root = Path(f"{data_root}/_staging")
-    if not fs.exists(staging_root):
-        return 0
-    referenced: set[str] = set()
-    for _, m in _list_manifests(spark, log_path):
-        for d in m.get("dirs", {}).values():
-            # staged layout is <root>/_staging/<attempt-dir>/<name>
-            referenced.add(d.rstrip("/").rsplit("/", 2)[1])
-    cutoff_ms = (time.time() - older_than_hours * 3600) * 1000
-    removed = 0
-    for st in fs.listStatus(staging_root):
-        name = st.getPath().getName()
-        if name.startswith("."):
-            continue  # manifest temp files are claimed/cleaned by commits
-        if name in referenced or st.getModificationTime() > cutoff_ms:
-            continue
-        fs.delete(st.getPath(), True)
-        removed += 1
-    return removed
 
 
 def _read_small_file(spark: SparkSession, fs, jpath) -> bytes:

@@ -8,17 +8,15 @@ written, its checkpoint commit lost — carries the same token and the same
 batch id, so it overwrites its own output instead of publishing a second
 copy beside it.
 
-Partial-per-batch sinks (rollup, HLL, CMS, drift, SPRT, SRM, IVM, bots)
+Partial-per-batch sinks (the HLL distinct-count sink, streaming/rollup.py)
 reduce each batch to a small mergeable partial: ``partial_sink`` writes it
 to ``path/run=<token>/batch=<id>`` and ``read_partials`` hands every
 partial to the sink's own merge step. A fresh checkpoint starts at batch
 0, and batch 0 guards the path (``claim_run``): it refuses a path that
-holds another run's partials, since summing two runs of one source
-double-counts and interleaving their batch ids scrambles ordered merges,
-and it clears its own run's older partials, since a wiped checkpoint can
-replay with different batch boundaries and leave stale higher-numbered
-partials behind. The change-feed sink (``cdc``) applies the same guard to
-its state and feed paths.
+holds another run's partials, since merging two runs of one source
+double-counts any additive partial, and it clears its own run's older
+partials, since a wiped checkpoint can replay with different batch
+boundaries and leave stale higher-numbered partials behind.
 
 The dedup registries and the FTS index do NOT take the batch-0 guard:
 they are cross-run state by design — several logical ingest runs share

@@ -1,88 +1,19 @@
-"""Streaming drift monitoring via mergeable bin-count partials (PSI).
+"""Drift scoring over (key, bin, n) integer count frames (PSI).
 
-The streaming twin of the batch ``events_psi_drift`` query
-(plans/streaming_batch.py): the same exact integer-cents binning, the
-same Laplace-smoothed PSI — but instead of splitting one static table at
-its time midpoint, the stream publishes each micro-batch's per-(key, bin)
-INTEGER counts as that batch's own partial (``commit.partial_sink``:
-idempotent overwrite-on-retry), and the read side merges the partials
-and scores them against a pinned REFERENCE distribution (e.g. the
-calibration window's own published counts).
-
-Integer bin counts are the ideal streaming monitor state: exactly
-mergeable (sum monoid — merge == recompute, pinned by pytest), tiny
-(|keys|·n_bins rows per batch regardless of batch size), and the PSI
-read derives every probability from exact integer sums, so the score is
-identical no matter how the stream was batched.
+The same Laplace-smoothed PSI as the batch ``events_psi_drift`` query
+(plans/streaming_batch.py), but scored between any two count frames —
+e.g. a stream's merged per-batch counts against a pinned REFERENCE
+distribution. Integer bin counts are exactly mergeable (a sum monoid)
+and every probability is derived from exact integer sums, so the score
+is identical no matter how the counts were batched.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sec_dl_spark.streaming.commit import partial_sink, read_partials
-
 N_BINS_DEFAULT = 10
-CENTS_PER_BIN_DEFAULT = 4000
-
-
-def bin_counts(
-    df: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    n_bins: int = N_BINS_DEFAULT,
-    cents_per_bin: int = CENTS_PER_BIN_DEFAULT,
-) -> DataFrame:
-    """(key, bin, n) integer histogram — the shared batch/streaming
-    binning. Bins come from EXACT integer-cents division (round to
-    cents, integer-divide, clamp to the last bin), matching the batch
-    PSI query bit for bit; one partial-aggregated groupBy."""
-    # clamp BOTH ends: negative values (refunds, corrections) land in bin
-    # 0 instead of silently falling off the spine — and the clamp removes
-    # the Spark-div-truncates vs SQL-floor divergence negatives introduce
-    b = F.greatest(
-        F.least(
-            F.expr(f"CAST(round({value_col} * 100) AS BIGINT) div {cents_per_bin}"),
-            F.lit(n_bins - 1),
-        ),
-        F.lit(0),
-    )
-    return (
-        df.select(F.col(key_col).alias("key"), b.alias("bin"))
-        .groupBy("key", "bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def incremental_bin_counts_sink(
-    stream: DataFrame,
-    counts_path: str,
-    checkpoint_dir: str,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    n_bins: int = N_BINS_DEFAULT,
-    cents_per_bin: int = CENTS_PER_BIN_DEFAULT,
-):
-    """Each micro-batch publishes its own (key, bin, n) partial. Returns
-    the started StreamingQuery."""
-    return partial_sink(
-        stream,
-        counts_path,
-        checkpoint_dir,
-        lambda df: bin_counts(df, key_col, value_col, n_bins, cents_per_bin),
-    )
-
-
-def read_bin_counts(spark: SparkSession, counts_path: str) -> DataFrame:
-    """Merged (key, bin, n) view over every published partial partition —
-    one groupBy over |keys|·n_bins·|batches| rows (monitor-state-sized,
-    never event-sized)."""
-    return (
-        read_partials(spark, counts_path)
-        .groupBy("key", "bin")
-        .agg(F.sum("n").alias("n"))
-    )
 
 
 def psi(

@@ -1,11 +1,12 @@
 """Interchange-format round-trips (sources/formats.py): ORC and the text
-formats must reproduce the parquet-sourced frame — full fidelity for
-columnar, schema-pinned reads for text."""
+formats written by ``write_table`` must read back (``spark.read``) as the
+parquet-sourced frame — full fidelity for columnar, schema-pinned reads
+for text."""
 
 import pytest
 
 from sec_dl_spark.sources.fixtures import load_table
-from sec_dl_spark.sources.formats import FORMATS, read_table, write_table
+from sec_dl_spark.sources.formats import _TEXT_OPTS, FORMATS, write_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,189 +19,36 @@ def test_orc_round_trip_full_fidelity(spark, tmp_path):
     orders = load_table(spark, SF, "orders")
     path = str(tmp_path / "orders_orc")
     write_table(orders, path, "orc")
-    back = read_table(spark, path, "orc")
+    back = spark.read.orc(path)
     assert back.schema == orders.schema
     assert _sorted_rows(back, orders.columns) == _sorted_rows(orders, orders.columns)
 
 
 @pytest.mark.parametrize("fmt", ["json", "csv"])
 def test_text_formats_round_trip_with_schema(spark, tmp_path, fmt):
-    """Text formats: longs/strings/timestamps round-trip exactly under the
-    pinned timestamp pattern; doubles round-trip via shortest-repr output
+    """Text formats: longs/strings/timestamps round-trip exactly when read
+    back with the writer's pinned options; doubles round-trip via shortest-repr output
     (Spark writes full precision)."""
     orders = load_table(spark, SF, "orders")
     path = str(tmp_path / f"orders_{fmt}")
     write_table(orders, path, fmt)
-    back = read_table(spark, path, fmt, schema=orders.schema)
+    back = (
+        spark.read.format(fmt)
+        .schema(orders.schema)
+        .options(**_TEXT_OPTS)
+        .load(path)
+    )
     assert back.schema == orders.schema
     cols = orders.columns
     assert _sorted_rows(back, cols) == _sorted_rows(orders, cols)
 
 
-def test_text_read_requires_schema(spark, tmp_path):
+def test_write_table_rejects_unsupported_format(spark, tmp_path):
     orders = load_table(spark, SF, "orders").limit(1)
-    path = str(tmp_path / "one_json")
-    write_table(orders, path, "json")
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_table(spark, path, "json")
+    path = str(tmp_path / "one_avro")
     with pytest.raises(ValueError, match="unsupported format"):
         write_table(orders, path, "avro")
 
 
 def test_formats_constant_lists_all():
     assert FORMATS == ("parquet", "orc", "json", "csv")
-
-
-IDX_PREAMBLE = """Description:           Master Index of EDGAR Dissemination Feed
-Last Data Received:    March 31, 1996
-Anonymous FTP:         ftp://ftp.sec.gov/edgar/
-
- 
- 
- 
-CIK|Company Name|Form Type|Date Filed|Filename
---------------------------------------------------------------------------------
-"""
-
-
-def _write_idx(path, rows):
-    with open(path, "w") as fh:
-        fh.write(IDX_PREAMBLE)
-        for r in rows:
-            fh.write("|".join(str(x) for x in r) + "\n")
-
-
-def test_python_datasource_parses_partitions_and_pushes_filters(spark, tmp_path):
-    """The custom Python DataSource: per-file partitions, preamble and
-    malformed rows skipped, and form_type equality pruned INSIDE the
-    Python reader (plan shows no residual filter for the pushed
-    predicate)."""
-    from sec_dl_spark.sources.pyds import EdgarIdxDataSource
-
-    _write_idx(
-        tmp_path / "q1.idx",
-        [
-            (1001, "ACME CORP", "10-K", "1996-01-02", "edgar/data/1001/0001.txt"),
-            (1002, "BETA INC", "10-Q", "1996-02-03", "edgar/data/1002/0002.txt"),
-            ("garbled line without pipes",),
-        ],
-    )
-    _write_idx(
-        tmp_path / "q2.idx",
-        [
-            (1003, "GAMMA LLC", "10-K", "1996-04-05", "edgar/data/1003/0003.txt"),
-            (1001, "ACME CORP", "8-K", "1996-05-06", "edgar/data/1001/0004.txt"),
-        ],
-    )
-    spark.dataSource.register(EdgarIdxDataSource)
-    df = spark.read.format("edgar_idx").load(str(tmp_path / "*.idx"))
-
-    all_rows = df.collect()
-    assert len(all_rows) == 4  # garbled + preamble rows dropped
-    assert df.rdd.getNumPartitions() == 2  # one per file
-
-    tenk = df.where(df.form_type == "10-K")
-    got = {(r["cik"], r["filename"]) for r in tenk.collect()}
-    assert got == {
-        (1001, "edgar/data/1001/0001.txt"),
-        (1003, "edgar/data/1003/0003.txt"),
-    }
-    # the accepted filter is NOT re-applied by Spark: the equality
-    # predicate vanishes from the plan (only isnotnull remains residual)
-    plan = tenk._jdf.queryExecution().executedPlan().toString()
-    assert "10-K" not in plan
-    assert "isnotnull(form_type" in plan
-
-
-def test_python_datasource_streaming_tails_new_files(spark, tmp_path):
-    """The custom streaming reader admits each idx file exactly once
-    across micro-batches: batch 1 sees file 1's rows, a later trigger
-    sees only file 2's."""
-    from sec_dl_spark.sources.pyds import EdgarIdxDataSource
-
-    spark.dataSource.register(EdgarIdxDataSource)
-    src = tmp_path / "drop"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    _write_idx(src / "1996q1.idx", [(1001, "ACME", "10-K", "1996-01-02", "f1.txt")])
-
-    seen: list = []
-
-    def run_once():
-        q = (
-            spark.readStream.format("edgar_idx")
-            .load(str(src / "*.idx"))
-            .writeStream.foreachBatch(
-                lambda df, bid: seen.extend(
-                    (bid, r["cik"], r["filename"]) for r in df.collect()
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    assert [(c, f) for _, c, f in seen] == [(1001, "f1.txt")]
-
-    _write_idx(src / "1996q2.idx", [(1002, "BETA", "10-Q", "1996-04-02", "f2.txt")])
-    seen.clear()
-    run_once()  # same checkpoint: only the NEW file's rows arrive
-    assert [(c, f) for _, c, f in seen] == [(1002, "f2.txt")]
-
-
-def test_python_datasource_writer_two_phase_commit(spark, tmp_path):
-    """The custom writer: tasks stage files, the driver-side commit
-    renames them into place and publishes a _committed manifest; the
-    round-trip through the custom reader reproduces the rows and no
-    staging residue survives."""
-    import os
-
-    from sec_dl_spark.sources.pyds import EdgarIdxDataSource
-
-    spark.dataSource.register(EdgarIdxDataSource)
-    rows = [
-        (1001, "ACME CORP", "10-K", "1996-01-02", "f1.txt"),
-        (1002, "BETA INC", "10-Q", "1996-02-03", "f2.txt"),
-        (1003, "GAMMA LLC", "8-K", "1996-03-04", "f3.txt"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "cik bigint, company string, form_type string, date_filed string, filename string",
-    ).repartition(2)
-    out = str(tmp_path / "idx_out")
-    df.write.format("edgar_idx").mode("append").save(out)
-
-    assert os.path.exists(os.path.join(out, "_committed"))
-    assert not os.path.exists(os.path.join(out, "_staging"))
-    manifest = open(os.path.join(out, "_committed")).read().strip().splitlines()
-    assert sum(int(line.split("\t")[1]) for line in manifest) == 3
-
-    back = spark.read.format("edgar_idx").load(os.path.join(out, "*.idx"))
-    assert sorted(tuple(r) for r in back.collect()) == sorted(rows)
-
-
-def test_python_datasource_writer_overwrite_replaces(spark, tmp_path):
-    """mode('overwrite') clears prior part files at commit time; append
-    keeps them."""
-    import os
-
-    from sec_dl_spark.sources.pyds import EdgarIdxDataSource
-
-    spark.dataSource.register(EdgarIdxDataSource)
-    out = str(tmp_path / "idx_ow")
-    df1 = spark.createDataFrame(
-        [(1, "A", "10-K", "1996-01-01", "a.txt")],
-        "cik bigint, company string, form_type string, date_filed string, filename string",
-    ).coalesce(1)
-    df2 = spark.createDataFrame(
-        [(2, "B", "10-Q", "1996-02-02", "b.txt")],
-        "cik bigint, company string, form_type string, date_filed string, filename string",
-    ).coalesce(1)
-    df1.write.format("edgar_idx").mode("append").save(out)
-    df2.write.format("edgar_idx").mode("overwrite").save(out)
-    back = spark.read.format("edgar_idx").load(os.path.join(out, "*.idx"))
-    assert [tuple(r) for r in back.collect()] == [
-        (2, "B", "10-Q", "1996-02-02", "b.txt")
-    ]

@@ -171,11 +171,12 @@ def test_hilbert_key_matches_reference_and_is_grid_adjacent(spark):
 
 
 def test_hilbert_layout_tightens_bboxes_and_beats_zorder_locality(spark, tmp_path):
-    """hilbert_layout bounds BOTH columns well below the full range per
-    file (the zorder_layout contract), keeps the helper key out of the
-    files, and its worst per-file bounding box is no worse than
-    Z-order's on the same grid and file count."""
-    from sec_dl_spark.operators.layout import hilbert_layout
+    """A layout on with_hilbert_key (range repartition on the key, sort
+    within partitions, key dropped) bounds BOTH columns well below the
+    full range per file (the zorder_layout contract), and its worst
+    per-file bounding box is no worse than Z-order's on the same grid
+    and file count."""
+    from sec_dl_spark.operators.layout import with_hilbert_key
 
     n = 256
     grid = spark.range(n * n).select(
@@ -183,7 +184,13 @@ def test_hilbert_layout_tightens_bboxes_and_beats_zorder_locality(spark, tmp_pat
     )
     hil = str(tmp_path / "hilbert")
     zed = str(tmp_path / "zorder")
-    hilbert_layout(grid, "x", "y", num_files=16, bits=8).write.parquet(hil)
+    (
+        with_hilbert_key(grid, "x", "y", out="hk", bits=8)
+        .repartitionByRange(16, "hk")
+        .sortWithinPartitions("hk")
+        .drop("hk")
+        .write.parquet(hil)
+    )
     zorder_layout(grid, ["x", "y"], num_files=16, bits=8).write.parquet(zed)
 
     h_x = _per_file_bbox_avg_side(spark, hil, "x")

@@ -31,31 +31,6 @@ def test_real_decoder_stub_raises(spark):
     assert "NotImplementedError" in str(exc_info.value) or "real decoders" in str(exc_info.value)
 
 
-def test_resize_plumbing(spark):
-    from sec_dl_spark.operators.multimodal import resize_images
-
-    docs = spark.createDataFrame([(1, "x" * 100), (2, "y")], "doc_id long, text string")
-    out = resize_images(docs_as_media(docs), width=32, height=32).collect()
-    by_id = {r["media_id"]: r for r in out}
-    assert by_id[1]["width"] == 32 and by_id[1]["height"] == 32
-    # fake resize yields the deterministic target payload size for all inputs
-    assert len(by_id[1]["content"]) == len(by_id[2]["content"]) == 32 * 32 // 64
-    with pytest.raises(Exception, match="NotImplementedError|real image codecs"):
-        resize_images(docs_as_media(docs), with_real_decoders=True).collect()
-
-
-def test_frame_sampling_expansion(spark):
-    from sec_dl_spark.operators.multimodal import sample_frames
-
-    docs = spark.createDataFrame([(1, "a" * 2500), (2, "b" * 10)], "doc_id long, text string")
-    out = sample_frames(docs_as_media(docs), every_ms=1000).collect()
-    frames_1 = sorted([r for r in out if r["media_id"] == 1], key=lambda r: r["frame_idx"])
-    # fake duration = n_bytes = 2500 ms → frames at 0, 1000, 2000
-    assert [r["frame_ms"] for r in frames_1] == [0, 1000, 2000]
-    assert frames_1[0]["frame"] == b"a" * 8
-    assert len([r for r in out if r["media_id"] == 2]) == 1
-
-
 def test_audio_chunking_window_hop(spark):
     from sec_dl_spark.operators.multimodal import chunk_audio
 
@@ -70,6 +45,34 @@ def test_audio_chunking_window_hop(spark):
     assert len(out[-1]["chunk"]) == 200      # trailing partial kept
     # 50% overlap: second half of window 0 == first half of window 1
     assert out[0]["chunk"][500:] == out[1]["chunk"][:500]
+
+
+def test_decode_audio_rejects_compressed_kinds(spark):
+    """No audio codec is in this environment: asking chunk_audio for a
+    real decode of a compressed clip must fail loudly, not fake
+    silently."""
+    from sec_dl_spark.operators.multimodal import chunk_audio
+
+    media = spark.createDataFrame(
+        [(1, "mp3", bytearray(b"\xff\xfb\x90\x00"))],
+        "media_id long, kind string, content binary",
+    )
+    with pytest.raises(Exception, match="NotImplementedError|librosa"):
+        chunk_audio(media, with_real_decoders=True).collect()
+
+
+def test_frame_sampling_expansion(spark):
+    """With a negative threshold every frame emits, so select_keyframes
+    degenerates to uniform frame sampling: one row per ``frame_ms``
+    window of the fake 1-byte-per-ms signal, trailing partial included,
+    and a clip shorter than one window still yields frame 0."""
+    from sec_dl_spark.operators.multimodal import select_keyframes
+
+    docs = spark.createDataFrame([(1, "a" * 2500), (2, "b" * 10)], "doc_id long, text string")
+    out = select_keyframes(docs_as_media(docs), frame_ms=1000, threshold=-1.0).collect()
+    frames_1 = sorted((r["frame_idx"], r["frame_ms"]) for r in out if r["media_id"] == 1)
+    assert frames_1 == [(0, 0), (1, 1000), (2, 2000)]
+    assert [r["frame_idx"] for r in out if r["media_id"] == 2] == [0]
 
 
 def test_select_keyframes_scene_changes(spark):
@@ -96,75 +99,6 @@ def test_select_keyframes_scene_changes(spark):
 
     with pytest.raises(Exception, match="NotImplementedError|real video"):
         select_keyframes(media, with_real_decoders=True).collect()
-
-
-def test_decode_audio_wav_roundtrip(spark):
-    """Real (non-stubbed) PCM WAV decode via stdlib wave: generate a known
-    16-bit mono sine + a stereo ramp, push them through the Arrow-batched
-    decode stage, and check rate/channels/length/values against the
-    generated signal (VERDICT r4 #8)."""
-    import io
-    import math
-    import wave
-
-    from sec_dl_spark.operators.multimodal import decode_audio
-
-    def make_wav(nch, sr, samples_per_ch):
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(nch)
-            w.setsampwidth(2)
-            w.setframerate(sr)
-            frames = bytearray()
-            for i in range(samples_per_ch):
-                for ch in range(nch):
-                    v = int(
-                        20000 * math.sin(2 * math.pi * 440 * i / sr)
-                        if nch == 1
-                        else (i * (ch + 1)) % 3000
-                    )
-                    frames += v.to_bytes(2, "little", signed=True)
-            w.writeframes(bytes(frames))
-        return buf.getvalue()
-
-    sr = 8000
-    mono = make_wav(1, sr, 800)  # 100 ms of 440 Hz
-    stereo = make_wav(2, sr, 400)
-    media = spark.createDataFrame(
-        [(1, "wav", bytearray(mono)), (2, "wav", bytearray(stereo))],
-        "media_id long, kind string, content binary",
-    )
-    rows = {r["media_id"]: r for r in decode_audio(media).collect()}
-
-    m = rows[1]
-    assert (m["sample_rate"], m["n_channels"], m["n_samples"]) == (sr, 1, 800)
-    assert m["duration_ms"] == 100
-    # decoded values match the generated sine to int16 quantization
-    for i in (0, 100, 271):
-        expect = int(20000 * math.sin(2 * math.pi * 440 * i / sr)) / 32768
-        assert abs(m["samples"][i] - expect) < 1e-6
-
-    s = rows[2]
-    assert (s["n_channels"], s["n_samples"]) == (2, 400)  # downmixed length
-    # mean of the two channel ramps at frame i: (i + 2i)/2 / 32768
-    for i in (1, 7):
-        expect = ((i % 3000) + (2 * i % 3000)) / 2 / 32768
-        assert abs(s["samples"][i] - expect) < 1e-6
-
-
-def test_decode_audio_rejects_compressed_kinds(spark):
-    """Only PCM WAV decodes for real; compressed formats still need the
-    absent codec libraries and must fail loudly, not fake silently."""
-    import pytest
-
-    from sec_dl_spark.operators.multimodal import decode_audio
-
-    media = spark.createDataFrame(
-        [(1, "mp3", bytearray(b"\xff\xfb\x90\x00"))],
-        "media_id long, kind string, content binary",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|librosa"):
-        decode_audio(media).collect()
 
 
 def _ppm_bytes(w, h, fn):
@@ -194,92 +128,52 @@ def _bmp_bytes(w, h, fn):
 
 
 def test_decode_image_ppm_and_bmp(spark):
-    """Real stdlib raster decode: a generated P6 PPM and a 24bpp BMP of
-    the SAME image decode to identical dimensions and channel means
-    (BMP's BGR order and bottom-up rows must be unwound correctly)."""
-    from sec_dl_spark.operators.multimodal import decode_image
+    """Real stdlib raster decode (the perceptual_hash decode path): a
+    generated P6 PPM and a 24bpp BMP of the SAME image decode to
+    identical dimensions and row-major RGB bytes (BMP's BGR order and
+    bottom-up rows must be unwound correctly)."""
+    from sec_dl_spark.operators.multimodal import _parse_bmp, _parse_ppm
 
     fn = lambda x, y: (x * 30 % 256, y * 40 % 256, (x + y) * 20 % 256)
-    media = spark.createDataFrame(
-        [
-            (1, "ppm", bytearray(_ppm_bytes(5, 4, fn))),
-            (2, "bmp", bytearray(_bmp_bytes(5, 4, fn))),
-        ],
-        "media_id long, kind string, content binary",
-    )
-    rows = {r["media_id"]: r for r in decode_image(media).collect()}
-    assert (rows[1]["width"], rows[1]["height"]) == (5, 4)
-    assert (rows[2]["width"], rows[2]["height"]) == (5, 4)
-    for c in range(3):
-        assert abs(rows[1]["mean_rgb"][c] - rows[2]["mean_rgb"][c]) < 1e-5
-    # exact mean of the known generator for the red channel
-    expect_r = sum(x * 30 % 256 for x in range(5) for _ in range(4)) / 20
-    assert abs(rows[1]["mean_rgb"][0] - expect_r) < 1e-4
-
-
-def test_resize_ppm_real_nearest_neighbor(spark):
-    """Real PPM resize: 4×4 checkerboard → 2×2 via nearest neighbor picks
-    the exact source pixels; output re-encodes as valid PPM."""
-    from sec_dl_spark.operators.multimodal import _parse_ppm, resize_images
-
-    fn = lambda x, y: ((255, 0, 0) if (x // 2 + y // 2) % 2 == 0 else (0, 0, 255))
-    media = spark.createDataFrame(
-        [(1, "ppm", bytearray(_ppm_bytes(4, 4, fn)))],
-        "media_id long, kind string, content binary",
-    )
-    out = resize_images(media, width=2, height=2, with_real_decoders=True).collect()[0]
-    w, h, rgb = _parse_ppm(bytes(out["content"]))
-    assert (w, h) == (2, 2)
-    px = [tuple(rgb[i : i + 3]) for i in range(0, 12, 3)]
-    assert px == [(255, 0, 0), (0, 0, 255), (0, 0, 255), (255, 0, 0)]
+    want = bytes(c for y in range(4) for x in range(5) for c in fn(x, y))
+    assert _parse_ppm(_ppm_bytes(5, 4, fn)) == (5, 4, want)
+    assert _parse_bmp(_bmp_bytes(5, 4, fn)) == (5, 4, want)
 
 
 def test_decode_image_rejects_compressed_kinds(spark):
-    import pytest
-
-    from sec_dl_spark.operators.multimodal import decode_image
+    """Only PPM/BMP decode for real; a compressed image still needs the
+    absent codec library and must fail loudly, not hash silently."""
+    from sec_dl_spark.operators.multimodal import perceptual_hash
 
     media = spark.createDataFrame(
         [(1, "png", bytearray(b"\x89PNG\r\n"))],
         "media_id long, kind string, content binary",
     )
     with pytest.raises(Exception, match="NotImplementedError|PIL"):
-        decode_image(media).collect()
+        perceptual_hash(media).collect()
 
 
 def test_sample_frames_y4m_real_demux(spark):
-    """Real Y4M demux: a generated 2×2 4:2:0 clip at 25 fps sampled every
-    80 ms emits the nearest Y planes (frames 0, 2, 4); compressed
-    containers still raise."""
-    from sec_dl_spark.operators.multimodal import sample_frames
+    """Real Y4M demux (the select_keyframes decode path): a generated
+    2x2 4:2:0 clip at 25 fps yields its frame rate and every frame's Y
+    plane with the chroma skipped; compressed containers still raise."""
+    from sec_dl_spark.operators.multimodal import _parse_y4m, select_keyframes
 
     w = h = 2
-    header = b"YUV4MPEG2 W2 H2 F25:1 Ip A1:1 C420\n"
+    payload = bytearray(b"YUV4MPEG2 W2 H2 F25:1 Ip A1:1 C420\n")
     frames = []
-    payload = bytearray(header)
     for i in range(5):
         y = bytes([i * 10 + k for k in range(w * h)])
         frames.append(y)
         payload += b"FRAME\n" + y + b"\x00" * (w * h // 2)  # chroma stub
-
-    media = spark.createDataFrame(
-        [(1, "y4m", bytearray(bytes(payload)))],
-        "media_id long, kind string, content binary",
-    )
-    got = sorted(
-        (r["frame_idx"], r["frame_ms"], bytes(r["frame"]))
-        for r in sample_frames(media, every_ms=80, with_real_decoders=True).collect()
-    )
-    assert got == [(0, 0, frames[0]), (1, 80, frames[2]), (2, 160, frames[4])]
+    assert _parse_y4m(bytes(payload)) == (2, 2, 25.0, frames)
 
     bad = spark.createDataFrame(
         [(1, "mp4", bytearray(b"\x00\x00\x00 ftypmp42"))],
         "media_id long, kind string, content binary",
     )
-    import pytest
-
     with pytest.raises(Exception, match="NotImplementedError|av/ffmpeg"):
-        sample_frames(bad, with_real_decoders=True).collect()
+        select_keyframes(bad, with_real_decoders=True).collect()
 
 
 def test_select_keyframes_y4m_real_scene_change(spark):

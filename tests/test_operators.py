@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from sec_dl_spark.operators.dedup import (
-    exact_dedup,
     hamming_pairs,
     jaccard_pairs,
     minhash_lsh_pairs,
@@ -44,12 +43,25 @@ def test_sessionize_gap_boundaries(spark):
     assert sess == {(1, 0): 1, (1, 10): 1, (1, 45): 2, (2, 0): 1}
 
 
-def test_exact_dedup_keeps_lowest_id(spark):
-    df = spark.createDataFrame(
-        [(1, "Hello, World!"), (2, "hello world"), (3, "different doc")],
-        "doc_id long, text string",
+def test_exact_dedup_keeps_lowest_id(spark, tmp_path):
+    """The exact dedup gate (streaming/dedup.py) on one micro-batch:
+    documents whose canonical token stream matches keep the lowest
+    doc_id."""
+    schema = "doc_id long, text string"
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    spark.createDataFrame(
+        [(2, "hello world"), (1, "Hello, World!"), (3, "different doc")], schema
+    ).coalesce(1).write.parquet(src)
+    from sec_dl_spark.streaming.dedup import incremental_dedup_sink
+
+    q = incremental_dedup_sink(
+        spark.readStream.schema(schema).parquet(src),
+        f"{out}/accepted",
+        f"{out}/registry",
+        str(tmp_path / "ckpt"),
     )
-    kept = sorted(r["doc_id"] for r in exact_dedup(df).collect())
+    assert q.awaitTermination(120) and q.exception() is None
+    kept = sorted(r["doc_id"] for r in spark.read.parquet(f"{out}/accepted").collect())
     assert kept == [1, 3]  # 2 is a canonical-content dup of 1
 
 
@@ -969,35 +981,6 @@ def test_ivfpq_build_serve_matches_oneshot(spark):
     assert served == oneshot and len(served) > 0
 
 
-def test_ivfpq_persisted_index_roundtrip_and_pruning(spark, tmp_path):
-    """write_ivfpq_index / read_ivfpq_index round-trip: served results are
-    identical to the in-memory index, and the persisted encoded table is
-    partitioned by cell so serve-time candidate reads prune to the probed
-    cells' directories."""
-    import os
-
-    from sec_dl_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk,
-        read_ivfpq_index,
-        write_ivfpq_index,
-    )
-
-    emb = _clustered_embeddings(spark)
-    q = emb.where(F.col("vec_id").isin([0, 6, 12]))
-    idx = build_ivfpq_index(emb, n_cells=8, m=4, n_centroids=16)
-    path = str(tmp_path / "ivfpq")
-    write_ivfpq_index(idx, path)
-    # cell is a physical partition directory, the pruning unit
-    assert any(d.startswith("cell=") for d in os.listdir(f"{path}/encoded"))
-    loaded = read_ivfpq_index(spark, path)
-    assert loaded.centroids == idx.centroids
-    assert loaded.codebooks == idx.codebooks  # json float round-trip is exact
-    mem = {tuple(r) for r in ivfpq_topk(emb, idx, q, k=5).collect()}
-    disk = {tuple(r) for r in ivfpq_topk(emb, loaded, q, k=5).collect()}
-    assert disk == mem and len(disk) > 0
-
-
 def test_ivfpq_adc_decode_kernel_parity(spark):
     """The ADC lookup-table kernel scores cosine(query, PQ reconstruction)
     via per-subspace table probes — numerically the same quantity the
@@ -1064,21 +1047,21 @@ def test_mixture_sample_avalanche_and_salt_independence(spark):
     ids = multiples of 2^20, which share ALL low bits) and give genuinely
     decorrelated passes under different salts — a linear hash fails both
     (keeps 0% or 100% of the family; salts just shift the keep set)."""
-    from sec_dl_spark.operators.relational import deterministic_mixture_sample
+    from sec_dl_spark.operators.relational import mixture_keep_expr
 
     ids = spark.range(0, 2000).select(
         (F.col("id") * (1 << 20)).alias("doc_id"), F.lit("en").alias("lang")
     )
-    kept = deterministic_mixture_sample(ids, {"en": 0.3}).count()
+    kept = ids.where(mixture_keep_expr({"en": 0.3})).count()
     assert 0.25 * 2000 < kept < 0.35 * 2000, kept
 
     a = {
         r["doc_id"]
-        for r in deterministic_mixture_sample(ids, {"en": 0.3}, salt=1).collect()
+        for r in ids.where(mixture_keep_expr({"en": 0.3}, salt=1)).collect()
     }
     b = {
         r["doc_id"]
-        for r in deterministic_mixture_sample(ids, {"en": 0.3}, salt=2).collect()
+        for r in ids.where(mixture_keep_expr({"en": 0.3}, salt=2)).collect()
     }
     overlap = len(a & b) / 2000
     # independent 30% passes overlap ~9%; allow generous slack either side
@@ -1086,25 +1069,25 @@ def test_mixture_sample_avalanche_and_salt_independence(spark):
 
 
 def test_mixture_sample_empty_rates_uses_default(spark):
-    from sec_dl_spark.operators.relational import deterministic_mixture_sample
+    from sec_dl_spark.operators.relational import mixture_keep_expr
 
     ids = spark.range(0, 1000).select(
         F.col("id").alias("doc_id"), F.lit("en").alias("lang")
     )
-    kept = deterministic_mixture_sample(ids, {}, default_rate=0.5).count()
+    kept = ids.where(mixture_keep_expr({}, default_rate=0.5)).count()
     assert 400 < kept < 600, kept
 
 
 def test_mixture_sample_large_keys_ansi_safe(spark):
     """Keys above 2^31 must neither overflow (ANSI ArithmeticException /
     negative wrap) nor collapse to degenerate sampling."""
-    from sec_dl_spark.operators.relational import deterministic_mixture_sample
+    from sec_dl_spark.operators.relational import mixture_keep_expr
 
     ids = spark.range(0, 1000).select(
         (F.col("id") + F.lit(4_000_000_000)).alias("doc_id"),
         F.lit("en").alias("lang"),
     )
-    kept = deterministic_mixture_sample(ids, {"en": 0.3}).count()
+    kept = ids.where(mixture_keep_expr({"en": 0.3})).count()
     assert 0.2 * 1000 < kept < 0.4 * 1000, kept
 
 
@@ -1192,61 +1175,6 @@ def test_kmeans_np_survives_k_exceeding_sample_rows():
     # every centroid is one of the data points (reseeds cycle the sample)
     for c in centers:
         assert min(((X - c) ** 2).sum(axis=1)) < 1e-18
-
-
-def test_cms_counts_one_sided_bound(spark):
-    """Count-min estimates are NEVER below the true count, and with a
-    tight eps on this small corpus they should be exact for hot keys."""
-    from collections import Counter
-
-    from sec_dl_spark.operators.sketch import cms_counts
-
-    rows = [("a",)] * 500 + [("b",)] * 100 + [("c",)] * 7 + [(f"x{i}",) for i in range(200)]
-    df = spark.createDataFrame(rows, "k string")
-    true = Counter(r[0] for r in rows)
-    n = len(rows)
-    keys = ["a", "b", "c", "x0", "absent"]
-    est = cms_counts(df, "k", keys, eps=0.001, confidence=0.99)
-    for k in keys:
-        assert est[k] >= true.get(k, 0)  # one-sided: never undercounts
-        assert est[k] <= true.get(k, 0) + 0.001 * n + 1
-    again = cms_counts(df, "k", keys, eps=0.001, confidence=0.99)
-    assert est == again  # fixed seed → deterministic
-
-
-def test_bloom_membership_no_false_negatives(spark):
-    """Bloom membership: every present key answers True (no false
-    negatives, ever); a batch of absent probes stays under the
-    configured false-positive rate with slack."""
-    from sec_dl_spark.operators.sketch import bloom_membership
-
-    present = [f"k{i}" for i in range(1000)]
-    df = spark.createDataFrame([(k,) for k in present], "k string")
-    absent = [f"zz{i}" for i in range(1000)]
-    got = bloom_membership(df, "k", present + absent, expected_items=1000, fpp=0.01)
-    assert all(got[k] for k in present)
-    false_pos = sum(1 for a in absent if got[a])
-    assert false_pos <= 50  # 1% fpp with generous slack
-
-
-def test_hot_keys_detects_planted_skew(spark):
-    """Sample+sketch hot-key detection: planted heavy keys (20% / 5%)
-    surface, the long uniform tail does not, and detection is
-    deterministic — all without a groupBy shuffle keyed by the skewed
-    column."""
-    from sec_dl_spark.operators.skew import hot_keys
-
-    rows = (
-        [("whale",)] * 2000
-        + [("shark",)] * 500
-        + [(f"minnow{i % 400}",) for i in range(7500)]  # ~0.19% each
-    )
-    df = spark.createDataFrame(rows, "k string").repartition(8)
-    got = hot_keys(df, "k", min_fraction=0.03, sample_fraction=0.05)
-    assert got == ["shark", "whale"]
-    assert hot_keys(df, "k", min_fraction=0.03, sample_fraction=0.05) == got
-    # raising the bar past the second key's 5% leaves only the whale
-    assert hot_keys(df, "k", min_fraction=0.1, sample_fraction=0.05) == ["whale"]
 
 
 def test_semantic_dedup_kernels_agree(spark):
@@ -1660,7 +1588,7 @@ def test_interval_overlap_pairs_no_cross_product_plan(spark):
 
 def test_quality_rules_count_violations(spark):
     """Each rule kind counts exactly its violations: nulls, out-of-range
-    (nulls pass), out-of-set, regex, custom predicate, duplicate keys
+    (nulls pass), out-of-set, custom predicate, duplicate keys
     (extras beyond the first), and orphaned foreign keys (nulls pass)."""
     from sec_dl_spark.operators import quality as Q
 
@@ -1668,7 +1596,7 @@ def test_quality_rules_count_violations(spark):
         [
             (1, 10, "A", "ok-1"),
             (2, None, "A", "ok-2"),      # null qty: not_null flags, in_range passes
-            (2, 200, "X", "bad id"),     # dup key, out of range, out of set, bad format
+            (2, 200, "X", "bad id"),     # dup key, out of range, out of set
             (3, 5, "B", "ok-3"),
             (None, 5, "A", "ok-4"),      # null key
             (2, 7, "A", "ok-5"),         # third copy of key 2
@@ -1681,7 +1609,6 @@ def test_quality_rules_count_violations(spark):
         Q.not_null("qty"),
         Q.in_range("qty", 1, 100),
         Q.in_set("flag", ["A", "B"]),
-        Q.matches("label", r"^ok-\d$"),
         Q.satisfies("qty_odd_or_null", F.col("qty").isNull() | (F.col("qty") % 2 == 1)),
         Q.unique("k"),
         Q.references("k", parent, "pk"),
@@ -1692,7 +1619,6 @@ def test_quality_rules_count_violations(spark):
         "not_null(qty)": 1,
         "in_range(qty,1,100)": 1,
         "in_set(flag)": 1,
-        "matches(label)": 1,
         "satisfies(qty_odd_or_null)": 2,   # qty 10 and 200 are even
         "unique(k)": 2,                    # key 2 appears 3x -> 2 extras
         "references(k->pk)": 1,            # k=3 orphaned; null k passes
@@ -1960,23 +1886,15 @@ def test_assign_shards_balances_and_is_deterministic(spark):
     assert {r["id"]: r["shard"] for r in out2} == {r["id"]: r["shard"] for r in out}
 
 
-def test_udtf_sentence_split_and_token_spans(spark):
-    """The real @udtf classes: sentence splitting on punctuated text
-    (rule: punctuation + spaces ends a sentence) and token spans with
-    correct character offsets into the lowercased text."""
-    from sec_dl_spark.functions.udtf import sentence_udtf, token_spans_udtf
+def test_udtf_token_spans(spark):
+    """The real @udtf class: token spans with correct character offsets
+    into the lowercased text."""
+    from sec_dl_spark.functions.udtf import token_spans_udtf
 
-    spark.udtf.register("t_sent", sentence_udtf())
     spark.udtf.register("t_spans", token_spans_udtf())
     spark.createDataFrame(
         [(1, "Hi there. Second one!  Trailing? ")], "id long, text string"
     ).createOrReplaceTempView("udtf_t")
-
-    sents = spark.sql(
-        "SELECT s.* FROM udtf_t, LATERAL t_sent(text) s ORDER BY sent_idx"
-    ).collect()
-    assert [r["sentence"] for r in sents] == ["Hi there.", "Second one!", "Trailing?"]
-    assert [r["sent_idx"] for r in sents] == [0, 1, 2]
 
     spans = spark.sql(
         "SELECT s.* FROM udtf_t, LATERAL t_spans(text) s ORDER BY tok_idx"
@@ -2109,60 +2027,27 @@ def test_observed_metrics_ride_the_job(spark):
     assert got == {"n": 3, "n_null_v": 1, "max_v": 30.0}
 
 
-def test_partition_skew_report_flags_imbalance(spark):
-    """A frame repartitioned onto one hot key shows top-heavy shares; a
-    round-robin repartition shows near-equal ones."""
-    from pyspark.sql import functions as F
-
-    from sec_dl_spark.operators.quality import partition_skew_report
-
-    df = spark.range(1000).withColumn("k", F.lit(1))
-    skewed = df.repartition(8, "k")  # all rows hash to one partition
-    rep = partition_skew_report(skewed).collect()
-    assert rep[0]["n_rows"] == 1000 and rep[0]["frac_of_max"] == 1.0
-    assert all(r["n_rows"] == 0 or r["frac_of_max"] in (0.0, 1.0) for r in rep)
-
-    even = partition_skew_report(df.repartition(8)).collect()
-    assert sum(r["n_rows"] for r in even) == 1000
-    assert min(r["n_rows"] for r in even) > 0
-
-
-def test_map_in_arrow_normalize_parity(spark):
-    """mapInArrow zero-copy L2 kernel == the expression normalize_vec,
-    including ragged lengths and an all-zero vector."""
+def test_normalize_vec_matches_python_l2(spark):
+    """The expression normalize_vec == a plain-Python L2 normalization,
+    including ragged lengths."""
     import math
 
     from pyspark.sql import functions as F
 
-    from sec_dl_spark.operators.similarity import normalize_vec, normalize_vecs_arrow
+    from sec_dl_spark.operators.similarity import normalize_vec
 
-    df = spark.createDataFrame(
-        [
-            (1, [3.0, 4.0]),
-            (2, [1.0, 1.0, 1.0, 1.0]),
-            (3, [0.0, 0.0]),
-            (4, [5.0]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    arrow = {
-        r["vec_id"]: r["unit"] for r in normalize_vecs_arrow(df).collect()
-    }
-    # the expression form divides by the norm (ANSI: zero vector throws),
-    # so the parity set is the non-zero rows; the arrow kernel GUARDS the
-    # zero vector instead — assert that difference explicitly
-    expr = {
+    vecs = {1: [3.0, 4.0], 2: [1.0, 1.0, 1.0, 1.0], 4: [5.0]}
+    df = spark.createDataFrame(list(vecs.items()), "vec_id long, embedding array<double>")
+    got = {
         r["vec_id"]: r["unit"]
-        for r in df.where("vec_id <> 3")
-        .select("vec_id", normalize_vec(F.col("embedding")).alias("unit"))
-        .collect()
+        for r in df.select("vec_id", normalize_vec(F.col("embedding")).alias("unit")).collect()
     }
-    for k in expr:
-        assert len(arrow[k]) == len(expr[k])
-        for a, b in zip(arrow[k], expr[k]):
-            assert math.isclose(a, b, rel_tol=1e-12)
-    assert arrow[3] == [0.0, 0.0]  # zero vector guarded, not NaN/error
-    assert math.isclose(sum(x * x for x in arrow[1]), 1.0, rel_tol=1e-12)
+    for k, v in vecs.items():
+        n = math.sqrt(sum(x * x for x in v))
+        assert len(got[k]) == len(v)
+        for a, b in zip(got[k], v):
+            assert math.isclose(a, b / n, rel_tol=1e-12)
+    assert math.isclose(sum(x * x for x in got[2]), 1.0, rel_tol=1e-12)
 
 
 def test_gram_matrix_matches_numpy_and_partitioning(spark):
@@ -2235,6 +2120,27 @@ def test_bloom_prefilter_join_exact_and_pruning(spark):
     plan = pre._jdf.queryExecution().executedPlan().toString().lower()
     assert "exchange" not in plan
     assert "python" not in plan
+
+
+def test_bloom_membership_no_false_negatives(spark):
+    """Bloom membership (bloom_build + bloom_might_contain) over string
+    keys: every present key answers True (no false negatives, ever); a
+    batch of absent probes stays under the ~0.1% false-positive rate of
+    16 bits/key and 5 hashes, with generous slack."""
+    from sec_dl_spark.operators.relational import bloom_build, bloom_might_contain
+
+    present = [f"k{i}" for i in range(1000)]
+    absent = [f"zz{i}" for i in range(1000)]
+    bf = bloom_build(
+        spark.createDataFrame([(k,) for k in present], "k string"), "k", m_bits=1 << 14
+    )
+    probes = spark.createDataFrame([(k,) for k in present + absent], "k string")
+    got = {
+        r["k"]: r["hit"]
+        for r in probes.select("k", bloom_might_contain(bf, F.col("k")).alias("hit")).collect()
+    }
+    assert all(got[k] for k in present)
+    assert sum(1 for a in absent if got[a]) <= 50
 
 
 def test_bloom_build_rejects_bad_width(spark):
@@ -2463,11 +2369,12 @@ def test_crossencoder_rerank_plumbing(spark):
 
 def test_range_checksums_localize_divergence(spark):
     """Two replicas differing in exactly one row (one changed, one
-    missing) — checksum_diff reports exactly the buckets containing them,
-    with per-side counts that tell the repair job what to fetch."""
+    missing) — their range digests disagree in exactly the buckets
+    containing them, with per-side counts that tell the repair job what
+    to fetch; identical replicas digest identically."""
     from pyspark.sql import functions as F
 
-    from sec_dl_spark.operators.quality import checksum_diff, range_checksums
+    from sec_dl_spark.operators.quality import range_checksums
 
     a = spark.range(0, 5000).select(
         F.col("id").alias("k"), (F.col("id") * 7 % 97).alias("v")
@@ -2477,15 +2384,18 @@ def test_range_checksums_localize_divergence(spark):
         "v", F.when(F.col("k") == 1234, F.lit(-1)).otherwise(F.col("v"))
     ).where(F.col("k") != 4321)
 
-    ca = range_checksums(a, "k", ["k", "v"], bucket_width=100)
-    cb = range_checksums(b, "k", ["k", "v"], bucket_width=100)
-    diff = {r["bucket"]: r for r in checksum_diff(ca, cb).collect()}
-    assert set(diff) == {12, 43}
-    assert diff[12]["n_rows_a"] == diff[12]["n_rows_b"]  # corrupt, not missing
-    assert diff[43]["n_rows_a"] == diff[43]["n_rows_b"] + 1  # missing row
+    def digests(df):
+        return {
+            r["bucket"]: (r["n_rows"], r["checksum"])
+            for r in range_checksums(df, "k", ["k", "v"], bucket_width=100).collect()
+        }
 
-    # identical replicas → empty diff
-    assert checksum_diff(ca, range_checksums(a, "k", ["k", "v"], 100)).count() == 0
+    da, db = digests(a), digests(b)
+    assert set(da) == set(db) == set(range(50))
+    assert {k for k in da if da[k] != db[k]} == {12, 43}
+    assert da[12][0] == db[12][0]  # corrupt, not missing
+    assert da[43][0] == db[43][0] + 1  # missing row
+    assert digests(a) == da  # identical replicas → identical digests
 
 
 def test_join_delta_equals_view_difference(spark):
@@ -2586,6 +2496,39 @@ def test_procrustes_align_recovers_planted_rotation(spark):
         ).alias("se")
     ).agg(F.sum("se").alias("t")).collect()[0]["t"]
     assert resid < 1e-18
+
+
+def test_cms_counts_one_sided_bound(spark):
+    """Count-min estimates (cms_build + cms_estimate over string keys
+    hashed to int64 upstream) are NEVER below the true count, and with
+    width e/eps for eps = 0.001 they stay within eps·N + 1 of it; the
+    fixed hash family makes them deterministic."""
+    from collections import Counter
+
+    from sec_dl_spark.operators.sketch import cms_build, cms_estimate
+
+    rows = [("a",)] * 500 + [("b",)] * 100 + [("c",)] * 7 + [(f"x{i}",) for i in range(200)]
+    df = spark.createDataFrame(rows, "k string").select("k", F.xxhash64("k").alias("kh"))
+    true = Counter(r[0] for r in rows)
+    n = len(rows)
+    keys = ["a", "b", "c", "x0", "absent"]
+    probes = spark.createDataFrame([(k,) for k in keys], "k string").select(
+        "k", F.xxhash64("k").alias("kh")
+    )
+    key_of = {r["kh"]: r["k"] for r in probes.collect()}
+
+    def estimate():
+        sketch = cms_build(df, "kh", width=2719, depth=5)
+        return {
+            key_of[r["kh"]]: r["cms_est"]
+            for r in cms_estimate(sketch, probes, "kh", width=2719, depth=5).collect()
+        }
+
+    est = estimate()
+    for k in keys:
+        assert est[k] >= true.get(k, 0)  # one-sided: never undercounts
+        assert est[k] <= true.get(k, 0) + 0.001 * n + 1
+    assert estimate() == est
 
 
 def test_cms_build_estimate_properties(spark):

@@ -835,13 +835,20 @@ def test_zorder_layout_single_range_exchange(spark):
 
 
 def test_hilbert_layout_single_range_exchange(spark):
-    """Same shuffle contract for the Hilbert layout: the unrolled
-    rotate/reflect recurrence stays one codegen projection, and the
-    re-layout costs exactly its one inherent range exchange."""
-    from sec_dl_spark.operators.layout import hilbert_layout
+    """Same shuffle contract for a layout on the Hilbert key: the
+    unrolled rotate/reflect recurrence of with_hilbert_key stays one
+    codegen projection, and the re-layout costs exactly its one
+    inherent range exchange."""
+    from sec_dl_spark.operators.layout import with_hilbert_key
 
     df = spark.range(10_000).selectExpr("id % 100 AS x", "id % 97 AS y")
-    plan = physical_plan(hilbert_layout(df, "x", "y", num_files=8, bits=8))
+    laid = (
+        with_hilbert_key(df, "x", "y", out="hk", bits=8)
+        .repartitionByRange(8, "hk")
+        .sortWithinPartitions("hk")
+        .drop("hk")
+    )
+    plan = physical_plan(laid)
     assert plan.count("Exchange") == 1
     assert "rangepartitioning" in plan.lower()
     assert "CartesianProduct" not in plan

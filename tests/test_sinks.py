@@ -144,195 +144,3 @@ def test_jdbc_roundtrip_embedded_derby(spark, tmp_path):
     pruned = back.select("cik")  # S4: column-pruned JDBC scan
     assert sorted(r["cik"] for r in pruned.collect()) == [100, 200, 300]
     assert pruned.columns == ["cik"]
-
-
-def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
-    import glob
-    import os
-
-    from sec_dl_spark.sinks.compact import merge_upsert_partitioned
-
-    path = str(tmp_path / "filings_text")
-    base = spark.createDataFrame(
-        [
-            (1, "old one", 2023, 1),
-            (2, "old two", 2023, 1),
-            (3, "old three", 2023, 2),
-            (4, "old four", 2024, 1),
-        ],
-        "filing_id long, text string, year int, qtr int",
-    )
-    base.write.partitionBy("year", "qtr").parquet(path)
-    untouched_files = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/year=2024/**/*.parquet", recursive=True)
-    }
-    assert untouched_files
-
-    updates = spark.createDataFrame(
-        [(2, "NEW two", 2023, 1), (9, "brand new", 2023, 2)],
-        "filing_id long, text string, year int, qtr int",
-    )
-    merge_upsert_partitioned(spark, path, updates, ["filing_id"], ["year", "qtr"])
-
-    got = {r["filing_id"]: r["text"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "old one", 2: "NEW two", 3: "old three", 4: "old four", 9: "brand new"}
-    # the 2024 partition was not rewritten
-    for f, mtime in untouched_files.items():
-        assert os.path.getmtime(f) == mtime and os.path.exists(f)
-
-
-def test_targeted_delete_rewrites_only_touched_partitions(spark, tmp_path):
-    import glob
-    import os
-
-    from sec_dl_spark.sinks.compact import delete_rows_partitioned
-
-    path = str(tmp_path / "docs_lake")
-    base = spark.createDataFrame(
-        [(i, f"text {i}", i % 2) for i in range(10)],
-        "doc_id long, text string, part int",
-    )
-    base.write.partitionBy("part").parquet(path)
-    part0_files = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/part=0/**/*.parquet", recursive=True)
-    }
-
-    doomed = spark.createDataFrame([(1,), (3,), (999,)], "doc_id long")  # all in part=1
-    n = delete_rows_partitioned(spark, path, doomed, ["doc_id"], ["part"])
-    assert n == 2
-    left = {r["doc_id"] for r in spark.read.parquet(path).collect()}
-    assert left == {0, 2, 4, 5, 6, 7, 8, 9}
-    for f, mtime in part0_files.items():  # untouched partition preserved
-        assert os.path.exists(f) and os.path.getmtime(f) == mtime
-    # no-op delete returns 0 and changes nothing
-    assert delete_rows_partitioned(spark, path, doomed, ["doc_id"], ["part"]) == 0
-
-
-def test_targeted_delete_removes_fully_emptied_partition(spark, tmp_path):
-    """A takedown batch that dooms EVERY row of a partition must remove that
-    partition from disk — dynamic overwrite alone skips partitions absent
-    from the survivors frame (right-to-be-forgotten safety)."""
-    import os
-
-    from sec_dl_spark.sinks.compact import delete_rows_partitioned
-
-    path = str(tmp_path / "docs_lake")
-    base = spark.createDataFrame(
-        [(i, f"text {i}", i % 3) for i in range(9)],
-        "doc_id long, text string, part int",
-    )
-    base.write.partitionBy("part").parquet(path)
-
-    # part=1 holds exactly {1, 4, 7} — doom all of them plus one row of part=2
-    doomed = spark.createDataFrame([(1,), (4,), (7,), (2,)], "doc_id long")
-    n = delete_rows_partitioned(spark, path, doomed, ["doc_id"], ["part"])
-    assert n == 4
-    assert not os.path.isdir(f"{path}/part=1")  # emptied partition gone
-    left = {r["doc_id"] for r in spark.read.parquet(path).collect()}
-    assert left == {0, 3, 6, 5, 8}
-    parts = {r["part"] for r in spark.read.parquet(path).select("part").distinct().collect()}
-    assert parts == {0, 2}
-
-
-def test_targeted_delete_emptying_every_touched_partition(spark, tmp_path):
-    """All touched partitions emptied at once (survivors frame is empty):
-    the overwrite writes nothing, the explicit cleanup must still fire."""
-    import os
-
-    from sec_dl_spark.sinks.compact import delete_rows_partitioned
-
-    path = str(tmp_path / "docs_lake")
-    spark.createDataFrame(
-        [(0, "a", 0), (1, "b", 1), (2, "c", 1)],
-        "doc_id long, text string, part int",
-    ).write.partitionBy("part").parquet(path)
-
-    doomed = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    assert delete_rows_partitioned(spark, path, doomed, ["doc_id"], ["part"]) == 2
-    assert not os.path.isdir(f"{path}/part=1")
-    left = {r["doc_id"] for r in spark.read.parquet(path).collect()}
-    assert left == {0}
-import os
-
-from pyspark.sql import functions as F
-
-
-def test_jsonl_round_trip_with_quarantine(spark, tmp_path):
-    """Good lines parse to the schema, malformed lines land in quarantine
-    verbatim, missing optional fields are nulls (not corrupt), and a
-    write->read round trip preserves values."""
-    from sec_dl_spark.sources.jsonl import (
-        jsonl_health,
-        read_jsonl_corpus,
-        write_jsonl_shards,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "web"}\n'
-        '{"doc_id": 2, "text": "bonjour", "lang": "fr"}\n'
-        "this is not json\n"
-        '{"doc_id": "not-a-long", "text": "bad type"}\n'
-        '{"doc_id": 3, "text": "ok", "meta": {"k": "v"}}\n'
-    )
-    good, quarantine = read_jsonl_corpus(spark, str(src))
-    rows = {r["doc_id"]: r for r in good.collect()}
-    assert set(rows) == {1, 2, 3}
-    assert rows[2]["source"] is None          # missing optional -> null
-    assert rows[3]["meta"] == {"k": "v"}
-    bad = [r["_corrupt_record"] for r in quarantine.collect()]
-    assert "this is not json" in bad
-    assert any("not-a-long" in b for b in bad)
-    h = jsonl_health(good, quarantine)
-    assert h == {"rows": 3, "quarantined": 2, "bad_fraction": 2 / 5}
-
-    out = tmp_path / "out"
-    shards = write_jsonl_shards(good, str(out), compression=None)
-    assert shards == 1
-    good2, q2 = read_jsonl_corpus(spark, str(out))
-    assert {r["doc_id"]: r["text"] for r in good2.collect()} == {
-        1: "hello world", 2: "bonjour", 3: "ok"
-    }
-    assert q2.count() == 0
-
-
-def test_jsonl_shard_sizing_scales_with_bytes(spark, tmp_path):
-    """Shard count tracks estimated serialized bytes / target: ~200 rows
-    of ~120-byte lines at a 4 KB target needs ~6 shards, and the output
-    directory carries that many part files."""
-    from sec_dl_spark.sources.jsonl import write_jsonl_shards
-
-    df = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("x" * 100), F.col("id").cast("string")).alias("text"),
-        F.lit("en").alias("lang"),
-        F.lit("synthetic").alias("source"),
-    )
-    out = tmp_path / "sharded"
-    shards = write_jsonl_shards(
-        df, str(out), target_shard_bytes=4096, compression=None
-    )
-    assert shards >= 4
-    parts = [p for p in os.listdir(out) if p.startswith("part-")]
-    assert len(parts) == shards
-    # empty frame still writes one shard
-    assert write_jsonl_shards(df.where(F.lit(False)), str(tmp_path / "e"), compression=None) == 1
-
-
-def test_jsonl_gzip_round_trip(spark, tmp_path):
-    """Compressed shards read back identically (codec path, not a
-    plain-text fallback)."""
-    from sec_dl_spark.sources.jsonl import read_jsonl_corpus, write_jsonl_shards
-
-    df = spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
-        F.lit("en").alias("lang"),
-        F.lit("s").alias("source"),
-    )
-    out = tmp_path / "gz"
-    write_jsonl_shards(df, str(out), compression="gzip")
-    assert any(p.endswith(".gz") for p in os.listdir(out) if p.startswith("part-"))
-    good, q = read_jsonl_corpus(spark, str(out))
-    assert good.count() == 50 and q.count() == 0

@@ -1,18 +1,14 @@
-"""Structured Streaming twins: real readStream → memory-sink runs over the
-events fixture, checked against the equivalent batch computation."""
+"""Streaming sinks over real readStream sources — the foreachBatch
+starter, compaction, the cross-batch dedup gate in both commit modes, the
+atomic manifest log, the incremental FTS index and HLL partials — each
+checked against the equivalent batch computation."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from sec_dl_spark.sources.fixtures import load_table
-from sec_dl_spark.streaming.pipeline import (
-    dedup_events,
-    read_events_stream,
-    run_agg_stream_to_memory,
-    run_stream_to_memory,
-    session_counts,
-    windowed_counts,
-)
 
 
 @pytest.fixture(scope="module")
@@ -26,38 +22,6 @@ def events_dir(spark, tmp_path_factory):
     return d
 
 
-def test_windowed_counts_stream_matches_batch(spark, events_dir):
-    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-    result = run_agg_stream_to_memory(windowed_counts(stream), "win_counts")
-    batch = spark.read.parquet(events_dir)
-    expected = (
-        batch.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .count()
-    )
-    got = result.collect()
-    assert len(got) == expected
-    assert sum(r["n"] for r in got) == batch.count()
-
-
-def test_dedup_events_stream(spark, events_dir):
-    stream = read_events_stream(spark, events_dir)
-    # duplicate the stream source rows by unioning with itself → dedup must
-    # return each event_id once
-    deduped = dedup_events(stream.union(stream))
-    result = run_stream_to_memory(deduped, "dedup_events")
-    n_ids = spark.read.parquet(events_dir).select("event_id").distinct().count()
-    assert result.select("event_id").distinct().count() == n_ids
-    assert result.count() == n_ids
-
-
-def test_session_counts_stream_runs(spark, events_dir):
-    stream = read_events_stream(spark, events_dir)
-    result = run_agg_stream_to_memory(session_counts(stream, gap="30 minutes"), "sess_counts")
-    batch_events = spark.read.parquet(events_dir).count()
-    assert sum(r["n_events"] for r in result.collect()) == batch_events
-
-
 def test_foreach_batch_sink(spark, events_dir, tmp_path):
     from sec_dl_spark.streaming.commit import foreach_batch_sink
 
@@ -66,79 +30,15 @@ def test_foreach_batch_sink(spark, events_dir, tmp_path):
     def collect_batch(df, batch_id):
         seen.append((batch_id, df.count()))
 
-    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
+    stream = (
+        spark.readStream.schema(spark.read.parquet(events_dir).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(events_dir)
+    )
     q = foreach_batch_sink(stream, collect_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     assert sum(n for _, n in seen) == spark.read.parquet(events_dir).count()
     assert len(seen) >= 2  # maxFilesPerTrigger=1 over 2 files
-
-
-def test_running_user_totals_stateful(spark, events_dir):
-    from sec_dl_spark.streaming.pipeline import running_user_totals
-
-    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-    from sec_dl_spark.streaming.pipeline import run_update_stream_to_memory
-
-    got = run_update_stream_to_memory(
-        running_user_totals(stream), "running_totals_t", timeout_s=180
-    )
-    # update-mode emits one row per user per batch touching them; the LAST
-    # emission per user must equal the batch-computed totals.
-    batch = load_table(spark, "/root/testdata/sf0.001", "events")
-    expected = {
-        r["user_id"]: (r["n"], r["tv"])
-        for r in batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("tv"))
-        .collect()
-    }
-    # keep only each user's max-n emission (the final state)
-    best: dict = {}
-    for r in got.collect():
-        cur = best.get(r["user_id"])
-        if cur is None or r["n_events"] > cur[0]:
-            best[r["user_id"]] = (r["n_events"], r["total_value"])
-    assert best == expected
-
-
-def test_stream_static_dim_join(spark, events_dir):
-    """Stream-static enrichment join: the streaming side joins a broadcast
-    static dimension per micro-batch (the EDGAR shape: filings stream ⋈
-    company universe)."""
-    dim = spark.createDataFrame(
-        [(i, f"tier{i % 3}") for i in range(200)], "user_id long, tier string"
-    )
-    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-    enriched = stream.join(F.broadcast(dim), "user_id", "left")
-    got = run_stream_to_memory(enriched, "stream_dim_join_t", timeout_s=120)
-    batch = load_table(spark, "/root/testdata/sf0.001", "events").join(
-        F.broadcast(dim), "user_id", "left"
-    )
-    assert got.count() == batch.count()
-    assert got.where(F.col("tier").isNull()).count() == batch.where(F.col("tier").isNull()).count()
-
-
-def test_stream_stream_interval_join(spark, events_dir):
-    from sec_dl_spark.streaming.pipeline import purchases_with_recent_clicks
-
-    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-    got = run_stream_to_memory(
-        purchases_with_recent_clicks(stream), "ss_join_t", timeout_s=180
-    )
-    # batch equivalent over the same data
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    p = ev.where(F.col("event_type") == "purchase").selectExpr(
-        "user_id AS p_user", "event_id AS purchase_id", "ts AS p_ts"
-    )
-    c = ev.where(F.col("event_type") == "click").selectExpr("user_id AS c_user", "ts AS c_ts")
-    batch_n = (
-        p.join(
-            c,
-            F.expr("p_user = c_user AND c_ts <= p_ts AND c_ts >= p_ts - INTERVAL 1 HOUR"),
-        ).count()
-    )
-    # stream may drop late rows beyond the watermark; with in-order fixture
-    # files the counts must match exactly
-    assert got.count() == batch_n
 
 
 def test_compaction_preserves_data_and_reduces_files(spark, tmp_path):
@@ -237,84 +137,6 @@ def test_incremental_dedup_across_batches(spark, tmp_path_factory):
     assert {r["canonical_id"] for r in reg.collect()} == {1, 2, 11}
 
 
-def test_incremental_minhash_neardup_across_batches(spark, tmp_path_factory):
-    """Streaming NEAR-dup gate: a later batch's lightly-edited copy of an
-    accepted document drops via the persisted band registry; unrelated
-    content passes; in-batch near-dups collapse to the smallest id."""
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.streaming.dedup import incremental_minhash_dedup_sink
-
-    src = tmp_path_factory.mktemp("nd_stream")
-    accepted = str(tmp_path_factory.mktemp("nd_out") / "accepted")
-    registry = str(tmp_path_factory.mktemp("nd_reg") / "registry")
-    ckpt = str(tmp_path_factory.mktemp("nd_ckpt"))
-
-    base = " ".join(f"alpha{i}" for i in range(60))
-    near = base.replace("alpha30", "edited")          # jaccard ≈ 0.9+
-    other = " ".join(f"beta{i}" for i in range(60))
-    other_near = other.replace("beta7", "tweaked")
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    b1 = spark.createDataFrame([(1, base), (2, other)], schema)
-    b2 = spark.createDataFrame(
-        [(10, near), (11, "gamma delta " * 30), (12, other_near)], schema
-    )
-    b1.coalesce(1).write.mode("overwrite").parquet(f"{src}/b=1")
-    b2.coalesce(1).write.mode("overwrite").parquet(f"{src}/b=2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    q = incremental_minhash_dedup_sink(stream, accepted, registry, ckpt)
-    q.awaitTermination(180)
-
-    kept = {r["doc_id"] for r in spark.read.parquet(accepted).collect()}
-    # 10 near-dups 1 (historical), 12 near-dups 2 (historical); 11 is new
-    assert kept == {1, 2, 11}
-
-
-def test_neardup_registry_survives_compaction(spark, tmp_path_factory):
-    """The band registry is an append-only partitioned lake table, so it
-    compacts with the standard maintenance operator; a SECOND ingest run
-    after compaction still drops near-dups of the first run's accepts."""
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.sinks.compact import compact_parquet
-    from sec_dl_spark.streaming.dedup import incremental_minhash_dedup_sink
-
-    accepted = str(tmp_path_factory.mktemp("c_out") / "accepted")
-    registry = str(tmp_path_factory.mktemp("c_reg") / "registry")
-
-    base = " ".join(f"alpha{i}" for i in range(60))
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-
-    def run_ingest(rows, tag):
-        src = tmp_path_factory.mktemp(f"c_src_{tag}")
-        ckpt = str(tmp_path_factory.mktemp(f"c_ckpt_{tag}"))
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-            f"{src}/b"
-        )
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{src}/b")
-        )
-        incremental_minhash_dedup_sink(stream, accepted, registry, ckpt).awaitTermination(120)
-
-    run_ingest([(1, base)], "r1")
-    # full partition spec: (run, batch) commit scoping + band pruning
-    compact_parquet(spark, registry, ["ingest_run", "ingest_batch", "band"])
-    run_ingest([(10, base.replace("alpha30", "edited")), (11, "omega " * 40)], "r2")
-
-    kept = {r["doc_id"] for r in spark.read.parquet(accepted).collect()}
-    assert kept == {1, 11}  # 10 near-dups run-1's doc 1 via the compacted registry
-
-
 def test_incremental_dedup_batch_retry_is_idempotent(spark, tmp_path_factory):
     """A foreachBatch retry AFTER the registry append must neither duplicate
     rows in the accepted sink nor judge its own documents historical
@@ -357,49 +179,6 @@ def test_incremental_dedup_batch_retry_is_idempotent(spark, tmp_path_factory):
     )
     assert first == again == [(1, "alpha beta"), (2, "wholly unrelated text")]
     assert spark.read.parquet(registry).count() == 2
-
-
-def test_incremental_winnow_overlap_gate_across_batches(spark, tmp_path_factory):
-    """Streaming partial-overlap gate: a later batch's document that copies
-    a passage from an accepted document drops via the persisted winnow
-    fingerprint registry; unrelated content passes; in-batch copies
-    collapse to the smallest id."""
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.streaming.dedup import incremental_winnow_dedup_sink
-
-    src = tmp_path_factory.mktemp("wn_stream")
-    accepted = str(tmp_path_factory.mktemp("wn_out") / "accepted")
-    registry = str(tmp_path_factory.mktemp("wn_reg") / "registry")
-    ckpt = str(tmp_path_factory.mktemp("wn_ckpt"))
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    passage = " ".join(f"shared{i} word{i}" for i in range(12))  # 24-token run
-    b1 = spark.createDataFrame(
-        [(1, f"opening remarks {passage} closing remarks")], schema
-    )
-    b2 = spark.createDataFrame(
-        [
-            (10, f"totally new framing then {passage} and a different tail"),
-            (11, "independent fresh content with nothing copied at all here today"),
-        ],
-        schema,
-    )
-    b1.coalesce(1).write.mode("overwrite").parquet(f"{src}/b=1")
-    b2.coalesce(1).write.mode("overwrite").parquet(f"{src}/b=2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    q = incremental_winnow_dedup_sink(stream, accepted, registry, ckpt)
-    q.awaitTermination(120)
-
-    kept = {r["doc_id"] for r in spark.read.parquet(accepted).collect()}
-    assert kept == {1, 11}  # 10 copies an accepted passage -> dropped
 
 
 def test_incremental_index_stats_and_replay_idempotency(spark, tmp_path_factory):
@@ -603,7 +382,7 @@ def test_atomic_commit_two_interleaved_writers(spark, tmp_path_factory):
     the loser's staging output is withdrawn, and a reader sees one
     writer's rows in full, never a torn mix."""
     from sec_dl_spark.streaming.atomic import (
-        atomic_commit_batch,
+        atomic_commit_outputs,
         is_committed,
         read_committed,
     )
@@ -615,9 +394,9 @@ def test_atomic_commit_two_interleaved_writers(spark, tmp_path_factory):
     # deterministic interleave: both stage before either commits is the
     # worst case the dynamic-overwrite commit could not survive; here the
     # second rename must lose cleanly
-    assert atomic_commit_batch(a, sink, "r1", 0) is True
+    assert atomic_commit_outputs({"data": (a, sink)}, sink, "r1", 0) is True
     assert is_committed(spark, sink, "r1", 0)
-    assert atomic_commit_batch(b, sink, "r1", 0) is False
+    assert atomic_commit_outputs({"data": (b, sink)}, sink, "r1", 0) is False
 
     got = read_committed(spark, sink)
     rows = {(r["id"], r["src"]) for r in got.collect()}
@@ -636,13 +415,13 @@ def test_atomic_commit_concurrent_threads_one_winner(spark, tmp_path_factory):
     rename wins and the published rows are one attempt's data in full."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from sec_dl_spark.streaming.atomic import atomic_commit_batch, read_committed
+    from sec_dl_spark.streaming.atomic import atomic_commit_outputs, read_committed
 
     sink = str(tmp_path_factory.mktemp("atomic_threads") / "sink")
 
     def attempt(tag):
         df = spark.range(0, 4).selectExpr("id", f"'{tag}' AS src")
-        return tag, atomic_commit_batch(df, sink, "r1", 7)
+        return tag, atomic_commit_outputs({"data": (df, sink)}, sink, "r1", 7)
 
     with ThreadPoolExecutor(max_workers=4) as ex:
         results = list(ex.map(attempt, ["t0", "t1", "t2", "t3"]))
@@ -655,12 +434,12 @@ def test_atomic_commit_concurrent_threads_one_winner(spark, tmp_path_factory):
 def test_atomic_commit_reader_isolation_and_multi_batch(spark, tmp_path_factory):
     """Different (run, batch) commits coexist; a crashed attempt that
     staged data but never committed is invisible to readers."""
-    from sec_dl_spark.streaming.atomic import atomic_commit_batch, read_committed
+    from sec_dl_spark.streaming.atomic import atomic_commit_outputs, read_committed
 
     sink = str(tmp_path_factory.mktemp("atomic_multi") / "sink")
     assert read_committed(spark, sink) is None
-    assert atomic_commit_batch(spark.range(3).selectExpr("id"), sink, "r1", 0)
-    assert atomic_commit_batch(spark.range(3, 5).selectExpr("id"), sink, "r1", 1)
+    for batch_id, df in enumerate([spark.range(3), spark.range(3, 5)]):
+        assert atomic_commit_outputs({"data": (df.selectExpr("id"), sink)}, sink, "r1", batch_id)
     # a crashed writer: staging landed, manifest rename never happened
     spark.range(900, 950).selectExpr("id").write.parquet(
         f"{sink}/_staging/r1-2-deadbeef0000"
@@ -671,6 +450,29 @@ def test_atomic_commit_reader_isolation_and_multi_batch(spark, tmp_path_factory)
         (r["ingest_run"], r["ingest_batch"]) for r in got.select("ingest_run", "ingest_batch").collect()
     }
     assert batches == {("r1", 0), ("r1", 1)}
+
+
+def test_atomic_log_recreated_at_same_path_reads_new_commits(spark, tmp_path_factory):
+    """A log directory deleted and recreated at the same path serves the
+    NEW log's commits: manifests are re-read on every scan, so the first
+    log's v1.json never answers for the second's."""
+    import shutil
+
+    from sec_dl_spark.streaming.atomic import atomic_commit_outputs, read_committed
+
+    sink = str(tmp_path_factory.mktemp("atomic_recreate") / "log")
+    first = spark.range(3).selectExpr("id", "'r1' AS src")
+    assert atomic_commit_outputs({"data": (first, sink)}, sink, "r1", 0)
+    assert {r["src"] for r in read_committed(spark, sink).collect()} == {"r1"}
+
+    shutil.rmtree(sink)
+    second = spark.range(10, 12).selectExpr("id", "'r2' AS src")
+    assert atomic_commit_outputs({"data": (second, sink)}, sink, "r2", 0)
+    got = read_committed(spark, sink)
+    assert {(r["id"], r["src"], r["ingest_run"]) for r in got.collect()} == {
+        (10, "r2", "r2"),
+        (11, "r2", "r2"),
+    }
 
 
 def test_atomic_dedup_sink_replay_and_zombie_commit(spark, tmp_path_factory):
@@ -744,166 +546,6 @@ def test_atomic_dedup_sink_replay_and_zombie_commit(spark, tmp_path_factory):
         for r in read_committed(spark, registry, "accepted").collect()
     }
     assert final == got
-
-
-def test_ann_query_sink_matches_batch_serving(spark, tmp_path_factory):
-    """Streaming ANN serving: two micro-batches of queries answered from
-    the persisted IVF-PQ index produce exactly the rows batch ivfpq_topk
-    returns for the same queries — serving is stateless per batch, so
-    stream/batch parity must be exact."""
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk,
-        read_ivfpq_index,
-        write_ivfpq_index,
-    )
-    from sec_dl_spark.streaming.ann import ann_query_sink
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    index_path = str(tmp_path_factory.mktemp("ann_idx") / "ivfpq")
-    out_path = str(tmp_path_factory.mktemp("ann_out") / "results")
-    ckpt = str(tmp_path_factory.mktemp("ann_ckpt") / "ckpt")
-    qsrc = tmp_path_factory.mktemp("ann_queries")
-
-    write_ivfpq_index(build_ivfpq_index(emb, n_cells=8), index_path)
-
-    q1 = emb.where(F.col("vec_id") < 3)
-    q2 = emb.where(F.col("vec_id").between(3, 5))
-    q1.coalesce(1).write.parquet(f"{qsrc}/f0")
-    q2.coalesce(1).write.parquet(f"{qsrc}/f1")
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{qsrc}/*")
-    )
-    ann_query_sink(stream, emb, index_path, out_path, ckpt, k=5).awaitTermination(180)
-
-    got = {
-        (r["query_id"], r["neighbor_id"], r["cosine_sim"], r["rank"])
-        for r in spark.read.parquet(out_path).collect()
-    }
-    idx = read_ivfpq_index(spark, index_path)
-    expect = {
-        tuple(r)
-        for r in ivfpq_topk(emb, idx, emb.where(F.col("vec_id") < 6), k=5).collect()
-    }
-    assert got == expect and len(got) == 30  # 6 queries × k
-
-
-def test_atomic_log_compaction_preserves_view(spark, tmp_path_factory):
-    """Checkpointing the manifest log: after compaction the reader sees
-    identical rows from ONE manifest, later commits land beside the
-    checkpoint, and a second compaction folds both in. Batch identity
-    (ingest_run/ingest_batch) survives the rewrite."""
-    import os
-
-    from sec_dl_spark.streaming.atomic import (
-        atomic_commit_batch,
-        compact_committed,
-        read_committed,
-    )
-
-    sink = str(tmp_path_factory.mktemp("compact_log") / "sink")
-    for b in range(3):
-        assert atomic_commit_batch(
-            spark.range(b * 10, b * 10 + 3).selectExpr("id"), sink, "r1", b
-        )
-    before = {
-        (r["id"], r["ingest_run"], r["ingest_batch"])
-        for r in read_committed(spark, sink).collect()
-    }
-    assert len(before) == 9
-
-    assert compact_committed(spark, sink) is True
-    manifests = [f for f in os.listdir(f"{sink}/_commits") if f.endswith(".json")]
-    assert manifests == ["v4.json"]  # checkpoint took the next version
-    after = {
-        (r["id"], r["ingest_run"], r["ingest_batch"])
-        for r in read_committed(spark, sink).collect()
-    }
-    assert after == before
-
-    # a commit after compaction is additive, and a second compaction
-    # folds checkpoint + new batch into generation 2
-    assert atomic_commit_batch(spark.range(100, 102).selectExpr("id"), sink, "r1", 3)
-    assert {r["id"] for r in read_committed(spark, sink).collect()} == (
-        {r for r, _, _ in before} | {100, 101}
-    )
-    assert compact_committed(spark, sink) is True
-    manifests = [f for f in os.listdir(f"{sink}/_commits") if f.endswith(".json")]
-    assert manifests == ["v6.json"]  # folded checkpoint v4 + batch v5
-    assert len(read_committed(spark, sink).collect()) == 11
-
-
-def test_incremental_ann_index_append_matches_full_encode(spark, tmp_path_factory):
-    """Streaming index maintenance: vectors appended through the sink are
-    encoded with the STORED centroids/codebooks, so serving from
-    base+increments must exactly equal serving from an index whose
-    encoded table was produced in one pass over the full corpus with the
-    same frozen model."""
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.operators.similarity import (
-        IvfPqIndex,
-        assign_cells,
-        build_ivfpq_index,
-        ivfpq_topk,
-        pq_encode,
-        read_ivfpq_index,
-        write_ivfpq_index,
-    )
-    from sec_dl_spark.streaming.ann import incremental_ann_index_sink
-
-    full = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = full.where(F.col("vec_id") < 80)
-    tail = full.where(F.col("vec_id") >= 80)
-    index_path = str(tmp_path_factory.mktemp("inc_ann") / "ivfpq")
-    ckpt = str(tmp_path_factory.mktemp("inc_ann_ckpt") / "ckpt")
-    vsrc = tmp_path_factory.mktemp("inc_ann_vecs")
-
-    write_ivfpq_index(build_ivfpq_index(base, n_cells=8), index_path)
-    tail.where(F.col("vec_id") < 90).coalesce(1).write.parquet(f"{vsrc}/f0")
-    tail.where(F.col("vec_id") >= 90).coalesce(1).write.parquet(f"{vsrc}/f1")
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{vsrc}/*")
-    )
-    incremental_ann_index_sink(stream, index_path, ckpt).awaitTermination(180)
-
-    loaded = read_ivfpq_index(spark, index_path)
-    assert loaded.encoded.count() == full.count()  # base + both batches
-
-    q = full.where(F.col("vec_id") < 3)
-    got = {tuple(r) for r in ivfpq_topk(full, loaded, q, k=5).collect()}
-    # one-pass reference encode with the SAME frozen model
-    ref_encoded = pq_encode(
-        assign_cells(full, loaded.centroids, "vec_id", "embedding"),
-        loaded.codebooks,
-    ).select("vec_id", "cell", "pq_codes")
-    ref = IvfPqIndex(loaded.centroids, loaded.codebooks, ref_encoded, "vec_id")
-    expect = {tuple(r) for r in ivfpq_topk(full, ref, q, k=5).collect()}
-    assert got == expect and len(got) == 15
 
 
 def test_atomic_cas_commit_detects_interleaved_writer(spark, tmp_path_factory):
@@ -1020,74 +662,6 @@ def test_atomic_dedup_occ_across_two_runs(spark, tmp_path_factory):
     assert (50, "shared passage") in rows and (2, "unique to run a") in rows
 
 
-def test_incremental_semantic_dedup_gate_across_batches(spark, tmp_path_factory):
-    """Streaming SemDeDup: a later batch's vector that is semantically
-    near an accepted one (same frozen cell, cosine >= threshold) drops;
-    novel directions pass; in-batch near-twins collapse to the smaller
-    id."""
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.operators.similarity import _coarse_cells
-    from sec_dl_spark.streaming.dedup import incremental_semantic_dedup_sink
-
-    dim = 8
-
-    def unit(axis, eps=0.0, other=None):
-        v = [0.0] * dim
-        v[axis] = 1.0
-        v[(axis + 1) % dim if other is None else other] = eps
-        n = sum(x * x for x in v) ** 0.5
-        return [float(x / n) for x in v]
-
-    train_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    # payload column rides along: gates must not silently drop metadata
-    schema = T.StructType(
-        list(train_schema.fields) + [T.StructField("tag", T.StringType())]
-    )
-    # training corpus spanning the axes so cells separate directions
-    train = spark.createDataFrame(
-        [(i, unit(i % dim, 0.05 * (i // dim), other=(i + 1) % dim)) for i in range(64)],
-        train_schema,
-    )
-    _, centroids = _coarse_cells(train, "vec_id", "embedding", 8, seed=3)
-
-    src = tmp_path_factory.mktemp("sem_src")
-    accepted = str(tmp_path_factory.mktemp("sem_out") / "accepted")
-    registry = str(tmp_path_factory.mktemp("sem_reg") / "registry")
-    ckpt = str(tmp_path_factory.mktemp("sem_ckpt") / "ckpt")
-
-    # batch 0: axis-0 vector + its near-twin (collapse in-batch) + axis-1
-    spark.createDataFrame(
-        [(1, unit(0), "t1"), (2, unit(0, 0.05), "t2"), (10, unit(1), "t10")], schema
-    ).coalesce(1).write.parquet(f"{src}/f0")
-    # batch 1: near axis-0 again (historical dup) + novel axis-2
-    spark.createDataFrame(
-        [(20, unit(0, 0.08), "t20"), (30, unit(2), "t30")], schema
-    ).coalesce(1).write.parquet(f"{src}/f1")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    incremental_semantic_dedup_sink(
-        stream, accepted, registry, ckpt, centroids, threshold=0.95
-    ).awaitTermination(120)
-
-    acc = spark.read.parquet(accepted)
-    kept = sorted(r["vec_id"] for r in acc.collect())
-    assert kept == [1, 10, 30]  # 2 in-batch dup, 20 historical dup
-    # payload columns survive the gate (VERDICT-style silent-drop check)
-    assert {r["tag"] for r in acc.collect()} == {"t1", "t10", "t30"}
-    reg = spark.read.parquet(registry)
-    assert sorted(r["vec_id"] for r in reg.collect()) == [1, 10, 30]
-
-
 def test_publish_manifest_claim_is_exclusive_and_preserves_winner(spark, tmp_path):
     """The local-FS claim must be create-if-absent (O_EXCL), not
     check-then-rename: a second publish to the same name returns False
@@ -1107,557 +681,6 @@ def test_publish_manifest_claim_is_exclusive_and_preserves_winner(spark, tmp_pat
     import os
 
     assert os.listdir(tmp_path / "_commits") == ["v1.json"]
-
-
-def test_vacuum_staging_removes_only_old_orphans(spark, tmp_path_factory):
-    """Staging vacuum: an old unreferenced attempt dir (crashed commit) is
-    removed; the committed batch's staged data and a FRESH orphan (a
-    possibly in-flight commit) are left alone."""
-    import os
-    import time
-
-    from sec_dl_spark.streaming.atomic import (
-        atomic_commit_batch,
-        read_committed,
-        vacuum_staging,
-    )
-
-    sink = str(tmp_path_factory.mktemp("vac") / "sink")
-    assert atomic_commit_batch(spark.range(3).selectExpr("id"), sink, "r1", 0)
-
-    old_orphan = f"{sink}/_staging/r1-9-deadbeefcafe"
-    os.makedirs(f"{old_orphan}/data")
-    stale = time.time() - 7200
-    os.utime(old_orphan, (stale, stale))
-    fresh_orphan = f"{sink}/_staging/r1-10-aaaaaaaaaaaa"
-    os.makedirs(f"{fresh_orphan}/data")
-
-    removed = vacuum_staging(spark, sink, sink, older_than_hours=1.0)
-    assert removed == 1
-    assert not os.path.exists(old_orphan)
-    assert os.path.exists(fresh_orphan)
-    # the committed batch still reads fine (its staging dir survived)
-    assert {r["id"] for r in read_committed(spark, sink).collect()} == {0, 1, 2}
-
-
-def test_atomic_minhash_gate_cross_batch(spark, tmp_path_factory):
-    """The shared commit driver gives every gate the atomic/OCC mode: the
-    MinHash near-dup gate in atomic mode drops a later batch's near-copy
-    via the committed registry and replays as a no-op on the existing
-    commits."""
-    import shutil
-
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.streaming.atomic import read_committed
-    from sec_dl_spark.streaming.dedup import incremental_minhash_dedup_sink
-
-    src = tmp_path_factory.mktemp("amh_src")
-    accepted = str(tmp_path_factory.mktemp("amh_out") / "accepted")
-    registry = str(tmp_path_factory.mktemp("amh_reg") / "registry")
-    ckpt = str(tmp_path_factory.mktemp("amh_ckpt") / "ckpt")
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    base = " ".join(f"w{i}" for i in range(50))
-    near = " ".join(f"w{i}" for i in range(49)) + " zz"
-    other = " ".join(f"q{i}" for i in range(50))
-    spark.createDataFrame([(1, base), (2, other)], schema).coalesce(1).write.parquet(
-        f"{src}/f0"
-    )
-    spark.createDataFrame([(9, near)], schema).coalesce(1).write.parquet(f"{src}/f1")
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        incremental_minhash_dedup_sink(
-            stream, accepted, registry, ckpt, commit_mode="atomic"
-        ).awaitTermination(120)
-
-    run_once()
-    got = {r["doc_id"] for r in read_committed(spark, registry, "accepted").collect()}
-    assert got == {1, 2}  # 9 near-dups batch-0's doc 1 across batches
-
-    shutil.rmtree(ckpt)  # replay: both batches already committed → no-ops
-    run_once()
-    again = {r["doc_id"] for r in read_committed(spark, registry, "accepted").collect()}
-    assert again == got
-
-
-def test_atomic_time_travel_reads_each_version(spark, tmp_path_factory):
-    """read_committed(as_of_version=N) reconstructs exactly the state any
-    earlier decision was made against — the versionAsOf analog on the
-    linear log."""
-    from sec_dl_spark.streaming.atomic import (
-        atomic_commit_batch,
-        current_version,
-        log_history,
-        read_committed,
-    )
-
-    sink = str(tmp_path_factory.mktemp("atomic_tt") / "sink")
-    assert atomic_commit_batch(spark.range(0, 2).selectExpr("id"), sink, "r1", 0)
-    v1 = current_version(spark, sink)
-    assert atomic_commit_batch(spark.range(2, 5).selectExpr("id"), sink, "r1", 1)
-    assert atomic_commit_batch(spark.range(5, 6).selectExpr("id"), sink, "r1", 2)
-
-    assert read_committed(spark, sink, as_of_version=0) is None
-    assert sorted(
-        r.id for r in read_committed(spark, sink, as_of_version=v1).collect()
-    ) == [0, 1]
-    assert sorted(
-        r.id for r in read_committed(spark, sink, as_of_version=v1 + 1).collect()
-    ) == [0, 1, 2, 3, 4]
-    # unpinned read = latest
-    assert read_committed(spark, sink).count() == 6
-    # a future version token just reads latest (nothing above it yet)
-    assert read_committed(spark, sink, as_of_version=99).count() == 6
-
-    hist = log_history(spark, sink)
-    assert [h["kind"] for h in hist] == ["commit"] * 3
-    assert [(h["run"], h["batch"]) for h in hist] == [("r1", 0), ("r1", 1), ("r1", 2)]
-
-
-def test_atomic_time_travel_across_compaction(spark, tmp_path_factory):
-    """Compaction folds history: snapshots at/after the checkpoint's
-    covers_through stay readable (the checkpoint IS that state); older
-    snapshots raise instead of silently returning the wrong view."""
-    import pytest as _pytest
-
-    from sec_dl_spark.streaming.atomic import (
-        atomic_commit_batch,
-        compact_committed,
-        current_version,
-        log_history,
-        read_committed,
-    )
-
-    sink = str(tmp_path_factory.mktemp("atomic_ttc") / "sink")
-    assert atomic_commit_batch(spark.range(0, 2).selectExpr("id"), sink, "r1", 0)
-    assert atomic_commit_batch(spark.range(2, 4).selectExpr("id"), sink, "r1", 1)
-    folded = current_version(spark, sink)
-    assert compact_committed(spark, sink)
-    assert atomic_commit_batch(spark.range(4, 7).selectExpr("id"), sink, "r1", 2)
-
-    # snapshot at the fold point: served by the checkpoint itself
-    assert sorted(
-        r.id for r in read_committed(spark, sink, as_of_version=folded).collect()
-    ) == [0, 1, 2, 3]
-    # snapshot between checkpoint version and the later commit: same state
-    assert read_committed(spark, sink, as_of_version=folded + 1).count() == 4
-    # latest includes the post-compaction commit
-    assert read_committed(spark, sink).count() == 7
-    # pre-fold snapshot is genuinely gone -> loud error, not a wrong answer
-    with _pytest.raises(ValueError, match="folded away"):
-        read_committed(spark, sink, as_of_version=folded - 1)
-
-    kinds = [h["kind"] for h in log_history(spark, sink)]
-    assert kinds == ["checkpoint", "commit"]
-    ck = log_history(spark, sink)[0]
-    assert ck["covers_through"] == folded
-    assert ("r1", 0) in ck["batches"] and ("r1", 1) in ck["batches"]
-
-
-def test_incremental_corpus_sink_prep_plus_dedup(spark, tmp_path_factory):
-    """The streaming corpus gate: stateless clean/quality/split prep on
-    each micro-batch, cross-batch exact dedup via the registry, split
-    column preserved in the accepted output and identical to the batch
-    pipeline's assignment for the same content."""
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.etl.corpus import assign_split
-    from sec_dl_spark.functions.text import clean_filing_text
-    from sec_dl_spark.streaming.corpus import (
-        incremental_corpus_sink,
-        prepare_corpus_stream,
-    )
-
-    src = tmp_path_factory.mktemp("corpus_stream")
-    accepted = str(tmp_path_factory.mktemp("corpus_out") / "accepted")
-    registry = str(tmp_path_factory.mktemp("corpus_reg") / "registry")
-    ckpt = str(tmp_path_factory.mktemp("corpus_ckpt"))
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    long_doc = "the quick brown fox jumps over the lazy dog " * 4
-    b1 = spark.createDataFrame(
-        [
-            (1, long_doc),
-            (2, "!!! ??? ///"),  # cleans to punctuation-only → quality-dropped
-            (3, long_doc.upper()),  # canonical dup of 1 → in-batch collapse
-        ],
-        schema,
-    )
-    b2 = spark.createDataFrame(
-        [
-            (10, long_doc + "  "),  # cross-batch dup of 1 → registry-dropped
-            (11, "a completely different and quite reasonable document here " * 3),
-        ],
-        schema,
-    )
-    b1.coalesce(1).write.mode("overwrite").parquet(f"{src}/b=1")
-    b2.coalesce(1).write.mode("overwrite").parquet(f"{src}/b=2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    q = incremental_corpus_sink(stream, accepted, registry, ckpt)
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(accepted)
-    kept = {r.doc_id for r in out.collect()}
-    assert kept == {1, 11}
-    assert "split" in out.columns
-    assert set(out.select("split").distinct().toPandas()["split"]) <= {
-        "train", "val", "test",
-    }
-    # the streaming split matches the batch rule for the same cleaned text
-    batch = spark.createDataFrame([(1, long_doc)], schema).withColumn(
-        "text", clean_filing_text(F.col("text"))
-    )
-    expected = batch.select(assign_split(F.col("text")).alias("s")).first().s
-    got = out.where("doc_id = 1").first().split
-    assert got == expected
-    # prepare_corpus_stream is stateless: batch application gives the
-    # same survivors as what the stream admitted (before dedup)
-    prepped = prepare_corpus_stream(b1.unionByName(b2))
-    assert {r.doc_id for r in prepped.collect()} == {1, 3, 10, 11}
-
-
-def test_jsonl_stream_ingest_with_quarantine(spark, tmp_path_factory):
-    """End-to-end streaming JSONL ingest: a drop directory of JSONL files
-    feeds the corpus gate through the good side while malformed lines
-    land verbatim in a quarantine sink — and the streaming split agrees
-    with the batch reader over the same files."""
-    from sec_dl_spark.sources.jsonl import (
-        DOCUMENT_SCHEMA,
-        read_jsonl_corpus,
-        stream_jsonl_corpus,
-    )
-    from sec_dl_spark.streaming.corpus import incremental_corpus_sink
-
-    src = tmp_path_factory.mktemp("jsonl_drop")
-    accepted = str(tmp_path_factory.mktemp("jsonl_out") / "accepted")
-    registry = str(tmp_path_factory.mktemp("jsonl_reg") / "registry")
-    ckpt_good = str(tmp_path_factory.mktemp("jsonl_ckpt_good"))
-    ckpt_bad = str(tmp_path_factory.mktemp("jsonl_ckpt_bad"))
-    qpath = str(tmp_path_factory.mktemp("jsonl_q") / "quarantine")
-
-    long_doc = "the quick brown fox jumps over the lazy dog " * 4
-    (src / "a.jsonl").write_text(
-        f'{{"doc_id": 1, "text": "{long_doc}", "lang": "en", "source": "web"}}\n'
-        "garbage line\n"
-        f'{{"doc_id": 2, "text": "{long_doc.upper()}", "lang": "en", "source": "web"}}\n'
-    )
-    (src / "b.jsonl").write_text(
-        f'{{"doc_id": "oops", "text": "bad id type"}}\n'
-        f'{{"doc_id": 3, "text": "a completely different and quite reasonable document here {"x " * 30}", "lang": "en", "source": "web"}}\n'
-    )
-
-    good, quarantine = stream_jsonl_corpus(spark, str(src))
-    q1 = incremental_corpus_sink(good, accepted, registry, ckpt_good)
-    q2 = (
-        quarantine.writeStream.format("parquet")
-        .option("path", qpath)
-        .option("checkpointLocation", ckpt_bad)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination(120)
-    q2.awaitTermination(120)
-
-    out = spark.read.parquet(accepted)
-    # doc 2 is a canonical dup of doc 1 (case-folded) → gate collapses it
-    assert {r.doc_id for r in out.collect()} == {1, 3}
-    assert "split" in out.columns
-
-    bad = [r["_corrupt_record"] for r in spark.read.parquet(qpath).collect()]
-    assert "garbage line" in bad
-    assert any("oops" in b for b in bad)
-
-    # stream parse == batch parse over the same drop directory
-    bgood, bquar = read_jsonl_corpus(spark, str(src))
-    assert {r.doc_id for r in bgood.collect()} == {1, 2, 3}
-    assert bquar.count() == len(bad) == 2
-
-
-def test_streaming_rollup_matches_batch_and_compacts(spark, tmp_path_factory):
-    """Micro-batched rollup maintenance == batch recompute: events stream
-    in as file-batches, each publishing its partial partition; the merged
-    read equals the one-pass groupBy (count/min/max exactly, sum to float
-    tolerance), survives compaction unchanged, and a replay after wiping
-    the checkpoint overwrites its partitions instead of double-counting."""
-    import math
-    import shutil
-
-    from pyspark.sql import types as T
-
-    from sec_dl_spark.operators.rollup import Measure, build_rollup, finalize
-    from sec_dl_spark.streaming.rollup import (
-        compact_rollup,
-        incremental_rollup_sink,
-        read_rollup,
-    )
-
-    src = tmp_path_factory.mktemp("rollup_src")
-    rollup = str(tmp_path_factory.mktemp("rollup_out") / "rollup")
-    schema = T.StructType(
-        [
-            T.StructField("k", T.StringType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    data = [(["a", "b", "c"][i % 3], float(i % 17)) for i in range(300)]
-    full = spark.createDataFrame(data, schema)
-    for b in range(3):
-        spark.createDataFrame(data[b * 100 : (b + 1) * 100], schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{src}/b={b}")
-
-    keys, ms = ["k"], [Measure("v")]
-
-    ckpt = str(tmp_path_factory.mktemp("rollup_ckpt") / "ckpt")
-
-    def run_stream():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/b=*")
-        )
-        incremental_rollup_sink(stream, rollup, ckpt, keys, ms).awaitTermination(120)
-
-    run_stream()
-
-    def snap(df):
-        return {
-            r["k"]: (r["cnt_v"], r["min_v"], r["max_v"], r["sum_v"], r["avg_v"])
-            for r in finalize(df, ms).collect()
-        }
-
-    got = snap(read_rollup(spark, rollup, keys, ms))
-    want = snap(build_rollup(full, keys, ms))
-    assert set(got) == set(want) == {"a", "b", "c"}
-    for k in want:
-        assert got[k][:3] == want[k][:3]
-        assert math.isclose(got[k][3], want[k][3], rel_tol=1e-12)
-        assert math.isclose(got[k][4], want[k][4], rel_tol=1e-12)
-
-    # replay after wiping the checkpoint: same run token, partitions
-    # overwrite, no double counting
-    shutil.rmtree(ckpt)
-    run_stream()
-    assert snap(read_rollup(spark, rollup, keys, ms)) == got
-
-    # compaction folds partitions; the merged view is unchanged
-    compact_rollup(spark, rollup, keys, ms)
-    assert snap(read_rollup(spark, rollup, keys, ms)) == got
-    import os
-
-    runs = [d for d in os.listdir(rollup) if d.startswith("run=")]
-    assert runs == ["run=__compact__"]
-
-
-def test_streaming_change_feed_cross_batch(spark, tmp_path_factory):
-    """Change-data-feed sink: per micro-batch, added/changed/removed
-    classification against the pre-batch state (tombstones remove; an
-    unchanged re-upsert emits nothing; deleting an absent key emits
-    nothing), merge-on-read current state equals the hand-applied result,
-    a replay after wiping the checkpoint is idempotent, and a second
-    checkpoint (another run token) is refused on an existing state dir."""
-    import shutil
-
-    import pytest
-
-    from pyspark.sql import types as T
-
-    from sec_dl_spark.streaming.cdc import (
-        change_feed_sink,
-        current_state,
-        read_change_feed,
-    )
-
-    src = tmp_path_factory.mktemp("cdc_src")
-    state = str(tmp_path_factory.mktemp("cdc_out") / "state")
-    feed = str(tmp_path_factory.mktemp("cdc_out") / "feed")
-    schema = T.StructType(
-        [
-            T.StructField("k", T.StringType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    batches = [
-        [("k1", "U", 1.0), ("k2", "U", 2.0)],
-        [("k1", "U", 9.0), ("k3", "U", 3.0), ("k2", "D", None)],
-        [("k2", "U", 5.0), ("k4", "D", None), ("k1", "U", 9.0)],
-    ]
-    for b, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b={b}")
-
-    ckpt = str(tmp_path_factory.mktemp("cdc_ckpt") / "ckpt")
-
-    def run_stream(ckpt: str):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/b=*")
-        )
-        change_feed_sink(
-            stream, state, feed, ckpt, ["k"], ["v"]
-        ).awaitTermination(120)
-
-    run_stream(ckpt)
-
-    feed_rows = {
-        (r["batch"], r["k"]): r["change_type"]
-        for r in read_change_feed(spark, feed).collect()
-    }
-    assert feed_rows == {
-        (0, "k1"): "added",
-        (0, "k2"): "added",
-        (1, "k1"): "changed",
-        (1, "k3"): "added",
-        (1, "k2"): "removed",
-        (2, "k2"): "added",  # resurrection after tombstone
-        # (2, "k4") absent: delete of a key that never existed
-        # (2, "k1") absent: unchanged re-upsert
-    }
-
-    snap = {
-        r["k"]: (r["op"], r["v"])
-        for r in current_state(spark, state, ["k"]).collect()
-    }
-    assert snap == {"k1": ("U", 9.0), "k2": ("U", 5.0), "k3": ("U", 3.0)}
-
-    # replay after wiping the checkpoint: partitions overwrite, identical feed
-    shutil.rmtree(ckpt)
-    run_stream(ckpt)
-    assert {
-        (r["batch"], r["k"]): r["change_type"]
-        for r in read_change_feed(spark, feed).collect()
-    } == feed_rows
-    assert {
-        r["k"]: (r["op"], r["v"])
-        for r in current_state(spark, state, ["k"]).collect()
-    } == snap
-
-    # a second checkpoint (different run token) over the same state dir
-    # must be refused
-    with pytest.raises(Exception, match="another run"):
-        run_stream(str(tmp_path_factory.mktemp("cdc_ckpt2")))
-
-
-def test_running_totals_transform_with_state(spark, events_dir):
-    """transformWithStateInPandas (typed-state successor API) emits the
-    same final per-user totals as the applyInPandasWithState operator and
-    the batch groupBy. ENV-GATED like the live HTTP/PG tests: the state
-    server protocol needs google.protobuf, which this container lacks
-    (pyspark ships the generated stubs but not the runtime) — skips
-    cleanly here, runs wherever protobuf is installed."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState state server needs protobuf"
-    )
-    from sec_dl_spark.streaming.pipeline import (
-        run_update_stream_to_memory,
-        running_user_totals_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-        got = run_update_stream_to_memory(
-            running_user_totals_tws(stream), "running_totals_tws_t", timeout_s=180
-        )
-        batch = load_table(spark, "/root/testdata/sf0.001", "events")
-        expected = {
-            r["user_id"]: (r["n"], r["tv"])
-            for r in batch.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("tv"))
-            .collect()
-        }
-        best: dict = {}
-        for r in got.collect():
-            cur = best.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                best[r["user_id"]] = (r["n_events"], r["total_value"])
-        assert best == expected
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_drop_duplicates_within_watermark(spark, tmp_path_factory):
-    """Duplicates of the same key arriving within the watermark window
-    collapse to one row across micro-batches (the bounded-state form of
-    streaming dedup — state evicts with the watermark instead of
-    growing forever)."""
-    import datetime
-
-    from pyspark.sql import types as T
-
-    from sec_dl_spark.streaming.pipeline import dedup_within_watermark
-
-    src = tmp_path_factory.mktemp("wmdd_src")
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    def m(minutes):
-        return t0 + datetime.timedelta(minutes=minutes)
-
-    # batch files replay in name order; id 1 repeats in b0 AND b1 (close
-    # in event time), id 2 repeats within one batch
-    spark.createDataFrame(
-        [(1, m(0), 1.0), (2, m(1), 2.0), (2, m(2), 2.0)], schema
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b=0")
-    spark.createDataFrame(
-        [(1, m(3), 9.0), (3, m(4), 3.0)], schema
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b=1")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    out = dedup_within_watermark(stream, ["event_id"], watermark="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wmdd_t")
-        .outputMode("append")
-        .option(
-            "checkpointLocation", str(tmp_path_factory.mktemp("wmdd_ckpt"))
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("wmdd_t").collect()
-    ids = sorted(r["event_id"] for r in rows)
-    assert ids == [1, 2, 3]
-    # the FIRST arrival of id 1 won (value 1.0, not the batch-1 re-send)
-    assert {r["event_id"]: r["value"] for r in rows}[1] == 1.0
 
 
 def test_streaming_hll_rollup_matches_direct_estimate(spark, tmp_path_factory):
@@ -1732,42 +755,298 @@ def test_streaming_hll_rollup_matches_direct_estimate(spark, tmp_path_factory):
     assert got2 == got
 
 
-def test_streaming_freshness_monitor_via_rollup_sink(spark, tmp_path_factory):
+def _stream_files(spark, schema, src):
+    """A file-source stream over ``src/b=*``, one file per micro-batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{src}/b=*")
+
+
+def _write_batches(spark, chunks, schema, src):
+    for b, chunk in enumerate(chunks):
+        spark.createDataFrame(chunk, schema).coalesce(1).write.mode("overwrite").parquet(
+            f"{src}/b={b}"
+        )
+
+
+def _summed(parts, keys, *cols):
+    """Merge sum-monoid partials: one groupBy summing each count column."""
+    return parts.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in cols])
+
+
+def _bin_counts(df, n_bins=10, cents_per_bin=4000):
+    """(key, bin, n) integer histogram with the integer-cents binning of
+    the catalog's events_psi_drift: round to cents, integer-divide,
+    clamp to [0, n_bins)."""
+    b = F.greatest(
+        F.least(
+            F.expr(f"CAST(round(value * 100) AS BIGINT) div {cents_per_bin}"),
+            F.lit(n_bins - 1),
+        ),
+        F.lit(0),
+    )
+    return df.groupBy(F.col("event_type").alias("key"), b.alias("bin")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+
+
+def _arm_day_counts(df):
+    """(day, n, conv) counts of the treatment arm (user_id % 2 = 1), the
+    per-day reduction of the catalog's events_sprt_monitor."""
+    return (
+        df.where(F.col("user_id") % 2 == 1)
+        .groupBy(F.col("ts").cast("date").alias("day"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("conv"),
+        )
+    )
+
+
+def _cms_sketch(df):
+    """(row, slot, cnt) count-min sketch of ``uid``, width 8, depth 4."""
+    from sec_dl_spark.operators.sketch import cms_build
+
+    return cms_build(df, "uid", width=8, depth=4)
+
+
+def test_streaming_psi_drift_monitor(spark, tmp_path_factory):
+    """A drift monitor on the partial sink: each micro-batch publishes its
+    (key, bin, n) counts, the merged counts equal the one-shot histogram
+    exactly, and streaming/drift.py:psi of the merged counts against a
+    same-distribution reference is ~0 while a shifted reference alarms
+    past 0.25 — the separation the batch events_psi_drift pytest pins.
+    psi over the raw per-batch partials (repeated (key, bin) rows) scores
+    exactly like the merged counts."""
+    from pyspark.sql import types as T
+
+    from sec_dl_spark.streaming.commit import partial_sink, read_partials
+    from sec_dl_spark.streaming.drift import psi
+
+    src = tmp_path_factory.mktemp("drift_src")
+    out = str(tmp_path_factory.mktemp("drift_out") / "counts")
+    schema = T.StructType(
+        [T.StructField("event_type", T.StringType()), T.StructField("value", T.DoubleType())]
+    )
+    rows = [("stable", float(i % 100)) for i in range(300)] + [
+        ("shifted", 200.0 + i % 40) for i in range(300)
+    ]
+    _write_batches(spark, [rows[b::3] for b in range(3)], schema, src)
+    stream = _stream_files(spark, schema, src)
+    ckpt = str(tmp_path_factory.mktemp("drift_ckpt"))
+    assert partial_sink(stream, out, ckpt, _bin_counts).awaitTermination(120)
+
+    merged = _summed(read_partials(spark, out), ["key", "bin"], "n")
+    got = {(r["key"], r["bin"]): r["n"] for r in merged.collect()}
+    want = {
+        (r["key"], r["bin"]): r["n"]
+        for r in _bin_counts(spark.createDataFrame(rows, schema)).collect()
+    }
+    assert got == want  # merge == recompute, exactly
+
+    # reference: 'stable' keeps its distribution, 'shifted' references
+    # the LOW-bin regime the live stream has since left
+    ref_rows = [("stable", float(i % 100)) for i in range(300)] + [
+        ("shifted", float(i % 40)) for i in range(300)
+    ]
+    reference = _bin_counts(spark.createDataFrame(ref_rows, schema))
+    scores = {r["key"]: r for r in psi(merged, reference).collect()}
+    assert scores["stable"]["n_current"] == scores["stable"]["n_reference"] == 300
+    assert scores["stable"]["psi"] < 0.01
+    assert scores["shifted"]["psi"] > 0.25
+
+    batched = {r["key"]: r for r in psi(read_partials(spark, out), reference).collect()}
+    assert batched == scores
+
+
+def test_streaming_cms_sink_matches_from_scratch_build(spark, tmp_path_factory):
+    """Micro-batched count-min maintenance on the partial sink ==
+    from-scratch cms_build over the union, EXACTLY: the CM sketch is a
+    (row, slot) counter monoid, so however the stream batches, summed
+    partials equal one build — and cms_estimate off the merged sketch
+    carries the same one-sided guarantee. A replay after wiping the
+    checkpoint (same run token, derived from the checkpoint path)
+    overwrites its own partitions — no double-counting."""
+    import shutil
+
+    from pyspark.sql import types as T
+
+    from sec_dl_spark.operators.sketch import cms_estimate
+    from sec_dl_spark.streaming.commit import partial_sink, read_partials
+
+    src = tmp_path_factory.mktemp("cms_src")
+    out = str(tmp_path_factory.mktemp("cms_out") / "sketch")
+    schema = T.StructType([T.StructField("uid", T.LongType())])
+    data = [((i * 13) % 50,) for i in range(600)]  # heavy key overlap
+    _write_batches(spark, [data[b * 200 : (b + 1) * 200] for b in range(3)], schema, src)
+    full = spark.createDataFrame(data, schema)
+    ckpt = str(tmp_path_factory.mktemp("cms_ckpt") / "ckpt")
+
+    def run_stream():
+        stream = _stream_files(spark, schema, src)
+        partial_sink(stream, out, ckpt, _cms_sketch).awaitTermination(120)
+
+    def merged():
+        return _summed(read_partials(spark, out), ["row", "slot"], "cnt")
+
+    run_stream()
+    got = {(r["row"], r["slot"]): r["cnt"] for r in merged().collect()}
+    scratch = {(r["row"], r["slot"]): r["cnt"] for r in _cms_sketch(full).collect()}
+    assert got == scratch and got
+
+    # estimates off the merged sketch: never undercount any true key
+    probes = spark.createDataFrame([(k,) for k in range(50)], schema)
+    est = {
+        r["uid"]: r["cms_est"]
+        for r in cms_estimate(merged(), probes, "uid", width=8, depth=4).collect()
+    }
+    true = {
+        r["uid"]: r["n"]
+        for r in full.groupBy("uid").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert all(est[k] >= true[k] for k in true)
+
+    # replay after wiping the checkpoint: partitions overwrite, totals stable
+    shutil.rmtree(ckpt)
+    run_stream()
+    assert {(r["row"], r["slot"]): r["cnt"] for r in merged().collect()} == scratch
+
+
+def test_cms_sink_multi_run_guard(spark, tmp_path_factory):
+    """A counter monoid is NOT idempotent across runs (unlike HLL):
+    reprocessing the same source under a second checkpoint (another run
+    token) would leave its partials beside the first run's, and the
+    merged sum would double every key. The partial sink therefore
+    refuses such a path at batch 0, before writing anything, and the
+    first run's sketch still reads undoubled."""
+    from pyspark.sql import types as T
+
+    from sec_dl_spark.streaming.commit import partial_sink, read_partials
+
+    src = tmp_path_factory.mktemp("cmsg_src")
+    out = str(tmp_path_factory.mktemp("cmsg_out") / "sketch")
+    schema = T.StructType([T.StructField("uid", T.LongType())])
+    data = [((i * 7) % 20,) for i in range(200)]
+    _write_batches(spark, [data], schema, src)
+
+    def run_stream(ckpt: str):
+        stream = spark.readStream.schema(schema).parquet(f"{src}/b=*")
+        partial_sink(stream, out, ckpt, _cms_sketch).awaitTermination(120)
+
+    def files():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), out) for d, _, fs in os.walk(out) for f in fs
+        )
+
+    run_stream(str(tmp_path_factory.mktemp("cmsg_ck1")))
+    published = files()
+    # same source reprocessed under a second checkpoint → another run token
+    with pytest.raises(Exception, match="another run"):
+        run_stream(str(tmp_path_factory.mktemp("cmsg_ck2")))
+    assert files() == published  # the refused run published nothing
+
+    scratch = {
+        (r["row"], r["slot"]): r["cnt"]
+        for r in _cms_sketch(spark.createDataFrame(data, schema)).collect()
+    }
+    merged = {
+        (r["row"], r["slot"]): r["cnt"]
+        for r in _summed(read_partials(spark, out), ["row", "slot"], "cnt").collect()
+    }
+    assert merged == scratch
+
+
+def test_streaming_rollup_matches_batch_and_compacts(spark, tmp_path_factory):
+    """Micro-batched rollup maintenance == batch recompute: events stream
+    in as file-batches, each publishing its build_rollup partial; the
+    merge_rollups read equals the one-pass build_rollup (count/min/max
+    exactly, sum and avg to float tolerance), a replay after wiping the
+    checkpoint overwrites its partitions instead of double-counting, and
+    compact_parquet over the run/batch layout leaves the merged view
+    unchanged."""
+    import math
+    import shutil
+
+    from pyspark.sql import types as T
+
+    from sec_dl_spark.operators.rollup import Measure, build_rollup, finalize, merge_rollups
+    from sec_dl_spark.sinks.compact import compact_parquet
+    from sec_dl_spark.streaming.commit import partial_sink, read_partials
+
+    src = tmp_path_factory.mktemp("rollup_src")
+    rollup = str(tmp_path_factory.mktemp("rollup_out") / "rollup")
+    schema = T.StructType(
+        [T.StructField("k", T.StringType()), T.StructField("v", T.DoubleType())]
+    )
+    data = [(["a", "b", "c"][i % 3], float(i % 17)) for i in range(300)]
+    full = spark.createDataFrame(data, schema)
+    _write_batches(spark, [data[b * 100 : (b + 1) * 100] for b in range(3)], schema, src)
+    keys, ms = ["k"], [Measure("v")]
+    ckpt = str(tmp_path_factory.mktemp("rollup_ckpt") / "ckpt")
+
+    def run_stream():
+        stream = _stream_files(spark, schema, src)
+        partial_sink(
+            stream, rollup, ckpt, lambda b: build_rollup(b, keys, ms)
+        ).awaitTermination(120)
+
+    def snap():
+        parts = read_partials(spark, rollup)
+        return {
+            r["k"]: (r["cnt_v"], r["min_v"], r["max_v"], r["sum_v"], r["avg_v"])
+            for r in finalize(merge_rollups(parts.limit(0), parts, keys, ms), ms).collect()
+        }
+
+    run_stream()
+    got = snap()
+    want = {
+        r["k"]: (r["cnt_v"], r["min_v"], r["max_v"], r["sum_v"], r["avg_v"])
+        for r in finalize(build_rollup(full, keys, ms), ms).collect()
+    }
+    assert set(got) == set(want) == {"a", "b", "c"}
+    for k in want:
+        assert got[k][:3] == want[k][:3]
+        assert math.isclose(got[k][3], want[k][3], rel_tol=1e-12)
+        assert math.isclose(got[k][4], want[k][4], rel_tol=1e-12)
+
+    # replay after wiping the checkpoint: same run token, partitions
+    # overwrite, no double counting
+    shutil.rmtree(ckpt)
+    run_stream()
+    assert snap() == got
+
+    # compaction rewrites the partial files in place; the merged view is unchanged
+    stats = compact_parquet(spark, rollup, ["run", "batch"])
+    assert stats["files_after"] <= stats["files_before"]
+    assert snap() == got
+    assert len([d for d in os.listdir(rollup) if d.startswith("run=")]) == 1
+
+
+def test_streaming_freshness_monitor_via_rollup_sink(spark, sf_dir, tmp_path_factory):
     """The dq_freshness_lag monitor maintained incrementally: events
-    stream through the generic rollup sink with the timestamp (as epoch
-    micros) as a measure, and the read-side computes per-type lag against
-    the watermark (max over the per-type maxima) — matching the batch
-    query's answer exactly without ever rescanning past batches."""
-    from pyspark.sql import functions as F
+    stream through the partial sink with a build_rollup partial over the
+    timestamp (as epoch micros), and the read side computes per-type lag
+    against the watermark (max over the per-type maxima) — matching the
+    batch answer exactly without ever rescanning past batches."""
+    from sec_dl_spark.operators.rollup import Measure, build_rollup, merge_rollups
+    from sec_dl_spark.streaming.commit import partial_sink, read_partials
 
-    from sec_dl_spark.operators.rollup import Measure
-    from sec_dl_spark.streaming.rollup import incremental_rollup_sink, read_rollup
-
-    from sec_dl_spark.sources.fixtures import load_table
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
+    events = load_table(spark, sf_dir, "events").select(
         "event_type", F.unix_micros(F.col("ts")).alias("ts_s")
     )
     src = tmp_path_factory.mktemp("fresh_src")
-    parts = events.randomSplit([1.0, 1.0, 1.0], seed=7)
-    for i, p in enumerate(parts):
+    for i, p in enumerate(events.randomSplit([1.0, 1.0, 1.0], seed=7)):
         p.coalesce(1).write.mode("overwrite").parquet(f"{src}/b={i}")
 
     rollup = str(tmp_path_factory.mktemp("fresh_out") / "rollup")
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    incremental_rollup_sink(
-        stream,
+    keys, ms = ["event_type"], [Measure("ts_s")]
+    partial_sink(
+        _stream_files(spark, events.schema, src),
         rollup,
         str(tmp_path_factory.mktemp("fresh_ckpt")),
-        ["event_type"],
-        [Measure("ts_s")],
+        lambda b: build_rollup(b, keys, ms),
     ).awaitTermination(120)
 
-    per = read_rollup(spark, rollup, ["event_type"], [Measure("ts_s")]).select(
+    parts = read_partials(spark, rollup)
+    per = merge_rollups(parts.limit(0), parts, keys, ms).select(
         "event_type", F.col("max_ts_s").alias("latest_s"), "cnt_ts_s"
     )
     wm = per.agg(F.max("latest_s").alias("watermark"))
@@ -1779,100 +1058,87 @@ def test_streaming_freshness_monitor_via_rollup_sink(spark, tmp_path_factory):
         r["event_type"]: (r["lag"], r["n"])
         for r in events.groupBy("event_type")
         .agg(F.max("ts_s").alias("latest_s"), F.count(F.lit(1)).alias("n"))
-        .crossJoin(
-            F.broadcast(
-                events.agg(F.max("ts_s").alias("wm"))
-            )
-        )
-        .select(
-            "event_type", (F.col("wm") - F.col("latest_s")).alias("lag"), "n"
-        )
+        .crossJoin(F.broadcast(events.agg(F.max("ts_s").alias("wm"))))
+        .select("event_type", (F.col("wm") - F.col("latest_s")).alias("lag"), "n")
         .collect()
     }
     assert got == want and len(got) >= 3
 
 
-def test_streaming_psi_drift_monitor(spark, tmp_path_factory):
-    """Streaming PSI drift gate (streaming/drift.py): (1) the merged
-    bin-count view over micro-batched partials equals bin_counts over
-    the full input EXACTLY (integer sum monoid — batching-invariant);
-    (2) PSI of the merged counts against a same-distribution reference
-    is ~0 while a shifted reference alarms past 0.25 — the identical
-    separation the batch events_psi_drift pytest pins, proving the
-    streaming twin computes the same monitor."""
-    from pyspark.sql import functions as F
+def test_streaming_ivm_retraction_view_matches_recompute(spark, tmp_path_factory):
+    """Streaming aggregate IVM: each micro-batch publishes its signed
+    operators/cdc.py:fold_changes partial, and the partials summed on
+    read (n = 0 keys dropped) must equal the recompute over surviving
+    rows EXACTLY — deletes crossing batch boundaries included — be
+    batching-invariant (3 micro-batches == 1), and replay idempotently
+    after a checkpoint wipe, even with different batching (batch 0 of
+    the replay clears the run's stale batch=1/2 partials)."""
+    import shutil
+
     from pyspark.sql import types as T
 
-    from sec_dl_spark.streaming.drift import (
-        bin_counts,
-        incremental_bin_counts_sink,
-        psi,
-        read_bin_counts,
-    )
+    from sec_dl_spark.operators.cdc import fold_changes
+    from sec_dl_spark.streaming.commit import partial_sink, read_partials
 
-    src = tmp_path_factory.mktemp("drift_src")
-    out = str(tmp_path_factory.mktemp("drift_out") / "counts")
     schema = T.StructType(
         [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
+            T.StructField("k", T.StringType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("v", T.LongType()),
         ]
     )
-    rows = [("stable", float(i % 100)) for i in range(300)] + [
-        ("shifted", 200.0 + i % 40) for i in range(300)
+    batches = [
+        [("a", "I", 10), ("a", "I", 20), ("b", "I", 5)],
+        [("a", "D", 10), ("c", "I", 7)],  # retracts batch-0's row
+        [("b", "D", 5), ("c", "I", 3)],  # empties key b
     ]
-    for b in range(3):
-        spark.createDataFrame(rows[b::3], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b={b}")
-    full = spark.createDataFrame(rows, schema)
+    expected = {"a": (1, 20), "c": (2, 10)}
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    done = incremental_bin_counts_sink(
-        stream, out, str(tmp_path_factory.mktemp("drift_ckpt"))
-    ).awaitTermination(120)
-    assert done
+    def start(stream, view, ckpt):
+        partial_sink(
+            stream, view, ckpt, lambda b: fold_changes(b, ["k"], {"sv": "v"})
+        ).awaitTermination(120)
 
-    merged = read_bin_counts(spark, out)
-    got = {(r["key"], r["bin"]): r["n"] for r in merged.collect()}
-    want = {(r["key"], r["bin"]): r["n"] for r in bin_counts(full).collect()}
-    assert got == want  # merge == recompute, exactly
+    def read_view(view):
+        merged = _summed(read_partials(spark, view), ["k"], "n", "sv")
+        return {r["k"]: (r["n"], r["sv"]) for r in merged.where(F.col("n") > 0).collect()}
 
-    # reference: 'stable' keeps its distribution, 'shifted' references
-    # the LOW-bin regime the live stream has since left
-    ref_rows = [("stable", float(i % 100)) for i in range(300)] + [
-        ("shifted", float(i % 40)) for i in range(300)
-    ]
-    reference = bin_counts(spark.createDataFrame(ref_rows, schema))
-    scores = {r["key"]: r for r in psi(merged, reference).collect()}
-    assert scores["stable"]["n_current"] == scores["stable"]["n_reference"] == 300
-    assert scores["stable"]["psi"] < 0.01
-    assert scores["shifted"]["psi"] > 0.25
+    def run_sink(chunks, tag):
+        src = tmp_path_factory.mktemp(f"ivm_src_{tag}")
+        view = str(tmp_path_factory.mktemp(f"ivm_view_{tag}") / "view")
+        ckpt = str(tmp_path_factory.mktemp(f"ivm_ckpt_{tag}") / "ckpt")
+        _write_batches(spark, chunks, schema, src)
+        start(_stream_files(spark, schema, src), view, ckpt)
+        return view, ckpt
+
+    view3, ckpt3 = run_sink(batches, "split")
+    assert read_view(view3) == expected
+    view1, _ = run_sink([sum(batches, [])], "single")
+    assert read_view(view1) == expected
+
+    # replay after a checkpoint wipe with DIFFERENT batching: the fresh
+    # checkpoint replays everything as ONE batch (no read limit)
+    shutil.rmtree(ckpt3)
+    src_replay = tmp_path_factory.mktemp("ivm_src_replay")
+    _write_batches(spark, batches, schema, src_replay)
+    start(spark.readStream.schema(schema).parquet(f"{src_replay}/b=*"), view3, ckpt3)
+    assert read_view(view3) == expected
 
 
 def test_streaming_sprt_monitor_is_batching_invariant(spark, tmp_path_factory):
-    """Streaming SPRT gate (streaming/experiment.py): (1) the merged
-    (day, n, conv) view over micro-batched partials equals the one-shot
-    reduction EXACTLY (integer sum monoid); (2) the trajectory off the
-    merged partials is row-for-row the batch events_sprt_monitor result
-    on the same events — same LLR, same boundary verdicts — proving the
-    streaming twin computes the same monitor however the stream was
-    batched."""
+    """The SPRT monitor's state on the partial sink: each micro-batch
+    publishes its treatment-arm (day, n, conv) counts; the merged counts
+    equal the one-shot reduction EXACTLY (integer sum monoid), and their
+    running sums are row-for-row the cum_trials / cum_conversions of the
+    batch events_sprt_monitor on the same events, however the stream
+    was batched."""
     import datetime as dt
 
     from pyspark.sql import types as T
+    from pyspark.sql.window import Window
 
     from sec_dl_spark.plans.catalog import load_all
-    from sec_dl_spark.streaming.experiment import (
-        arm_day_counts,
-        incremental_sprt_sink,
-        read_arm_day_counts,
-        sprt_trajectory,
-    )
+    from sec_dl_spark.streaming.commit import partial_sink, read_partials
 
     schema = T.StructType(
         [
@@ -1889,66 +1155,56 @@ def test_streaming_sprt_monitor_is_batching_invariant(spark, tmp_path_factory):
     for day in range(3):
         d = base + dt.timedelta(days=day)
         for i in range(30):  # treatment arm, 1/3 convert
-            rows.append(
-                (eid, d, 1, "purchase" if i % 3 == 0 else "view", 1.0, "{}")
-            )
+            rows.append((eid, d, 1, "purchase" if i % 3 == 0 else "view", 1.0, "{}"))
             eid += 1
         for _ in range(20):  # control arm noise that must be excluded
             rows.append((eid, d, 2, "purchase", 1.0, "{}"))
             eid += 1
 
     src = tmp_path_factory.mktemp("sprt_src")
-    for b in range(3):
-        spark.createDataFrame(rows[b::3], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b={b}")
+    _write_batches(spark, [rows[b::3] for b in range(3)], schema, src)
     sf_dir = str(tmp_path_factory.mktemp("sprt_table"))
     full = spark.createDataFrame(rows, schema)
     full.write.parquet(f"{sf_dir}/events.parquet")
 
     out = str(tmp_path_factory.mktemp("sprt_out") / "counts")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    done = incremental_sprt_sink(
-        stream, out, str(tmp_path_factory.mktemp("sprt_ckpt"))
+    assert partial_sink(
+        _stream_files(spark, schema, src),
+        out,
+        str(tmp_path_factory.mktemp("sprt_ckpt")),
+        _arm_day_counts,
     ).awaitTermination(120)
-    assert done
 
-    merged = read_arm_day_counts(spark, out)
+    merged = _summed(read_partials(spark, out), ["day"], "n", "conv")
     got = {str(r["day"]): (r["n"], r["conv"]) for r in merged.collect()}
-    want = {
-        str(r["day"]): (r["n"], r["conv"])
-        for r in arm_day_counts(full).collect()
-    }
+    want = {str(r["day"]): (r["n"], r["conv"]) for r in _arm_day_counts(full).collect()}
     assert got == want  # merge == recompute, exactly
 
-    stream_traj = [tuple(r) for r in sprt_trajectory(merged).collect()]
-    batch_traj = [
-        tuple(r)
+    wd = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    running = [
+        (str(r["day"]), r["cum_n"], r["cum_conv"])
+        for r in merged.select(
+            "day", F.sum("n").over(wd).alias("cum_n"), F.sum("conv").over(wd).alias("cum_conv")
+        ).collect()
+    ]
+    batch = [
+        (str(r["day"]), r["cum_trials"], r["cum_conversions"])
         for r in load_all()["events_sprt_monitor"].spark_fn(spark, sf_dir).collect()
     ]
-    assert stream_traj == batch_traj and len(stream_traj) == 3
+    assert running == batch == [(f"2024-07-0{d + 1}", 30 * (d + 1), 10 * (d + 1)) for d in range(3)]
 
 
-def test_streaming_srm_gate_deduplicates_users_across_batches(
-    spark, tmp_path_factory
-):
-    """Streaming SRM gate: the same user appearing in EVERY micro-batch
-    must count once (HLL sketch partials, not count partials — the
-    sum-monoid shortcut would triple-count and mask/invent an SRM).
-    Planted 40-vs-10 user imbalance spread over 3 batches -> exact
-    sparse-mode estimates, chi2 = (40-10)^2/50 = 18, srm_detected."""
+def test_streaming_srm_gate_deduplicates_users_across_batches(spark, tmp_path_factory):
+    """The SRM gate's input on the HLL sink: the same user appearing in
+    EVERY micro-batch must count once per arm (HLL sketch partials, not
+    count partials — the sum-monoid shortcut would triple-count and
+    mask/invent an SRM). A planted 40-vs-10 user imbalance spread over 3
+    batches reads back as exact sparse-mode estimates."""
     import datetime as dt
 
     from pyspark.sql import types as T
 
-    from sec_dl_spark.streaming.experiment import (
-        incremental_srm_sink,
-        srm_from_sketches,
-    )
+    from sec_dl_spark.streaming.rollup import incremental_hll_sink, read_hll_rollup
 
     schema = T.StructType(
         [
@@ -1956,59 +1212,44 @@ def test_streaming_srm_gate_deduplicates_users_across_batches(
             T.StructField("ts", T.TimestampType()),
             T.StructField("user_id", T.LongType()),
             T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
         ]
     )
     b0 = dt.datetime(2024, 7, 1)
     rows, eid = [], 0
-    for rep in range(3):  # every user fires in every batch chunk
+    for _ in range(3):  # every user fires in every batch chunk
         for u in range(0, 80, 2):  # 40 even users
-            rows.append((eid, b0, u, "click", 1.0, "{}")); eid += 1
+            rows.append((eid, b0, u, "click"))
+            eid += 1
         for u in range(1, 20, 2):  # 10 odd users
-            rows.append((eid, b0, u, "view", 1.0, "{}")); eid += 1
+            rows.append((eid, b0, u, "view"))
+            eid += 1
 
     src = tmp_path_factory.mktemp("srm_src")
     per = len(rows) // 3
-    for b in range(3):
-        spark.createDataFrame(
-            rows[b * per : (b + 1) * per], schema
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b={b}")
-
+    _write_batches(spark, [rows[b * per : (b + 1) * per] for b in range(3)], schema, src)
     out = str(tmp_path_factory.mktemp("srm_out") / "sketches")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    done = incremental_srm_sink(
-        stream, out, str(tmp_path_factory.mktemp("srm_ckpt"))
+    armed = _stream_files(spark, schema, src).withColumn("arm", F.col("user_id") % 2)
+    assert incremental_hll_sink(
+        armed, out, str(tmp_path_factory.mktemp("srm_ckpt")), ["arm"], "user_id"
     ).awaitTermination(120)
-    assert done
 
-    r = srm_from_sketches(spark, out).collect()[0]
-    assert (r["n_users_a"], r["n_users_b"]) == (40, 10)
-    assert r["chi2"] == 18.0 and r["verdict"] == "srm_detected"
+    got = {r["arm"]: r["n_distinct"] for r in read_hll_rollup(spark, out, ["arm"]).collect()}
+    assert got == {0: 40, 1: 10}
 
 
-def test_hll_window_rollup_matches_exact_trailing_distinct(
-    spark, tmp_path_factory
-):
-    """Trailing-window sketch merge (read_hll_window_rollup) equals the
-    exact trailing distinct of the batch events_dau_wau_mau on the same
-    events — sparse-mode HLL is exact at these cardinalities, repeat
-    users across days/batches collapse inside the union, and the window
-    fan-out is day-cardinality-sized."""
+def test_hll_window_rollup_matches_exact_trailing_distinct(spark, tmp_path_factory):
+    """Trailing-window union of the HLL sink's per-day sketch partials
+    equals the exact trailing distinct (wau) of the batch
+    events_dau_wau_mau on the same events — sparse-mode HLL is exact at
+    these cardinalities, and repeat users across days and batches
+    collapse inside the union."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from sec_dl_spark.plans.catalog import load_all
-    from sec_dl_spark.streaming.rollup import (
-        incremental_hll_sink,
-        read_hll_window_rollup,
-    )
+    from sec_dl_spark.streaming.commit import read_partials
+    from sec_dl_spark.streaming.rollup import incremental_hll_sink
 
     schema = T.StructType(
         [
@@ -2025,35 +1266,34 @@ def test_hll_window_rollup_matches_exact_trailing_distinct(
     for day in range(10):
         d = base + dt.timedelta(days=day)
         for u in range(day % 4 + 1):  # overlapping user sets per day
-            rows.append((eid, d, u, "view", 1.0, "{}")); eid += 1
-        rows.append((eid, d, 99, "view", 1.0, "{}")); eid += 1  # daily regular
+            rows.append((eid, d, u, "view", 1.0, "{}"))
+            eid += 1
+        rows.append((eid, d, 99, "view", 1.0, "{}"))  # daily regular
+        eid += 1
 
     src = tmp_path_factory.mktemp("wau_src")
-    for b in range(3):
-        spark.createDataFrame(rows[b::3], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b={b}")
+    _write_batches(spark, [rows[b::3] for b in range(3)], schema, src)
     sf_dir = str(tmp_path_factory.mktemp("wau_table"))
     spark.createDataFrame(rows, schema).write.parquet(f"{sf_dir}/events.parquet")
 
     out = str(tmp_path_factory.mktemp("wau_out") / "sk")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
+    armed = _stream_files(spark, schema, src).select(
+        F.col("ts").cast("date").alias("day"), "user_id"
     )
-    armed = stream.select(F.col("ts").cast("date").alias("day"), "user_id")
-    done = incremental_hll_sink(
-        armed, out, str(tmp_path_factory.mktemp("wau_ckpt")),
-        keys=["day"], value_col="user_id",
+    assert incremental_hll_sink(
+        armed, out, str(tmp_path_factory.mktemp("wau_ckpt")), ["day"], "user_id"
     ).awaitTermination(120)
-    assert done
 
+    # fan each partial sketch onto the 7 spine days whose window holds it
+    parts = read_partials(spark, out)
+    fan = parts.select(
+        "sk", F.explode(F.expr("sequence(day, date_add(day, 6))")).alias("sday")
+    ).join(parts.select(F.col("day").alias("sday")).distinct(), "sday")
     got = {
-        str(r["day"]): r["wau"]
-        for r in read_hll_window_rollup(
-            spark, out, window_days=7, estimate_col="wau"
-        ).collect()
+        str(r["sday"]): r["wau"]
+        for r in fan.groupBy("sday")
+        .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("wau"))
+        .collect()
     }
     want = {
         str(r["day"]): r["wau"]
@@ -2062,283 +1302,12 @@ def test_hll_window_rollup_matches_exact_trailing_distinct(
     assert got == want and len(got) == 10
 
 
-def test_streaming_bot_gate_is_batching_invariant(spark, tmp_path_factory):
-    """Streaming bot gate (streaming/bots.py): per-user gap moments
-    published per micro-batch and merged with the ordered boundary-gap
-    fold must equal the single-pass moments EXACTLY — including the
-    gaps that straddle batch boundaries — and the CV scores must
-    reproduce the batch twin's verdicts (metronome user flagged, bursty
-    user not)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from sec_dl_spark.streaming.bots import (
-        bot_scores,
-        gap_moments,
-        incremental_gap_moments_sink,
-        merged_gap_moments,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    b = dt.datetime(2024, 3, 1, 12)
-    rows = []
-    eid = 0
-    for i in range(40):  # bot: exact 60s metronome
-        rows.append((eid, b + dt.timedelta(seconds=60 * i), 1))
-        eid += 1
-    for off in [0, 5, 6, 300, 301, 4000, 4100, 9000]:  # human bursts
-        rows.append((eid, b + dt.timedelta(seconds=off), 2))
-        eid += 1
-
-    # time-partitioned batches (the ordered-merge contract): split each
-    # user's stream at event-time thirds, so boundary gaps are real
-    rows.sort(key=lambda r: r[1])
-    src = tmp_path_factory.mktemp("bots_src")
-    third = len(rows) // 3
-    chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b={i}")
-
-    out = str(tmp_path_factory.mktemp("bots_out") / "moments")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b=*")
-    )
-    done = incremental_gap_moments_sink(
-        stream, out, str(tmp_path_factory.mktemp("bots_ckpt"))
-    ).awaitTermination(120)
-    assert done
-
-    merged = {r["user_id"]: r for r in merged_gap_moments(spark, out).collect()}
-    single = {
-        r["user_id"]: r
-        for r in gap_moments(spark.createDataFrame(rows, schema)).collect()
-    }
-    assert set(merged) == set(single)
-    for uid in single:
-        m, s = merged[uid], single[uid]
-        # bit-exact merge despite boundary-straddling gaps
-        assert (m["n_events"], m["n_gaps"]) == (s["n"], s["n_gaps"])
-        assert m["gap_sum"] == s["gap_sum"]
-        assert m["gap_sq"] == s["gap_sq"]
-
-    scores = {r["user_id"]: r for r in bot_scores(merged_gap_moments(spark, out)).collect()}
-    assert scores[1]["is_bot"] and scores[1]["gap_cv"] == 0.0
-    assert not scores[2]["is_bot"] and scores[2]["gap_cv"] > 0.3
-
-
-def test_streaming_ivm_retraction_view_matches_recompute(spark, tmp_path_factory):
-    """Streaming aggregate IVM (streaming/ivm.py): signed per-batch
-    partials merged on read must equal the from-scratch recompute over
-    surviving rows EXACTLY — deletes crossing batch boundaries included
-    — be batching-invariant (3 micro-batches == 1), drop emptied keys,
-    and replay idempotently after a checkpoint wipe (same run token,
-    overwrite-on-retry)."""
-    import shutil
-
-    from pyspark.sql import types as T
-
-    from sec_dl_spark.streaming.ivm import incremental_agg_sink, read_view
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.StringType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("v", T.LongType()),
-        ]
-    )
-    batches = [
-        [("a", "I", 10), ("a", "I", 20), ("b", "I", 5)],
-        [("a", "D", 10), ("c", "I", 7)],   # retracts batch-0's row
-        [("b", "D", 5), ("c", "I", 3)],    # empties key b
-    ]
-    expected = {"a": (1, 20), "c": (2, 10)}
-
-    def run_sink(chunks, tag, ckpt=None):
-        src = tmp_path_factory.mktemp(f"ivm_src_{tag}")
-        view = str(tmp_path_factory.mktemp(f"ivm_view_{tag}") / "view")
-        ckpt = ckpt or str(tmp_path_factory.mktemp(f"ivm_ckpt_{tag}") / "ckpt")
-        for i, chunk in enumerate(chunks):
-            spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{src}/b={i}")
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/b=*")
-        )
-        incremental_agg_sink(
-            stream, view, ckpt, ["k"], {"sv": "v"}
-        ).awaitTermination(120)
-        return view, ckpt
-
-    view3, ckpt3 = run_sink(batches, "split")
-    got3 = {
-        r["k"]: (r["n"], r["sv"])
-        for r in read_view(spark, view3, ["k"], {"sv": "v"}).collect()
-    }
-    assert got3 == expected
-
-    view1, _ = run_sink([sum(batches, [])], "single")
-    got1 = {
-        r["k"]: (r["n"], r["sv"])
-        for r in read_view(spark, view1, ["k"], {"sv": "v"}).collect()
-    }
-    assert got1 == expected
-
-    # replay after checkpoint wipe with DIFFERENT batching: the fresh
-    # checkpoint replays everything as ONE batch (no read limit), so
-    # batch=0 must clear the run's stale batch=1/2 partials — otherwise
-    # the merge double-counts them silently
-    shutil.rmtree(ckpt3)
-    src_replay = tmp_path_factory.mktemp("ivm_src_replay")
-    for i, chunk in enumerate(batches):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src_replay}/b={i}")
-    stream = spark.readStream.schema(schema).parquet(f"{src_replay}/b=*")
-    incremental_agg_sink(
-        stream, view3, ckpt3, ["k"], {"sv": "v"}
-    ).awaitTermination(120)
-    again = {
-        r["k"]: (r["n"], r["sv"])
-        for r in read_view(spark, view3, ["k"], {"sv": "v"}).collect()
-    }
-    assert again == expected
-
-
-def test_streaming_cms_sink_matches_from_scratch_build(spark, tmp_path_factory):
-    """Micro-batched count-min maintenance == from-scratch sketch over
-    the union, EXACTLY: the CM sketch is a (row, slot) counter monoid,
-    so however the stream batches, summed partials equal one build — and
-    estimates from the merged sketch therefore carry the same one-sided
-    guarantee. A replay after wiping the checkpoint (same run token,
-    derived from the checkpoint path) overwrites its own partitions — no
-    double-counting."""
-    import shutil
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from sec_dl_spark.operators.sketch import cms_build, cms_estimate
-    from sec_dl_spark.streaming.rollup import incremental_cms_sink, read_cms_sketch
-
-    src = tmp_path_factory.mktemp("cms_src")
-    out = str(tmp_path_factory.mktemp("cms_out") / "sketch")
-    schema = T.StructType([T.StructField("uid", T.LongType())])
-    data = [((i * 13) % 50,) for i in range(600)]  # heavy key overlap
-    for b in range(3):
-        spark.createDataFrame(data[b * 200 : (b + 1) * 200], schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{src}/b={b}")
-    full = spark.createDataFrame(data, schema)
-
-    ckpt = str(tmp_path_factory.mktemp("cms_ckpt") / "ckpt")
-
-    def run_stream():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/b=*")
-        )
-        incremental_cms_sink(
-            stream, out, ckpt, "uid", width=8, depth=4
-        ).awaitTermination(120)
-
-    run_stream()
-    merged = {
-        (r["row"], r["slot"]): r["cnt"]
-        for r in read_cms_sketch(spark, out).collect()
-    }
-    scratch = {
-        (r["row"], r["slot"]): r["cnt"]
-        for r in cms_build(full, "uid", width=8, depth=4).collect()
-    }
-    assert merged == scratch and merged
-
-    # estimates off the merged sketch: never undercount any true key
-    probes = spark.createDataFrame([(k,) for k in range(50)], schema)
-    est = {
-        r["uid"]: r["cms_est"]
-        for r in cms_estimate(
-            read_cms_sketch(spark, out), probes, "uid", width=8, depth=4
-        ).collect()
-    }
-    true = {r["uid"]: r["n"] for r in full.groupBy("uid").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert all(est[k] >= true[k] for k in true)
-
-    # replay after wiping the checkpoint: partitions overwrite, totals stable
-    shutil.rmtree(ckpt)
-    run_stream()
-    again = {
-        (r["row"], r["slot"]): r["cnt"]
-        for r in read_cms_sketch(spark, out).collect()
-    }
-    assert again == scratch
-
-
-def test_cms_sink_multi_run_guard(spark, tmp_path_factory):
-    """A counter monoid is NOT idempotent across runs (unlike HLL):
-    reprocessing the same source under a second checkpoint (another run
-    token) would leave its partials beside the first run's, and the
-    merged sum would double every key. The sink therefore refuses such a
-    path at batch 0, before writing anything, and the first run's sketch
-    still reads undoubled."""
-    import pytest as _pytest
-    from pyspark.sql import types as T
-
-    from sec_dl_spark.operators.sketch import cms_build
-    from sec_dl_spark.streaming.rollup import incremental_cms_sink, read_cms_sketch
-
-    src = tmp_path_factory.mktemp("cmsg_src")
-    out = str(tmp_path_factory.mktemp("cmsg_out") / "sketch")
-    schema = T.StructType([T.StructField("uid", T.LongType())])
-    data = [((i * 7) % 20,) for i in range(200)]
-    spark.createDataFrame(data, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b=0")
-    full = spark.createDataFrame(data, schema)
-
-    def run_stream(ckpt: str):
-        stream = spark.readStream.schema(schema).parquet(f"{src}/b=*")
-        incremental_cms_sink(
-            stream, out, ckpt, "uid", width=8, depth=4
-        ).awaitTermination(120)
-
-    run_stream(str(tmp_path_factory.mktemp("cmsg_ck1")))
-    # same source reprocessed under a second checkpoint → another run token
-    with _pytest.raises(Exception, match="another run"):
-        run_stream(str(tmp_path_factory.mktemp("cmsg_ck2")))
-
-    scratch = {
-        (r["row"], r["slot"]): r["cnt"]
-        for r in cms_build(full, "uid", width=8, depth=4).collect()
-    }
-    merged = {
-        (r["row"], r["slot"]): r["cnt"]
-        for r in read_cms_sketch(spark, out).collect()
-    }
-    assert merged == scratch  # the refused run published nothing
-
-
 _EVENTS = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
 
 def _event_batches():
-    """Two time-partitioned event batches (the bots sink's ordered-merge
-    contract) on either side of midnight, with users and event types
-    recurring across both. Gaps stay short enough that squared
-    microseconds are exact in a double."""
+    """Two time-ordered event batches on either side of midnight, with
+    users and event types recurring across both."""
     import datetime as dt
 
     base = dt.datetime(2024, 5, 1, 23, 59)
@@ -2357,10 +1326,14 @@ def _event_batches():
     ]
 
 
-def _restart_case(spark, name, out, sf_dir):
+def _restart_case(spark, name, out):
     """One foreachBatch sink under the restart test: its source schema and
     two batches, how to start it, its merged read, the single-pass
-    recompute of that read, and the directory holding its run tokens."""
+    recompute of that read, and the directory holding its run tokens.
+    rollup, cms, drift, sprt and ivm run ``commit.partial_sink`` with
+    that monitor's partial (build_rollup, cms_build, PSI bin counts,
+    SPRT arm-day counts, the signed fold_changes); srm runs the HLL sink
+    keyed by arm."""
     from types import SimpleNamespace
 
     from pyspark.sql.window import Window
@@ -2369,17 +1342,59 @@ def _restart_case(spark, name, out, sf_dir):
         cols = sorted(df.columns)
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
-    case = SimpleNamespace(
-        schema=_EVENTS, batches=_event_batches(), run_dir=out, setup=lambda: None
-    )
+    case = SimpleNamespace(schema=_EVENTS, batches=_event_batches(), run_dir=out)
+
+    def partial_case(partial_fn, merge, final=lambda df: df):
+        # the monitor's partial on commit.partial_sink: merged partials
+        # (then ``final``) must equal ``final`` of one partial over all rows
+        from sec_dl_spark.streaming.commit import partial_sink, read_partials
+
+        case.start = lambda s, c: partial_sink(s, out, c, partial_fn)
+        case.merged = lambda: rows(final(merge(read_partials(spark, out))))
+        case.recompute = lambda full: rows(final(partial_fn(full)))
+
     if name == "rollup":
-        from sec_dl_spark.operators.rollup import Measure, build_rollup
-        from sec_dl_spark.streaming.rollup import incremental_rollup_sink, read_rollup
+        from sec_dl_spark.operators.rollup import Measure, build_rollup, merge_rollups
 
         keys, ms = ["event_type"], [Measure("value")]
-        case.start = lambda s, c: incremental_rollup_sink(s, out, c, keys, ms)
-        case.merged = lambda: rows(read_rollup(spark, out, keys, ms))
-        case.recompute = lambda full: rows(build_rollup(full, keys, ms))
+        partial_case(
+            lambda df: build_rollup(df, keys, ms),
+            lambda parts: merge_rollups(parts.limit(0), parts, keys, ms),
+        )
+    elif name == "cms":
+        partial_case(
+            lambda df: _cms_sketch(df.withColumnRenamed("user_id", "uid")),
+            lambda parts: _summed(parts, ["row", "slot"], "cnt"),
+        )
+    elif name == "drift":
+        partial_case(_bin_counts, lambda parts: _summed(parts, ["key", "bin"], "n"))
+    elif name == "sprt":
+        partial_case(_arm_day_counts, lambda parts: _summed(parts, ["day"], "n", "conv"))
+    elif name == "ivm":
+        from sec_dl_spark.operators.cdc import fold_changes
+
+        case.schema = "k string, op string, v long"
+        case.batches = [
+            [("a", "I", 10), ("a", "I", 20), ("b", "I", 5)],
+            [("a", "D", 10), ("b", "D", 5), ("c", "I", 7)],
+        ]
+        partial_case(
+            lambda df: fold_changes(df, ["k"], {"sv": "v"}),
+            lambda parts: _summed(parts, ["k"], "n", "sv"),
+            final=lambda view: view.where(F.col("n") > 0),  # emptied keys drop
+        )
+    elif name == "srm":
+        from sec_dl_spark.streaming.rollup import incremental_hll_sink, read_hll_rollup
+
+        case.start = lambda s, c: incremental_hll_sink(
+            s.withColumn("arm", F.col("user_id") % 2), out, c, ["arm"], "user_id"
+        )
+        case.merged = lambda: rows(read_hll_rollup(spark, out, ["arm"]))
+        case.recompute = lambda full: rows(
+            full.groupBy((F.col("user_id") % 2).alias("arm")).agg(
+                F.count_distinct("user_id").alias("n_distinct")
+            )
+        )
     elif name == "hll":
         from sec_dl_spark.streaming.rollup import incremental_hll_sink, read_hll_rollup
 
@@ -2388,94 +1403,6 @@ def _restart_case(spark, name, out, sf_dir):
         case.recompute = lambda full: rows(
             full.groupBy("event_type").agg(
                 F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("n_distinct")
-            )
-        )
-    elif name == "cms":
-        from sec_dl_spark.operators.sketch import cms_build
-        from sec_dl_spark.streaming.rollup import incremental_cms_sink, read_cms_sketch
-
-        case.start = lambda s, c: incremental_cms_sink(s, out, c, "user_id", width=8, depth=4)
-        case.merged = lambda: rows(read_cms_sketch(spark, out))
-        case.recompute = lambda full: rows(cms_build(full, "user_id", width=8, depth=4))
-    elif name == "drift":
-        from sec_dl_spark.streaming.drift import (
-            bin_counts,
-            incremental_bin_counts_sink,
-            read_bin_counts,
-        )
-
-        case.start = lambda s, c: incremental_bin_counts_sink(s, out, c)
-        case.merged = lambda: rows(read_bin_counts(spark, out))
-        case.recompute = lambda full: rows(bin_counts(full))
-    elif name == "sprt":
-        from sec_dl_spark.streaming.experiment import (
-            arm_day_counts,
-            incremental_sprt_sink,
-            read_arm_day_counts,
-        )
-
-        case.start = lambda s, c: incremental_sprt_sink(s, out, c)
-        case.merged = lambda: rows(read_arm_day_counts(spark, out))
-        case.recompute = lambda full: rows(arm_day_counts(full))
-    elif name == "srm":
-        from sec_dl_spark.streaming.experiment import incremental_srm_sink, srm_from_sketches
-
-        def arm(a):
-            return F.count_distinct(F.when(F.col("user_id") % 2 == a, F.col("user_id")))
-
-        case.start = lambda s, c: incremental_srm_sink(s, out, c)
-        case.merged = lambda: rows(
-            srm_from_sketches(spark, out).select("n_users_a", "n_users_b")
-        )
-        case.recompute = lambda full: rows(
-            full.agg(arm(0).alias("n_users_a"), arm(1).alias("n_users_b"))
-        )
-    elif name == "bots":
-        from sec_dl_spark.streaming.bots import (
-            gap_moments,
-            incremental_gap_moments_sink,
-            merged_gap_moments,
-        )
-
-        cols = ["user_id", "n_gaps", "gap_sum", "gap_sq"]
-        case.start = lambda s, c: incremental_gap_moments_sink(s, out, c)
-        case.merged = lambda: rows(
-            merged_gap_moments(spark, out).select(*cols, F.col("n_events").alias("n"))
-        )
-        case.recompute = lambda full: rows(gap_moments(full).select(*cols, "n"))
-    elif name == "ivm":
-        from sec_dl_spark.operators.cdc import fold_changes
-        from sec_dl_spark.streaming.ivm import incremental_agg_sink, read_view
-
-        case.schema = "k string, op string, v long"
-        case.batches = [
-            [("a", "I", 10), ("a", "I", 20), ("b", "I", 5)],
-            [("a", "D", 10), ("c", "I", 7)],
-        ]
-        ms = {"sv": "v"}
-        case.start = lambda s, c: incremental_agg_sink(s, out, c, ["k"], ms)
-        case.merged = lambda: rows(read_view(spark, out, ["k"], ms))
-        case.recompute = lambda full: rows(
-            fold_changes(full, ["k"], ms).where(F.col("n") > 0)
-        )
-    elif name == "cdc":
-        from sec_dl_spark.operators.cdc import apply_changes
-        from sec_dl_spark.streaming.cdc import change_feed_sink, current_state
-
-        case.schema = "k string, op string, v double, seq int"
-        case.batches = [
-            [("k1", "U", 1.0, 0), ("k2", "U", 2.0, 0)],
-            [("k1", "U", 9.0, 1), ("k2", "D", None, 1), ("k3", "U", 3.0, 1)],
-        ]
-        state = f"{out}/state"
-        case.run_dir = state
-        case.start = lambda s, c: change_feed_sink(
-            s, state, f"{out}/feed", c, ["k"], ["v"]
-        )
-        case.merged = lambda: rows(current_state(spark, state, ["k"]).select("k", "op", "v"))
-        case.recompute = lambda full: rows(
-            apply_changes(full, ["k"], ["seq"], op_col="op", delete_op="D").select(
-                "k", "op", "v"
             )
         )
     elif name == "index":
@@ -2527,64 +1454,22 @@ def _restart_case(spark, name, out, sf_dir):
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-    elif name == "ann_index":
-        from sec_dl_spark.operators.similarity import (
-            assign_cells,
-            build_ivfpq_index,
-            pq_encode,
-            read_ivfpq_index,
-            write_ivfpq_index,
-        )
-        from sec_dl_spark.streaming.ann import incremental_ann_index_sink
-
-        vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-        tail = sorted(tuple(r) for r in vecs.where(F.col("vec_id") >= 80).collect())
-        case.schema = "vec_id long, embedding array<float>"
-        case.batches = [tail[: len(tail) // 2], tail[len(tail) // 2 :]]
-        case.run_dir = f"{out}/increments"
-        case.setup = lambda: write_ivfpq_index(
-            build_ivfpq_index(vecs.where(F.col("vec_id") < 80), n_cells=8), out
-        )
-        case.start = lambda s, c: incremental_ann_index_sink(s, out, c)
-        case.merged = lambda: rows(
-            read_ivfpq_index(spark, out).encoded.where(F.col("vec_id") >= 80)
-        )
-
-        def recompute(full):
-            idx = read_ivfpq_index(spark, out)
-            cells = assign_cells(full, idx.centroids, "vec_id", "embedding")
-            return rows(
-                pq_encode(cells, idx.codebooks).select("vec_id", "cell", "pq_codes")
-            )
-
-        case.recompute = recompute
     return case
 
 
 @pytest.mark.parametrize(
-    "name",
-    [
-        "rollup", "hll", "cms", "drift", "sprt", "srm", "ivm", "bots",
-        "cdc", "index", "dedup", "ann_index",
-    ],
+    "name", ["rollup", "hll", "cms", "drift", "sprt", "srm", "ivm", "index", "dedup"]
 )
-def test_sink_restart_replays_last_batch_without_double_count(
-    spark, sf_dir, tmp_path_factory, name
-):
-    """Every foreachBatch sink survives a crash between a batch's write
-    and its checkpoint commit: with ``commits/1`` gone, the restarted
+def test_sink_restart_replays_last_batch_without_double_count(spark, tmp_path_factory, name):
+    """Each run-token foreachBatch sink survives a crash between a batch's
+    write and its checkpoint commit: with ``commits/1`` gone, the restarted
     query re-runs batch 1, and that replay must overwrite its own output
     instead of publishing a second copy beside it. The merged read equals
     a single-pass recompute, and the output holds one run token."""
-    import os
-
     src = tmp_path_factory.mktemp(f"restart_src_{name}")
     out = str(tmp_path_factory.mktemp(f"restart_out_{name}") / "out")
     ckpt = str(tmp_path_factory.mktemp(f"restart_ckpt_{name}") / "ckpt")
-    case = _restart_case(spark, name, out, sf_dir)
-    case.setup()
+    case = _restart_case(spark, name, out)
     for b, chunk in enumerate(case.batches):
         spark.createDataFrame(chunk, case.schema).coalesce(1).write.parquet(f"{src}/b={b}")
 
