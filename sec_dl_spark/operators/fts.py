@@ -7,16 +7,20 @@ indexes, so the index is itself a table: one posting row per (token, doc),
 with in-document positions for phrase queries.
 
 Scale design (100 TB): building the index is one explode + one groupBy
-(single shuffle keyed by (token, doc_id)); the persisted index is
-partitioned by token hash-bucket (or token prefix). Like a GIN lookup, a
-search reads only its own terms' rows: the term list is an IN filter
-pushed into the scan, and on a persisted index opened with ``read_index``
-the terms' bucket values are folded into a static partition filter, so
-only their directories are listed and read. No scan of the raw text and
-no join against a term table at query time. An index written with
-``with_stats=False``, an index written before the bucket count was
-recorded, or a frame read with plain ``spark.read.parquet`` is served
-unpruned (the IN filter still applies).
+(single shuffle keyed by (token, doc_id)). A persisted index has one
+format, a set of (run, batch) commits (``write_index_batch``): each
+commit's postings sit under ``ingest_run=R/ingest_batch=N/token_bucket=B``
+with ``B = hash_bucket(token, buckets)``, and its stats partials (doc_len,
+token df, a one-row corpus summary) under ``<path>_stats``. ``write_index``
+is a full rebuild into a single commit; the streaming sink
+(streaming/index.py) adds one commit per micro-batch; ``read_index`` opens
+either. Like a GIN lookup, a search reads only its own terms' rows: the
+term list is an IN filter pushed into the scan, and on an index opened
+with ``read_index`` the terms' bucket values are folded into a static
+partition filter, so only their directories are listed and read. No scan
+of the raw text and no join against a term table at query time. An index
+with no corpus rows (a rebuild cut short) or a frame read with plain
+``spark.read.parquet`` is served unpruned (the IN filter still applies).
 """
 
 from __future__ import annotations
@@ -26,7 +30,10 @@ from pyspark.sql import functions as F
 
 from sec_dl_spark.functions.analysis import hash_bucket
 from sec_dl_spark.functions.text import tokenize
+from sec_dl_spark.operators.quality import with_observed_metrics
 from sec_dl_spark.session import spread
+from sec_dl_spark.streaming.commit import commit_batch_partition
+from sec_dl_spark.util import hadoop_delete, read_string_partitioned, try_read_parquet
 
 
 def build_inverted_index(
@@ -113,121 +120,139 @@ class CorpusStats:
         return self._avgdl
 
 
-# Partition-value width of the "prefix" index layout: substr(token, 1, 2)
-# yields ~1-2k directories over natural-language corpora — few enough for
-# cheap partition discovery, narrow enough that a `word:*` query touches a
-# handful of them.
-PREFIX_BUCKET_LEN = 2
-
 # Metadata key on read_index's ``token_bucket`` column: the bucket count
 # the index was written with. Pruning needs it to compute a term's bucket;
 # a column without it (plain spark.read.parquet) is never pruned.
 BUCKETS_META = "fts_buckets"
+
+# Run token of a full rebuild's single commit. Non-numeric like the
+# streaming sink's tokens (commit.run_token), and never equal to one.
+REBUILD_RUN = "rebuild"
+
+
+def write_index_batch(
+    postings: DataFrame, path: str, run: str, batch_id: int, buckets: int
+) -> None:
+    """Write one (run, batch) commit of the persisted index: the postings,
+    then the commit's stats partials computed from the postings just
+    written, so ``postings`` (tokenization included) is evaluated once.
+
+    The postings are repartitioned by bucket, one file per bucket per
+    commit. The partials are ``doc_len`` (doc_id, dl), ``token_df``
+    (token, df) and ``corpus``, one row of (n_docs, dl = Σ dl, buckets)
+    taken as observed metrics of the doc_len write. Every write is a
+    dynamic overwrite of this commit's own partition, so a retried batch
+    replaces its earlier attempt. The corpus row goes last: its presence
+    marks the commit's stats complete. A commit with no postings writes
+    nothing."""
+    spark = postings.sparkSession
+    bucketed = postings.withColumn("token_bucket", hash_bucket(F.col("token"), buckets))
+    commit_batch_partition(
+        bucketed.repartition("token_bucket"), path, run, batch_id, "token_bucket"
+    )
+    written = try_read_parquet(
+        spark,
+        f"{path}/ingest_run={run}/ingest_batch={batch_id}",
+        bucketed.drop("token_bucket").schema,
+    )
+    if written is None:
+        return
+    stats = CorpusStats(written, cache=False)
+    doc_len, corpus = with_observed_metrics(
+        stats.doc_len,
+        f"fts_corpus_{run}_{batch_id}",
+        {"n_docs": F.count(F.lit(1)), "dl": F.sum("dl")},
+    )
+    commit_batch_partition(doc_len, f"{path}_stats/doc_len", run, batch_id)
+    commit_batch_partition(stats.df, f"{path}_stats/token_df", run, batch_id)
+    commit_batch_partition(
+        # literals over a JVM range: no Python-worker job for one row
+        spark.range(1, numPartitions=1).select(
+            F.lit(corpus.get["n_docs"]).cast("long").alias("n_docs"),
+            F.lit(corpus.get["dl"]).cast("long").alias("dl"),
+            F.lit(buckets).cast("int").alias("buckets"),
+        ),
+        f"{path}_stats/corpus",
+        run,
+        batch_id,
+    )
 
 
 def write_index(
     postings: DataFrame,
     path: str,
     buckets: int = 256,
-    with_stats: bool = True,
     layout: str = "hash",
 ) -> None:
-    """Persist the index partitioned for serve-time pruning. (Bucketed
+    """Persist the index as a full rebuild: one commit (batch 0 of run
+    ``REBUILD_RUN``) replaces whatever ``path`` held. (Bucketed
     saveAsTable is the managed-catalog variant; plain parquet keeps the
-    fixture flow hermetic.)
+    fixture flow hermetic.) ``write_index(read_index(src)[0], dst)``
+    compacts a streamed index into one commit.
 
-    ``layout="hash"`` (default) partitions by ``token_bucket =
-    hash_bucket(token, buckets)`` — uniform directory sizes; an exact-term
-    search on the index opened with ``read_index`` prunes to its terms'
-    bucket directories, but a `word:*` prefix query must scan every bucket
-    (hash destroys token order). ``layout="prefix"`` partitions by
-    ``prefix_bucket = substr(token, 1, PREFIX_BUCKET_LEN)`` — prefix AND
-    exact-term queries both prune statically, at the cost of
-    linguistically-skewed directory sizes. Choose per workload; both serve
-    the same search functions.
-
-    ``with_stats`` additionally writes the corpus-stats sidecar (N, avgdl,
-    doc_len, token df, and for the hash layout the bucket count that
-    pruning needs) so ranked queries at serve time launch no
-    stats-aggregation jobs — stats belong to index build, not query eval.
-    The sidecar is computed from the postings just written, so ``postings``
-    (tokenization included) is evaluated once. Without the sidecar the
-    index is served unpruned."""
-    if layout == "hash":
-        bucketed = postings.withColumn("token_bucket", hash_bucket(F.col("token"), buckets))
-        part_col = "token_bucket"
-    elif layout == "prefix":
-        bucketed = postings.withColumn(
-            "prefix_bucket", F.substring("token", 1, PREFIX_BUCKET_LEN)
-        )
-        part_col = "prefix_bucket"
-    else:
-        raise ValueError(f"unknown index layout {layout!r} (hash|prefix)")
+    The stats sidecar (N, avgdl, doc_len, token df and the bucket count
+    that pruning needs) is written with the postings, so ranked queries at
+    serve time launch no stats-aggregation jobs. ``layout`` accepts only
+    ``"hash"``, the one layout written."""
+    if layout != "hash":
+        raise ValueError(f"unknown index layout {layout!r} (hash)")
     spark = postings.sparkSession
-    # Remove any existing sidecar BEFORE touching the postings: a crash
-    # between the postings overwrite and the sidecar rewrite would
-    # otherwise leave the previous corpus's stats next to the new
-    # postings — silently wrong TF-IDF/BM25 with no signal. Deleting
-    # first turns that crash window into a detectable missing-sidecar
-    # state (read_index returns stats=None).
-    _hadoop_delete(spark, f"{path}_stats")
-    (
-        bucketed.repartition(part_col)
-        .write.mode("overwrite")
-        .partitionBy(part_col)
-        .parquet(path)
-    )
-    if with_stats:
-        from sec_dl_spark.util import read_string_partitioned
-
-        stats = CorpusStats(read_string_partitioned(spark, path), cache=False)
-        stats.doc_len.write.mode("overwrite").parquet(f"{path}_stats/doc_len")
-        stats.df.write.mode("overwrite").parquet(f"{path}_stats/token_df")
-        spark.read.parquet(f"{path}_stats/doc_len").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.lit(buckets if layout == "hash" else None).cast("int").alias("buckets"),
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}_stats/corpus")
-
-
-from sec_dl_spark.util import hadoop_delete as _hadoop_delete  # noqa: E402
+    # Remove the sidecar BEFORE the postings: a crash between the postings
+    # rewrite and the sidecar rewrite would otherwise leave the previous
+    # corpus's stats next to the new postings — silently wrong TF-IDF/BM25
+    # with no signal. Deleting first turns that crash window into a
+    # detectable missing-sidecar state (read_index returns stats=None).
+    hadoop_delete(spark, f"{path}_stats")
+    hadoop_delete(spark, path)
+    write_index_batch(postings, path, REBUILD_RUN, 0, buckets)
 
 
 def read_index(spark, path: str) -> tuple[DataFrame, CorpusStats | None]:
-    """Load a persisted index + its stats sidecar (None if written with
-    ``with_stats=False``). The scalar read is one tiny single-file scan at
+    """Open a persisted index, rebuilt or streamed: its postings, and
+    CorpusStats rehydrated from the commits' partials (None when no
+    commit recorded its corpus row). The corpus rows are one tiny scan at
     open time; queries then run with zero stats jobs.
 
-    On the hash layout the returned postings keep ``token_bucket``, tagged
-    with the recorded bucket count (``BUCKETS_META``), so the search
-    functions prune to their terms' directories. With no recorded count
-    (no sidecar, or an index written before the count was recorded) the
-    column is dropped and searches scan every bucket."""
-    from sec_dl_spark.util import read_string_partitioned, try_read_parquet
-
-    # type inference OFF: the prefix layout's partition values are token
-    # prefixes — an all-digit prefix set would otherwise infer numeric and
-    # collapse distinct prefixes like '0'/'00' (see util helper docstring)
-    postings = read_string_partitioned(spark, path)
+    N and the summed dl add up over the corpus rows (avgdl = Σdl / N).
+    Token df is the commits' partial counts summed per token, an
+    aggregation needed only when the index holds more than one commit.
+    The returned postings keep ``token_bucket``, tagged with the recorded
+    bucket count (``BUCKETS_META``), so the search functions prune to
+    their terms' directories; commits that record different counts are
+    refused, since pruning by either count would miss the other's rows.
+    With no corpus row the column is dropped and searches scan every
+    bucket."""
+    # type inference OFF for the partition columns: a string run token
+    # must never parse as a number, and the search functions compare
+    # token_bucket to string bucket values (see util helper docstring)
+    postings = read_string_partitioned(spark, path).drop("ingest_run", "ingest_batch")
     # probe by reading, not os.path — works on any filesystem scheme; an
     # empty-but-present sidecar (crash between delete and rewrite) also
     # reads as "no stats" rather than raising
-    corpus = try_read_parquet(spark, f"{path}_stats/corpus")
-    rows = corpus.collect() if corpus is not None else []
-    row = rows[0].asDict() if rows else {}
-    if row.get("buckets"):
-        postings = postings.withMetadata("token_bucket", {BUCKETS_META: row["buckets"]})
-    else:
-        postings = postings.drop("token_bucket")
+    corpus = try_read_parquet(spark, f"{path}_stats/corpus", "n_docs long, dl long, buckets int")
+    rows = corpus.select("n_docs", "dl", "buckets").collect() if corpus is not None else []
     if not rows:
-        return postings, None
+        return postings.drop("token_bucket"), None
+    counts = sorted({r["buckets"] for r in rows})
+    if len(counts) > 1:
+        raise ValueError(
+            f"index {path!r} mixes commits written with bucket counts {counts}; "
+            "rebuild it with write_index"
+        )
+    # the partials' schemas are known, so their reads infer nothing
+    ids = postings.schema["doc_id"].dataType.simpleString()
+    doc_len = spark.read.schema(f"doc_id {ids}, dl long").parquet(f"{path}_stats/doc_len")
+    df = spark.read.schema("token string, df long").parquet(f"{path}_stats/token_df")
+    if len(rows) > 1:
+        df = df.groupBy("token").agg(F.sum("df").alias("df"))
+    n_docs = sum(r["n_docs"] for r in rows)
     stats = CorpusStats(
-        doc_len=spark.read.parquet(f"{path}_stats/doc_len"),
-        df=spark.read.parquet(f"{path}_stats/token_df"),
-        n_docs=int(row["n_docs"]),
-        avgdl=float(row["avgdl"]),
+        doc_len=doc_len.select("doc_id", "dl"),
+        df=df.select("token", "df"),
+        n_docs=n_docs,
+        avgdl=sum(r["dl"] for r in rows) / n_docs,
     )
-    return postings, stats
+    return postings.withMetadata("token_bucket", {BUCKETS_META: counts[0]}), stats
 
 
 def _lowered(terms) -> list[str]:
@@ -238,37 +263,20 @@ def _lowered(terms) -> list[str]:
 def _prune_to_terms(postings: DataFrame, terms) -> DataFrame:
     """The terms' posting rows: ``token IN (terms)``, pushed into the scan.
 
-    On a persisted index the partition column is restricted first, to the
-    terms' ``prefix_bucket`` values (prefix layout) or to their
-    ``token_bucket`` values when read_index recorded the bucket count (hash
-    layout). The bucket value is a constant expression of the term, so
+    On an index opened with read_index the partition column is restricted
+    first, to the terms' ``token_bucket`` values under the recorded bucket
+    count. The bucket value is a constant expression of the term, so
     constant folding turns the predicate into a static partition filter:
     only those directories are read, and no job runs to find them. The
-    hash column is dropped after pruning. A ``token_bucket`` column
+    bucket column is dropped after pruning. A ``token_bucket`` column
     without a recorded count is left alone — its bucket count is unknown."""
     toks = _lowered(terms)
-    cols = postings.columns
-    if "prefix_bucket" in cols:
-        prefixes = sorted({t[:PREFIX_BUCKET_LEN] for t in toks})
-        postings = postings.where(F.col("prefix_bucket").isin(prefixes))
-    elif "token_bucket" in cols:
+    if "token_bucket" in postings.columns:
         n = postings.schema["token_bucket"].metadata.get(BUCKETS_META)
         if n:
             values = [hash_bucket(F.lit(t), n).cast("string") for t in toks]
             postings = postings.where(F.col("token_bucket").isin(values)).drop("token_bucket")
     return postings.where(F.col("token").isin(toks))
-
-
-def _prune_to_prefix(postings: DataFrame, prefix: str) -> DataFrame:
-    """Partition pruning for a `word:*` node on the prefix layout: tokens
-    matching the prefix live only in directories whose bucket value starts
-    with (or equals the truncation of) the prefix."""
-    if "prefix_bucket" not in postings.columns:
-        return postings
-    q = prefix.lower()
-    if len(q) >= PREFIX_BUCKET_LEN:
-        return postings.where(F.col("prefix_bucket") == q[:PREFIX_BUCKET_LEN])
-    return postings.where(F.col("prefix_bucket").startswith(q))
 
 
 def search_all(postings: DataFrame, terms: list[str]) -> DataFrame:
@@ -590,14 +598,8 @@ def search_query(postings: DataFrame, q: str) -> DataFrame:
         if kind == "term":
             return _prune_to_terms(postings, [node[1]]).select("doc_id")
         if kind == "prefix":
-            # PG 'word:*'. On the hash layout this scans all buckets (hash
-            # destroys token order); on the prefix layout the bucket
-            # predicate prunes to the prefix's directories at plan time.
-            return (
-                _prune_to_prefix(postings, node[1])
-                .where(F.col("token").startswith(node[1]))
-                .select("doc_id")
-            )
+            # PG 'word:*': scans every bucket (hash destroys token order)
+            return postings.where(F.col("token").startswith(node[1])).select("doc_id")
         if kind == "phrase":
             return search_phrase(postings, node[1])
         if kind == "not":

@@ -2712,8 +2712,8 @@ def dq_range_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse copy and its serving mirror, a table before and after a
     migration) can be reconciled by joining digest tables the size of
     |key range|/1000 — the repair scan then touches only diverging
-    buckets. checksum_diff() is the comparison half, pytest-pinned with a
-    planted divergence."""
+    buckets. Comparing two digest tables bucket by bucket localizes a
+    divergence; a planted one is pytest-pinned."""
     from sec_dl_spark.operators.quality import range_checksums
 
     o = t(spark, sf_dir, "orders")

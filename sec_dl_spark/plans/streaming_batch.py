@@ -51,7 +51,7 @@ def _typed_spine(frame, type_col: str = "event_type", col: str = "dn"):
 )
 def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregation (streaming twin: groupBy(window(ts,'1
-    hour')) with a watermark — streaming/pipeline.py:windowed_counts)."""
+    hour')) with a watermark)."""
     e = t(spark, sf_dir, "events")
     return (
         e.groupBy(F.date_trunc("hour", F.col("ts")).alias("hour_start"), "event_type")
@@ -3134,8 +3134,8 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine days it supports, then exact distinct counts per day, so no
     sliding distinct-window state and no events rescans. At open-web
     scale the exact explode swaps for per-day HLL sketch partials
-    merged over the window (streaming/rollup.py holds that form); the
-    exact form here is the oracle-checkable truth both share. WAU/MAU
+    (streaming/rollup.py's HLL sink) unioned over each trailing window;
+    the exact form here is the oracle-checkable truth both share. WAU/MAU
     are ≥ DAU ≥ 1 on every spine day, so the ratios never divide by
     zero."""
     e = t(spark, sf_dir, "events")
@@ -6393,7 +6393,7 @@ def events_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     user slice (user_id ≡ 0 mod 17), and report each probe's true
     count, sketch estimate, one-sided overcount (NEVER negative — the
     CM invariant), and whether it sits inside the e/width·N error
-    budget. Unlike the Spark-built-in cms_counts blob, this sketch is
+    budget. Unlike Spark's built-in count_min_sketch blob, this sketch is
     a (row, slot, cnt) TABLE under a closed-form hash family — byte-
     reproducible in ANSI SQL (the oracle rebuilds it), mergeable by
     (row, slot) sum like the HLL rollup partials, and therefore

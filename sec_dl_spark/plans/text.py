@@ -1720,7 +1720,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling to target rates (keep all de, 80% fr, 30% en, 10% rest) —
     unlike sample/sampleBy the kept set is a pure function of doc_id, so
     reruns, retries and different partitionings keep identical rows
-    (operators/relational.py:deterministic_mixture_sample). Output is the
+    (operators/relational.py:mixture_keep_expr). Output is the
     per-group audit (total vs kept)."""
     from sec_dl_spark.operators.relational import mixture_keep_expr
 
@@ -2300,7 +2300,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the full-corpus LM, both add-one smoothed over the observed
     feature space. High scores = looks like the target domain;
     resampling ∝ exp(weight) shifts the corpus mixture toward it
-    (compose with deterministic_mixture_sample). Scale posture: words
+    (compose with mixture_keep_expr). Scale posture: words
     are hashed into a FIXED 2^17-bucket feature space (the paper's own
     move — an open web-scale vocabulary reaches 10^8-10^9 distinct
     tokens, a hashed model is bounded at 131072 rows forever), and the
@@ -2715,7 +2715,7 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability ∝ p_i^T, T=0.7, which upweights small domains without
     letting any one dominate). Output is the per-source audit: raw share
     vs temperature share — feed p_temp into
-    deterministic_mixture_sample's per-group rates to materialize the
+    mixture_keep_expr's per-group rates to materialize the
     rebalanced corpus. Scale shape: one partial-agg groupBy on source
     (domain count, thousands at most), then window sums over that
     DOMAIN-sized frame — the corpus itself is scanned once for a
@@ -3051,7 +3051,7 @@ def corpus_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive proportionally to their likelihood ratio (Xie et al. 2023
     run exactly this accept/reject over their weights). The uniform draw
     is the same DETERMINISTIC multiply-xorshift hash of doc_id as
-    deterministic_mixture_sample (salt 1000003): reruns, retries, and
+    mixture_keep_expr (salt 1000003): reruns, retries, and
     repartitions accept identical rows, and the oracle reproduces the
     draw bit-for-bit. The threshold compares INTEGERS (h < floor(p·2^20))
     so engine ULP noise in exp() cannot flip a verdict unless p·2^20

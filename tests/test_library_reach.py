@@ -24,7 +24,6 @@ KEEP = {
     "read_jdbc": "PostgreSQL serving mirror: read the served tables back over JDBC",
     "write_jdbc_append": "PostgreSQL serving mirror: the reference's quarterly JDBC appends",
     "idx_url_grid": "the reference's quarterly EDGAR master.idx URL list",
-    "with_observed_metrics": "Observation-based metrics, the lever for folding convergence probes into pins",
 }
 
 

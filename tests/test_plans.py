@@ -276,10 +276,13 @@ def test_write_index_serves_a_token_hashing_to_int_min(spark, tmp_path):
     assert [r["doc_id"] for r in search_all(served, ["actgv1ns"]).collect()] == [1]
 
 
-def test_fts_stats_sidecar_roundtrip(spark, tmp_path):
+def test_fts_stats_sidecar_roundtrip(spark, tmp_path, monkeypatch):
     """write_index persists corpus stats (N, avgdl, doc_len, token df) so
     ranked queries at serve time launch no stats-aggregation jobs; ranked
-    results off the rehydrated stats equal the stats-free computation."""
+    results off the rehydrated stats equal the stats-free computation. A
+    rebuild cut short at its postings write leaves no stats at all, never
+    the previous corpus's."""
+    from sec_dl_spark.operators import fts
     from sec_dl_spark.operators.fts import (
         CorpusStats,
         build_inverted_index,
@@ -307,78 +310,77 @@ def test_fts_stats_sidecar_roundtrip(spark, tmp_path):
         without = [tuple(r) for r in fn(postings, terms, k=10).collect()]
         assert with_stats == without and len(with_stats) > 0
 
-    # a rebuild with with_stats=False must remove the old sidecar — stale
-    # N/avgdl/df against rewritten postings would silently corrupt ranking
-    write_index(postings.limit(50), idx_path, buckets=16, with_stats=False)
-    _, stats2 = read_index(spark, idx_path)
+    # the rebuild's postings land, then it dies before writing any stats:
+    # the old N/avgdl/df against the new postings would silently corrupt
+    # ranking, so the old sidecar must already be gone
+    commit = fts.commit_batch_partition
+
+    def postings_then_crash(df, path, *args):
+        commit(df, path, *args)
+        raise RuntimeError("rebuild cut short")
+
+    monkeypatch.setattr(fts, "commit_batch_partition", postings_then_crash)
+    with pytest.raises(RuntimeError, match="cut short"):
+        write_index(postings.limit(50), idx_path, buckets=16)
+    monkeypatch.undo()
+    served2, stats2 = read_index(spark, idx_path)
     assert stats2 is None
+    assert "token_bucket" not in served2.columns  # no recorded count: unpruned
+    assert served2.count() > 0
 
 
-def test_fts_prefix_layout_prunes_prefix_and_term_queries(spark, tmp_path):
-    """The prefix-partitioned index layout: a `word:*` tsquery prunes to the
-    prefix's partition directories (the hash layout must scan every bucket
-    — hash destroys token order), exact-term search prunes to the term's
-    directory, and both layouts return identical results."""
-    from sec_dl_spark.operators.fts import (
-        build_inverted_index,
-        read_index,
-        search_all,
-        search_query,
-        write_index,
-    )
+def test_streamed_and_rebuilt_index_serve_the_same_answers(spark, tmp_path, fts_index_dir):
+    """One persisted format: the documents indexed in two micro-batches by
+    the streaming sink and in one write_index call read back through
+    read_index as the same postings and stats; every search shape returns
+    the same rows (ranked scores byte-equal) with every postings scan
+    bucket-pruned; and write_index over the streamed index's postings (a
+    compaction into one commit) serves the same answers again."""
+    from sec_dl_spark.operators.fts import read_index, write_index
     from sec_dl_spark.sources.fixtures import load_table
+    from sec_dl_spark.streaming.index import incremental_index_sink
 
-    docs = load_table(spark, SF, "documents")
-    postings = build_inverted_index(docs)
-    hash_path = str(tmp_path / "fts_hash")
-    pref_path = str(tmp_path / "fts_prefix")
-    write_index(postings, hash_path, buckets=16, with_stats=False)
-    write_index(postings, pref_path, with_stats=False, layout="prefix")
+    src, streamed = str(tmp_path / "src"), str(tmp_path / "streamed")
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    docs.repartition(2).write.parquet(src)
+    stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    q = incremental_index_sink(stream, streamed, str(tmp_path / "ckpt"), buckets=16)
+    assert q.awaitTermination(180) and q.exception() is None
+    assert len(spark.read.parquet(f"{streamed}_stats/corpus").collect()) == 2
 
-    served_hash, _ = read_index(spark, hash_path)
-    served_pref, _ = read_index(spark, pref_path)
+    compacted = str(tmp_path / "compacted")
+    write_index(read_index(spark, streamed)[0], compacted, buckets=16)
 
-    q = "spa:*"
-    out_pref = search_query(served_pref, q)
-    ids_pref = {r["doc_id"] for r in out_pref.collect()}
-    ids_hash = {r["doc_id"] for r in search_query(served_hash, q).collect()}
-    ids_live = {r["doc_id"] for r in search_query(postings, q).collect()}
-    assert ids_pref == ids_hash == ids_live and len(ids_pref) > 0
+    def rows(df):
+        return sorted(tuple(map(repr, r)) for r in df.collect())
 
-    plan = physical_plan(out_pref)
-    scan = plan.split("PartitionFilters")
-    assert len(scan) >= 2 and "prefix_bucket" in scan[1].split("]")[0]
+    def served(path):
+        postings, stats = read_index(spark, path)
+        answers = {}
+        for name, shape in fts_search_shapes().items():
+            found = shape(postings, stats)
+            answers[name] = rows(found)
+            # a postings scan lists token_bucket among its partition
+            # columns (the scan's path may be cut short in the plan text)
+            parts = [
+                line.split("PartitionFilters: [")[1].split("]")[0]
+                for line in physical_plan(found).splitlines()
+                if "FileScan parquet" in line and "token_bucket#" in line
+            ]
+            assert parts and all("token_bucket" in part for part in parts), (path, name)
+        return (
+            rows(postings.select("token", "doc_id", "positions")),
+            stats.n_docs,
+            stats.avgdl,
+            rows(stats.df),
+            rows(stats.doc_len),
+            answers,
+        )
 
-    # exact-term search prunes too (bucket value is a function of the term)
-    term_plan = physical_plan(search_all(served_pref, ["spark"]))
-    assert "prefix_bucket" in term_plan.split("PartitionFilters")[1].split("]")[0]
-
-
-def test_fts_prefix_layout_numeric_prefixes_stay_distinct(spark, tmp_path):
-    """Partition-column type inference collapses an all-digit partition
-    value set ('05' and '5' both parse as the number 5, merging their
-    directories' rows under one value); read_index reads with inference
-    disabled so numeric-token prefixes round-trip distinctly and the
-    injected bucket predicates match exactly."""
-    from sec_dl_spark.operators.fts import (
-        build_inverted_index,
-        read_index,
-        search_all,
-        write_index,
-    )
-
-    # every token starts with a digit → every prefix_bucket value is
-    # all-digit → the inference trap actually arms
-    docs = spark.createDataFrame(
-        [(1, "05 10k"), (2, "5 20f")], "doc_id long, text string"
-    )
-    idx_path = str(tmp_path / "fts_digit")
-    write_index(build_inverted_index(docs), idx_path, layout="prefix", with_stats=False)
-    served, _ = read_index(spark, idx_path)
-    buckets = {r["prefix_bucket"] for r in served.select("prefix_bucket").distinct().collect()}
-    assert {"05", "5"} <= buckets  # distinct directories, not collapsed
-    assert {r["doc_id"] for r in search_all(served, ["05"]).collect()} == {1}
-    assert {r["doc_id"] for r in search_all(served, ["5"]).collect()} == {2}
+    want = served(fts_index_dir)
+    assert all(want[5].values())
+    assert served(streamed) == want
+    assert served(compacted) == want
 
 
 def test_exact_n_sample_prefilter_below_window(spark, specs):

@@ -59,40 +59,6 @@ def test_compaction_preserves_data_and_reduces_files(spark, tmp_path):
     assert "part" in after.columns
 
 
-def test_incremental_index_matches_batch_build(spark, tmp_path_factory):
-    import pyspark.sql.types as T
-
-    from sec_dl_spark.operators.fts import build_inverted_index, search_all
-    from sec_dl_spark.streaming.index import incremental_index_sink
-
-    src = tmp_path_factory.mktemp("docs_stream")
-    idx = str(tmp_path_factory.mktemp("inc_index") / "postings")
-    ckpt = str(tmp_path_factory.mktemp("inc_ckpt"))
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select("doc_id", "text")
-    docs.repartition(2).write.mode("overwrite").parquet(str(src))
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
-    )
-    q = incremental_index_sink(stream, idx, ckpt, buckets=8)
-    q.awaitTermination(120)
-
-    served = spark.read.parquet(idx)
-    live = build_inverted_index(docs)
-    # same posting set (token, doc_id, positions)
-    a = {(r["token"], r["doc_id"], tuple(r["positions"])) for r in served.collect()}
-    b = {(r["token"], r["doc_id"], tuple(r["positions"])) for r in live.collect()}
-    assert a == b
-    # and a search over the incrementally-built index gives the live answer
-    s1 = {r["doc_id"] for r in search_all(served, ["spark", "join"]).collect()}
-    s2 = {r["doc_id"] for r in search_all(live, ["spark", "join"]).collect()}
-    assert s1 == s2
-
-
 def test_incremental_dedup_across_batches(spark, tmp_path_factory):
     """Historical exact dedup: a later micro-batch must not re-admit
     content an earlier batch (or an earlier RUN) already accepted —
@@ -190,11 +156,8 @@ def test_incremental_index_stats_and_replay_idempotency(spark, tmp_path_factory)
 
     import pyspark.sql.types as T
 
-    from sec_dl_spark.operators.fts import build_inverted_index, search_bm25
-    from sec_dl_spark.streaming.index import (
-        incremental_index_sink,
-        read_incremental_index,
-    )
+    from sec_dl_spark.operators.fts import build_inverted_index, read_index, search_bm25
+    from sec_dl_spark.streaming.index import incremental_index_sink
 
     src = tmp_path_factory.mktemp("inc2_src")
     idx = str(tmp_path_factory.mktemp("inc2_index") / "postings")
@@ -217,7 +180,7 @@ def test_incremental_index_stats_and_replay_idempotency(spark, tmp_path_factory)
         incremental_index_sink(stream, idx, ckpt, buckets=8).awaitTermination(120)
 
     run_once()
-    served, stats = read_incremental_index(spark, idx)
+    served, stats = read_index(spark, idx)
     assert stats is not None
     live = build_inverted_index(docs)
     terms = ["spark", "sort", "vector"]
@@ -230,7 +193,7 @@ def test_incremental_index_stats_and_replay_idempotency(spark, tmp_path_factory)
     n_postings = served.count()
     shutil.rmtree(ckpt)  # replay every batch against the already-written sinks
     run_once()
-    served2, stats2 = read_incremental_index(spark, idx)
+    served2, stats2 = read_index(spark, idx)
     assert served2.count() == n_postings  # no duplicated postings
     assert stats2.n_docs == stats.n_docs
     assert abs(stats2.avgdl - stats.avgdl) < 1e-9
@@ -1406,11 +1369,8 @@ def _restart_case(spark, name, out):
             )
         )
     elif name == "index":
-        from sec_dl_spark.operators.fts import build_inverted_index
-        from sec_dl_spark.streaming.index import (
-            incremental_index_sink,
-            read_incremental_index,
-        )
+        from sec_dl_spark.operators.fts import build_inverted_index, read_index
+        from sec_dl_spark.streaming.index import incremental_index_sink
 
         case.schema = "doc_id long, text string"
         case.batches = [
@@ -1419,7 +1379,7 @@ def _restart_case(spark, name, out):
         ]
 
         def merged():
-            postings, stats = read_incremental_index(spark, out)
+            postings, stats = read_index(spark, out)
             return rows(postings.select("token", "doc_id", "positions")) + rows(
                 stats.df.select("token", "df")
             )
@@ -1497,8 +1457,8 @@ def test_sink_restart_replays_last_batch_without_double_count(spark, tmp_path_fa
 def test_incremental_index_commits_a_token_hashing_to_int_min(spark, tmp_path_factory):
     """hash('actgv1ns') is Int.MinValue, where ANSI abs() overflows: a
     micro-batch holding that token must commit and be searchable."""
-    from sec_dl_spark.operators.fts import search_all
-    from sec_dl_spark.streaming.index import incremental_index_sink, read_incremental_index
+    from sec_dl_spark.operators.fts import read_index, search_all
+    from sec_dl_spark.streaming.index import incremental_index_sink
 
     src = str(tmp_path_factory.mktemp("min_src"))
     idx = str(tmp_path_factory.mktemp("min_index") / "postings")
@@ -1508,5 +1468,25 @@ def test_incremental_index_commits_a_token_hashing_to_int_min(spark, tmp_path_fa
     q = incremental_index_sink(spark.readStream.schema(schema).parquet(src), idx, ckpt, buckets=8)
     q.awaitTermination(120)
     assert q.exception() is None
-    postings, _ = read_incremental_index(spark, idx)
+    postings, _ = read_index(spark, idx)
     assert [r["doc_id"] for r in search_all(postings, ["actgv1ns"]).collect()] == [7]
+
+
+def test_index_refuses_commits_with_different_bucket_counts(spark, tmp_path_factory):
+    """Two ingest runs into one index path with different bucket counts:
+    pruning by either count would silently miss the other run's rows, so
+    read_index must refuse the index, naming the path and both counts."""
+    from sec_dl_spark.operators.fts import read_index
+    from sec_dl_spark.streaming.index import incremental_index_sink
+
+    src = str(tmp_path_factory.mktemp("mixed_src"))
+    idx = str(tmp_path_factory.mktemp("mixed_index") / "postings")
+    schema = "doc_id long, text string"
+    spark.createDataFrame([(1, "alpha beta"), (2, "gamma")], schema).write.mode("overwrite").parquet(src)
+    for buckets in (4, 8):
+        ckpt = str(tmp_path_factory.mktemp(f"mixed_ckpt_{buckets}"))
+        stream = spark.readStream.schema(schema).parquet(src)
+        q = incremental_index_sink(stream, idx, ckpt, buckets=buckets)
+        assert q.awaitTermination(120) and q.exception() is None
+    with pytest.raises(ValueError, match=r"postings.*\[4, 8\]"):
+        read_index(spark, idx)

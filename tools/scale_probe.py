@@ -644,22 +644,12 @@ def main() -> None:
     # line). Everything at/below the marker is preserved verbatim; a
     # marker is written even when absent so the next regen has one.
     MARKER = "<!-- scale-probe:keep-below -->"
-    kept: list[str] = []
+    kept = [MARKER]
     if os.path.exists(md_path):
         with open(md_path) as f:
             old = f.read().splitlines()
         if MARKER in old:
             kept = old[old.index(MARKER):]
-        else:
-            # one-time migration for files predating the marker: keep
-            # from the first hand-written '## ' heading, under the
-            # marker from now on
-            for i, line in enumerate(old):
-                if line.startswith("## "):
-                    kept = [MARKER] + old[i:]
-                    break
-    if not kept:
-        kept = [MARKER]
     lines.extend(kept)
     while lines and lines[-1] == "":
         lines.pop()
