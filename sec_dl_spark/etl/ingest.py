@@ -110,5 +110,16 @@ def apply_text_updates(text: DataFrame, updates: DataFrame) -> DataFrame:
         "year",
         "qtr",
     )
-    keep = text.join(upd.select("filing_id"), "filing_id", "left_anti")
+    # The wave's ids are broadcast. The size estimate of a pinned scrape
+    # joined to the metadata table is the product of the two sides'
+    # estimates: left to the planner, this anti-join flips to a sort-merge
+    # join, two more shuffle jobs, once the metadata table grows past a few
+    # quarters. A wave is every pending filing of the quarters loaded: one
+    # quarter per wave in a quarterly load, but every quarter given to
+    # ``python -m sec_dl_spark --idx ...`` in a backfill. The broadcast
+    # holds only the wave's long ids, 64 bytes each (2M ids measured at
+    # 128 MiB in local mode), far less than the text the wave already
+    # holds pinned, and within Spark's 8 GiB broadcast limit up to ~130M
+    # filings.
+    keep = text.join(F.broadcast(upd.select("filing_id")), "filing_id", "left_anti")
     return keep.unionByName(upd)

@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sec_dl_spark.functions.text import (
-    clean_filing_text,
-    normalize_nfkd,
-    strip_embedded_files,
-)
+from sec_dl_spark.functions.text import clean_filing_text, strip_embedded_files
 from sec_dl_spark.session import pin
 
 SEC_ARCHIVES_BASE = "https://www.sec.gov/Archives/"
@@ -98,14 +94,12 @@ def fetch_pending(pending: DataFrame, fetcher=fake_fetcher, rate_limit_s: float 
 
 def parse_fetched(fetched: DataFrame) -> DataFrame:
     """raw SGML → cleaned text: lowercase + embedded-binary segment drop
-    (mapInPandas, F7) + NFKD normalization (F5, the reference applies it to
-    every kept segment, scrape_all_filings.py:99) + builtin cleaning chain
-    (F1-F6). Returns (filing_id, text)."""
+    (F7) and NFKD normalization (F5, the reference applies it to every kept
+    segment, scrape_all_filings.py:99) in one mapInPandas + builtin
+    cleaning chain (F1-F6). Returns (filing_id, text)."""
     lowered = fetched.select("filing_id", F.lower(F.col("raw")).alias("text"))
     stripped = strip_embedded_files(lowered, text_col="text")
-    return stripped.select(
-        "filing_id", clean_filing_text(normalize_nfkd(F.col("text"))).alias("text")
-    )
+    return stripped.select("filing_id", clean_filing_text(F.col("text")).alias("text"))
 
 
 def scrape_pending(

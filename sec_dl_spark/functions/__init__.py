@@ -1,7 +1,6 @@
 from sec_dl_spark.functions.text import (  # noqa: F401
     clean_filing_text,
     drop_long_tokens,
-    normalize_nfkd,
     strip_embedded_files,
     strip_tags,
     tokenize,

@@ -12,9 +12,10 @@ Reference behavior being reproduced (all in
 - drop embedded binary-attachment segments by <FILENAME> extension (:83-114)
 
 Everything except NFKD and the SGML segmentation is a built-in expression
-(whole-stage codegen, no Python in the hot path). NFKD is a vectorized
-Arrow pandas_udf; segmentation is mapInPandas with bs4/lxml when available
-and a deterministic regex fallback otherwise.
+(whole-stage codegen, no Python in the hot path). Segmentation and NFKD
+share one mapInPandas stage, as in the reference's remove_embedded_files,
+which normalizes every segment it keeps: bs4/lxml when available and a
+deterministic regex fallback otherwise.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # Binary attachment extensions the reference drops
 # (scrape_all_filings.py:91-92).
@@ -72,15 +72,6 @@ def tokenize(col: Column) -> Column:
     return F.filter(F.split(F.lower(col), "[^a-z0-9]+"), lambda x: x != "")
 
 
-@F.pandas_udf(StringType())
-def normalize_nfkd(s: pd.Series) -> pd.Series:
-    """NFKD unicode normalization (F5, scrape_all_filings.py:99) — no Spark
-    builtin; vectorized via Arrow batches."""
-    import unicodedata
-
-    return s.map(lambda x: unicodedata.normalize("NFKD", x) if x is not None else None)
-
-
 def _strip_segments_regex(raw: str) -> str:
     """Deterministic fallback for the reference's bs4 segmentation
     (scrape_all_filings.py:83-114): drop <DOCUMENT> blocks whose <FILENAME>
@@ -102,10 +93,14 @@ def _strip_segments_regex(raw: str) -> str:
 
 
 def strip_embedded_files(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """mapInPandas stage dropping embedded binary attachments (F7) — the one
-    irreducibly-Python operator. Uses bs4+lxml when importable (library
-    parity with the reference), else the regex fallback. Arrow-batched;
-    schema preserved."""
+    """mapInPandas stage dropping embedded binary attachments (F7), then
+    NFKD-normalizing what is kept (F5, scrape_all_filings.py:99) — the one
+    irreducibly-Python operator, so the two steps share one Python
+    crossing. Uses bs4+lxml when importable (library parity with the
+    reference), else the regex fallback. Arrow-batched; schema
+    preserved."""
+    import unicodedata
+
     schema = df.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -137,8 +132,12 @@ def strip_embedded_files(df: DataFrame, text_col: str = "text") -> DataFrame:
         except ImportError:
             one = _strip_segments_regex
 
+        def kept(raw) -> str:
+            text = one(raw)
+            return unicodedata.normalize("NFKD", text) if text is not None else None
+
         for pdf in batches:
-            pdf[text_col] = pdf[text_col].map(one)
+            pdf[text_col] = pdf[text_col].map(kept)
             yield pdf
 
     return df.mapInPandas(run, schema=schema)

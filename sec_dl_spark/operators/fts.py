@@ -8,22 +8,31 @@ with in-document positions for phrase queries.
 
 Scale design (100 TB): building the index is one explode + one groupBy
 (single shuffle keyed by (token, doc_id)). A persisted index has one
-format, a set of (run, batch) commits (``write_index_batch``): each
-commit's postings sit under ``ingest_run=R/ingest_batch=N/token_bucket=B``
-with ``B = hash_bucket(token, buckets)``, and its stats partials (doc_len,
-token df, a one-row corpus summary) under ``<path>_stats``. ``write_index``
-is a full rebuild into a single commit; the streaming sink
-(streaming/index.py) adds one commit per micro-batch; ``read_index`` opens
-either. Like a GIN lookup, a search reads only its own terms' rows: the
-term list is an IN filter pushed into the scan, and on an index opened
-with ``read_index`` the terms' bucket values are folded into a static
-partition filter, so only their directories are listed and read. No scan
-of the raw text and no join against a term table at query time. An index
-with no corpus rows (a rebuild cut short) or a frame read with plain
-``spark.read.parquet`` is served unpruned (the IN filter still applies).
+format, a set of (run, batch) commits: each commit's postings sit under
+``ingest_run=R/ingest_batch=N/token_bucket=B`` with ``B =
+hash_bucket(token, buckets)``, one file per bucket, and its stats partials
+(doc_len, token df) under ``<path>_stats/partials``. The commit's record,
+one row under ``<path>_stats/corpus`` (N, summed dl, bucket count and the
+source fingerprint), is written last, and a commit is visible only once
+its record is — the analog of the reference's trigger indexing a filing
+inside the UPDATE's own transaction, whole or not at all. A replayed
+batch is checked against its record's fingerprint before it writes
+anything, and refused if its source changed. ``write_index`` is a full rebuild into a single commit;
+the streaming sink (streaming/index.py) adds one commit per micro-batch
+with ``write_index_batch``; ``read_index`` opens either. Like a GIN
+lookup, a search reads only its own terms' rows: the term list is an IN
+filter pushed into the scan, and on an index opened with ``read_index``
+the terms' bucket values are folded into a static partition filter, so
+only their directories are listed and read. No scan of the raw text and
+no join against a term table at query time. An index with no record (a
+rebuild cut short) or a frame read with plain ``spark.read.parquet`` is
+served unpruned (the IN filter still applies).
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import and_, or_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,8 +41,8 @@ from sec_dl_spark.functions.analysis import hash_bucket
 from sec_dl_spark.functions.text import tokenize
 from sec_dl_spark.operators.quality import with_observed_metrics
 from sec_dl_spark.session import spread
-from sec_dl_spark.streaming.commit import commit_batch_partition
-from sec_dl_spark.util import hadoop_delete, read_string_partitioned, try_read_parquet
+from sec_dl_spark.streaming.commit import changed_source, commit_batch_partition, fingerprint_metrics
+from sec_dl_spark.util import hadoop_delete, hadoop_exists, read_string_partitioned, try_read_parquet
 
 
 def build_inverted_index(
@@ -105,7 +114,8 @@ class CorpusStats:
             F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
         ).collect()[0]
         self._n_docs = int(row["n_docs"])
-        self._avgdl = float(row["avgdl"])
+        # avg over no documents is null: an empty corpus ranks nothing
+        self._avgdl = float(row["avgdl"] or 0.0)
 
     @property
     def n_docs(self) -> int:
@@ -129,53 +139,135 @@ BUCKETS_META = "fts_buckets"
 # streaming sink's tokens (commit.run_token), and never equal to one.
 REBUILD_RUN = "rebuild"
 
+# The commit record, one row per (run, batch) under ``<path>_stats/corpus``
+# and written last: the commit's N and summed dl, its bucket count, the
+# source fingerprint (n, fp) a replay is checked against, and the doc_id
+# type, so every table of the index opens with a declared schema.
+RECORD_SCHEMA = (
+    "n_docs long, dl long, buckets int, n long, fp long, doc_id_type string, "
+    "ingest_run string, ingest_batch string"
+)
 
-def write_index_batch(
-    postings: DataFrame, path: str, run: str, batch_id: int, buckets: int
-) -> None:
-    """Write one (run, batch) commit of the persisted index: the postings,
-    then the commit's stats partials computed from the postings just
-    written, so ``postings`` (tokenization included) is evaluated once.
 
-    The postings are repartitioned by bucket, one file per bucket per
-    commit. The partials are ``doc_len`` (doc_id, dl), ``token_df``
-    (token, df) and ``corpus``, one row of (n_docs, dl = Σ dl, buckets)
-    taken as observed metrics of the doc_len write. Every write is a
-    dynamic overwrite of this commit's own partition, so a retried batch
-    replaces its earlier attempt. The corpus row goes last: its presence
-    marks the commit's stats complete. A commit with no postings writes
-    nothing."""
-    spark = postings.sparkSession
-    bucketed = postings.withColumn("token_bucket", hash_bucket(F.col("token"), buckets))
-    commit_batch_partition(
-        bucketed.repartition("token_bucket"), path, run, batch_id, "token_bucket"
+def _postings_schema(ids: str) -> str:
+    """The persisted postings; partition values stay strings: a run token
+    must never parse as a number, and searches compare ``token_bucket``
+    to string bucket values."""
+    return (
+        f"token string, doc_id {ids}, positions array<int>, "
+        "ingest_run string, ingest_batch string, token_bucket string"
     )
+
+
+def _partials_schema(ids: str) -> str:
+    """The stats partials: ``kind=doc_len`` rows are (doc_id, n = dl),
+    ``kind=token_df`` rows are (token, n = df)."""
+    return f"doc_id {ids}, token string, n long, ingest_run string, ingest_batch string, kind string"
+
+
+def _commit(postings: DataFrame, source, path: str, run: str, batch_id: int, buckets: int) -> None:
+    """Write one (run, batch) commit from ``postings`` (token_bucket,
+    token, doc_id, positions), already clustered by bucket so each bucket
+    is one file: the postings, then the stats partials computed from the
+    postings just written, then the record. ``source`` is the Observation
+    carrying the input's fingerprint (n, fp), filled by the postings
+    write, or None for a rebuild, whose record carries no fingerprint.
+
+    Every write is a dynamic overwrite of this commit's own partition, so
+    a retried batch replaces its earlier attempt. Until the record lands
+    the commit is invisible to ``read_index``. A commit with no postings
+    writes no stats and no record."""
+    spark = postings.sparkSession
+    commit_batch_partition(postings, path, run, batch_id, "token_bucket")
+    ids = postings.schema["doc_id"].dataType.simpleString()
     written = try_read_parquet(
         spark,
         f"{path}/ingest_run={run}/ingest_batch={batch_id}",
-        bucketed.drop("token_bucket").schema,
+        f"token string, doc_id {ids}, positions array<int>",
     )
     if written is None:
         return
-    stats = CorpusStats(written, cache=False)
-    doc_len, corpus = with_observed_metrics(
-        stats.doc_len,
-        f"fts_corpus_{run}_{batch_id}",
-        {"n_docs": F.count(F.lit(1)), "dl": F.sum("dl")},
+    # doc_len and token_df in one aggregation: one shuffle, one write
+    partials = (
+        written.groupingSets([["doc_id"], ["token"]], "doc_id", "token")
+        .agg(
+            F.sum(F.size("positions")).alias("dl"),
+            F.count(F.lit(1)).alias("df"),
+            F.grouping("token").alias("by_doc"),
+        )
+        .select(
+            "doc_id",
+            "token",
+            F.when(F.col("by_doc") == 1, F.col("dl")).otherwise(F.col("df")).alias("n"),
+            F.when(F.col("by_doc") == 1, F.lit("doc_len")).otherwise(F.lit("token_df")).alias("kind"),
+        )
     )
-    commit_batch_partition(doc_len, f"{path}_stats/doc_len", run, batch_id)
-    commit_batch_partition(stats.df, f"{path}_stats/token_df", run, batch_id)
+    doc_len = F.col("kind") == "doc_len"
+    partials, corpus = with_observed_metrics(
+        partials,
+        f"fts_corpus_{run}_{batch_id}",
+        {"n_docs": F.count(F.when(doc_len, 1)), "dl": F.sum(F.when(doc_len, F.col("n")))},
+    )
+    commit_batch_partition(partials, f"{path}_stats/partials", run, batch_id, "kind")
     commit_batch_partition(
         # literals over a JVM range: no Python-worker job for one row
         spark.range(1, numPartitions=1).select(
             F.lit(corpus.get["n_docs"]).cast("long").alias("n_docs"),
             F.lit(corpus.get["dl"]).cast("long").alias("dl"),
             F.lit(buckets).cast("int").alias("buckets"),
+            F.lit(source.get["n"] if source else None).cast("long").alias("n"),
+            F.lit(source.get["fp"] if source else None).cast("long").alias("fp"),
+            F.lit(ids).alias("doc_id_type"),
         ),
         f"{path}_stats/corpus",
         run,
         batch_id,
     )
+
+
+def write_index_batch(docs: DataFrame, path: str, run: str, batch_id: int, buckets: int) -> None:
+    """Index documents (doc_id, text) as one (run, batch) commit of the
+    persisted index (``_commit``): the streaming sink's writer.
+
+    From documents to bucket files is one shuffle of the postings. The
+    documents are spread round-robin over every core first (a micro-batch
+    arrives as a few files, one task each), tokenized, tagged with their
+    bucket and repartitioned by it into an explicit partition count, so
+    adaptive execution cannot coalesce the write into one task. The
+    (bucket, token, doc_id) grouping then runs on the bucket clustering
+    with no second shuffle. The source fingerprint rides on the same job
+    as an observation.
+
+    Each batch first pays one driver-side ``exists`` on its record
+    directory, no job. A batch whose record exists is a replay of a
+    commit that landed whole, since the record is written last: the batch
+    is fingerprinted (one aggregate job) and checked against the record
+    before anything is touched. A changed source raises, and raises again
+    on every later replay, while the commit first made stays served as it
+    was; an unchanged source writes nothing."""
+    spark = docs.sparkSession
+    record = f"{path}_stats/corpus/ingest_run={run}/ingest_batch={batch_id}"
+    if hadoop_exists(spark, record):
+        prior = spark.read.schema("n long, fp long").parquet(record).first()
+        got = docs.agg(*[e.alias(k) for k, e in fingerprint_metrics("doc_id").items()]).first()
+        error = changed_source(path, run, batch_id, prior, got)
+        if error is not None:
+            raise error
+        return
+    n = spark.sparkContext.defaultParallelism
+    docs, source = with_observed_metrics(
+        docs, f"fts_source_{run}_{batch_id}", fingerprint_metrics("doc_id")
+    )
+    tokens = docs.repartition(n).select(
+        "doc_id", F.posexplode(tokenize(F.col("text"))).alias("pos", "token")
+    )
+    postings = (
+        tokens.withColumn("token_bucket", hash_bucket(F.col("token"), buckets))
+        .repartition(n, "token_bucket")
+        .groupBy("token_bucket", "token", "doc_id")
+        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
+    )
+    _commit(postings, source, path, run, batch_id, buckets)
 
 
 def write_index(
@@ -198,57 +290,81 @@ def write_index(
         raise ValueError(f"unknown index layout {layout!r} (hash)")
     spark = postings.sparkSession
     # Remove the sidecar BEFORE the postings: a crash between the postings
-    # rewrite and the sidecar rewrite would otherwise leave the previous
-    # corpus's stats next to the new postings — silently wrong TF-IDF/BM25
-    # with no signal. Deleting first turns that crash window into a
-    # detectable missing-sidecar state (read_index returns stats=None).
+    # rewrite and the record would otherwise leave the previous corpus's
+    # record naming the new postings. Deleting first turns that crash
+    # window into a detectable no-record state (read_index returns
+    # stats=None).
     hadoop_delete(spark, f"{path}_stats")
     hadoop_delete(spark, path)
-    write_index_batch(postings, path, REBUILD_RUN, 0, buckets)
+    bucketed = postings.select(
+        hash_bucket(F.col("token"), buckets).alias("token_bucket"), "token", "doc_id", "positions"
+    ).repartition(spark.sparkContext.defaultParallelism, "token_bucket")
+    _commit(bucketed, None, path, REBUILD_RUN, 0, buckets)
 
 
 def read_index(spark, path: str) -> tuple[DataFrame, CorpusStats | None]:
-    """Open a persisted index, rebuilt or streamed: its postings, and
-    CorpusStats rehydrated from the commits' partials (None when no
-    commit recorded its corpus row). The corpus rows are one tiny scan at
-    open time; queries then run with zero stats jobs.
+    """Open a persisted index, rebuilt or streamed: the postings of every
+    commit that holds a record, and CorpusStats rehydrated from those
+    commits' records and partials. The records are one tiny scan at open
+    time; every table opens with a declared schema, so nothing else runs
+    a job, and queries then run with zero stats jobs.
 
-    N and the summed dl add up over the corpus rows (avgdl = Σdl / N).
-    Token df is the commits' partial counts summed per token, an
-    aggregation needed only when the index holds more than one commit.
+    The recorded (run, batch) pairs become a static partition filter on
+    the postings and the partials: a commit whose record never landed (a
+    batch that died mid-commit) is served by no search shape, boolean or
+    ranked, until its replay lands the record. N and the summed dl add up over the records (avgdl
+    = Σdl / N). Token df is the commits' partial counts summed per token,
+    an aggregation needed only when the index holds more than one commit.
     The returned postings keep ``token_bucket``, tagged with the recorded
     bucket count (``BUCKETS_META``), so the search functions prune to
     their terms' directories; commits that record different counts are
     refused, since pruning by either count would miss the other's rows.
-    With no corpus row the column is dropped and searches scan every
-    bucket."""
-    # type inference OFF for the partition columns: a string run token
-    # must never parse as a number, and the search functions compare
-    # token_bucket to string bucket values (see util helper docstring)
-    postings = read_string_partitioned(spark, path).drop("ingest_run", "ingest_batch")
+
+    An index with no record at all serves only a rebuild cut short, as
+    its postings lie: every bucket is scanned, and with stats None ranked
+    searches compute their stats from the same postings, so every search
+    shape still sees one document set. A streamed commit, the first one
+    included, is never served without its record."""
     # probe by reading, not os.path — works on any filesystem scheme; an
     # empty-but-present sidecar (crash between delete and rewrite) also
-    # reads as "no stats" rather than raising
-    corpus = try_read_parquet(spark, f"{path}_stats/corpus", "n_docs long, dl long, buckets int")
-    rows = corpus.select("n_docs", "dl", "buckets").collect() if corpus is not None else []
+    # reads as "no records" rather than raising
+    records = try_read_parquet(spark, f"{path}_stats/corpus", RECORD_SCHEMA)
+    rows = records.collect() if records is not None else []
     if not rows:
-        return postings.drop("token_bucket"), None
+        postings = read_string_partitioned(spark, path).where(F.col("ingest_run") == REBUILD_RUN)
+        return postings.drop("ingest_run", "ingest_batch", "token_bucket"), None
     counts = sorted({r["buckets"] for r in rows})
     if len(counts) > 1:
         raise ValueError(
             f"index {path!r} mixes commits written with bucket counts {counts}; "
             "rebuild it with write_index"
         )
-    # the partials' schemas are known, so their reads infer nothing
-    ids = postings.schema["doc_id"].dataType.simpleString()
-    doc_len = spark.read.schema(f"doc_id {ids}, dl long").parquet(f"{path}_stats/doc_len")
-    df = spark.read.schema("token string, df long").parquet(f"{path}_stats/token_df")
+    batches: dict[str, list[str]] = {}
+    for r in rows:
+        batches.setdefault(r["ingest_run"], []).append(r["ingest_batch"])
+    committed = reduce(
+        or_,
+        [
+            (F.col("ingest_run") == run) & F.col("ingest_batch").isin(sorted(b))
+            for run, b in sorted(batches.items())
+        ],
+    )
+    ids = rows[0]["doc_id_type"]
+    postings = (
+        spark.read.schema(_postings_schema(ids))
+        .parquet(path)
+        .where(committed)
+        .drop("ingest_run", "ingest_batch")
+    )
+    partials = spark.read.schema(_partials_schema(ids)).parquet(f"{path}_stats/partials").where(committed)
+    doc_len = partials.where(F.col("kind") == "doc_len").select("doc_id", F.col("n").alias("dl"))
+    df = partials.where(F.col("kind") == "token_df").select("token", F.col("n").alias("df"))
     if len(rows) > 1:
         df = df.groupBy("token").agg(F.sum("df").alias("df"))
     n_docs = sum(r["n_docs"] for r in rows)
     stats = CorpusStats(
-        doc_len=doc_len.select("doc_id", "dl"),
-        df=df.select("token", "df"),
+        doc_len=doc_len,
+        df=df,
         n_docs=n_docs,
         avgdl=sum(r["dl"] for r in rows) / n_docs,
     )
@@ -445,9 +561,6 @@ def search_proximity_ranked(
     Cost scales with occurrences OF THE QUERY TERMS in MATCHING docs only
     (the term IN filter and the AND semi-join prune first), never with
     corpus size."""
-    from functools import reduce
-    from operator import and_
-
     from pyspark.sql.window import Window
 
     uniq = _lowered(terms)

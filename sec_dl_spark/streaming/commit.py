@@ -23,12 +23,14 @@ they are cross-run state by design — several logical ingest runs share
 one corpus, and each run's output must survive the next run. They commit
 by dynamic partition overwrite of ``ingest_run=<token>/ingest_batch=<id>``
 (``commit_batch_partition``) and enforce the replay contract per batch
-instead: every batch persists a content fingerprint beside the sink, and a
-replayed batch under the same token fails fast if its source changed
-(``check_source_marker``). Starting a genuinely new ingest into them
-requires a new checkpoint path, hence a new token: reusing the old token
-would leave the old run's batches that the new source no longer produces
-beside the new output.
+instead, with the same content fingerprint (``fingerprint_metrics``): a
+replayed batch under the same token fails fast if its source changed. The
+dedup sink persists the fingerprint in a marker table beside the sink
+(``check_source_marker``); the FTS index keeps it in each commit's record
+(operators/fts.py), which is also what makes the commit visible. Starting
+a genuinely new ingest into them requires a new checkpoint path, hence a
+new token: reusing the old token would leave the old run's batches that
+the new source no longer produces beside the new output.
 """
 
 from __future__ import annotations
@@ -129,19 +131,50 @@ def not_own_batch(run: str, batch_id: int):
     return ~((F.col("ingest_run") == run) & (F.col("ingest_batch") == batch_id))
 
 
+def fingerprint_metrics(id_col: str) -> dict:
+    """An order-independent content fingerprint of a batch, as aggregate
+    columns: ``n`` (rows) and ``fp`` (sum of the top 31 bits of xxhash64
+    over ``id_col``). The sum stays < 2^31 · rows, so it cannot hit ANSI
+    long overflow before ~2^32 rows in one batch, while staying
+    order-independent and sensitive to any id multiset change."""
+    return {
+        "n": F.count(F.lit(1)),
+        "fp": F.coalesce(F.sum(F.shiftrightunsigned(F.xxhash64(F.col(id_col)), 33)), F.lit(0)),
+    }
+
+
+def changed_source(path: str, run: str, batch_id: int, prior, got) -> ValueError | None:
+    """The error to raise when this (run, batch) first committed from a
+    source with fingerprint ``prior`` and now reads ``got`` (both with
+    ``n`` and ``fp``), else None: the checkpoint was wiped and re-pointed
+    at a CHANGED source while keeping the same run token."""
+    if (prior["n"], prior["fp"]) == (got["n"], got["fp"]):
+        return None
+    return ValueError(
+        f"run token {run!r} at {path!r} first committed batch {batch_id} from a "
+        f"source with fingerprint (n={prior['n']}, fp={prior['fp']}), but this batch "
+        f"{batch_id} has (n={got['n']}, fp={got['fp']}): the checkpoint was wiped "
+        "over a CHANGED source. Use a NEW checkpoint path (new run token) for a new "
+        "ingest — replaying a stale token would leave the old run's extra batch "
+        "partitions beside the new output."
+    )
+
+
 def check_source_marker(
     batch_df: DataFrame, sink_path: str, run: str, batch_id: int, id_col: str
 ) -> None:
-    """Fail-fast guard for the replay contract, enforced on EVERY batch:
-    computes an order-independent content fingerprint of the batch (count
-    + sum of xxhash64 over ``id_col``) and compares it to the marker row
-    this (run, batch) persisted beside the sink on its first run. A
-    mismatch at ANY batch means the checkpoint was wiped and re-pointed at
-    a CHANGED source while keeping the same run token — exactly the
-    silent-stale-partition hazard the module docstring describes — so
-    raise instead of degrading. Batch 0 catches a wholesale source swap;
-    the per-batch rows extend the guard to sources that diverge only in
-    later batches (identical batch 0, different tail).
+    """The dedup sink's fail-fast guard for the replay contract, enforced
+    on EVERY batch: computes the batch's content fingerprint
+    (``fingerprint_metrics``) and compares it to the marker row this
+    (run, batch) persisted beside the sink (``<sink_path>_runs``) on its
+    first run. A mismatch at ANY batch means the checkpoint was wiped and
+    re-pointed at a CHANGED source while keeping the same run token —
+    exactly the silent-stale-partition hazard the module docstring
+    describes — so raise instead of degrading. Batch 0 catches a wholesale
+    source swap; the per-batch rows extend the guard to sources that
+    diverge only in later batches (identical batch 0, different tail). The
+    FTS index does not use this marker: its commit record carries the
+    fingerprint (operators/fts.py).
 
     Residual scope limit: if the new source produces FEWER batches than
     the marker has rows for, the missing tail is never re-fingerprinted,
@@ -155,14 +188,8 @@ def check_source_marker(
     batch over data the sink is about to process anyway."""
     spark = batch_df.sparkSession
     marker_path = f"{sink_path}_runs"
-    # top 31 hash bits per row: the sum stays < 2^31 · rows, so it cannot
-    # hit ANSI long overflow before ~2^32 rows in one batch, while staying
-    # order-independent and sensitive to any id multiset change
     row = batch_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.shiftrightunsigned(F.xxhash64(F.col(id_col)), 33)), F.lit(0)
-        ).alias("fp"),
+        *[expr.alias(name) for name, expr in fingerprint_metrics(id_col).items()]
     ).first()
     existing = try_read_parquet(spark, marker_path)
     if existing is not None:
@@ -177,17 +204,9 @@ def check_source_marker(
             .select("n", "fp")
             .collect()
         )
-        if prior and (prior[0]["n"] != row["n"] or prior[0]["fp"] != row["fp"]):
-            raise ValueError(
-                f"run token {run!r} at {sink_path!r} first committed batch "
-                f"{batch_id} from a source with fingerprint (n={prior[0]['n']}, "
-                f"fp={prior[0]['fp']}), but this batch {batch_id} has "
-                f"(n={row['n']}, fp={row['fp']}): the checkpoint was wiped "
-                "over a CHANGED source. Use a NEW checkpoint path (new run "
-                "token) for a new ingest — replaying a stale token would "
-                "leave the old run's extra batch partitions beside the new "
-                "output."
-            )
+        error = changed_source(sink_path, run, batch_id, prior[0], row) if prior else None
+        if error is not None:
+            raise error
     (
         # literals over a JVM range: createDataFrame from a Python list
         # would run a Python-worker job on every batch of every sink

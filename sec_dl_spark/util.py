@@ -46,3 +46,10 @@ def hadoop_delete(spark: SparkSession, path: str) -> None:
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     fs.delete(p, True)
+
+
+def hadoop_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on whatever filesystem it lives on: one
+    driver-side metadata call, no job."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)

@@ -4,6 +4,8 @@ refactors — these tests fail if a future change silently degrades a plan
 (e.g. a filter stops reaching the scan, or a pair generator becomes a
 cartesian product)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +16,34 @@ SF = "/root/testdata/sf0.001"
 
 def physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture
+def uncut_plans(spark):
+    """Plan text with metadata strings in full for the test's duration:
+    Spark cuts a scan's PartitionFilters list at
+    spark.sql.maxMetadataStringLength (100 characters by default), and on
+    an index opened with read_index the commit-record filter comes before
+    the bucket filter in that list."""
+    conf = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, str(1 << 20))
+    yield
+    spark.conf.set(conf, prev)
+
+
+def postings_bucket_filters(df) -> list[set[str]]:
+    """For each postings scan of ``df``'s physical plan (a scan with a
+    token_bucket column; an executed adaptive plan lists its scans twice,
+    final and initial), the token_bucket values its partition filters
+    restrict it to; an empty set where none does. Needs ``uncut_plans``."""
+    out = []
+    for line in physical_plan(df).splitlines():
+        if "FileScan parquet" in line and "token_bucket#" in line:
+            part = line.split("PartitionFilters: [")[1].split("]")[0]
+            m = re.search(r"token_bucket#\d+ IN \(([^)]*)\)|\(token_bucket#\d+ = (\w+)\)", part)
+            out.append(set((m.group(1) or m.group(2)).split(",")) if m else set())
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -182,7 +212,7 @@ def test_filings_layout_partition_pruning(spark, tmp_path):
     assert "(year#" not in plan.split("PushedFilters")[-1].split("ReadSchema")[0]
 
 
-def test_fts_persisted_index_serving(spark, fts_index_dir):
+def test_fts_persisted_index_serving(spark, fts_index_dir, uncut_plans):
     """The build-once/query-many FTS serving path: write_index persists
     postings partitioned by token hash-bucket; a term search against the
     index opened with read_index prunes to the terms' bucket directories
@@ -201,11 +231,11 @@ def test_fts_persisted_index_serving(spark, fts_index_dir):
     served, _ = read_index(spark, fts_index_dir)
     pruned = search_all(served, terms)
     assert {r["doc_id"] for r in pruned.collect()} == live
-    buckets = sorted(
+    buckets = {
         str(v) for v in spark.range(1).select(*[hash_bucket(F.lit(t), 16) for t in terms]).first()
-    )
-    part = physical_plan(pruned).split("PartitionFilters: [")[1].split("]")[0]
-    assert "token_bucket" in part and all(b in part for b in buckets)
+    }
+    filters = postings_bucket_filters(pruned)
+    assert filters and all(f == buckets for f in filters)
 
     persisted = spark.read.parquet(fts_index_dir)
     unpruned = search_all(persisted, terms)
@@ -213,7 +243,7 @@ def test_fts_persisted_index_serving(spark, fts_index_dir):
     assert "PartitionFilters: []" in physical_plan(unpruned)
 
 
-def test_fts_pruned_and_unpruned_searches_agree(spark, fts_index_dir):
+def test_fts_pruned_and_unpruned_searches_agree(spark, fts_index_dir, uncut_plans):
     """Bucket pruning changes what is read, never the answer: every search
     shape returns the same rows (ranked scores byte-equal) on the pruned
     read_index frame and on the unpruned spark.read.parquet frame, and
@@ -229,12 +259,8 @@ def test_fts_pruned_and_unpruned_searches_agree(spark, fts_index_dir):
         got = sorted(tuple(map(repr, r)) for r in pruned.collect())
         want = sorted(tuple(map(repr, r)) for r in shape(persisted, stats).collect())
         assert got == want and len(got) > 0, name
-        parts = [
-            line.split("PartitionFilters: [")[1].split("]")[0]
-            for line in physical_plan(pruned).splitlines()
-            if "FileScan parquet" in line and fts_index_dir + "]" in line
-        ]
-        assert parts and all("token_bucket" in part for part in parts), name
+        filters = postings_bucket_filters(pruned)
+        assert filters and all(filters), name
 
 
 def test_fts_search_plans_hold_no_local_python_rows(spark, fts_index_dir):
@@ -329,7 +355,9 @@ def test_fts_stats_sidecar_roundtrip(spark, tmp_path, monkeypatch):
     assert served2.count() > 0
 
 
-def test_streamed_and_rebuilt_index_serve_the_same_answers(spark, tmp_path, fts_index_dir):
+def test_streamed_and_rebuilt_index_serve_the_same_answers(
+    spark, tmp_path, fts_index_dir, uncut_plans
+):
     """One persisted format: the documents indexed in two micro-batches by
     the streaming sink and in one write_index call read back through
     read_index as the same postings and stats; every search shape returns
@@ -360,14 +388,8 @@ def test_streamed_and_rebuilt_index_serve_the_same_answers(spark, tmp_path, fts_
         for name, shape in fts_search_shapes().items():
             found = shape(postings, stats)
             answers[name] = rows(found)
-            # a postings scan lists token_bucket among its partition
-            # columns (the scan's path may be cut short in the plan text)
-            parts = [
-                line.split("PartitionFilters: [")[1].split("]")[0]
-                for line in physical_plan(found).splitlines()
-                if "FileScan parquet" in line and "token_bucket#" in line
-            ]
-            assert parts and all("token_bucket" in part for part in parts), (path, name)
+            filters = postings_bucket_filters(found)
+            assert filters and all(filters), (path, name)
         return (
             rows(postings.select("token", "doc_id", "positions")),
             stats.n_docs,

@@ -1490,3 +1490,123 @@ def test_index_refuses_commits_with_different_bucket_counts(spark, tmp_path_fact
         assert q.awaitTermination(120) and q.exception() is None
     with pytest.raises(ValueError, match=r"postings.*\[4, 8\]"):
         read_index(spark, idx)
+
+
+def _index_batches(spark, src: str, batches, first: int = 0) -> None:
+    """Stage ``batches`` of (doc_id, text) as one source file each,
+    numbered from ``first``."""
+    for b, chunk in enumerate(batches, start=first):
+        spark.createDataFrame(chunk, "doc_id long, text string").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{src}/b={b}")
+
+
+def _run_index_sink(spark, src: str, idx: str, ckpt: str):
+    """One availableNow run of the index sink over ``src``, one file per
+    batch; returns the finished query, whose exception is not raised."""
+    from pyspark.errors import StreamingQueryException
+
+    from sec_dl_spark.streaming.index import incremental_index_sink
+
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/b=*")
+    )
+    q = incremental_index_sink(stream, idx, ckpt, buckets=4)
+    try:
+        q.awaitTermination(180)
+    except StreamingQueryException:
+        pass
+    return q
+
+
+def _found(spark, idx: str, term: str) -> tuple[set, set]:
+    """The doc ids ``search_all`` and ``search_bm25`` find for ``term`` on
+    the index as read_index serves it."""
+    from sec_dl_spark.operators.fts import read_index, search_all, search_bm25
+
+    postings, stats = read_index(spark, idx)
+    boolean = {r["doc_id"] for r in search_all(postings, [term]).collect()}
+    ranked = {r["doc_id"] for r in search_bm25(postings, [term], k=10, stats=stats).collect()}
+    return boolean, ranked
+
+
+@pytest.mark.parametrize("cut_batch", [0, 1])
+@pytest.mark.parametrize("cut", ["_stats", "_stats/corpus"])
+def test_index_commit_is_invisible_until_its_record_lands(
+    spark, tmp_path_factory, monkeypatch, cut, cut_batch
+):
+    """A sink batch that dies between its postings write and its commit
+    record — right after the postings, or right before the record — is
+    served by no search shape: search_all and search_bm25 agree (the
+    batch's doc in neither) until the replay lands the record, and then
+    both find it. Batch 0 dies with no record in the index at all."""
+    from sec_dl_spark.operators import fts
+
+    src = str(tmp_path_factory.mktemp("cut_src"))
+    idx = str(tmp_path_factory.mktemp("cut_index") / "postings")
+    ckpt = str(tmp_path_factory.mktemp("cut_ckpt") / "ckpt")
+    _index_batches(spark, src, [[(1, "alpha beta"), (2, "beta gamma")], [(3, "alpha delta")]])
+
+    commit = fts.commit_batch_partition
+
+    def die_at_cut(df, path, run, batch_id, *cols):
+        if batch_id == cut_batch and path.startswith(idx + cut):
+            raise RuntimeError("batch cut short before its record")
+        commit(df, path, run, batch_id, *cols)
+
+    monkeypatch.setattr(fts, "commit_batch_partition", die_at_cut)
+    q = _run_index_sink(spark, src, idx, ckpt)
+    assert "cut short" in str(q.exception())
+    monkeypatch.undo()
+    served = {1} if cut_batch == 1 else set()
+    assert _found(spark, idx, "alpha") == (served, served)
+
+    q = _run_index_sink(spark, src, idx, ckpt)  # the restart replays the cut batch
+    assert q.exception() is None
+    assert _found(spark, idx, "alpha") == ({1, 3}, {1, 3})
+
+
+def test_index_replay_over_a_changed_source_raises_and_stays_invisible(spark, tmp_path_factory):
+    """The replay contract on the index sink: a checkpoint wiped and
+    replayed over a source whose batch 1 changed raises, on every replay,
+    before it writes anything. The changed batch's new rows are served by
+    neither search_all nor search_bm25; the commits first made, batch 0
+    and the old batch 1, stay served as they were."""
+    import shutil
+
+    src = str(tmp_path_factory.mktemp("changed_src"))
+    idx = str(tmp_path_factory.mktemp("changed_index") / "postings")
+    ckpt = str(tmp_path_factory.mktemp("changed_ckpt") / "ckpt")
+    first = [(1, "alpha beta"), (2, "beta gamma")]
+    _index_batches(spark, src, [first, [(3, "alpha delta")]])
+    assert _run_index_sink(spark, src, idx, ckpt).exception() is None
+    assert _found(spark, idx, "alpha") == ({1, 3}, {1, 3})
+
+    shutil.rmtree(ckpt)
+    _index_batches(spark, src, [first, [(3, "alpha delta"), (4, "alpha omega")]])
+    for _ in range(2):  # the refused batch stays uncommitted: the restart replays it
+        q = _run_index_sink(spark, src, idx, ckpt)
+        assert "CHANGED source" in str(q.exception())
+        assert _found(spark, idx, "alpha") == ({1, 3}, {1, 3})
+        assert _found(spark, idx, "omega") == (set(), set())
+
+
+def test_index_commit_job_budget(spark, tmp_path_factory):
+    """One index commit runs at most 6 Spark jobs: 3 for the postings (the
+    round-robin spread, the bucket shuffle, the write), 2 for the stats
+    partials (one shuffle, one write) and 1 for the record. A replay
+    check, a fingerprint aggregate or a schema inference added to a
+    normal commit breaks the budget. Each batch is its own availableNow
+    run, so its run group holds its jobs alone."""
+    src = str(tmp_path_factory.mktemp("budget_src"))
+    idx = str(tmp_path_factory.mktemp("budget_index") / "postings")
+    ckpt = str(tmp_path_factory.mktemp("budget_ckpt") / "ckpt")
+    tracker = spark.sparkContext.statusTracker()
+    for b, chunk in enumerate([[(1, "alpha beta"), (2, "beta gamma")], [(3, "alpha delta")]]):
+        _index_batches(spark, src, [chunk], first=b)
+        q = _run_index_sink(spark, src, idx, ckpt)
+        assert q.exception() is None and [p["batchId"] for p in q.recentProgress] == [b]
+        jobs = tracker.getJobIdsForGroup(str(q.runId))
+        assert 0 < len(jobs) <= 6, (b, sorted(jobs))

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from sec_dl_spark.functions.text import (
     clean_filing_text,
     drop_long_tokens,
-    normalize_nfkd,
     strip_embedded_files,
     tokenize,
 )
@@ -75,9 +74,10 @@ def test_tokenize_punct_and_case(spark):
 
 
 def test_nfkd_normalization(spark):
-    # U+FB01 LATIN SMALL LIGATURE FI decomposes to 'f'+'i' under NFKD
+    # U+FB01 LATIN SMALL LIGATURE FI decomposes to 'f'+'i' under NFKD,
+    # applied to the text the segment strip keeps
     df = spark.createDataFrame([("ﬁling",)], ["text"])
-    out = df.select(normalize_nfkd(F.col("text")).alias("n")).first()["n"]
+    out = strip_embedded_files(df).first()["text"]
     assert out == "filing"
 
 
